@@ -24,11 +24,15 @@ families' INDEPENDENT oracle specs (the uncapped quadratic self-join for
 prefix, the band-replay CTEs for minhash/SRP) — proving the front door
 routes to the real algorithms, not to three re-labeled copies.
 
-The kernels here are the generic (any DataFrame / any column /
-any threshold) forms of the pipelines proven in textops.py / vector.py;
-thresholds are exact-rational where they enter integer arithmetic (the
-prefix-length formula) and plain float where both engines compare floats
-(the jaccard / cosine verification gates).
+The family kernels (_text_banded_join, _text_prefix_join,
+_text_simhash_join in textops.py; _vector_srp_join in vector.py) are
+generic over input frame and threshold, and the standalone entries call
+them at their module constants — the front door and the entries run the
+same code. All of them share one candidate join and the exact verifies
+in functions/similarity.py. Thresholds are exact-rational where they
+enter integer arithmetic (the prefix-length formula) and plain float
+where both engines compare floats (the jaccard / cosine verification
+gates).
 
 Reference parity: generalizes the dedup contract of
 odds_data_collector.py:40-44 to a corpus-scale similarity-join API.
@@ -36,92 +40,26 @@ odds_data_collector.py:40-44 to a corpus-scale similarity-join API.
 
 from __future__ import annotations
 
-import math
-from fractions import Fraction
-
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import (RECALL_FLOOR, minhash_band_config,
-                                 minhash_bands_arrays, oph_auto_cutover,
-                                 oph_bands_fast, simhash)
-from ..functions.text import explode_tokens, shingle_hash_arrays
+                                 oph_auto_cutover)
+from ..functions.text import shingle_hash_arrays
 from .base import QueryDef, finalize, load, scoped_cached_plan_aqe
 from .textops import (CONTAINMENT_PCT, JACCARD_THRESHOLD, NGRAM_DF_CAP,
                       NUM_BANDS, NUM_HASHES, ORACLE_MINHASH_LSH,
                       ORACLE_PREFIX_FILTER_JOIN, ORACLE_SIMHASH,
                       SIMHASH_BITS, SIMHASH_MAX_HAMMING, SQL_H60,
-                      _sql_shingles_cte, containment_prefix_pairs,
-                      sql_minhash_pair_ctes, sql_oph_pair_ctes,
-                      verify_jaccard_arrays)
-from .vector import ORACLE_COSINE_LSH, SRP_THRESHOLD, _srp_bands, srp_bits
+                      _sql_shingles_cte, _text_banded_join,
+                      _text_prefix_join, _text_simhash_join,
+                      containment_prefix_pairs, sql_minhash_pair_ctes,
+                      sql_oph_pair_ctes)
+from .vector import ORACLE_COSINE_LSH, SRP_THRESHOLD, _vector_srp_join
 
-# minhash_band_config / RECALL_FLOOR moved to functions.hashing (VERDICT
-# r7 item 5: the standalone dedup entries must share the derivation) and
-# are re-exported above for existing importers.
-
-
-def _verify_jaccard(sharr: DataFrame, cand: DataFrame,
-                    threshold: float) -> DataFrame:
-    """Exact set-jaccard verification of (id1, id2) candidates against the
-    per-doc shingle-hash ARRAY frame (round 12: the row-local
-    array-intersect tail — textops.verify_jaccard_arrays — replacing the
-    explode-join/groupBy/size-join chain; identical rows, three fewer
-    exchanges); returns (id1, id2, score) passing the gate."""
-    return verify_jaccard_arrays(sharr, cand, threshold,
-                                 c1="id1", c2="id2", score_col="score")
-
-
-def _kdraw_kernel(sharr: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
-    """Row-local k-draw band rows from the per-doc hash-array frame."""
-    return minhash_bands_arrays(sharr, "doc_id", "sh_arr", n_hashes, n_bands)
-
-
-def _oph_kernel(sharr: DataFrame, n_bins: int, n_bands: int) -> DataFrame:
-    """OPH band rows; the slot groupBy is OPH's own shape, so its input
-    stays per-shingle rows — derived from the cached arrays with one
-    row-local explode (no re-tokenize/re-hash)."""
-    return oph_bands_fast(
-        sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
-        "doc_id", "sh60", n_bins, n_bands, hashed=True)
-
-
-def _text_banded_join(sharr: DataFrame, threshold: float,
-                      caches: list[DataFrame], kernel) -> DataFrame:
-    """Banded-sketch bucketing -> candidate equi-join -> exact verify,
-    generic over the sketch ``kernel`` (_kdraw_kernel / _oph_kernel —
-    same (sharr, bins, bands) signature over the per-doc array frame).
-    The band config is derived from the threshold, not module-constant,
-    and ONE copy of the candidate/verify tail serves both kernels
-    (round-9 review finding: a drifting copy would silently verify a
-    different truth)."""
-    n_hashes, n_bands = minhash_band_config(threshold)
-    bands = kernel(sharr, n_hashes, n_bands).cache()
-    caches.append(bands)
-    bands.count()   # eager: both candidate sides race a lazy cache
-    b1 = bands.select(F.col("doc_id").alias("id1"), "band", "band_key")
-    b2 = bands.select(F.col("doc_id").alias("id2"), "band", "band_key")
-    cand = (b1.join(b2, ["band", "band_key"])
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2").distinct())
-    return _verify_jaccard(sharr, cand, threshold)
-
-
-def _text_minhash_join(sharr: DataFrame, threshold: float,
-                       caches: list[DataFrame]) -> DataFrame:
-    """The q_dedup_minhash_lsh pipeline, generic over threshold."""
-    return _text_banded_join(sharr, threshold, caches, _kdraw_kernel)
-
-
-def _text_oph_join(sharr: DataFrame, threshold: float,
-                   caches: list[DataFrame]) -> DataFrame:
-    """One-Permutation-Hashing variant of the approximate jaccard path
-    (q_dedup_minhash_oph's machinery, generic over threshold): one
-    universal draw per shingle instead of 64, same threshold-derived
-    banding and the identical candidate/verify tail. Same S-curve recall
-    law as the k-draw family under the shared band derivation; measured
-    1e6 ppm at t=0.8 by q_oph_recall_audit."""
-    return _text_banded_join(sharr, threshold, caches, _oph_kernel)
+# minhash_band_config / RECALL_FLOOR live in functions.hashing (the
+# standalone dedup entries share the derivation) and are re-exported
+# above for existing importers.
 
 
 # Integer per-mille form of the K*ln(K) routing cutover. ONE quantization
@@ -195,125 +133,6 @@ def _resolve_auto_sketch(sharr: DataFrame) -> str:
             else "kdraw")
 
 
-def _text_prefix_join(sharr: DataFrame, threshold: float,
-                      caches: list[DataFrame]) -> DataFrame:
-    """Prefix-filter exact set-similarity join (the q_prefix_filter_join
-    pipeline, generic over threshold). The prefix-length and length-filter
-    arithmetic runs on the EXACT rational p/q form of the threshold —
-    float ceil(0.8*sz) rounds the wrong way on exact multiples (binary
-    0.8*5 = 4.0000000000000002 -> ceil 5), which would shorten prefixes
-    and silently lose pairs. Round 12: per-shingle rows derive from the
-    cached array frame with a row-local explode carrying size(sh_arr)
-    along (the per-doc COUNT aggregation and its join disappear), and
-    verification is the array-intersect tail. The prefix table is cached
-    before the candidate self-join: both join sides consume it, and
-    uncached each side re-runs the df-count aggregate + rarity-rank
-    window over the full shingle explode (profiled at sf0.1: the two
-    duplicated subtrees were the entry's top stages, 12.5 s + 7.7 s task
-    time — guide §2.4's shared-subtree rule; the cache also halves the
-    plan the driver re-optimizes per AQE stage)."""
-    frac = Fraction(threshold).limit_denominator(1_000_000)
-    if frac > Fraction(threshold):
-        # Never let the rationalized threshold exceed the float verify
-        # gate: t' > t shortens prefixes, which could drop a pair with
-        # t <= jaccard < t' and break losslessness (ADVICE r6). Floor to
-        # the 1e-6 grid instead — a slightly SMALLER t' only lengthens
-        # prefixes (more candidates, same verified output).
-        frac = Fraction(math.floor(Fraction(threshold) * 10**6), 10**6)
-    p, q = frac.numerator, frac.denominator
-    sh = sharr.select("doc_id", F.size("sh_arr").alias("sz"),
-                      F.explode("sh_arr").alias("sh60"))
-    dfreq = sh.groupBy("sh60").agg(F.count("*").alias("df"))
-    ranked = (sh.join(dfreq, "sh60")
-              .withColumn("rn", F.row_number().over(
-                  Window.partitionBy("doc_id").orderBy("df", "sh60"))))
-    pre = (ranked
-           .filter(F.col("rn")
-                   <= F.expr(f"sz - (({p} * sz + {q - 1}) div {q}) + 1"))
-           .select("doc_id", "sh60", "sz")).cache()
-    caches.append(pre)
-    pre.count()   # eager: both candidate sides race a lazy cache
-    p1 = pre.select(F.col("doc_id").alias("id1"), "sh60",
-                    F.col("sz").alias("sz1"))
-    p2 = pre.select(F.col("doc_id").alias("id2"), "sh60",
-                    F.col("sz").alias("sz2"))
-    cand = (p1.join(p2, "sh60").filter(F.col("id1") < F.col("id2"))
-            .filter(F.least("sz1", "sz2") * q >= F.greatest("sz1", "sz2") * p)
-            .select("id1", "id2").distinct())
-    return _verify_jaccard(sharr, cand, threshold)
-
-
-def _text_simhash_join(std: DataFrame, max_hamming: int,
-                       caches: list[DataFrame]) -> DataFrame:
-    """SimHash pigeonhole chunk join (the q_dedup_simhash pipeline,
-    generic over the distance bound): the 60-bit signature is split into
-    ``max_hamming + 1`` chunks — hamming <= t guarantees at least one
-    chunk equal — candidates equi-join per chunk and verify with
-    bit_count(xor). The last chunk absorbs the width remainder; any
-    partition into t+1 non-empty pieces keeps the pigeonhole guarantee."""
-    toked = explode_tokens(std, "doc_id", "text")
-    sims = simhash(toked, "doc_id", "token", bits=SIMHASH_BITS).cache()
-    caches.append(sims)
-    sims.count()   # eager: both chunk-join sides race a lazy cache
-    chunks = int(max_hamming) + 1
-    base = SIMHASH_BITS // chunks
-    specs = []
-    for j in range(chunks):
-        start = j * base
-        width = SIMHASH_BITS - start if j == chunks - 1 else base
-        specs.append((j, start, (1 << width) - 1))
-    chunked = sims.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("chunk"),
-                     F.shiftright(F.col("simhash"), s)
-                      .bitwiseAND(F.lit(m)).alias("ckey"))
-            for j, s, m in specs])).alias("c")
-    ).select("doc_id", "simhash", "c.chunk", "c.ckey")
-    c1 = chunked.select(F.col("doc_id").alias("id1"),
-                        F.col("simhash").alias("h1"), "chunk", "ckey")
-    c2 = chunked.select(F.col("doc_id").alias("id2"),
-                        F.col("simhash").alias("h2"), "chunk", "ckey")
-    ham = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
-    # hamming gate BEFORE the distinct: score is a pure function of the
-    # pair, so dedup'ing after the filter yields the same set while only
-    # the passing candidates shuffle through the distinct (ADVICE r6 —
-    # the old order shuffled every failing chunk-join candidate too)
-    return (c1.join(c2, ["chunk", "ckey"])
-            .filter(F.col("id1") < F.col("id2"))
-            .filter(ham <= F.lit(int(max_hamming)))
-            .select("id1", "id2", ham.alias("score")).distinct())
-
-
-def _vector_srp_join(df: DataFrame, id_col: str, col: str, threshold: float,
-                     caches: list[DataFrame]) -> DataFrame:
-    """SRP-LSH candidates -> exact-cosine verify (the q_cosine_neardup_lsh
-    pipeline, generic over input frame and threshold)."""
-    from ..functions.similarity import dot as _dot, l2norm
-    std = df.select(F.col(id_col).alias("vec_id"),
-                    F.col(col).alias("embedding"))
-    bits = srp_bits(std.count())
-    bands = _srp_bands(std, bits).cache()
-    caches.append(bands)
-    b1 = bands.select(F.col("vec_id").alias("id1"), "band", "band_key")
-    b2 = bands.select(F.col("vec_id").alias("id2"), "band", "band_key")
-    cand = (b1.join(b2, ["band", "band_key"])
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2").distinct())
-    enorm = std.select("vec_id", "embedding",
-                       l2norm(F.col("embedding")).alias("nrm")).cache()
-    caches.append(enorm)
-    e1 = enorm.select(F.col("vec_id").alias("id1"),
-                      F.col("embedding").alias("e1"), F.col("nrm").alias("n1"))
-    e2 = enorm.select(F.col("vec_id").alias("id2"),
-                      F.col("embedding").alias("e2"), F.col("nrm").alias("n2"))
-    score = F.try_divide(_dot(F.col("e1"), F.col("e2")),
-                         F.col("n1") * F.col("n2"))
-    return (cand.join(e1, "id1").join(e2, "id2")
-            .select("id1", "id2", score.alias("score"))
-            .filter(F.col("score") >= F.lit(float(threshold))))
-
-
 def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                     metric: str = "auto", exact: bool = False,
                     caches: list[DataFrame] | None = None,
@@ -350,14 +169,12 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
       (the exact-flag rule); ``'auto'`` is accepted everywhere because
       it is the default.
 
-      **Behavior change (round 9, called out per ADVICE r10):** the
-      default was ``'kdraw'`` through round 8 and is ``'auto'`` since
-      round 9. Two consequences for default-path jaccard callers who
-      never asked for routing: (1) plan construction is no longer fully
+      Two consequences of the ``'auto'`` default for jaccard callers
+      who never asked for routing: (1) plan construction is not fully
       lazy — resolving the route runs ONE eager driver aggregate
       (count + HLL distinct over the shingle frame, a single bounded
       row) before the joined plan is returned; (2) the chosen kernel —
-      hence the approximate CANDIDATE set and recall profile — is now
+      hence the approximate CANDIDATE set and recall profile — is
       corpus-shape-dependent. Result PRECISION is unchanged (every
       candidate is exact-verified downstream) and both kernels'
       recall is audited (q_*_recall_audit / _t05). Callers who need a
@@ -376,14 +193,14 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
       band sketches, norm tables) for the caller to release — route them
       through plans.base.finalize / release_deferred, NOT a leak.
     * ``shingles``: a precomputed cached frame from
-      ``shingle_hash_arrays(df, id_col, col)`` (aliased doc_id/sh_arr —
-      the round-12 per-doc ARRAY form; kernels that need per-shingle
-      rows derive them with a row-local explode), so a caller running
+      ``shingle_hash_arrays(df, id_col, col)`` (aliased doc_id/sh_arr,
+      one hash array per doc; kernels that need per-shingle rows derive
+      them with a row-local explode), so a caller running
       several text dispatches over one corpus shingles it once —
       passing it twice would otherwise re-cache an identical plan (a
       CacheManager no-op whose unpersist fires twice).
 
-    Peak-spill note for multi-family callers (round-8 sweep finding): the
+    Peak-spill note for multi-family callers: the
     returned frame is lazy, so UNIONING several dispatches and executing
     the union as one job runs every family's shuffles CONCURRENTLY —
     peak shuffle disk is the SUM of the families. A disk-constrained
@@ -414,8 +231,8 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
     if sketch != "auto" and (exact or metric != "jaccard"):
         # the sketch knob only selects the approximate-jaccard kernel;
         # silently ignoring an EXPLICIT kernel elsewhere would let a
-        # caller believe that kernel ran (the exact-flag rule, ADVICE
-        # r6); 'auto' passes because it is the default, not a request
+        # caller believe that kernel ran (the exact-flag rule); 'auto'
+        # passes because it is the default, not a request
         raise ValueError(
             f"sketch={sketch!r} only applies to metric='jaccard' with "
             f"exact=False; got metric={metric!r}, exact={exact!r}")
@@ -431,7 +248,7 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
             caches.append(sharr)
             sharr.count()
         if metric == "containment":
-            # ASYMMETRIC family (VERDICT r11 item 2): ordered (id1=sub,
+            # ASYMMETRIC family: ordered (id1=sub,
             # id2=super) pairs with |S_sub ∩ S_super| / |S_sub| >=
             # threshold — the only family whose output is NOT id1 < id2
             # canonical (each exact-dup pair emits both directions by
@@ -463,13 +280,11 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
             return _text_prefix_join(sharr, threshold, caches)
         if sketch == "auto":
             sketch = _resolve_auto_sketch(sharr)
-        if sketch == "oph":
-            return _text_oph_join(sharr, threshold, caches)
-        return _text_minhash_join(sharr, threshold, caches)
+        return _text_banded_join(sharr, threshold, caches, sketch)
     if exact:
         # the simhash chunk join is already exact AT THE BOUND and the
         # SRP path has no lossless variant — silently ignoring the flag
-        # would let a caller believe they got one (ADVICE r6)
+        # would let a caller believe they got one
         raise ValueError(
             f"exact=True is only meaningful for metric='jaccard' "
             f"(prefix-filter join) or metric='containment' (always "
@@ -486,7 +301,9 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                         F.col(col).alias("text"))
         return _text_simhash_join(std, t, caches)
     if metric == "cosine":
-        return _vector_srp_join(df, id_col, col, threshold, caches)
+        std = df.select(F.col(id_col).alias("vec_id"),
+                        F.col(col).alias("embedding"))
+        return _vector_srp_join(std, threshold, caches)
     raise ValueError(f"unknown metric {metric!r} (expected 'jaccard', "
                      "'containment', 'hamming' or 'cosine')")
 

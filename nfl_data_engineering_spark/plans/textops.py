@@ -16,6 +16,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import (
@@ -23,6 +26,7 @@ from ..functions.hashing import (
     NUM_HASHES, OPH_BINS, OPH_DENS_BASE, h60, h60_py, minhash_band_config,
     minhash_bands_fast, oph_bands_fast, simhash)
 from ..functions.hashing import minhash_bands_arrays
+from ..functions.similarity import candidate_pairs, verify_jaccard_arrays
 from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
                               explode_shingle_hashes, explode_tokens, lang_id,
                               regex_token_count, shingle_hash_arrays, shingles,
@@ -90,93 +94,60 @@ JACCARD_THRESHOLD = hashing_default_threshold
 NUM_BANDS = minhash_band_config(JACCARD_THRESHOLD, NUM_HASHES)[1]
 
 
-def verify_jaccard_arrays(sharr: DataFrame, cand: DataFrame,
-                          threshold: float, c1: str = "d1", c2: str = "d2",
-                          score_col: str = "jaccard") -> DataFrame:
-    """Exact set-jaccard verification of (c1, c2) candidate pairs against
-    the per-doc shingle-hash ARRAY frame (functions.text.
-    shingle_hash_arrays): two equi-joins attach the arrays, then the
-    intersection size, set sizes, and the jaccard gate are all ROW-LOCAL
-    (size(array_intersect), size(arr)) — replacing the round-1..11
-    explode-join tail (candidates x shingle rows -> (pair)-keyed count
-    groupBy -> two size-lookup joins) with zero aggregations and two
-    fewer joins. Identical output by construction: the arrays are the
-    same distinct-hash sets the exploded frame held, so the intersection
-    count, sizes, and the double division are bit-equal (A/B'd at sf0.1:
-    0.24 s vs 0.61 s on the star candidate set, 0-row diff both ways).
-    At 100 TB the bytes shipped are unchanged (each candidate pulled its
-    partner's shingle rows through the old intersection join too) while
-    the (pair)-keyed exchange and both size-join exchanges disappear
-    (guide §2.4). ONE copy serves every banded family — the
-    _minhash_pairs single-copy rule.
+def _text_banded_join(sharr: DataFrame, threshold: float,
+                      caches: list[DataFrame], sketch: str) -> DataFrame:
+    """Banded-sketch bucketing -> candidate equi-join -> exact jaccard
+    verify over the per-doc hash-array frame (doc_id, sh_arr); returns
+    (id1, id2, score) with score >= ``threshold``. The band config is
+    derived from the threshold (64x16 at 0.8, 64x32 at 0.5). ``sketch``
+    picks the band kernel: 'kdraw' (row-local 64-draw MinHash) or 'oph'
+    (one draw per shingle; its slot groupBy needs per-shingle rows, so
+    they come from one row-local explode of the arrays).
 
-    ``__i`` is a NAMED column consumed by the filter and the score
-    projection, so the array_intersect runs once per candidate row
-    (CollapseProject keeps multi-referenced non-cheap expressions
-    materialized — SPARK-36718)."""
-    a1 = sharr.select(F.col("doc_id").alias(c1), F.col("sh_arr").alias("__a1"))
-    a2 = sharr.select(F.col("doc_id").alias(c2), F.col("sh_arr").alias("__a2"))
-    j = (cand.join(a1, c1).join(a2, c2)
-         .withColumn("__i", F.size(F.array_intersect("__a1", "__a2"))))
-    jac = (F.col("__i").cast("double")
-           / (F.size("__a1") + F.size("__a2") - F.col("__i")).cast("double"))
-    return (j.filter(jac >= F.lit(float(threshold)))
-            .select(c1, c2, jac.alias(score_col)))
+    The bands are cached because both candidate sides read them, and
+    filled eagerly: bands.count() reads ``sharr``, so it also fills a
+    lazily-cached ``sharr`` in the same job, and the verify then reads
+    warm arrays. Within one job the block manager's loading locks
+    compute each partition once, so a separate sharr.count() would only
+    add a pass-shaped job."""
+    n_hashes, n_bands = minhash_band_config(threshold)
+    if sketch == "oph":
+        bands = oph_bands_fast(
+            sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
+            "doc_id", "sh60", n_hashes, n_bands, hashed=True)
+    else:
+        bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", n_hashes,
+                                     n_bands)
+    bands = bands.cache()
+    caches.append(bands)
+    bands.count()   # eager: both candidate sides race a lazy cache
+    cand = candidate_pairs(bands, "doc_id", ["band", "band_key"],
+                           "id1", "id2")
+    return verify_jaccard_arrays(sharr, cand, threshold,
+                                 c1="id1", c2="id2", score_col="score")
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str,
-                   caches: list[DataFrame] | None = None,
+                   caches: list[DataFrame],
                    sharr: DataFrame | None = None,
-                   bands_fn=None) -> DataFrame:
-    """MinHash-LSH verified near-dup pairs: (d1, d2, jaccard) with
-    jaccard >= JACCARD_THRESHOLD. Shared by the pairs query and the
-    connected-components query. The eager caches it fills are appended
-    to `caches` so the calling entry can release them (via base.finalize
-    or an unpersist after components converge) — without that, a
-    full-catalog session pins them for its lifetime (ADVICE r4).
+                   sketch: str = "kdraw") -> DataFrame:
+    """Verified near-dup pairs (d1, d2, jaccard) with jaccard >=
+    JACCARD_THRESHOLD over the documents table: _text_banded_join at the
+    catalog threshold, with the entries' column names. The frames it
+    caches are appended to ``caches`` for the calling entry to release
+    (base.finalize, or an unpersist once components converge).
 
-    A caller that already holds the cached per-doc shingle-ARRAY frame
-    (functions.text.shingle_hash_arrays — the round-12 form; consumers
-    needing per-shingle rows derive them with a row-local explode)
-    passes it via ``sharr`` (cached + counted, tracked in its OWN caches
-    list) so each plan is cached and released exactly once — re-caching
-    the identical logical plan here would be a CacheManager no-op whose
-    unpersist fires twice (ADVICE r5).
-
-    ``bands_fn`` swaps the sketch kernel (array frame -> (doc_id, band,
-    band_key)); default is the row-local k-draw 64x16 kernel
-    (minhash_bands_arrays). ONE copy of the candidate self-join +
-    array-verify tail (verify_jaccard_arrays) serves every banded
-    sketch family — a second drifting copy would silently verify a
-    different truth (the round-7 exact_jaccard_count lesson; round-9
-    review finding)."""
+    A caller that already holds the cached shingle-array frame passes it
+    as ``sharr`` (tracked in its own caches list), so the plan is cached
+    and released exactly once; otherwise it is cached here and filled by
+    the bands' eager count."""
     if sharr is None:
         docs = load(spark, sf_dir, "documents")
         sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-        if caches is not None:
-            caches.append(sharr)
-    # cache: bands feeds both sides of the candidate self-join (sharr is
-    # already cached; this additionally avoids re-running the 64-draw fold).
-    # ONE eager fill (round 13): bands.count() reads sharr, so it fills
-    # BOTH caches in a single job; the verify tail then reads the warm
-    # sharr, and within any one job concurrent readers of an unfilled
-    # partition are serialized by the block manager's loading locks (each
-    # partition computes once) — the separate sharr.count() was a
-    # redundant pass-shaped job per entry.
-    if bands_fn is None:
-        bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
-                                     NUM_BANDS).cache()
-    else:
-        bands = bands_fn(sharr).cache()
-    if caches is not None:
-        caches.append(bands)
-    bands.count()
-    b1 = bands.select(F.col("doc_id").alias("d1"), "band", "band_key")
-    b2 = bands.select(F.col("doc_id").alias("d2"), "band", "band_key")
-    cand = (b1.join(b2, ["band", "band_key"])
-            .filter(F.col("d1") < F.col("d2"))
-            .select("d1", "d2").distinct())
-    return verify_jaccard_arrays(sharr, cand, JACCARD_THRESHOLD)
+        caches.append(sharr)
+    pairs = _text_banded_join(sharr, JACCARD_THRESHOLD, caches, sketch)
+    return pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                        F.col("score").alias("jaccard"))
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,8 +203,7 @@ def _labeled_docs(docs: DataFrame, labels: DataFrame) -> DataFrame:
     NULL for docs in no near-dup pair. The labels frame is
     |docs-in-pairs| rows — small against the corpus — so this join
     broadcasts at 100 TB. ONE copy shared by the survivor entries so
-    they cannot drift on component identity (the _minhash_pairs
-    single-copy rule; round-10 review finding)."""
+    they cannot drift on component identity."""
     return docs.join(labels.withColumnRenamed("n", "doc_id"),
                      "doc_id", "left")
 
@@ -400,8 +370,7 @@ SELECT d1, d2, ROUND(jaccard, 6) AS jaccard FROM pairs
 # DuckDB replay of connected components over verified `pairs`: min
 # reachable id per node, declaratively. ONE copy shared by the three
 # component-consuming oracles — a drifting copy would let two entries
-# verify a different component truth (round-10 review finding; the
-# _minhash_pairs rule, SQL side).
+# verify a different component truth.
 _SQL_COMPONENT_CTES = """\
 bi AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
 nodes AS (SELECT DISTINCT a AS n FROM bi),
@@ -454,13 +423,13 @@ def _star_verified_pairs(spark: SparkSession, sf_dir: str,
     """Bucket -> star edges (member -> bucket minimum, O(members) per
     bucket) -> exact-jaccard verification against the representative.
     Shared by the star survivor table and the cross-shard audit; the
-    shingle cache is appended to `caches` for the caller to release
-    (ADVICE r4). The cache fills LAZILY (round 13): all three sharr
-    consumers (bands + both verify sides) materialize inside the ONE
-    connected-components probe job, where BlockManager's per-partition
-    loading locks guarantee each partition computes once — the old
-    eager count() was a whole extra pass-shaped job per entry
-    (leakage/star walls 1.83/1.48 -> 1.79/1.41 s at sf0.1 without it)."""
+    shingle cache is appended to `caches` for the caller to release.
+    The cache fills LAZILY: all three sharr consumers (bands + both
+    verify sides) materialize inside the ONE connected-components probe
+    job, where BlockManager's per-partition loading locks guarantee each
+    partition computes once — an eager count() is a whole extra
+    pass-shaped job per entry (leakage/star walls 1.83/1.48 s with it,
+    1.79/1.41 s without, at sf0.1)."""
     from pyspark.sql import Window
     docs = load(spark, sf_dir, "documents")
     sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
@@ -473,9 +442,6 @@ def _star_verified_pairs(spark: SparkSession, sf_dir: str,
     # fill + join overhead eats the per-stage window-sort savings, and
     # at 100 TB both forms sort |docs x bands| rows on (band, band_key)
     # (window sort vs SMJ sort), so there is no scale argument either.
-    # Round 12: the sketch is the row-local array kernel (same band rows,
-    # no explode/aggregation) and verification is the array-intersect
-    # tail — see verify_jaccard_arrays.
     bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
                                  NUM_BANDS)
     wmin = Window.partitionBy("band", "band_key")
@@ -737,17 +703,13 @@ def q_incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and without the cache each side re-runs the 64-draw minhash fold
     # over the full corpus (measured ~0.7s of the entry at sf0.1).
     # ONE eager fill: bands.count() reads sharr, so it fills BOTH caches
-    # in a single job — the separate sharr.count() was a redundant
-    # pass-shaped job (1.71 -> 1.52 s at sf0.1, round 13); the verify
-    # tail then reads the already-warm sharr.
+    # in a single job (a separate sharr.count() measured 1.71 vs 1.52 s
+    # at sf0.1); the verify tail then reads the already-warm sharr.
     bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
                                  NUM_BANDS).cache()
     bands.count()
-    bi = (bands.filter(F.col("doc_id") % 4 == 0)
-          .select(F.col("doc_id").alias("di"), "band", "band_key"))
-    be = (bands.filter(F.col("doc_id") % 4 != 0)
-          .select(F.col("doc_id").alias("de"), "band", "band_key"))
-    cand = bi.join(be, ["band", "band_key"]).select("di", "de").distinct()
+    cand = candidate_pairs(bands, "doc_id", ["band", "band_key"], "di", "de",
+                           probe=is_inc)
     near = (verify_jaccard_arrays(sharr, cand, JACCARD_THRESHOLD,
                                   c1="di", c2="de")
             .groupBy("di").agg(F.min("de").alias("near_ref")))
@@ -1191,8 +1153,6 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
     exact = exact_jaccard_count(sh, JACCARD_THRESHOLD)
     caches: list[DataFrame] = [sharr]
-    # hand the cached array frame down so _minhash_pairs doesn't
-    # re-cache the identical plan (one cache, one release — ADVICE r5)
     lsh = _minhash_pairs(spark, sf_dir, caches, sharr=sharr).agg(
         F.count("*").alias("n_lsh"))
     return finalize(
@@ -1201,6 +1161,53 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CASE WHEN n_exact > 0 "
                        "THEN n_lsh * 1000000 div n_exact END")
                 .alias("recall_ppm")), *caches)
+
+
+def _text_prefix_join(sharr: DataFrame, threshold: float,
+                      caches: list[DataFrame]) -> DataFrame:
+    """Prefix-filter exact set-similarity join over the per-doc hash-array
+    frame; returns (id1, id2, score) with jaccard score >= ``threshold``.
+    The prefix-length and length-filter arithmetic runs on the EXACT
+    rational p/q form of the threshold — float ceil(0.8*sz) rounds the
+    wrong way on exact multiples (binary 0.8*5 = 4.0000000000000002 ->
+    ceil 5), which would shorten prefixes and silently lose pairs.
+    Per-shingle rows derive from the array frame with a row-local explode
+    that carries size(sh_arr) along (no per-doc COUNT aggregation or
+    sizes join).
+
+    The prefix table is cached and filled eagerly before the candidate
+    self-join: both join sides consume it, and uncached each side re-runs
+    the df-count aggregate + rarity-rank window over the full shingle
+    explode (profiled at sf0.1: the two duplicated subtrees were the
+    entry's top stages, 12.5 s + 7.7 s task time — guide §2.4's
+    shared-subtree rule). The fill computes through ``sharr``, so it
+    fills a lazily-cached ``sharr`` in the same job."""
+    frac = Fraction(threshold).limit_denominator(1_000_000)
+    if frac > Fraction(threshold):
+        # Never let the rationalized threshold exceed the float verify
+        # gate: t' > t shortens prefixes, which could drop a pair with
+        # t <= jaccard < t' and break losslessness. Floor to the 1e-6
+        # grid instead — a slightly SMALLER t' only lengthens prefixes
+        # (more candidates, same verified output).
+        frac = Fraction(math.floor(Fraction(threshold) * 10**6), 10**6)
+    p, q = frac.numerator, frac.denominator
+    sh = sharr.select("doc_id", F.size("sh_arr").alias("sz"),
+                      F.explode("sh_arr").alias("sh60"))
+    dfreq = sh.groupBy("sh60").agg(F.count("*").alias("df"))
+    ranked = (sh.join(dfreq, "sh60")
+              .withColumn("rn", F.row_number().over(
+                  Window.partitionBy("doc_id").orderBy("df", "sh60"))))
+    pre = (ranked
+           .filter(F.col("rn")
+                   <= F.expr(f"sz - (({p} * sz + {q - 1}) div {q}) + 1"))
+           .select("doc_id", "sh60", "sz")).cache()
+    caches.append(pre)
+    pre.count()   # eager: both candidate sides race a lazy cache
+    cand = candidate_pairs(
+        pre, "doc_id", ["sh60"], "id1", "id2", carry=("sz",),
+        gate=F.least("sz1", "sz2") * q >= F.greatest("sz1", "sz2") * p)
+    return verify_jaccard_arrays(sharr, cand, threshold,
+                                 c1="id1", c2="id2", score_col="score")
 
 
 def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1223,43 +1230,15 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped shingle self-join), so the hash match proves the
     prefix-filter algebra lossless, not merely self-consistent."""
     docs = load(spark, sf_dir, "documents")
-    # Round 12: the cached artifact is the per-doc hash ARRAY frame; the
-    # per-shingle rows the df count and the rarity ranking need derive
-    # from it with one row-local explode that carries the set size along
-    # (size(sh_arr)) — the old per-doc COUNT aggregation and the sizes
-    # join onto `ranked` both disappear, and verification is the
-    # array-intersect tail (verify_jaccard_arrays; same rows, fewer
-    # exchanges — guide §2.4).
+    # no eager sharr fill: the prefix table's eager fill computes through
+    # it and fills both caches in one job
     sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    # no eager sharr fill: pre.count() below computes through sharr and
-    # fills both caches in one job (round 13 — see _minhash_pairs)
-    sh = sharr.select("doc_id", F.size("sh_arr").alias("sz"),
-                      F.explode("sh_arr").alias("sh60"))
-    dfreq = sh.groupBy("sh60").agg(F.count("*").alias("df"))
-    ranked = (sh.join(dfreq, "sh60")
-              .withColumn("rn", F.row_number().over(
-                  Window.partitionBy("doc_id").orderBy("df", "sh60"))))
-    # cache the prefix table: BOTH candidate sides consume it, and
-    # uncached each side re-runs the df aggregate + rarity-rank window
-    # over the full shingle explode (profiled as the entry's two top
-    # stages at sf0.1 — guide §2.4 shared-subtree rule)
-    pre = (ranked
-           .filter(F.col("rn") <= F.expr("sz - ((4 * sz + 4) div 5) + 1"))
-           .select("doc_id", "sh60", "sz")).cache()
-    pre.count()   # eager: both candidate sides race a lazy cache
-    p1 = pre.select(F.col("doc_id").alias("d1"), "sh60",
-                    F.col("sz").alias("sz1"))
-    p2 = pre.select(F.col("doc_id").alias("d2"), "sh60",
-                    F.col("sz").alias("sz2"))
-    cand = (p1.join(p2, "sh60").filter(F.col("d1") < F.col("d2"))
-            .filter(F.least("sz1", "sz2") * 5
-                    >= F.greatest("sz1", "sz2") * 4)
-            .select("d1", "d2").distinct())
-    verified = verify_jaccard_arrays(sharr, cand, JACCARD_THRESHOLD)
+    caches: list[DataFrame] = [sharr]
+    verified = _text_prefix_join(sharr, JACCARD_THRESHOLD, caches)
     return finalize(
-        verified.select("d1", "d2",
-                        F.round("jaccard", 6).alias("jaccard")), sharr, pre,
-        pair_table=True)
+        verified.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                        F.round("score", 6).alias("jaccard")),
+        *caches, pair_table=True)
 
 
 ORACLE_PREFIX_FILTER_JOIN = f"""
@@ -1311,24 +1290,6 @@ FROM exact CROSS JOIN lsh
 OPH_NUM_BANDS = minhash_band_config(JACCARD_THRESHOLD, OPH_BINS)[1]
 
 
-def _oph_pairs(spark: SparkSession, sf_dir: str,
-               caches: list[DataFrame] | None = None,
-               sharr: DataFrame | None = None) -> DataFrame:
-    """OPH-banded verified near-dup pairs: (d1, d2, jaccard) with
-    jaccard >= JACCARD_THRESHOLD — _minhash_pairs with the sketch pass
-    swapped for the one-draw-per-shingle OPH kernel
-    (functions/hashing.py:oph_bands_fast, fed by a row-local explode of
-    the cached array frame — the slot groupBy is OPH's own shape, so the
-    exploded rows stay its input); the candidate/verify tail is the SAME
-    code, not a copy. Cache/release contract is identical: fills
-    `caches` for the caller to finalize."""
-    return _minhash_pairs(
-        spark, sf_dir, caches, sharr,
-        bands_fn=lambda s: oph_bands_fast(
-            s.select("doc_id", F.explode("sh_arr").alias("sh60")),
-            "doc_id", "sh60", OPH_BINS, OPH_NUM_BANDS, hashed=True))
-
-
 def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dedup pairs via One-Permutation-Hashing MinHash: ONE universal
     draw per shingle (vs 64 in dedup_minhash_lsh), rotation-densified
@@ -1344,7 +1305,7 @@ def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline; q_oph_recall_audit measures it against the exact-pair
     truth."""
     caches: list[DataFrame] = []
-    pairs = _oph_pairs(spark, sf_dir, caches)
+    pairs = _minhash_pairs(spark, sf_dir, caches, sketch="oph")
     return finalize(
         pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard")),
         *caches, pair_table=True)
@@ -1375,7 +1336,8 @@ def q_oph_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
     exact = exact_jaccard_count(sh, JACCARD_THRESHOLD)
     caches: list[DataFrame] = [sharr]
-    oph = _oph_pairs(spark, sf_dir, caches, sharr=sharr).agg(
+    oph = _minhash_pairs(spark, sf_dir, caches, sharr=sharr,
+                         sketch="oph").agg(
         F.count("*").alias("n_oph"))
     return finalize(
         exact.crossJoin(oph)
@@ -1464,7 +1426,50 @@ FROM exact CROSS JOIN oph_n
 
 SIMHASH_BITS = 60
 SIMHASH_MAX_HAMMING = 3
-SIMHASH_CHUNKS = 4          # 4 chunks of 15 bits; hamming<=3 => >=1 equal chunk
+
+
+def _text_simhash_join(std: DataFrame, max_hamming: int,
+                       caches: list[DataFrame]) -> DataFrame:
+    """SimHash pigeonhole chunk join over (doc_id, text), generic over the
+    distance bound; returns (id1, id2, score = hamming distance) with
+    score <= ``max_hamming``. The 60-bit signature is split into
+    ``max_hamming + 1`` chunks — hamming <= t guarantees at least one
+    chunk equal — candidates equi-join per chunk and verify with
+    bit_count(xor). The last chunk absorbs the width remainder; any
+    partition into t+1 non-empty pieces keeps the pigeonhole guarantee.
+
+    The signatures are cached and filled eagerly: both chunk-join sides
+    read them, and HERE the eager fill is load-bearing by measurement —
+    the lazy-fill variant (the single-fill doctrine that won on the
+    jaccard family) measured 1.44 -> 2.25+ s at sf0.1 and degrading.
+    The difference from the jaccard family: no second derived cache
+    whose fill would compute this one as a by-product."""
+    toked = explode_tokens(std, "doc_id", "text")
+    sims = simhash(toked, "doc_id", "token", bits=SIMHASH_BITS).cache()
+    caches.append(sims)
+    sims.count()   # eager: both chunk-join sides race a lazy cache
+    chunks = int(max_hamming) + 1
+    base = SIMHASH_BITS // chunks
+    specs = []
+    for j in range(chunks):
+        start = j * base
+        width = SIMHASH_BITS - start if j == chunks - 1 else base
+        specs.append((j, start, (1 << width) - 1))
+    chunked = sims.select(
+        "doc_id", "simhash",
+        F.explode(F.array(*[
+            F.struct(F.lit(j).alias("chunk"),
+                     F.shiftright(F.col("simhash"), s)
+                      .bitwiseAND(F.lit(m)).alias("ckey"))
+            for j, s, m in specs])).alias("c")
+    ).select("doc_id", "simhash", "c.chunk", "c.ckey")
+    # the hamming gate runs BEFORE the distinct: the distance is a pure
+    # function of the pair, so only passing candidates shuffle through it
+    ham = F.bit_count(F.col("simhash1").bitwiseXOR(F.col("simhash2")))
+    return candidate_pairs(chunked, "doc_id", ["chunk", "ckey"], "id1", "id2",
+                           carry=("simhash",),
+                           gate=ham <= F.lit(int(max_hamming)),
+                           extra=(ham.alias("score"),))
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1478,40 +1483,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead (the q_dedup_star_survivors pattern applies unchanged to
     simhash chunks)."""
     docs = load(spark, sf_dir, "documents")
-    toked = explode_tokens(docs, "doc_id", "text")
-    sims = simhash(toked, "doc_id", "token", bits=SIMHASH_BITS).cache()
-    # eager: both chunk-join sides race a lazy cache — and HERE the eager
-    # fill is load-bearing by measurement: the round-13 lazy-fill variant
-    # (the single-fill doctrine that won on the jaccard family) measured
-    # 1.44 -> 2.25+ s at sf0.1 and degrading, so it was reverted. The
-    # difference from the jaccard family: no second derived cache whose
-    # fill would compute this one as a by-product.
-    sims.count()
-    chunk_width = SIMHASH_BITS // SIMHASH_CHUNKS
-    mask = (1 << chunk_width) - 1
-    chunks = sims.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("chunk"),
-                     F.shiftright(F.col("simhash"), j * chunk_width)
-                      .bitwiseAND(F.lit(mask)).alias("ckey"))
-            for j in range(SIMHASH_CHUNKS)])).alias("c")
-    ).select("doc_id", "simhash", "c.chunk", "c.ckey")
-    c1 = chunks.select(F.col("doc_id").alias("d1"), F.col("simhash").alias("h1"),
-                       "chunk", "ckey")
-    c2 = chunks.select(F.col("doc_id").alias("d2"), F.col("simhash").alias("h2"),
-                       "chunk", "ckey")
-    ham = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
-    # hamming gate BEFORE the distinct (round 12, mirroring the ADVICE-r6
-    # fix already in similarity_api._text_simhash_join): the distance is
-    # a pure function of the pair, so filtering first yields the same set
-    # while only PASSING candidates shuffle through the distinct — the
-    # old order shuffled every failing chunk-join candidate too
+    caches: list[DataFrame] = []
+    pairs = _text_simhash_join(docs, SIMHASH_MAX_HAMMING, caches)
     return finalize(
-        c1.join(c2, ["chunk", "ckey"])
-        .filter(F.col("d1") < F.col("d2"))
-        .filter(ham <= SIMHASH_MAX_HAMMING)
-        .select("d1", "d2", ham.alias("hamming")).distinct(), sims)
+        pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                     F.col("score").alias("hamming")), *caches)
 
 
 ORACLE_SIMHASH = f"""

@@ -13,8 +13,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h60_py
-from ..functions.similarity import (brute_force_topk, cosine, cosine_arrow,
-                                    dot)
+from ..functions.similarity import (brute_force_topk, candidate_pairs, cosine,
+                                    cosine_arrow, dot, guard_allpairs,
+                                    l2_normed, verify_cosine)
 from ..localdf import local_df
 from .base import QueryDef, finalize, finalize_cc, load
 
@@ -185,23 +186,9 @@ def q_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuses to plan the O(n^2) join above the baseline cap, so a
     corpus-scale invocation fails fast instead of launching an unbounded
     nested-loop job."""
-    from ..functions.similarity import dot as _dot, guard_allpairs, l2norm
     emb = guard_allpairs(load(spark, sf_dir, "embeddings"),
                          "cosine_neardup_pairs")
-    enorm = emb.select("vec_id", "embedding",
-                       l2norm(F.col("embedding")).alias("nrm"))
-    a = enorm.select(F.col("vec_id").alias("v1"),
-                     F.col("embedding").alias("e1"), F.col("nrm").alias("n1"))
-    b = enorm.select(F.col("vec_id").alias("v2"),
-                     F.col("embedding").alias("e2"), F.col("nrm").alias("n2"))
-    pairs = a.join(b, F.col("v1") < F.col("v2"))
-    # norms precomputed once per vector: each of the O(n^2) pairs costs one
-    # dot product, not three array aggregations (same float sequence as the
-    # oracle's dot/(sqrt*sqrt) => hash-identical)
-    score = F.try_divide(_dot(F.col("e1"), F.col("e2")),
-                         F.col("n1") * F.col("n2"))
-    return (pairs.select("v1", "v2", score.alias("score"))
-            .filter(F.col("score") >= COSINE_PAIR_THRESHOLD)
+    return (verify_cosine(l2_normed(emb), COSINE_PAIR_THRESHOLD, "v1", "v2")
             .select("v1", "v2", F.round("score", 6).alias("cosine")))
 
 
@@ -282,10 +269,11 @@ def q_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen method-size limit and drops the stage to interpreted eval
     (measured 4x slower)."""
     caches: list[DataFrame] = []
-    verified = _srp_verified_pairs(spark, sf_dir, caches)
+    verified = _vector_srp_join(load(spark, sf_dir, "embeddings"),
+                                SRP_THRESHOLD, caches)
     return finalize(
-        verified.select("v1", "v2", F.round("score", 6).alias("cosine")),
-        *caches)
+        verified.select(F.col("id1").alias("v1"), F.col("id2").alias("v2"),
+                        F.round("score", 6).alias("cosine")), *caches)
 
 
 def _srp_bands(emb: DataFrame, bits: int) -> DataFrame:
@@ -327,51 +315,25 @@ def _srp_bands(emb: DataFrame, bits: int) -> DataFrame:
             .select("vec_id", F.posexplode("ks").alias("band", "band_key")))
 
 
-def _srp_verified_pairs(spark: SparkSession, sf_dir: str,
-                        caches: list[DataFrame] | None = None) -> DataFrame:
-    """SRP-LSH candidate generation + exact-cosine verification; returns
-    (v1, v2, score) for score >= SRP_THRESHOLD. Shared by the pair query
-    and the survivor-selection (components) query. Cached frames are
-    appended to `caches` for the caller to release (ADVICE r4)."""
-    emb = load(spark, sf_dir, "embeddings")
-    # corpus-adaptive band width (srp_bits): the count is a bounded scalar
-    # probe; bits is then a PLAN-TIME constant baked into the sketch UDF —
-    # only the oracle computes it in SQL
-    bits = srp_bits(emb.count())
-    # cache: bands feeds both sides of the candidate self-join — uncached,
-    # the hyperplane sketch recomputes per side
-    bands = _srp_bands(emb, bits).cache()
-    if caches is not None:
-        caches.append(bands)
-    b1 = bands.select(F.col("vec_id").alias("v1"), "band", "band_key")
-    b2 = bands.select(F.col("vec_id").alias("v2"), "band", "band_key")
-    cand = (b1.join(b2, ["band", "band_key"])
-            .filter(F.col("v1") < F.col("v2"))
-            .select("v1", "v2").distinct())
-    from ..functions.similarity import dot as _dot, l2norm
-    enorm = emb.select("vec_id", "embedding",
-                       l2norm(F.col("embedding")).alias("nrm")).cache()
-    if caches is not None:
-        caches.append(enorm)
-    e1 = enorm.select(F.col("vec_id").alias("v1"),
-                      F.col("embedding").alias("e1"), F.col("nrm").alias("n1"))
-    e2 = enorm.select(F.col("vec_id").alias("v2"),
-                      F.col("embedding").alias("e2"), F.col("nrm").alias("n2"))
-    # JVM dot with precomputed norms, NOT the Arrow kernel: candidate
-    # verification joins ship two 64-float arrays per PAIR, so the Arrow
-    # path pays serialization per pair and measured ~2x SLOWER at 100x
-    # (104 s vs 47 s) than keeping the arrays JVM-side and spending one
-    # interpreted zip_with dot per candidate. (An unrolled 64-term sum is
-    # worse still — it exceeds the codegen method-size limit.) The Arrow
-    # kernel wins where it replaces a PER-VECTOR scan stage (sketching,
-    # k-means assignment, brute-force scoring), not a per-pair join.
-    score = F.try_divide(_dot(F.col("e1"), F.col("e2")),
-                         F.col("n1") * F.col("n2"))
-    # no broadcast hint: AQE broadcasts the norm side automatically when it
-    # is small, and falls back to a shuffle join at corpus scale
-    return (cand.join(e1, "v1").join(e2, "v2")
-            .select("v1", "v2", score.alias("score"))
-            .filter(F.col("score") >= SRP_THRESHOLD))
+def _vector_srp_join(vecs: DataFrame, threshold: float,
+                     caches: list[DataFrame]) -> DataFrame:
+    """SRP-LSH candidates -> exact-cosine verify over a (vec_id,
+    embedding) frame; returns (id1, id2, score) with score >=
+    ``threshold``. The band width is corpus-adaptive (srp_bits): the
+    count is a bounded scalar probe, and bits is then a PLAN-TIME
+    constant baked into the sketch UDF — only the oracle computes it in
+    SQL. The bands are cached because both candidate sides read them
+    (uncached, the hyperplane sketch recomputes per side); the norms are
+    cached for the two verify sides. Both are appended to ``caches``
+    for the caller to release."""
+    bits = srp_bits(vecs.count())
+    bands = _srp_bands(vecs, bits).cache()
+    caches.append(bands)
+    cand = candidate_pairs(bands, "vec_id", ["band", "band_key"],
+                           "id1", "id2")
+    normed = l2_normed(vecs).cache()
+    caches.append(normed)
+    return verify_cosine(normed, threshold, "id1", "id2", cand)
 
 
 def q_embedding_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,8 +348,9 @@ def q_embedding_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph."""
     from ..operators.dedup import connected_components
     caches: list[DataFrame] = []
-    pairs = _srp_verified_pairs(spark, sf_dir, caches).select("v1", "v2")
-    labels = connected_components(pairs, "v1", "v2")
+    pairs = _vector_srp_join(load(spark, sf_dir, "embeddings"),
+                             SRP_THRESHOLD, caches)
+    labels = connected_components(pairs, "id1", "id2")
     for c in caches:     # labels checkpointed -> caches out of lineage
         c.unpersist()
     out = (labels.groupBy(F.col("label").alias("component"))
@@ -479,30 +442,17 @@ def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-vs-train work — then exact-cosine verification per candidate.
     Output per eval vector: verified train-hit count, min matching train
     id (-1 when clean), contamination flag."""
-    from ..functions.similarity import dot as _dot, l2norm
     emb = load(spark, sf_dir, "embeddings")
+    is_eval = F.col("vec_id") % 5 == 0
     bits = srp_bits(emb.count())
     bands = _srp_bands(emb, bits).cache()
-    bt = (bands.filter(F.col("vec_id") % 5 == 0)
-          .select(F.col("vec_id").alias("vt"), "band", "band_key"))
-    btr = (bands.filter(F.col("vec_id") % 5 != 0)
-           .select(F.col("vec_id").alias("vr"), "band", "band_key"))
-    cand = bt.join(btr, ["band", "band_key"]).select("vt", "vr").distinct()
-    enorm = emb.select("vec_id", "embedding",
-                       l2norm(F.col("embedding")).alias("nrm"))
-    et = enorm.select(F.col("vec_id").alias("vt"),
-                      F.col("embedding").alias("e1"),
-                      F.col("nrm").alias("n1"))
-    er = enorm.select(F.col("vec_id").alias("vr"),
-                      F.col("embedding").alias("e2"),
-                      F.col("nrm").alias("n2"))
-    score = F.try_divide(_dot(F.col("e1"), F.col("e2")),
-                         F.col("n1") * F.col("n2"))
-    hits = (cand.join(et, "vt").join(er, "vr")
-            .filter(score >= SRP_THRESHOLD)
+    cand = candidate_pairs(bands, "vec_id", ["band", "band_key"], "vt", "vr",
+                           probe=is_eval)
+    # norms deliberately uncached: each vector is scored on one side only
+    hits = (verify_cosine(l2_normed(emb), SRP_THRESHOLD, "vt", "vr", cand)
             .groupBy("vt")
             .agg(F.count("*").alias("nh"), F.min("vr").alias("ref")))
-    tests = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
+    tests = emb.filter(is_eval).select("vec_id")
     return finalize(
         tests.join(hits.withColumnRenamed("vt", "vec_id"),
                    "vec_id", "left")
@@ -550,23 +500,13 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — guard_allpairs enforces that: above the cap the audit
     refuses to plan rather than silently launching the quadratic job
     (sample the corpus down first; recall estimates compose)."""
-    from ..functions.similarity import dot as _dot, guard_allpairs, l2norm
     emb = guard_allpairs(load(spark, sf_dir, "embeddings"),
                          "lsh_recall_audit exact side")
-    enorm = emb.select("vec_id", "embedding",
-                       l2norm(F.col("embedding")).alias("nrm"))
-    a = enorm.select(F.col("vec_id").alias("v1"),
-                     F.col("embedding").alias("e1"), F.col("nrm").alias("n1"))
-    b = enorm.select(F.col("vec_id").alias("v2"),
-                     F.col("embedding").alias("e2"), F.col("nrm").alias("n2"))
-    score = F.try_divide(_dot(F.col("e1"), F.col("e2")),
-                         F.col("n1") * F.col("n2"))
-    exact = (a.join(b, F.col("v1") < F.col("v2"))
-             .select(score.alias("score"))
-             .filter(F.col("score") >= SRP_THRESHOLD)
+    exact = (verify_cosine(l2_normed(emb), SRP_THRESHOLD, "v1", "v2")
              .agg(F.count("*").alias("n_exact")))
     caches: list[DataFrame] = []
-    lsh = (_srp_verified_pairs(spark, sf_dir, caches)
+    lsh = (_vector_srp_join(load(spark, sf_dir, "embeddings"),
+                            SRP_THRESHOLD, caches)
            .agg(F.count("*").alias("n_lsh")))
     return finalize(
         exact.crossJoin(lsh)
@@ -820,7 +760,6 @@ def q_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall estimates compose); ground truth uses the same metric PQ
     approximates (unnormalized dot), same self-exclusion, same
     (score desc, vec_id) tie order."""
-    from ..functions.similarity import dot as _dot, guard_allpairs
     emb = guard_allpairs(load(spark, sf_dir, "embeddings"),
                          "pq_recall_audit exact side")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -829,7 +768,7 @@ def q_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("vec_id") != F.col("q_id")))
     scored = pairs.select(
         "q_id", "vec_id",
-        _dot(F.col("embedding"), F.col("q_vec")).alias("score"))
+        dot(F.col("embedding"), F.col("q_vec")).alias("score"))
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), "vec_id")
     exact = (scored.withColumn("rank", F.row_number().over(w))
              .filter(F.col("rank") <= TOPK).select("q_id", "vec_id"))
@@ -1568,7 +1507,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join. At 100 TB route through the IVF cells first and skip
     the query's own cell — the filter composes with any ANN path since
     negatives by construction live in other cells."""
-    from ..functions.similarity import cosine_arrow, guard_allpairs
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"),

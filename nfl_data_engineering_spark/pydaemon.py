@@ -35,14 +35,24 @@ per task BEFORE the UDF is entered):
 
 Both fixes are pure constant-factor wins with no effect on task
 semantics; at cluster scale they amortize worker cold-start and remove a
-per-task tax that is paid millions of times over a 100 TB run. The stock
-daemon remains available via SPARK_GRAFT_STOCK_PYDAEMON=1 (session.py).
+per-task tax that is paid millions of times over a 100 TB run.
+
+Fix 1 rebinds a pyspark internal, so it checks itself at import: the
+stock function's source must hash to the fingerprint of the reviewed
+pyspark 4.1.2 body. On any other body the stock function stays in place
+and a warning says so — a pyspark upgrade degrades to stock speed, never
+to a stale copy of the stock logic. The patched copy leaves out stock's
+``is_remote_only()`` guard (always false in a classic worker); the
+fingerprint pins the version that omission was reviewed against.
 """
 
 from __future__ import annotations
 
+import hashlib
 import importlib
+import inspect
 import os
+import warnings
 
 # ---------------------------------------------------------------------------
 # Fix 1: memoized invalidate_caches. Patch pyspark.worker_util FIRST so any
@@ -85,7 +95,30 @@ def _setup_spark_files(infile) -> None:
         _last_files_state = state
 
 
-_WU.setup_spark_files = _setup_spark_files
+# sha256 of inspect.getsource(pyspark.worker_util.setup_spark_files) in
+# pyspark 4.1.2 — the body _setup_spark_files reproduces
+REVIEWED_SETUP_SHA256 = (
+    "fdbcb9682a6c733a3337a7374713f2d8ef7d08388a91f542b77670a31aa28d43")
+
+
+def _patch_if_reviewed(wu) -> bool:
+    """Rebind ``wu.setup_spark_files`` to the memoized copy when the stock
+    function is the reviewed body; otherwise keep stock and warn."""
+    try:
+        src = inspect.getsource(wu.setup_spark_files)
+    except (OSError, TypeError):   # no source on disk: cannot review it
+        src = ""
+    if hashlib.sha256(src.encode()).hexdigest() == REVIEWED_SETUP_SHA256:
+        wu.setup_spark_files = _setup_spark_files
+        return True
+    warnings.warn(
+        "pyspark.worker_util.setup_spark_files is not the reviewed pyspark "
+        "4.1.2 body; keeping the stock function (import-cache "
+        "invalidation is not memoized)", RuntimeWarning, stacklevel=2)
+    return False
+
+
+PATCHED = _patch_if_reviewed(_WU)
 
 # ---------------------------------------------------------------------------
 # Fix 2: preload the Arrow stack pre-fork (copy-on-write inheritance).
@@ -107,7 +140,8 @@ from pyspark.daemon import manager  # noqa: E402
 
 import pyspark.worker as _W  # noqa: E402
 
-if getattr(_W, "setup_spark_files", None) is _stock_setup_spark_files:
+if PATCHED and getattr(_W, "setup_spark_files",
+                       None) is _stock_setup_spark_files:
     _W.setup_spark_files = _setup_spark_files
 
 if __name__ == "__main__":

@@ -96,14 +96,12 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
     # millions of times over a 100 TB run; semantics unchanged
     # (addPyFile/addFile still re-invalidate). executorEnv.PYTHONPATH
     # makes the module importable by the worker python (the factory
-    # MERGES it with Spark's own python path, never replaces).
-    # SPARK_GRAFT_STOCK_PYDAEMON=1 restores the stock daemon.
-    if os.environ.get("SPARK_GRAFT_STOCK_PYDAEMON", "").lower() not in (
-            "1", "true", "yes"):
-        pkg_parent = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))
-        builder = (builder
-                   .config("spark.python.daemon.module",
-                           "nfl_data_engineering_spark.pydaemon")
-                   .config("spark.executorEnv.PYTHONPATH", pkg_parent))
+    # MERGES it with Spark's own python path, never replaces). The daemon
+    # checks the pyspark function it rebinds at startup and keeps the
+    # stock one on any unreviewed pyspark version.
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    builder = (builder
+               .config("spark.python.daemon.module",
+                       "nfl_data_engineering_spark.pydaemon")
+               .config("spark.executorEnv.PYTHONPATH", pkg_parent))
     return builder.getOrCreate()

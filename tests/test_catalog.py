@@ -1,13 +1,7 @@
-"""CATALOG.md (the generated catalog index, VERDICT r7 item 8) must stay
-in sync with plans/registry.py — a new/renamed/moved entry that isn't
-regenerated turns the suite red here, not at the next judge pass.
-
-Per VERDICT r8 item 2 the sync check also fails when a correctness file
-exists on disk that the committed header does not name: a driver-written
-CORRECTNESS_r0N.json must be folded in (python tools/make_catalog.py)
-first thing the following round, so the index can never silently lag a
-round. Structural columns (name, family, file:line, oracle kind, bench
-pin) are always derived live."""
+"""CATALOG.md (the generated catalog index) must stay in sync with
+plans/registry.py — a new/renamed/moved entry that isn't regenerated
+turns the suite red here. Every column (name, family, file:line, oracle
+kind, bench pin) is derived live from the registry."""
 
 from __future__ import annotations
 
@@ -16,21 +10,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.make_catalog import (  # noqa: E402
-    OUT, check, committed_corr_files, disk_corr_files)
+from tools.make_catalog import OUT, check  # noqa: E402
 
 
 def test_catalog_md_in_sync_with_registry():
     assert check() is None
-
-
-def test_catalog_header_includes_newest_correctness_file_on_disk():
-    """Redundant with check()'s clause (a), but pins the staleness
-    contract explicitly: the newest CORRECTNESS_r0*.json on disk must be
-    named in the committed header."""
-    on_disk = disk_corr_files()
-    assert on_disk, "no CORRECTNESS_r*.json found on disk"
-    assert on_disk[-1] in committed_corr_files()
 
 
 def test_catalog_md_covers_every_entry():
@@ -39,17 +23,3 @@ def test_catalog_md_covers_every_entry():
         body = fh.read()
     for q in CATALOG:
         assert f"| {q.name} |" in body, f"{q.name} missing from CATALOG.md"
-
-
-def test_make_catalog_diagnoses_bad_correctness_files():
-    """ADVICE r8: a malformed or header-named-but-missing correctness
-    file must produce a clear SystemExit naming the offender, not a raw
-    AttributeError/FileNotFoundError."""
-    import pytest
-
-    from tools.make_catalog import newest_green_rounds
-
-    with pytest.raises(SystemExit, match="does not match"):
-        newest_green_rounds(["CORRECTNESS_bogus.json"])
-    with pytest.raises(SystemExit, match="missing on disk"):
-        newest_green_rounds(["CORRECTNESS_r99.json"])

@@ -71,6 +71,41 @@ def test_setup_keeps_stock_sparkfiles_side_effects(tmp_path, monkeypatch):
     assert d in sys.path
 
 
+def test_patch_active_on_installed_pyspark(spark):
+    """The installed pyspark carries the reviewed setup_spark_files body,
+    so the self-check must leave the memoized copy bound — here, and in
+    the Python workers the session's daemon forks."""
+    import pyspark.worker as W
+    import pyspark.worker_util as WU
+    assert pydaemon.PATCHED
+    assert WU.setup_spark_files is pydaemon._setup_spark_files
+    assert W.setup_spark_files is pydaemon._setup_spark_files
+
+    def bound(it):
+        import pandas as pd
+        import pyspark.worker_util as wu
+        for _ in it:
+            yield pd.DataFrame({"fn": [wu.setup_spark_files.__qualname__]})
+
+    got = {r["fn"] for r in spark.range(0, 4, 1, 2)
+           .mapInPandas(bound, "fn string").collect()}
+    assert got == {"_setup_spark_files"}
+
+
+def test_unreviewed_pyspark_keeps_stock(monkeypatch):
+    """A setup_spark_files body that does not match the reviewed
+    fingerprint stays stock, with a warning."""
+    import types
+
+    import pytest
+    monkeypatch.setattr(pydaemon, "REVIEWED_SETUP_SHA256", "0" * 64)
+    stock = pydaemon._stock_setup_spark_files
+    wu = types.SimpleNamespace(setup_spark_files=stock)
+    with pytest.warns(RuntimeWarning, match="keeping the stock function"):
+        assert pydaemon._patch_if_reviewed(wu) is False
+    assert wu.setup_spark_files is stock
+
+
 def test_session_selects_pydaemon(spark):
     """The engine session must run its Python workers through the tuned
     daemon (and ship the package dir so the worker python can import it)."""

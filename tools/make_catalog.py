@@ -1,25 +1,17 @@
-"""Generate CATALOG.md — the machine-readable index of the query catalog
-(VERDICT r7 item 8): one line per registry entry with its SURVEY.md §2 /
-family tag, defining file:line, oracle kind, bench-pin flag, and the
-newest round whose driver correctness file attests it green.
+"""Generate CATALOG.md — the machine-readable index of the query catalog:
+one line per registry entry with its SURVEY.md §2 / family tag, defining
+file:line, oracle kind and bench-pin flag, all derived live from
+plans/registry.py.
 
 Usage:  python tools/make_catalog.py [--check]
 
---check fails when (a) a correctness file exists on disk that the
-committed header does not name — a driver-written CORRECTNESS_r0N.json
-must be folded in by regenerating, first thing each round (VERDICT r8
-item 2: staleness is a test failure, not a judge finding) — or (b) the
-committed body differs from a regeneration over the header's file set;
-the structural columns are always derived live from plans/registry.py.
+--check fails when the committed CATALOG.md differs from a regeneration.
 """
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,115 +19,38 @@ sys.path.insert(0, REPO)
 OUT = os.path.join(REPO, "CATALOG.md")
 
 
-def _green(rec: dict) -> bool:
-    if rec.get("err"):
-        return False
-    return bool(rec.get("rows_match")) and \
-        rec.get("schema_match", True) is not False and \
-        rec.get("hash_match", True) is not False
-
-
-def _round_of(fname: str) -> int:
-    """Round number from a correctness filename, with a diagnostic (not a
-    raw AttributeError) whether the malformed name came from the
-    CATALOG.md header or from a stray file in the repo root (the disk
-    glob feeds this too, and regeneration re-hits the same name — so the
-    remedy for a stray file is removing/renaming it, not regenerating)."""
-    m = re.search(r"_r(\d+)\.json$", fname)
-    if m is None:
-        raise SystemExit(
-            f"correctness filename {fname!r} does not match "
-            "'CORRECTNESS_r<N>.json' — if it is a stray file in the repo "
-            "root, remove or rename it; if only the CATALOG.md header "
-            "names it, fix the header or regenerate with: "
-            "python tools/make_catalog.py")
-    return int(m.group(1))
-
-
-def newest_green_rounds(corr_files: list[str]) -> dict[str, int]:
-    newest: dict[str, int] = {}
-    for f in corr_files:
-        rnd = _round_of(f)
-        path = os.path.join(REPO, f)
-        if not os.path.exists(path):
-            raise SystemExit(
-                f"correctness file {f} is named in CATALOG.md's header "
-                "but missing on disk — regenerate with: "
-                "python tools/make_catalog.py")
-        with open(path) as fh:
-            for name, rec in json.load(fh).items():
-                if _green(rec):
-                    newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
-
-def disk_corr_files() -> list[str]:
-    """All CORRECTNESS_r<N>.json on disk, round order (r* not r0*: round
-    10+ files must keep feeding the vintage column)."""
-    return sorted(
-        (os.path.basename(p) for p in
-         glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))),
-        key=_round_of)
-
-
-def generate(corr_files: list[str]) -> str:
+def generate() -> str:
     from nfl_data_engineering_spark.plans.registry import CATALOG
 
-    vintage = newest_green_rounds(corr_files)
     lines = [
         "# Query catalog index",
         "",
         "MACHINE-GENERATED by `python tools/make_catalog.py` — edit the",
         "registry (`nfl_data_engineering_spark/plans/*.py`), not this file.",
-        "`driver` = newest round whose CORRECTNESS_r0N.json attests the",
-        "entry green (`-` = not yet driver-attested; local parity only).",
         "`oracle` = hash-compared DuckDB SQL twin (`rows` = rows-only).",
-        "",
-        f"correctness files: {' '.join(corr_files)}",
         "",
         f"{len(CATALOG)} entries.",
         "",
-        "| entry | §2 ids / family | defined at | oracle | bench | driver |",
-        "|---|---|---|---|---|---|",
+        "| entry | §2 ids / family | defined at | oracle | bench |",
+        "|---|---|---|---|---|",
     ]
     for q in CATALOG:
         fn = inspect.unwrap(q.spark)
         src = os.path.relpath(inspect.getsourcefile(fn), REPO)
         line = inspect.getsourcelines(fn)[1]
-        rnd = vintage.get(q.name)
         lines.append(
             f"| {q.name} | {q.ops} | {src}:{line} "
             f"| {'sql' if q.oracle else 'rows'} "
-            f"| {'pin' if q.bench else ''} "
-            f"| {f'r{rnd}' if rnd else '-'} |")
+            f"| {'pin' if q.bench else ''} |")
     return "\n".join(lines) + "\n"
 
 
-def committed_corr_files() -> list[str]:
-    """The correctness-file set recorded in the committed CATALOG.md."""
-    with open(OUT) as fh:
-        for ln in fh:
-            if ln.startswith("correctness files: "):
-                return ln.split(": ", 1)[1].split()
-    raise SystemExit("CATALOG.md has no 'correctness files:' header line")
-
-
 def check() -> str | None:
-    """None if the committed CATALOG.md (a) names every correctness file
-    on disk — a driver-written CORRECTNESS_r0N.json that the index does
-    not yet reflect fails here instead of silently going stale for a
-    round (VERDICT r8 item 2) — and (b) matches a regeneration from that
-    set. Single definition shared by `--check` and tests/test_catalog.py."""
-    committed, on_disk = committed_corr_files(), disk_corr_files()
-    missing = sorted(set(on_disk) - set(committed), key=_round_of)
-    if missing:
-        return (f"CATALOG.md header lags the correctness files on disk "
-                f"(missing: {' '.join(missing)}) — regenerate with: "
-                "python tools/make_catalog.py")
-    want = generate(committed)
+    """None if the committed CATALOG.md matches a regeneration. Single
+    definition shared by `--check` and tests/test_catalog.py."""
     with open(OUT) as fh:
         have = fh.read()
-    if want != have:
+    if generate() != have:
         return ("CATALOG.md is out of sync with plans/registry.py — "
                 "regenerate with: python tools/make_catalog.py")
     return None
@@ -150,7 +65,7 @@ def main() -> int:
         print("CATALOG.md in sync")
         return 0
     with open(OUT, "w") as fh:
-        fh.write(generate(disk_corr_files()))
+        fh.write(generate())
     print(f"wrote {OUT}")
     return 0
 

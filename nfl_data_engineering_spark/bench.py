@@ -90,14 +90,10 @@ def _rep(sf_dir: str, rep: int,
         timings: dict[str, float] = {}
         deltas: dict[str, float] = {}
         for q in bench_queries():
-            # steady-state hygiene: drop the previous query's cached
-            # relations (several vector entries park caches they cannot
-            # unpersist themselves — the returned frame still reads them
-            # lazily) and collect garbage so neither stale storage memory
-            # nor GC debt is billed to this query (measured ~2x inflation
-            # on the LSH queries without the gc alone)
+            # whatever an entry pins lives until the next release_deferred()
             release_deferred()
             spark.catalog.clearCache()
+            # keep GC debt off this query (measured ~2x on the LSH queries)
             spark._jvm.System.gc()
             n_runs = 3 if q.name in EXTRA_RUN_QUERIES else 2
             runs = [_run(q, spark, sf_dir) for _ in range(n_runs)]

@@ -127,9 +127,7 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        # several vector entries cache corpora the returned frame still
-        # needs, so they can't unpersist themselves; clear between queries
-        # so a full-catalog run doesn't accumulate stale storage memory
+        # whatever an entry pins lives until the next release_deferred()
         from .plans.base import release_deferred
         release_deferred()
         spark.catalog.clearCache()

@@ -29,6 +29,7 @@ Determinism rules (the driver hash-compares Spark vs DuckDB values):
 
 from __future__ import annotations
 
+import functools
 import os
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -36,8 +37,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..storage import (registry_rdd_ids, sweep_dead_checkpoints,
-                       track_checkpoint)
+from ..storage import (park_frame, park_ids, registry_rdd_ids,
+                       release_frame, release_parked)
 
 
 @dataclass(frozen=True)
@@ -47,13 +48,6 @@ class QueryDef:
     oracle: str | None          # ANSI SQL for DuckDB; None -> rows-only check
     ops: str                    # SURVEY.md §2 operator ids covered
     bench: bool = False         # include in bench.py headline set
-
-
-# Caches whose release is deferred past the entry's result consumption
-# (pair_table=True below). Catalog runners (bench.py, the endurance test)
-# call release_deferred() between entries; a runner that never calls it
-# degrades to the pre-round-5 behavior (caches live until session end).
-_DEFERRED: list[DataFrame] = []
 
 
 @contextmanager
@@ -84,12 +78,12 @@ def stream_state_partitions(spark: SparkSession, n: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-@contextmanager
-def cached_plan_aqe(spark: SparkSession):
-    """Scope ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-    = true around an entry whose caches are TINY relative to the session
-    and whose consumers are per-partition-fixed-cost bound (Arrow
-    mapInPandas passes, chains of near-empty stages).
+def scoped_cached_plan_aqe(fn):
+    """Entry decorator: scope
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` = true
+    around a QueryDef.spark callable whose caches are TINY relative to
+    the session and whose consumers are per-partition-fixed-cost bound
+    (Arrow mapInPandas passes, chains of near-empty stages).
 
     Spark leaves the flag false by default so a cache's output
     partitioning is stable for downstream reuse — but that also disables
@@ -113,31 +107,21 @@ def cached_plan_aqe(spark: SparkSession):
     entry fills its caches eagerly inside the scope); results are
     partitioning-invariant per the determinism doctrine."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-def scoped_cached_plan_aqe(fn):
-    """Entry decorator for :func:`cached_plan_aqe` — the scoped form for
-    QueryDef.spark callables (every scoped entry fills its caches
-    eagerly inside the function body, so the flag is live exactly while
-    they materialize)."""
-    import functools
 
     @functools.wraps(fn)
     def wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        with cached_plan_aqe(spark):
+        try:
+            old = spark.conf.get(key)
+        except Exception:
+            old = None
+        spark.conf.set(key, "true")
+        try:
             return fn(spark, sf_dir)
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
     return wrap
 
 
@@ -160,20 +144,25 @@ def _reliable_checkpoint() -> bool:
         "1", "true", "yes")
 
 
-def finalize(result: DataFrame, *caches: DataFrame,
+def finalize(result: DataFrame, *held: DataFrame,
              pair_table: bool = False) -> DataFrame:
-    """Release an entry's fan-out caches without losing their benefit:
+    """Release an entry's fan-out storage without losing its benefit:
     materialize `result` executor-side (eager localCheckpoint — the
     cached intermediates are read exactly once more, no driver
-    round-trip), then unpersist the caches. Without this, a session
-    running the full query catalog accumulates storage-memory
-    entries for the life of the SparkSession — Spark's cache registry
-    pins persisted plans until an explicit unpersist (ADVICE r4).
-    Checkpoint blocks, by contrast, are ContextCleaner-managed: freed
-    when the returned DataFrame is garbage-collected. The trade is
-    materializing the (small, post-filter) RESULT to release the
-    (large, pre-aggregation) intermediates — the same move as writing
-    a stage's output and dropping its scratch tables on a cluster.
+    round-trip), then release every `held` frame: unpersist a cache, or
+    unpersist a checkpointed helper frame's ``_ckpt_ids`` (the connected-
+    components labels, the BPE token table). Without this, a session
+    running the full query catalog accumulates storage-memory entries
+    for the life of the SparkSession (ADVICE r4). The trade is
+    materializing the (small, post-filter) RESULT to release the (large,
+    pre-aggregation) intermediates — the same move as writing a stage's
+    output and dropping its scratch tables on a cluster.
+
+    Lifetime: whatever an entry pins — this checkpoint, and the caches
+    ``pair_table`` parks — lives until the runner's next
+    release_deferred(). The ledger holds the checkpoint's registry ids,
+    not the frame, so a caller that never drains it still gets
+    ContextCleaner release once the returned frame is garbage.
 
     Two trade-offs a cluster deployment must know (ADVICE r5):
 
@@ -183,105 +172,49 @@ def finalize(result: DataFrame, *caches: DataFrame,
       in local mode and for driver-collected results; a long-lived
       cluster pipeline sets SPARK_GRAFT_RELIABLE_CHECKPOINT=1 (plus
       sparkContext.setCheckpointDir to a durable path) to swap in a
-      reliable checkpoint — tested in tests/test_finalize.py.
+      reliable checkpoint — files under the checkpoint dir, so nothing
+      is parked — tested in tests/test_finalize.py.
     * finalization makes the QueryDef.spark() call EAGERLY execute the
       query at plan-construction time. Plan-only consumers (explain
       dumps, schema checks, tools/audit_plans.py) must set
-      SPARK_GRAFT_NO_FINALIZE=1 to get the raw lazy plan back (caches
-      then retained — acceptable in one-off processes).
-
-    LIFETIME CONTRACT (ADVICE r7): the returned frame's checkpoint
-    blocks are released by the next release_deferred() after its Python
-    wrapper dies. A LAZY plan derived from it still reads those blocks
-    through the truncated lineage, so "derive a child, drop the parent,
-    keep the child" is NOT supported by default — either keep the parent
-    referenced until every derived plan is materialized (what every
-    catalog runner does: the entry result is collected before the next
-    entry's release_deferred), or take ownership first via
-    storage.untrack_checkpoint(parent) and release the returned ids
-    yourself once the children are consumed.
+      SPARK_GRAFT_NO_FINALIZE=1 to get the raw lazy plan back; nothing
+      is released then, since that plan still reads every held frame
+      (acceptable in one-off processes).
 
     ``pair_table=True`` marks entries whose RESULT is the largest frame
     in the plan (pair-enumeration outputs: ~10^8 legitimate rows at the
     100x replica for the minhash baseline — SCALE.md). Eagerly
     checkpointing that to executor storage to free two SMALLER caches
     would invert the "small result, large intermediates" trade, so
-    instead the raw plan is returned and its caches are parked on the
-    deferred list: they stay hot through the result's consumption (the
-    pair plan reads them) and are released by the runner's next
-    release_deferred() call."""
+    instead the raw plan is returned and the held caches are parked:
+    they stay hot through the result's consumption (the pair plan reads
+    them)."""
     if _no_finalize():
         return result
     if pair_table:
-        _DEFERRED.extend(caches)
+        for h in held:
+            park_frame(h)
         return result
     if _reliable_checkpoint():
-        # reliable checkpoints live as FILES under the checkpoint dir,
-        # not as persistent-registry blocks — nothing to track
         out = result.checkpoint(eager=True)
     else:
-        # record the checkpoint's registry ids so release is EXPLICIT
-        # (release_deferred's sweep) once the wrapper dies — the
-        # ContextCleaner/py4j-detach chain is GC-paced and can lose a
-        # detach, pinning one block forever (VERDICT r6 item 1's flake).
-        # The result of an eager localCheckpoint is self-contained (its
-        # plan scans its own checkpoint), satisfying storage.py's
-        # tracking contract. The diff may also catch cache blocks this
-        # job materialized; those unpersist below, making their ids
-        # stale in the tracked set — unpersist_rdd_ids skips absent ids.
-        before = registry_rdd_ids(result.sparkSession)
+        # the registry diff may also catch cache blocks this job filled;
+        # those unpersist below and unpersist_rdd_ids skips absent ids
+        spark = result.sparkSession
+        before = registry_rdd_ids(spark)
         out = result.localCheckpoint(eager=True)
-        track_checkpoint(out, registry_rdd_ids(result.sparkSession) - before)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def finalize_cc(result: DataFrame, labels: DataFrame,
-                *caches: DataFrame) -> DataFrame:
-    """finalize() for entries built on a checkpointed helper frame that
-    exposes ``_ckpt_ids`` (connected_components' final labels, the BPE
-    loop's final token table): after the eager checkpoint materializes
-    every dependent of that frame, its checkpoint has no live reader and
-    is released EXPLICITLY, completing the deterministic-release story.
-    CC's driver fast path persists nothing, so the release is a no-op at
-    small edge counts. Skipped under SPARK_GRAFT_NO_FINALIZE: the
-    returned plan is then still lazy and reads that checkpoint —
-    unconditional release there destroys blocks a later collect needs
-    (round-7 review finding on q_bpe_encode)."""
-    from ..storage import unpersist_rdd_ids
-    out = finalize(result, *caches)
-    if not _no_finalize():
-        unpersist_rdd_ids(labels.sparkSession,
-                          getattr(labels, "_ckpt_ids", set()))
+        park_ids(spark, registry_rdd_ids(spark) - before)
+    for h in held:
+        release_frame(h)
     return out
 
 
 def release_deferred() -> int:
-    """Unpersist caches parked by finalize(pair_table=True) AND
-    explicitly release finalize-checkpoint blocks whose Python wrapper
-    has died (storage.sweep_dead_checkpoints — deterministic, no GC in
-    the path); returns how many storage entries were released.
-    Idempotent; call between catalog entries.
-
-    Tolerates parked frames from a since-STOPPED SparkSession (their
-    blocks died with the JVM; the min-of-N bench runs one fresh session
-    per repetition and the first release_deferred of rep 2 used to NPE on
-    rep 1's parked caches). Same retry policy as sweep_dead_checkpoints:
-    a transient failure on a LIVE session keeps the frame parked for the
-    next call rather than leaking its blocks."""
-    from ..storage import _session_stopped
-    n = 0
-    keep: list[DataFrame] = []
-    for c in _DEFERRED:
-        try:
-            c.unpersist()
-            n += 1
-        except Exception:
-            if not _session_stopped(c.sparkSession):
-                keep.append(c)
-    _DEFERRED[:] = keep
-    return n + sweep_dead_checkpoints()
+    """Release everything catalog entries parked since the last call
+    (storage.release_parked: checkpoint ids and pair_table caches);
+    returns how many storage entries were freed. Idempotent; catalog
+    runners call it between entries."""
+    return release_parked()
 
 
 def dec(c, p="18,2"):

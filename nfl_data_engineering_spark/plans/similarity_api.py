@@ -343,15 +343,7 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
     family's peak. The caller owns that frame's lifetime (it is NOT on
     any family's cache list and survives every staging barrier); release
     it after the union is consumed. Measured A/B at the 10x replica in
-    SCALE.md round 10.
-
-    Lifetime: the returned union holds references to its checkpointed
-    parts (``_staged_parts``), so the parts' blocks survive exactly as
-    long as the union's Python wrapper does — the storage sweep releases
-    them at the first release_deferred() after the caller drops the
-    result. Deriving a lazy child and dropping the union is the same
-    documented derive-then-drop hazard as any finalized frame
-    (storage.untrack_checkpoint is the escape hatch)."""
+    SCALE.md round 10."""
     if not specs:
         raise ValueError("similarity_join_staged: empty spec list")
     parts: list[DataFrame] = []
@@ -373,14 +365,6 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if len(parts) > 1:
-        # pin part wrappers to the union's lifetime. Single-spec calls
-        # must NOT take this branch: out IS parts[0] there, and
-        # out._staged_parts = [out] is a reference cycle only the
-        # generational GC can break — putting the checkpoint release
-        # back on GC pacing, the exact failure mode the deterministic
-        # sweep exists to avoid (round-9 review finding)
-        out._staged_parts = parts
     return out
 
 

@@ -31,8 +31,7 @@ from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
                               explode_shingle_hashes, explode_tokens, lang_id,
                               regex_token_count, shingle_hash_arrays, shingles,
                               tokens)
-from .base import (QueryDef, finalize, finalize_cc, load,
-                   scoped_cached_plan_aqe)
+from .base import QueryDef, finalize, load, scoped_cached_plan_aqe
 
 # DuckDB twins of functions/text.py tokens() and functions/hashing.py h60().
 SQL_TOKENS = "list_filter(regexp_split_to_array(lower({col}), '\\s+'), t -> t != '')"
@@ -195,7 +194,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (labels.groupBy(F.col("label").alias("component"))
            .agg(F.count("*").alias("n_docs"),
                 F.max("n").alias("max_doc_id")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 def _labeled_docs(docs: DataFrame, labels: DataFrame) -> DataFrame:
@@ -229,7 +228,7 @@ def q_dedup_survivor_table(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", canon.alias("canonical_doc_id"),
                    (canon == F.col("doc_id")).cast("int")
                    .alias("is_survivor")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,7 +274,7 @@ def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
                    final_surv.alias("survivor_doc_id"),
                    (F.col("doc_id") == final_surv).cast("int")
                    .alias("is_survivor")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 def sql_minhash_band_ctes(num_hashes: int, num_bands: int) -> str:
@@ -485,7 +484,7 @@ def q_dedup_star_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", canon.alias("canonical_doc_id"),
                    (canon == F.col("doc_id")).cast("int")
                    .alias("is_survivor")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 _SQL_STAR_COMP_CTES = f"""{_SQL_MINHASH_BAND_CTES},
@@ -562,7 +561,7 @@ def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CASE WHEN count(*) > 0 THEN "
                "sum(CAST(n_shards > 1 AS INT)) * 1000000 div count(*) END")
          .alias("split_ppm"))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 def _oracle_cross_shard_audit() -> str:
@@ -644,7 +643,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").alias("n_docs"),
                 F.sum("clustered").cast("bigint").alias("n_clustered_docs"),
                 F.sum("moved").cast("bigint").alias("n_rescued_docs")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 ORACLE_LEAKAGE_SAFE_SPLIT = f"""

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.hashing import h60
 from ..functions.text import tokens
 from ..localdf import local_df
-from .base import (QueryDef, finalize, finalize_cc, load,
+from .base import (QueryDef, finalize, load,
                    scoped_cached_plan_aqe, stream_state_partitions)
 
 SQL_H60 = "(('0x' || substr(md5({e}), 1, 15))::BIGINT)"
@@ -716,11 +716,10 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.expr("n_tokens * 1000000 div n_base_tokens")
                     .alias("compression_ppm")))
     # finalize materializes the rollup, after which the encoded table's
-    # final checkpoint has no live reader — finalize_cc releases it
-    # explicitly, and (unlike a bare unpersist) SKIPS the release under
-    # SPARK_GRAFT_NO_FINALIZE, where the returned plan is still lazy and
-    # reads that checkpoint (round-7 review finding)
-    return finalize_cc(out, encoded)
+    # final checkpoint has no live reader: finalize releases its
+    # _ckpt_ids (skipped under SPARK_GRAFT_NO_FINALIZE, where the
+    # returned plan is still lazy and reads that checkpoint)
+    return finalize(out, encoded)
 
 
 def _bpe_oracle() -> str:

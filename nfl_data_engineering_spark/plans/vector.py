@@ -17,7 +17,7 @@ from ..functions.similarity import (brute_force_topk, candidate_pairs, cosine,
                                     cosine_arrow, dot, guard_allpairs,
                                     l2_normed, verify_cosine)
 from ..localdf import local_df
-from .base import QueryDef, finalize, finalize_cc, load
+from .base import QueryDef, finalize, load
 
 TOPK = 5
 N_QUERIES = 10          # vec_id < 10 are the query vectors
@@ -356,7 +356,7 @@ def q_embedding_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (labels.groupBy(F.col("label").alias("component"))
            .agg(F.count("*").alias("n_vecs"),
                 F.max("n").alias("max_vec_id")))
-    return finalize_cc(out, labels)
+    return finalize(out, labels)
 
 
 def _srp_band_ctes() -> str:
@@ -1269,7 +1269,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     final.count()   # eager: pair kernel + survivor join race a lazy cache
     caches.append(final)
     out, labels = _semdedup_survivors(final)
-    return finalize_cc(out, labels, *caches)
+    return finalize(out, labels, *caches)
 
 
 def _semdedup_tail(assign_rel: str, threshold: float) -> str:
@@ -1428,7 +1428,7 @@ def q_semantic_dedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = fine.cache()
     final.count()   # eager: pair kernel + survivor join race a lazy cache
     out, labels = _semdedup_survivors(final)
-    return finalize_cc(out, labels, emb, coarse, final)
+    return finalize(out, labels, emb, coarse, final)
 
 
 ORACLE_SEMANTIC_DEDUP_TWOLEVEL = _semdedup_two_level_oracle(

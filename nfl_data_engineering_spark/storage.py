@@ -1,41 +1,27 @@
-"""Deterministic storage-release plumbing for engine-created checkpoint
-blocks.
+"""Deterministic storage release for what catalog entries pin.
 
-Spark releases a localCheckpoint's blocks when the ContextCleaner
-notices the JVM-side RDD object became garbage — which, from Python,
-additionally requires py4j to deliver the wrapper's detach message. That
-chain is GC-paced and has a real race: a single lost/late detach pins
-one RDD in the persistent registry indefinitely (observed as the
-endurance test's 1-in-N flake, VERDICT r6 item 1 — one surviving
-`MapPartitionsRDD at localCheckpoint at <unknown>:0` after 240 s of GC
-polling, CacheManager empty).
+Spark frees a cache only on an explicit unpersist, and a
+localCheckpoint's blocks only when the ContextCleaner notices the
+JVM-side RDD became garbage — from Python that chain also needs py4j to
+deliver the wrapper's detach message, so it is GC-paced and can lose a
+detach, pinning one block for the session's life (VERDICT r6 item 1).
 
-This module removes the GC from the release path for every checkpoint
-the ENGINE creates: the creator records the checkpoint's persistent RDD
-ids (a registry diff around the eager materialization), and
-`sweep_dead_checkpoints()` — called by `plans.base.release_deferred()`,
-i.e. by every catalog runner between entries — explicitly unpersists the
-ids whose Python wrapper has died. Explicit unpersist needs no JVM
-garbage collection and no py4j detach.
-
-SAFETY CONTRACT: only frames that are SELF-CONTAINED may be tracked —
-the eager-checkpoint results of `finalize()` (their plan is a scan of
-their own checkpoint). A checkpointed frame that downstream LAZY plans
-still reference (e.g. connected_components' final labels frame, which
-entries derive from and drop) must NOT be weakref-tracked: its wrapper
-dying does not mean its blocks are unused. Those stay ContextCleaner-
-managed; their creators expose the ids on the frame (`_ckpt_ids`) so a
-caller that has materialized every dependent can release explicitly.
+One ledger takes the GC out of the path: ``plans.base.finalize`` parks
+a release action per checkpoint (its registry ids, never the frame) and
+per deferred cache, and ``release_parked()`` — called through
+``plans.base.release_deferred()`` by every catalog runner between
+entries — runs them all. Whatever an entry pins lives until the
+runner's next ``release_deferred()``.
 """
 
 from __future__ import annotations
 
-import weakref
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
-# (weakref to the self-contained frame, its persistent RDD ids, session)
-_TRACKED: list[tuple[weakref.ref, frozenset, object]] = []
+# (session, release action returning the storage entries it freed)
+_LEDGER: list[tuple[object, Callable[[], int]]] = []
 
 
 def registry_rdd_ids(spark) -> set[int]:
@@ -127,60 +113,44 @@ def _session_stopped(spark) -> bool:
         return True
 
 
-def track_checkpoint(df: DataFrame, ids) -> None:
-    """Register a SELF-CONTAINED checkpointed frame for deterministic
-    release once its Python wrapper dies (see module contract)."""
+def release_frame(df: DataFrame) -> int:
+    """Release what a held frame pins: a checkpointed helper's registry
+    ids (``_ckpt_ids``: the CC labels, the BPE token table), else its
+    cache. Returns how many storage entries were freed."""
+    ids = getattr(df, "_ckpt_ids", None)
+    if ids is not None:
+        return unpersist_rdd_ids(df.sparkSession, ids)
+    df.unpersist()
+    return 1
+
+
+def park_frame(df: DataFrame) -> None:
+    """Park a held frame's release (release_frame) on the ledger."""
+    _LEDGER.append((df.sparkSession, lambda: release_frame(df)))
+
+
+def park_ids(spark, ids) -> None:
+    """Park a checkpoint's registry ids on the ledger — the ids, not the
+    frame, so a caller that never drains the ledger still gets
+    ContextCleaner release once the frame is garbage."""
     if ids:
-        _TRACKED.append((weakref.ref(df), frozenset(ids), df.sparkSession))
+        ids = frozenset(ids)
+        _LEDGER.append((spark, lambda: unpersist_rdd_ids(spark, ids)))
 
 
-def untrack_checkpoint(df: DataFrame) -> frozenset:
-    """Transfer release ownership of a tracked checkpoint to the caller:
-    remove `df` from the sweep list and return its registry ids (empty
-    frozenset if it was not tracked).
-
-    This is the supported escape hatch for the one pattern the weakref
-    sweep cannot see (ADVICE r7): a LAZY child plan derived from a
-    finalized result outliving the parent wrapper. The parent's plan is a
-    lineage-truncated checkpoint scan, so the child still reads the
-    parent's blocks — if the parent wrapper dies while tracked, the next
-    sweep unpersists those blocks and the child fails with an
-    unrecoverable missing-block error. A caller that derives-then-drops
-    calls this first and releases the returned ids itself
-    (`unpersist_rdd_ids`) once every dependent is materialized — the same
-    move finalize_cc makes for `_ckpt_ids` frames."""
-    ids: frozenset = frozenset()
-    keep: list[tuple[weakref.ref, frozenset, object]] = []
-    for ref, tracked_ids, spark in _TRACKED:
-        if ref() is df:
-            ids |= tracked_ids
-        else:
-            keep.append((ref, tracked_ids, spark))
-    _TRACKED[:] = keep
-    return ids
-
-
-def sweep_dead_checkpoints() -> int:
-    """Unpersist every tracked checkpoint whose wrapper has died;
-    returns how many registry entries were released. Survivors stay
-    tracked. Safe across stopped sessions (a dead JVM simply has no
-    blocks left to release)."""
-    released = 0
-    alive: list[tuple[weakref.ref, frozenset, object]] = []
-    for ref, ids, spark in _TRACKED:
-        if ref() is None:
-            try:
-                released += unpersist_rdd_ids(spark, ids)
-            except Exception:
-                # Only a STOPPED session means the blocks are already gone
-                # and the entry can be dropped. A transient py4j error on a
-                # LIVE session must keep the entry for the next sweep —
-                # dropping it would leak the blocks for the session's
-                # lifetime, silently defeating deterministic release
-                # (round-8 review finding).
-                if not _session_stopped(spark):
-                    alive.append((ref, ids, spark))
-        else:
-            alive.append((ref, ids, spark))
-    _TRACKED[:] = alive
-    return released
+def release_parked() -> int:
+    """Run every ledger action; returns how many storage entries were
+    freed. An action stays parked only when it fails on a LIVE session
+    (a transient py4j error must not leak its blocks for the session's
+    lifetime — round-8 review finding); on a stopped session the blocks
+    died with the JVM and the action is dropped."""
+    n = 0
+    keep: list[tuple[object, Callable[[], int]]] = []
+    for spark, release in _LEDGER:
+        try:
+            n += release()
+        except Exception:
+            if not _session_stopped(spark):
+                keep.append((spark, release))
+    _LEDGER[:] = keep
+    return n

@@ -1,26 +1,21 @@
-"""Full-catalog endurance proof for the round-5 cache-release sweep
-(plans/base.py finalize / release_deferred): run EVERY catalog entry in
-ONE SparkSession, the way the external driver and a long-lived service
+"""Full-catalog endurance proof for the storage ledger (plans/base.py
+finalize / release_deferred): run EVERY catalog entry in ONE
+SparkSession, the way the external driver and a long-lived service
 would, and assert the session ends with zero leaked storage:
 
 * the CacheManager must be empty — a q_* that caches an intermediate
-  and never hands it to finalize()/its caches list pins it for the
-  session's lifetime (the ADVICE-r4 leak this sweep exists to fix);
-* the persisted-RDD block registry must DRAIN once references drop —
-  finalize's localCheckpoint blocks are ContextCleaner-managed (freed
-  on GC), unlike CacheManager entries which survive until an explicit
-  unpersist. Polling to zero after gc proves that claim is mechanism,
-  not prose (VERDICT r5 item 1).
+  and never hands it to finalize() pins it for the session's lifetime
+  (the ADVICE-r4 leak this exists to fix);
+* no persisted RDD the catalog created may remain in the block registry
+  after the last release_deferred() — whatever an entry pins lives
+  until the runner's next release_deferred(), with no GC in the path.
 
 Runs at sf0.001 so the whole catalog fits the CI budget; leak behavior
 is scale-independent (it's registry bookkeeping, not data volume)."""
 
 from __future__ import annotations
 
-import gc
-import time
 import warnings
-
 
 
 def _persistent_rdds(spark) -> dict[int, str]:
@@ -36,12 +31,9 @@ def _persistent_rdds(spark) -> dict[int, str]:
 
 
 def _run_catalog(spark, sf_dir) -> tuple[list[str], dict[int, str]]:
-    """Own stack frame: every per-entry local (DataFrames, py4j wrappers)
-    dies when this returns, so the drain poll below measures the
-    ContextCleaner, not lingering test-frame references. Returns the
-    failures plus a per-id attribution map (id -> creating entry) so a
-    surviving block names its creator, not just a py4j '<unknown>:0'
-    callsite (VERDICT r6 item 1)."""
+    """Returns the failures plus a per-id attribution map (id -> creating
+    entry) so a surviving block names its creator, not just a py4j
+    '<unknown>:0' callsite (VERDICT r6 item 1)."""
     from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.plans.registry import CATALOG
 
@@ -52,10 +44,9 @@ def _run_catalog(spark, sf_dir) -> tuple[list[str], dict[int, str]]:
         try:
             df = q.spark(spark, sf_dir)
             df.count()           # consume like the driver does
-            del df
         except Exception as e:   # noqa: BLE001 — collect all, report once
             failures.append(f"{q.name}: {type(e).__name__}: {str(e)[:120]}")
-        release_deferred()       # caches parked for us + checkpoint sweep
+        release_deferred()       # everything the entry pinned
         cur = set(_persistent_rdds(spark))
         for i in cur - prev_ids:
             created_by[i] = q.name
@@ -91,28 +82,12 @@ def test_full_catalog_single_session_releases_all_storage(
         "caches an intermediate without routing it through finalize()'s "
         "caches list / release_deferred()")
 
-    # 2) localCheckpoint blocks are cleaner-managed: once the Python
-    # references are gone, GC must drain the persisted-RDD registry.
-    # (A plain cache() leak would sit here forever — that's the
-    # difference this sweep trades on.)
-    # 240s, not 90: the poll races the ContextCleaner, which runs at GC
-    # pace — on a machine also running another Spark JVM (observed: a
-    # parallel pytest invocation) 90s flaked while the same tree passed
-    # in isolation. The assertion is about DRAINING, not speed.
-    def catalog_survivors() -> dict[int, str]:
-        return {i: s for i, s in _persistent_rdds(spark).items()
-                if i not in baseline}
-
-    deadline = time.time() + 240
-    while catalog_survivors() and time.time() < deadline:
-        gc.collect()             # drops py4j wrappers -> JVM refs detach
-        spark._jvm.System.gc()
-        spark._jvm.System.runFinalization()
-        time.sleep(1)
-    left = catalog_survivors()
+    # 2) the last release_deferred() freed every registry id the catalog
+    # created — no gc.collect(), no System.gc(), no poll
+    left = {i: s for i, s in _persistent_rdds(spark).items()
+            if i not in baseline}
     assert not left, (
-        f"{len(left)} catalog-created persisted RDDs still registered 240s "
-        f"after the catalog finished — checkpoint blocks are not being "
-        f"released: " + "; ".join(
+        f"{len(left)} catalog-created persisted RDDs still registered "
+        f"after the last release_deferred(): " + "; ".join(
             f"id={i} (created by {created_by.get(i, 'unattributed')}): {s}"
             for i, s in left.items()))

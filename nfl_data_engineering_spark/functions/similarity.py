@@ -1,7 +1,9 @@
 """Vector similarity (cosine, brute-force top-k, IVF-partitioned ANN) and
 the candidate-join-and-verify kernel every similarity-join entry shares:
 candidate_pairs (keyed equi-join -> distinct id pairs),
-verify_jaccard_arrays and verify_cosine (exact verification).
+verify_jaccard_arrays and verify_cosine (exact verification), plus the
+df-capped exact shingle overlap (capped_overlap) the exact jaccard and
+containment entries and their recall audits measure against.
 
 Embeddings are ``array<float>`` columns (FIXTURES.md F8). Dot products run
 JVM-side via ``zip_with`` + ``aggregate`` in double precision — no Python in
@@ -69,8 +71,9 @@ def cosine(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 # Candidate join + exact verify: the one copy behind every LSH, prefix and
 # SimHash similarity entry (plans/textops.py, plans/vector.py and the
-# plans/similarity_api.py front door). A second copy could silently verify a
-# different truth; tests/test_single_copy.py keeps it single.
+# plans/similarity_api.py front door), and the one df-capped exact overlap.
+# A second copy could silently verify a different truth;
+# tests/test_single_copy.py keeps them single.
 # ---------------------------------------------------------------------------
 
 def candidate_pairs(keyed: DataFrame, id_col: str, keys: list[str],
@@ -103,6 +106,38 @@ def candidate_pairs(keyed: DataFrame, id_col: str, keys: list[str],
     if gate is not None:
         pairs = pairs.filter(gate)
     return pairs.select(c1, c2, *extra).distinct()
+
+
+def capped_overlap(sh: DataFrame, cap: int,
+                   cand: DataFrame | None = None) -> DataFrame:
+    """(d1, d2, i, sz1, sz2) over the per-shingle frame ``sh`` (doc_id,
+    sh60): ``i`` counts the shingles a doc pair shares among those with
+    document frequency <= ``cap``, and sz1/sz2 are the full (uncapped)
+    set sizes. The exact-overlap truth behind the df-capped jaccard and
+    containment entries and their recall audits.
+
+    * ``cand=None``: the capped shingle-keyed self-join, d1 < d2. One
+      shingle in k docs contributes k^2/2 joined rows, so the cap is
+      what keeps the join from going quadratic on boilerplate; it binds
+      the intersection only, so a binding cap can only UNDERCOUNT
+      overlap — the conservative direction for a >= gate.
+    * ``cand`` (unordered d1 < d2 pairs): the same capped intersection,
+      counted on those pairs only."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    rare = (sh.groupBy("sh60").agg(F.count("*").alias("df"))
+            .filter(F.col("df") <= cap).select("sh60"))
+    capped = sh.join(rare, "sh60")
+    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
+    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
+    shared = (s1.join(s2, "sh60").filter(F.col("d1") < F.col("d2"))
+              if cand is None else
+              cand.join(s1, "d1").join(s2, ["d2", "sh60"]))
+    inter = shared.groupBy("d1", "d2").agg(F.count("*").alias("i"))
+    return (inter
+            .join(sizes.select(F.col("doc_id").alias("d1"),
+                               F.col("sz").alias("sz1")), "d1")
+            .join(sizes.select(F.col("doc_id").alias("d2"),
+                               F.col("sz").alias("sz2")), "d2"))
 
 
 def verify_jaccard_arrays(sharr: DataFrame, cand: DataFrame,

@@ -35,7 +35,8 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..storage import (park_frame, park_ids, registry_rdd_ids,
                        release_frame, release_parked)
@@ -50,8 +51,14 @@ class QueryDef:
     bench: bool = False         # include in bench.py headline set
 
 
+# State-store partitions for the catalog's streaming aggregations; see
+# stream_state_partitions. A deployment with a larger key volume sets
+# spark.sql.shuffle.partitions on its own streaming queries.
+STREAM_STATE_PARTITIONS = 8
+
+
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int | None = None):
+def stream_state_partitions(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` around a streaming query's
     start/awaitTermination so its STATE STORE partitioning is sized to the
     aggregation, not to the session's batch default.
@@ -61,17 +68,15 @@ def stream_state_partitions(spark: SparkSession, n: int | None = None):
     holds — measured 2.95 s vs 1.26 s for the 150-key daily rollup drain
     at 32 vs 8 state partitions (guide §2.2's fixed-per-partition overhead
     applied to state stores). The right count tracks key cardinality and
-    throughput, not the core count; the default (8, env
-    SPARK_GRAFT_STREAM_PARTITIONS) is sized for the catalog's ~10^2-key
-    streaming aggregations, and a 100 TB deployment raises it to its key
-    volume. Only the streaming query started inside the scope binds this
-    number (state layout is fixed at first start); the follow-up batch
-    read of the sink runs at the restored session default. Results are
-    partitioning-invariant — only placement changes."""
-    if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+    throughput, not the core count; STREAM_STATE_PARTITIONS (8) is sized
+    for the catalog's ~10^2-key streaming aggregations. Only the streaming
+    query started inside the scope binds this number (state layout is
+    fixed at first start); the follow-up batch read of the sink runs at
+    the restored session default. Results are partitioning-invariant —
+    only placement changes."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(STREAM_STATE_PARTITIONS))
     try:
         yield
     finally:
@@ -217,6 +222,25 @@ def release_deferred() -> int:
     return release_parked()
 
 
+def recall_ppm(truth: DataFrame, route: DataFrame, n: str,
+               m: str) -> DataFrame:
+    """The recall audits' one-row readout: the 1-row truth count ``n``
+    crossed with the 1-row route count ``m``, plus recall in exact
+    integer ppm (NULL when the truth is empty). sql_recall_ppm is the
+    oracle twin."""
+    return truth.crossJoin(route).select(
+        n, m, F.expr(f"CASE WHEN {n} > 0 THEN {m} * 1000000 div {n} END")
+        .alias("recall_ppm"))
+
+
+def sql_recall_ppm(n: str, m: str, rel: str) -> str:
+    """DuckDB twin of :func:`recall_ppm` over the 1-row relation ``rel``."""
+    return f"""SELECT {n}, {m},
+       CAST(CASE WHEN {n} > 0 THEN {m} * 1000000 // {n} END
+            AS BIGINT) AS recall_ppm
+FROM {rel}"""
+
+
 def dec(c, p="18,2"):
     """Exact-decimal cast for money/metric aggregation (determinism rule 1).
     Shared here so every plan module rounds through the SAME precision."""
@@ -254,3 +278,38 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                              "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         return df
     return spark.read.parquet(path)
+
+
+def events_stream_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema for a streaming read of events parquet files like ``path``:
+    the nanosecond ``ts`` is read as int64 nanos (Spark's reader rejects
+    nanos) and the session pinned to UTC, so the window boundaries and
+    field extractions downstream match the oracle's naive UTC wall time.
+    Pair the stream with :func:`decode_stream_ts`."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return spark.read.parquet(path).schema
+
+
+def decode_stream_ts(stream: DataFrame) -> DataFrame:
+    """Rebuild a streamed events ``ts`` as TIMESTAMP: int64 nanos by
+    integer division to micros, a native TIMESTAMP_NTZ by cast (the
+    session is UTC, see events_stream_schema)."""
+    if dict(stream.dtypes).get("ts") == "bigint":
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
+
+
+def event_micros(events: DataFrame) -> Column:
+    """Integer microseconds of a :func:`load`-ed events ``ts``: measured
+    from 2000-01-01 for a native TIMESTAMP_NTZ (timestampdiff keeps the
+    session zone out), from the Unix epoch otherwise. The epochs differ,
+    so only differences and same-offset bins of this value are
+    meaningful."""
+    if dict(events.dtypes)["ts"] == "timestamp_ntz":
+        return F.expr("timestampdiff(MICROSECOND, "
+                      "TIMESTAMP_NTZ '2000-01-01 00:00:00', ts)")
+    return F.expr("unix_micros(ts)")

@@ -22,6 +22,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.hashing import h60_sql
 from ..io import upsert_partitioned
 from ..sources.html_table import scrape_tables_long
 from ..sources.rest_json import flatten_odds, odds_from_json_strings
@@ -697,11 +698,10 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("dc").alias("delta_cents")))
 
 
-ORACLE_SNAPSHOT_DIFF = """
+ORACLE_SNAPSHOT_DIFF = f"""
 WITH g AS (
   SELECT o_orderkey AS k, o_totalprice AS p,
-         (('0x' || substr(md5('snapv_' || CAST(o_orderkey AS VARCHAR)),
-                          1, 15))::BIGINT) % 20 AS g
+         {h60_sql("'snapv_' || CAST(o_orderkey AS VARCHAR)")} % 20 AS g
   FROM orders),
 v1 AS (SELECT k, p FROM g),
 v2 AS (SELECT k, CASE WHEN g = 1 THEN p + 10.0 ELSE p END AS p

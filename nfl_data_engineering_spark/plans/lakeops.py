@@ -26,8 +26,11 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions.hashing import h60_sql
 from ..io import write_bucketed
-from .base import QueryDef, cents, dec as _dec, finalize, load, stream_state_partitions
+from .base import (QueryDef, cents, dec as _dec, decode_stream_ts,
+                   event_micros, events_stream_schema, finalize, load,
+                   stream_state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -172,11 +175,7 @@ def q_interval_incident_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # load() rebuilds as TIMESTAMP; pick the matching micros extraction —
     # only *differences* and same-offset bins are used downstream, so the
     # epoch choice cancels out
-    if dict(src.dtypes)["ts"] == "timestamp_ntz":
-        us = F.expr("timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '2000-01-01 00:00:00', ts)")
-    else:
-        us = F.expr("unix_micros(ts)")
+    us = event_micros(src)
     ev = src.select("event_id", us.alias("us"))
     # windows: each error event, exploded into its two covering bins
     windows = (src.filter(F.col("event_type") == "error")
@@ -227,11 +226,7 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-vs-oracle epoch offset cancels. The oracle is the direct theta
     join (DuckDB plans IEJoin for it)."""
     src = load(spark, sf_dir, "events")
-    if dict(src.dtypes)["ts"] == "timestamp_ntz":
-        us = F.expr("timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '2000-01-01 00:00:00', ts)")
-    else:
-        us = F.expr("unix_micros(ts)")
+    us = event_micros(src)
     base = src.select("event_id", "event_type", us.alias("s"))
     binw = _ERR_LEN_US  # >= max interval length
 
@@ -769,7 +764,6 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_join_size() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("(d::VARCHAR || ':' || user_id::VARCHAR)")
     return f"""
 WITH ca AS (SELECT user_id, COUNT(*) AS ca FROM events
@@ -851,6 +845,9 @@ def q_table_sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("int").alias("in_sync")))
 
 
+_SYNC_H = h60_sql(
+    "'sync_' || CAST(k AS VARCHAR) || '_' || CAST(pc AS VARCHAR)")
+
 ORACLE_TABLE_SYNC = f"""
 WITH base AS (
   SELECT o_orderkey AS k,
@@ -858,8 +855,7 @@ WITH base AS (
          CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS year,
          CAST(EXTRACT(month FROM o_orderdate) AS INTEGER) AS month,
          CASE WHEN EXTRACT(year FROM o_orderdate) >= 1997
-              THEN (('0x' || substr(md5('syncmut_'
-                        || CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT) % 20
+              THEN {h60_sql("'syncmut_' || CAST(o_orderkey AS VARCHAR)")} % 20
               ELSE -1 END AS g
   FROM orders),
 replica AS (
@@ -867,15 +863,13 @@ replica AS (
   FROM base WHERE g <> 0),
 da AS (
   SELECT year, month, COUNT(*) AS n_a,
-         CAST(SUM(CAST((('0x' || substr(md5('sync_' || CAST(k AS VARCHAR)
-                    || '_' || CAST(pc AS VARCHAR)), 1, 15))::BIGINT)
-                   AS DECIMAL(38,0))) % {_SYNC_MOD} AS BIGINT) AS hash_a
+         CAST(SUM(CAST({_SYNC_H} AS DECIMAL(38,0))) % {_SYNC_MOD}
+              AS BIGINT) AS hash_a
   FROM base GROUP BY 1, 2),
 db AS (
   SELECT year, month, COUNT(*) AS n_b,
-         CAST(SUM(CAST((('0x' || substr(md5('sync_' || CAST(k AS VARCHAR)
-                    || '_' || CAST(pc AS VARCHAR)), 1, 15))::BIGINT)
-                   AS DECIMAL(38,0))) % {_SYNC_MOD} AS BIGINT) AS hash_b
+         CAST(SUM(CAST({_SYNC_H} AS DECIMAL(38,0))) % {_SYNC_MOD}
+              AS BIGINT) AS hash_b
   FROM replica GROUP BY 1, 2)
 SELECT year, month, n_a, n_b, hash_a, hash_b,
        CAST(n_a IS NOT DISTINCT FROM n_b
@@ -1135,7 +1129,6 @@ def q_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ab_test() -> str:
-    from ..functions.hashing import h60_sql
     gate = h60_sql("'ab_' || CAST(user_id AS VARCHAR)")
     return f"""
 WITH p AS (
@@ -1499,15 +1492,9 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.copy(src, os.path.join(dup_dir, "copy_a.parquet"))
     shutil.copy(src, os.path.join(dup_dir, "copy_b.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = events_stream_schema(spark, src)
     stream = spark.readStream.schema(raw_schema).parquet(dup_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = decode_stream_ts(stream)
 
     dd = deduped_stream(stream, watermark="40 days", key_cols=["event_id"])
     sink = "streaming_dedup_ingest_sink"
@@ -1652,7 +1639,6 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_record_linkage() -> str:
-    from ..functions.hashing import h60_sql
     g = h60_sql("'rl_' || CAST(c_custkey AS VARCHAR)")
     return f"""
 WITH clean AS (
@@ -1756,7 +1742,6 @@ def q_trailing_unique_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_trailing_hll() -> str:
-    from ..functions.hashing import h60_sql
     from .relational import HLL_ALPHA, HLL_M, HLL_WBITS
     h = h60_sql("user_id::VARCHAR")
     return f"""

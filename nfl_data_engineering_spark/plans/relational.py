@@ -16,8 +16,9 @@ from ..operators.joins import asof_join, matchup_join
 from ..operators.records import split_record
 from ..operators.timeseries import zero_filled_counts
 from ..operators.windows import exp_weighted_mean, topk_per_group, trailing_mean
+from ..functions.hashing import h60_sql
 from ..localdf import local_df
-from .base import QueryDef, cents, dec as _dec, finalize, load
+from .base import QueryDef, cents, dec as _dec, event_micros, finalize, load
 
 
 # ---------------------------------------------------------------------------
@@ -861,7 +862,6 @@ def q_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_sampled_quantiles() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("l_orderkey::VARCHAR || '_' || l_linenumber::VARCHAR")
     return f"""
 SELECT l_returnflag, COUNT(*) AS n_sampled,
@@ -963,7 +963,7 @@ def q_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DISTINCT_KMV = f"""
 WITH hashed AS (
   SELECT DISTINCT event_type,
-         (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT) AS h
+         {h60_sql('user_id::VARCHAR')} AS h
   FROM events),
 ranked AS (
   SELECT event_type, h,
@@ -1040,7 +1040,7 @@ def q_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DISTINCT_HLL = f"""
 WITH h AS (
   SELECT event_type,
-         (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT) AS h
+         {h60_sql('user_id::VARCHAR')} AS h
   FROM events),
 r AS (
   SELECT event_type, h % {HLL_M} AS bucket, h // {HLL_M} AS w FROM h),
@@ -1122,13 +1122,12 @@ ORACLE_HLL_MERGE = f"""
 WITH ranked AS (
   SELECT event_type,
          year(ts) * 100 + month(ts) AS ym,
-         (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT) % {HLL_M}
+         {h60_sql('user_id::VARCHAR')} % {HLL_M}
            AS bucket,
-         CASE WHEN (('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT)
+         CASE WHEN {h60_sql('user_id::VARCHAR')}
                    // {HLL_M} = 0 THEN {HLL_WBITS + 1}
               ELSE {HLL_WBITS}
-                   - length(bin((('0x' || substr(md5(user_id::VARCHAR), 1,
-                                                 15))::BIGINT) // {HLL_M}))
+                   - length(bin({h60_sql('user_id::VARCHAR')} // {HLL_M}))
                    + 1 END AS rank
   FROM events),
 monthly AS (
@@ -3734,7 +3733,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kmv_set_ops() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("user_id::VARCHAR")
     est = (f"CASE WHEN got < {KMV_K} THEN got ELSE "
            f"CAST(({KMV_K - 1}::HUGEINT * {H60_FULL}::HUGEINT) // kth "
@@ -3824,7 +3822,6 @@ def q_rank_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_rank_twophase() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("CAST(l_orderkey AS VARCHAR) || '_' || "
                 "CAST(l_linenumber AS VARCHAR)")
     return f"""
@@ -3864,11 +3861,7 @@ def q_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. Microsecond integer arithmetic; epoch offset cancels in
     the differences."""
     src = load(spark, sf_dir, "events")
-    if dict(src.dtypes)["ts"] == "timestamp_ntz":
-        us = F.expr("timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '2000-01-01 00:00:00', ts)")
-    else:
-        us = F.expr("unix_micros(ts)")
+    us = event_micros(src)
     ev = src.select("user_id", us.alias("us"))
     wo = Window.partitionBy("user_id").orderBy("us")
     flagged = ev.withColumn(

@@ -46,15 +46,17 @@ from pyspark.sql import types as T
 from ..functions.hashing import (RECALL_FLOOR, minhash_band_config,
                                  oph_auto_cutover)
 from ..functions.text import shingle_hash_arrays
-from .base import QueryDef, finalize, load, scoped_cached_plan_aqe
-from .textops import (CONTAINMENT_PCT, JACCARD_THRESHOLD, NGRAM_DF_CAP,
-                      NUM_BANDS, NUM_HASHES, ORACLE_MINHASH_LSH,
+from .base import (QueryDef, finalize, load, recall_ppm,
+                   scoped_cached_plan_aqe)
+from .textops import (CONTAINMENT_PCT, JACCARD_THRESHOLD, NUM_BANDS,
+                      NUM_HASHES, ORACLE_MINHASH_LSH,
                       ORACLE_PREFIX_FILTER_JOIN, ORACLE_SIMHASH,
-                      SIMHASH_BITS, SIMHASH_MAX_HAMMING, SQL_H60,
-                      _sql_shingles_cte, _text_banded_join,
-                      _text_prefix_join, _text_simhash_join,
-                      containment_prefix_pairs, sql_minhash_pair_ctes,
-                      sql_oph_pair_ctes)
+                      SIMHASH_BITS, SIMHASH_MAX_HAMMING,
+                      SQL_CONTAINMENT_DIRS, _sql_shh_ctes,
+                      _text_banded_join, _text_prefix_join,
+                      _text_simhash_join, containment_prefix_pairs,
+                      exact_jaccard_count, sql_jaccard_recall,
+                      sql_minhash_pair_ctes, sql_oph_pair_ctes)
 from .vector import ORACLE_COSINE_LSH, SRP_THRESHOLD, _vector_srp_join
 
 # minhash_band_config / RECALL_FLOOR live in functions.hashing (the
@@ -485,27 +487,10 @@ def q_similarity_containment_api(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_CONTAINMENT_API = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-inter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-j AS (
-  SELECT d1, d2, i, s1.sz AS sz1, s2.sz AS sz2
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2)
-SELECT 'containment' AS family, d1 AS id1, d2 AS id2,
-       ROUND(i::DOUBLE / sz1::DOUBLE, 6) AS score
-FROM j WHERE i * 100 >= sz1 * {CONTAINMENT_PCT}
-UNION ALL
-SELECT 'containment', d2, d1, ROUND(i::DOUBLE / sz2::DOUBLE, 6)
-FROM j WHERE i * 100 >= sz2 * {CONTAINMENT_PCT}
+WITH {SQL_CONTAINMENT_DIRS}
+SELECT 'containment' AS family, sub AS id1, sup AS id2,
+       ROUND(i::DOUBLE / sz_sub::DOUBLE, 6) AS score
+FROM dirs
 """
 
 
@@ -564,8 +549,7 @@ def q_sketch_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SKETCH_ROUTE_REPORT = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
+WITH {_sql_shh_ctes()},
 stats AS (SELECT COUNT(*) AS n_shingles,
                  COUNT(DISTINCT doc_id) AS n_docs FROM shh)
 SELECT n_shingles, n_docs,
@@ -671,7 +655,6 @@ def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     front door used to hardcode). Verified LSH pairs pass the same
     exact-jaccard gate, so recall_ppm = |lsh| * 1e6 / |exact| and must
     sit at/above the S-curve floor."""
-    from .textops import exact_jaccard_count
     docs = load(spark, sf_dir, "documents")
     caches: list[DataFrame] = []
     sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
@@ -689,35 +672,12 @@ def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
                           caches=caches, shingles=sharr,
                           sketch="kdraw").agg(
         F.count("*").alias("n_lsh"))
-    return finalize(
-        exact.crossJoin(lsh)
-        .select("n_exact", "n_lsh",
-                F.expr("CASE WHEN n_exact > 0 "
-                       "THEN n_lsh * 1000000 div n_exact END")
-                .alias("recall_ppm")), *caches)
+    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
 
 
-ORACLE_MINHASH_RECALL_T05 = f"""
-WITH {sql_minhash_pair_ctes(_T05_HASHES, _T05_BANDS, MINHASH_T05)},
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-einter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-exact AS (
-  SELECT COUNT(*) AS n_exact
-  FROM einter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {MINHASH_T05}),
-lsh AS (SELECT COUNT(*) AS n_lsh FROM pairs)
-SELECT n_exact, n_lsh,
-       CAST(CASE WHEN n_exact > 0 THEN n_lsh * 1000000 // n_exact END
-            AS BIGINT) AS recall_ppm
-FROM exact CROSS JOIN lsh
-"""
+ORACLE_MINHASH_RECALL_T05 = sql_jaccard_recall(
+    sql_minhash_pair_ctes(_T05_HASHES, _T05_BANDS, MINHASH_T05),
+    MINHASH_T05, "n_lsh")
 
 
 def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,7 +691,6 @@ def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-pair truth (df-capped quadratic self-join at 0.5) and
     integer-ppm discipline as every other recall audit; the sketch runs
     through the same front door a user calls (sketch='oph')."""
-    from .textops import exact_jaccard_count
     docs = load(spark, sf_dir, "documents")
     caches: list[DataFrame] = []
     sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
@@ -743,35 +702,12 @@ def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     oph = similarity_join(docs, "doc_id", "text", MINHASH_T05,
                           caches=caches, shingles=sharr, sketch="oph").agg(
         F.count("*").alias("n_oph"))
-    return finalize(
-        exact.crossJoin(oph)
-        .select("n_exact", "n_oph",
-                F.expr("CASE WHEN n_exact > 0 "
-                       "THEN n_oph * 1000000 div n_exact END")
-                .alias("recall_ppm")), *caches)
+    return finalize(recall_ppm(exact, oph, "n_exact", "n_oph"), *caches)
 
 
-ORACLE_OPH_RECALL_T05 = f"""
-WITH {sql_oph_pair_ctes(_T05_HASHES, _T05_BANDS, MINHASH_T05)},
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-einter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-exact AS (
-  SELECT COUNT(*) AS n_exact
-  FROM einter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {MINHASH_T05}),
-oph_n AS (SELECT COUNT(*) AS n_oph FROM pairs)
-SELECT n_exact, n_oph,
-       CAST(CASE WHEN n_exact > 0 THEN n_oph * 1000000 // n_exact END
-            AS BIGINT) AS recall_ppm
-FROM exact CROSS JOIN oph_n
-"""
+ORACLE_OPH_RECALL_T05 = sql_jaccard_recall(
+    sql_oph_pair_ctes(_T05_HASHES, _T05_BANDS, MINHASH_T05),
+    MINHASH_T05, "n_oph")
 
 
 def _wrap(oracle: str, family: str, c1: str, c2: str, sc: str) -> str:

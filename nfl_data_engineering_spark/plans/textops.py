@@ -19,23 +19,25 @@ from __future__ import annotations
 import math
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import (Column, DataFrame, SparkSession, Window,
+                         functions as F)
 
 from ..functions.hashing import (
     DEFAULT_JACCARD_THRESHOLD as hashing_default_threshold, MERSENNE_P,
-    NUM_HASHES, OPH_BINS, OPH_DENS_BASE, h60, h60_py, minhash_band_config,
-    minhash_bands_fast, oph_bands_fast, simhash)
-from ..functions.hashing import minhash_bands_arrays
-from ..functions.similarity import candidate_pairs, verify_jaccard_arrays
+    NUM_HASHES, OPH_BINS, OPH_DENS_BASE, h60, h60_py, h60_sql,
+    minhash_band_config, minhash_bands_arrays, minhash_bands_fast,
+    oph_bands_fast, simhash)
+from ..functions.similarity import (candidate_pairs, capped_overlap,
+                                    verify_jaccard_arrays)
 from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
                               explode_shingle_hashes, explode_tokens, lang_id,
                               regex_token_count, shingle_hash_arrays, shingles,
                               tokens)
-from .base import QueryDef, finalize, load, scoped_cached_plan_aqe
+from .base import (QueryDef, finalize, load, recall_ppm,
+                   scoped_cached_plan_aqe, sql_recall_ppm)
 
-# DuckDB twins of functions/text.py tokens() and functions/hashing.py h60().
+# DuckDB twin of functions/text.py tokens().
 SQL_TOKENS = "list_filter(regexp_split_to_array(lower({col}), '\\s+'), t -> t != '')"
-SQL_H60 = "(('0x' || substr(md5({e}), 1, 15))::BIGINT)"
 
 
 def _sql_shingles_cte(n: int = 3, rel: str = "documents") -> str:
@@ -51,6 +53,13 @@ sh AS (
                                i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
   FROM toks)
 """
+
+
+def _sql_shh_ctes(rel: str = "documents") -> str:
+    """_sql_shingles_cte plus ``shh`` (doc_id, sh60): the distinct
+    shingle hashes every shingle-set oracle works on."""
+    return f"""{_sql_shingles_cte(3, rel)},
+shh AS (SELECT DISTINCT doc_id, {h60_sql('shingle')} AS sh60 FROM sh)"""
 
 
 # ---------------------------------------------------------------------------
@@ -283,12 +292,11 @@ def sql_minhash_band_ctes(num_hashes: int, num_bands: int) -> str:
     similarity_join front door derives (b, r) from the caller's
     threshold, VERDICT r6 item 3) get the same independent oracle as the
     module-constant 64x16 entries."""
-    return f"""{_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
+    return f"""{_sql_shh_ctes()},
 params AS (
   SELECT seed,
-         1 + ({SQL_H60.format(e="'mh_a_' || seed")} % {MERSENNE_P - 1}) AS a,
-         ({SQL_H60.format(e="'mh_b_' || seed")} % {MERSENNE_P}) AS b
+         1 + ({h60_sql("'mh_a_' || seed")} % {MERSENNE_P - 1}) AS a,
+         ({h60_sql("'mh_b_' || seed")} % {MERSENNE_P}) AS b
   FROM (SELECT unnest(generate_series(0, {num_hashes - 1})) AS seed)),
 sig AS (
   SELECT doc_id, seed, MIN((a * (sh60 % {MERSENNE_P}) + b) % {MERSENNE_P}) AS minhash
@@ -335,8 +343,7 @@ def sql_oph_band_ctes(num_bins: int, num_bands: int,
     same md5 band keys as the k-draw pipeline. ``rel`` is the corpus
     relation the shingle CTE reads (see _sql_shingles_cte)."""
     rpb = num_bins // num_bands
-    return f"""{_sql_shingles_cte(3, rel)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
+    return f"""{_sql_shh_ctes(rel)},
 oph AS (SELECT doc_id, (sh60 % {MERSENNE_P}) % {num_bins} AS bin,
                (sh60 % {MERSENNE_P}) // {num_bins} AS v FROM shh),
 slot AS (SELECT doc_id, bin, MIN(v) AS v FROM oph GROUP BY 1, 2),
@@ -366,29 +373,24 @@ WITH {_SQL_MINHASH_PAIR_CTES}
 SELECT d1, d2, ROUND(jaccard, 6) AS jaccard FROM pairs
 """
 
-# DuckDB replay of connected components over verified `pairs`: min
-# reachable id per node, declaratively. ONE copy shared by the three
-# component-consuming oracles — a drifting copy would let two entries
-# verify a different component truth.
-_SQL_COMPONENT_CTES = """\
-bi AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
+def sql_component_ctes(pairs: str = "pairs", c1: str = "d1", c2: str = "d2",
+                       id_col: str = "doc_id") -> str:
+    """DuckDB replay of connected components over the (c1, c2) edge
+    relation ``pairs``: ``comp`` (id_col, component) holds each node's
+    minimum reachable id, declaratively. Every component-consuming
+    oracle (text and embedding dedup) uses this one copy."""
+    return f"""\
+bi AS (SELECT {c1} AS a, {c2} AS b FROM {pairs} UNION SELECT {c2}, {c1} FROM {pairs}),
 nodes AS (SELECT DISTINCT a AS n FROM bi),
 r AS (
   SELECT n AS a, n AS b FROM nodes
   UNION
   SELECT r.a, bi.b FROM r JOIN bi ON r.b = bi.a),
-comp AS (SELECT a AS doc_id, MIN(b) AS component FROM r GROUP BY a)"""
+comp AS (SELECT a AS {id_col}, MIN(b) AS component FROM r GROUP BY a)"""
 
-ORACLE_COMPONENTS = f"""
-WITH RECURSIVE {_SQL_MINHASH_PAIR_CTES},
-{_SQL_COMPONENT_CTES}
-SELECT component, COUNT(*) AS n_docs, MAX(doc_id) AS max_doc_id
-FROM comp GROUP BY component
-"""
 
-ORACLE_SURVIVOR_TABLE = f"""
-WITH RECURSIVE {_SQL_MINHASH_PAIR_CTES},
-{_SQL_COMPONENT_CTES}
+# one row per document: its component minimum, or itself when unpaired
+_SQL_SURVIVOR_SELECT = """\
 SELECT d.doc_id,
        COALESCE(comp.component, d.doc_id) AS canonical_doc_id,
        CASE WHEN COALESCE(comp.component, d.doc_id) = d.doc_id
@@ -396,9 +398,21 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN comp ON comp.doc_id = d.doc_id
 """
 
+ORACLE_COMPONENTS = f"""
+WITH RECURSIVE {_SQL_MINHASH_PAIR_CTES},
+{sql_component_ctes()}
+SELECT component, COUNT(*) AS n_docs, MAX(doc_id) AS max_doc_id
+FROM comp GROUP BY component
+"""
+
+ORACLE_SURVIVOR_TABLE = f"""
+WITH RECURSIVE {_SQL_MINHASH_PAIR_CTES},
+{sql_component_ctes()}
+{_SQL_SURVIVOR_SELECT}"""
+
 ORACLE_QUALITY_SURVIVORS = f"""
 WITH RECURSIVE {_SQL_MINHASH_PAIR_CTES},
-{_SQL_COMPONENT_CTES},
+{sql_component_ctes()},
 member AS (
   SELECT d.doc_id, COALESCE(comp.component, d.doc_id) AS component,
          d.n_chars
@@ -506,22 +520,11 @@ vpairs AS (
   JOIN sizes s1 ON s1.doc_id = d1
   JOIN sizes s2 ON s2.doc_id = d2
   WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}),
-bi AS (SELECT d1 AS a, d2 AS b FROM vpairs UNION SELECT d2, d1 FROM vpairs),
-nodes AS (SELECT DISTINCT a AS n FROM bi),
-r AS (
-  SELECT n AS a, n AS b FROM nodes
-  UNION
-  SELECT r.a, bi.b FROM r JOIN bi ON r.b = bi.a),
-comp AS (SELECT a AS doc_id, MIN(b) AS component FROM r GROUP BY a)"""
+{sql_component_ctes("vpairs")}"""
 
 ORACLE_STAR_SURVIVORS = f"""
 WITH RECURSIVE {_SQL_STAR_COMP_CTES}
-SELECT d.doc_id,
-       COALESCE(comp.component, d.doc_id) AS canonical_doc_id,
-       CASE WHEN COALESCE(comp.component, d.doc_id) = d.doc_id
-            THEN 1 ELSE 0 END AS is_survivor
-FROM documents d LEFT JOIN comp ON comp.doc_id = d.doc_id
-"""
+{_SQL_SURVIVOR_SELECT}"""
 
 
 def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,7 +568,6 @@ def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_cross_shard_audit() -> str:
-    from ..functions.hashing import h60_sql
     from .training import N_SHARDS
     h = h60_sql("text")
     return f"""
@@ -651,9 +653,9 @@ WITH RECURSIVE {_SQL_STAR_COMP_CTES},
 assigned AS (
   SELECT d.doc_id,
          CASE WHEN comp.doc_id IS NOT NULL THEN 1 ELSE 0 END AS clustered,
-         {SQL_H60.format(e="'split_' || COALESCE(comp.component, d.doc_id)::VARCHAR")} % 10
+         {h60_sql("'split_' || COALESCE(comp.component, d.doc_id)::VARCHAR")} % 10
            AS cb,
-         {SQL_H60.format(e="'split_' || d.doc_id::VARCHAR")} % 10 AS nb
+         {h60_sql("'split_' || d.doc_id::VARCHAR")} % 10 AS nb
   FROM documents d LEFT JOIN comp ON comp.doc_id = d.doc_id),
 split_map AS (
   SELECT doc_id, clustered,
@@ -778,42 +780,52 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys; row-local within-doc dedup)."""
     docs = load(spark, sf_dir, "documents")
     sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    rare = (sh.groupBy("sh60").agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= NGRAM_DF_CAP).select("sh60"))
-    capped = sh.join(rare, "sh60")
-    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
-    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
-    inter = (s1.join(s2, "sh60").filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2").agg(F.count("*").alias("i")))
-    jac = (F.col("i").cast("double")
-           / (F.col("sz1") + F.col("sz2") - F.col("i")).cast("double"))
+    jac = _overlap_jaccard()
     return finalize(
-        inter
-        .join(sizes.select(F.col("doc_id").alias("d1"), F.col("sz").alias("sz1")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("sz").alias("sz2")), "d2")
+        capped_overlap(sh, NGRAM_DF_CAP)
         .filter(jac >= 0.7)
         .select("d1", "d2", F.round(jac, 6).alias("jaccard")), sh,
         pair_table=True)
 
 
-ORACLE_NGRAM_JACCARD = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
+def _overlap_jaccard() -> Column:
+    """Jaccard of a capped_overlap row: i / (sz1 + sz2 - i) in double."""
+    return (F.col("i").cast("double")
+            / (F.col("sz1") + F.col("sz2") - F.col("i")).cast("double"))
+
+
+def sql_capped_overlap_ctes(cap: int) -> str:
+    """DuckDB spec of the df-capped exact overlap over ``shh`` and
+    ``sizes``: ``overlap`` holds (d1, d2, i, sz1, sz2) for d1 < d2, with
+    i counting shared shingles of document frequency <= ``cap`` and
+    sz1/sz2 the full set sizes. The one copy every capped-truth oracle
+    uses; independent of the Spark kernel (functions/similarity.py
+    capped_overlap) it checks."""
+    return f"""rare AS (SELECT sh60 FROM shh GROUP BY sh60
+         HAVING COUNT(*) <= {cap}),
 capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-inter AS (
+cinter AS (
   SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
   FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2)
-SELECT d1, d2,
-       ROUND(i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE, 6) AS jaccard
-FROM inter
-JOIN sizes s1 ON s1.doc_id = d1
-JOIN sizes s2 ON s2.doc_id = d2
-WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= 0.7
+  GROUP BY 1, 2),
+overlap AS (
+  SELECT d1, d2, i, s1.sz AS sz1, s2.sz AS sz2
+  FROM cinter
+  JOIN sizes s1 ON s1.doc_id = d1
+  JOIN sizes s2 ON s2.doc_id = d2)"""
+
+
+# jaccard of an ``overlap`` row, the oracle twin of _overlap_jaccard
+_SQL_OVERLAP_JACCARD = "i::DOUBLE / (sz1 + sz2 - i)::DOUBLE"
+
+_SQL_CAPPED_OVERLAP = f"""{_sql_shh_ctes()},
+sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
+{sql_capped_overlap_ctes(NGRAM_DF_CAP)}"""
+
+ORACLE_NGRAM_JACCARD = f"""
+WITH {_SQL_CAPPED_OVERLAP}
+SELECT d1, d2, ROUND({_SQL_OVERLAP_JACCARD}, 6) AS jaccard
+FROM overlap WHERE {_SQL_OVERLAP_JACCARD} >= 0.7
 """
 
 
@@ -854,62 +866,53 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
     sh.count()   # eager: sizes/rare/capped consumers race a lazy cache,
     #              and the fill must land inside the cached-plan-AQE scope
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    rare = (sh.groupBy("sh60").agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= NGRAM_DF_CAP).select("sh60"))
-    capped = sh.join(rare, "sh60")
-    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
-    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
-    inter = (s1.join(s2, "sh60").filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2").agg(F.count("*").alias("i")))
-    j = (inter
-         .join(sizes.select(F.col("doc_id").alias("d1"),
-                            F.col("sz").alias("sz1")), "d1")
-         .join(sizes.select(F.col("doc_id").alias("d2"),
-                            F.col("sz").alias("sz2")), "d2"))
-    # BOTH ordered gates in one row-local explode over the unordered
-    # pair row — a fwd/bwd UNION would give the j frame two consumers
-    # and execute the whole df-capped join DAG twice (measured 26.0 s vs
-    # 17.8 s for the single-DAG jaccard twin at the 10x replica before
-    # this form). NULL array slots (direction fails its gate) are
-    # dropped by the isNotNull filter.
-    def _dir(sub: str, sup: str, sz: str):
-        return F.when(
-            F.expr(f"i * 100 >= {sz} * {CONTAINMENT_PCT}"),
-            F.struct(F.col(sub).alias("sub_doc_id"),
-                     F.col(sup).alias("super_doc_id"),
-                     F.expr(f"i * 1000 div {sz}")
-                      .alias("containment_x1000")))
-
-    out = (j.select(F.explode(F.array(_dir("d1", "d2", "sz1"),
-                                      _dir("d2", "d1", "sz2"))).alias("p"))
-           .filter(F.col("p").isNotNull())
-           .select("p.*"))
+    out = (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
+                                  CONTAINMENT_PCT * 10)
+           .select("sub_doc_id", "super_doc_id",
+                   F.expr("i * 1000 div sz_sub")
+                    .alias("containment_x1000")))
     return finalize(out, sh, pair_table=True)
 
 
+def containment_directions(ov: DataFrame, t_pm: int) -> DataFrame:
+    """Ordered containment pairs (sub_doc_id, super_doc_id, i, sz_sub)
+    from unordered overlap rows (d1, d2, i, sz1, sz2): each direction
+    passes when i * 1000 >= sz_sub * ``t_pm`` (integer per-mille, so no
+    float touches the decision). BOTH ordered gates ride one row-local
+    explode over the unordered pair row — a fwd/bwd UNION would give
+    the overlap frame two consumers and execute the whole df-capped join
+    DAG twice (measured 26.0 s vs 17.8 s for the single-DAG jaccard twin
+    at the 10x replica before this form). NULL array slots (direction
+    fails its gate) are dropped by the isNotNull filter."""
+    def one(sub: str, sup: str, sz: str):
+        return F.when(
+            F.expr(f"i * 1000 >= {sz} * {t_pm}"),
+            F.struct(F.col(sub).alias("sub_doc_id"),
+                     F.col(sup).alias("super_doc_id"),
+                     F.col("i"), F.col(sz).alias("sz_sub")))
+
+    return (ov.select(F.explode(F.array(one("d1", "d2", "sz1"),
+                                        one("d2", "d1", "sz2"))).alias("p"))
+            .filter(F.col("p").isNotNull())
+            .select("p.*"))
+
+
+# DuckDB spec of the ordered containment pairs at the 0.90 gate: dirs
+# (sub, sup, i, sz_sub) over the capped overlap, one direction per
+# UNION ALL arm
+SQL_CONTAINMENT_DIRS = f"""{_SQL_CAPPED_OVERLAP},
+dirs AS (
+  SELECT d1 AS sub, d2 AS sup, i, sz1 AS sz_sub
+  FROM overlap WHERE i * 100 >= sz1 * {CONTAINMENT_PCT}
+  UNION ALL
+  SELECT d2, d1, i, sz2
+  FROM overlap WHERE i * 100 >= sz2 * {CONTAINMENT_PCT})"""
+
 ORACLE_CONTAINMENT_JOIN = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-inter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-j AS (
-  SELECT d1, d2, i, s1.sz AS sz1, s2.sz AS sz2
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2)
-SELECT d1 AS sub_doc_id, d2 AS super_doc_id,
-       i * 1000 // sz1 AS containment_x1000
-FROM j WHERE i * 100 >= sz1 * {CONTAINMENT_PCT}
-UNION ALL
-SELECT d2, d1, i * 1000 // sz2
-FROM j WHERE i * 100 >= sz2 * {CONTAINMENT_PCT}
+WITH {SQL_CONTAINMENT_DIRS}
+SELECT sub AS sub_doc_id, sup AS super_doc_id,
+       i * 1000 // sz_sub AS containment_x1000
+FROM dirs
 """
 
 
@@ -973,34 +976,15 @@ def containment_prefix_pairs(sh: DataFrame, t_pm: int) -> DataFrame:
                f"sz - (({t_pm} * sz + 999) div 1000) + 1"))
            .select(F.col("doc_id").alias("d_sub"), "sh60"))
     rare = dfreq.filter(F.col("df") <= NGRAM_DF_CAP).select("sh60")
-    capped = sh.join(rare, "sh60")
-    idx = capped.select(F.col("doc_id").alias("d_sup"), "sh60")
+    idx = sh.join(rare, "sh60").select(F.col("doc_id").alias("d_sup"),
+                                       "sh60")
     cand = (pre.join(idx, "sh60")
             .filter(F.col("d_sub") != F.col("d_sup"))
             .select(F.least("d_sub", "d_sup").alias("d1"),
                     F.greatest("d_sub", "d_sup").alias("d2"))
             .distinct())
-    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
-    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
-    inter = (cand.join(s1, "d1").join(s2, ["d2", "sh60"])
-             .groupBy("d1", "d2").agg(F.count("*").alias("i")))
-    j = (inter
-         .join(sizes.select(F.col("doc_id").alias("d1"),
-                            F.col("sz").alias("sz1")), "d1")
-         .join(sizes.select(F.col("doc_id").alias("d2"),
-                            F.col("sz").alias("sz2")), "d2"))
-
-    def _dir(sub: str, sup: str, sz: str):
-        return F.when(
-            F.expr(f"i * 1000 >= {sz} * {t_pm}"),
-            F.struct(F.col(sub).alias("sub_doc_id"),
-                     F.col(sup).alias("super_doc_id"),
-                     F.col("i"), F.col(sz).alias("sz_sub")))
-
-    return (j.select(F.explode(F.array(_dir("d1", "d2", "sz1"),
-                                       _dir("d2", "d1", "sz2"))).alias("p"))
-            .filter(F.col("p").isNotNull())
-            .select("p.*"))
+    return containment_directions(capped_overlap(sh, NGRAM_DF_CAP, cand),
+                                  t_pm)
 
 
 @scoped_cached_plan_aqe
@@ -1044,57 +1028,17 @@ def q_containment_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
     sh.count()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    rare = (sh.groupBy("sh60").agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= NGRAM_DF_CAP).select("sh60"))
-    capped = sh.join(rare, "sh60")
-    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
-    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
-    inter = (s1.join(s2, "sh60").filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2").agg(F.count("*").alias("i")))
-    j = (inter
-         .join(sizes.select(F.col("doc_id").alias("d1"),
-                            F.col("sz").alias("sz1")), "d1")
-         .join(sizes.select(F.col("doc_id").alias("d2"),
-                            F.col("sz").alias("sz2")), "d2"))
-    truth = j.select(
-        (F.expr(f"CASE WHEN i * 100 >= sz1 * {CONTAINMENT_PCT} "
-                f"THEN 1 ELSE 0 END")
-         + F.expr(f"CASE WHEN i * 100 >= sz2 * {CONTAINMENT_PCT} "
-                  f"THEN 1 ELSE 0 END")).alias("k")
-    ).agg(F.coalesce(F.sum("k"), F.lit(0)).alias("n_truth"))
+    truth = (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
+                                    CONTAINMENT_PCT * 10)
+             .agg(F.count("*").alias("n_truth")))
     route = (containment_prefix_pairs(sh, CONTAINMENT_PCT * 10)
              .agg(F.count("*").alias("n_route")))
-    return finalize(
-        truth.crossJoin(route)
-        .select("n_truth", "n_route",
-                F.expr("CASE WHEN n_truth > 0 "
-                       "THEN n_route * 1000000 div n_truth END")
-                .alias("recall_ppm")), sh)
+    return finalize(recall_ppm(truth, route, "n_truth", "n_route"), sh)
 
 
 ORACLE_CONTAINMENT_RECALL = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-inter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-j AS (
-  SELECT i, s1.sz AS sz1, s2.sz AS sz2
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2),
-truth AS (
-  SELECT CAST(COALESCE(SUM(
-           CASE WHEN i * 100 >= sz1 * {CONTAINMENT_PCT} THEN 1 ELSE 0 END
-         + CASE WHEN i * 100 >= sz2 * {CONTAINMENT_PCT} THEN 1 ELSE 0 END),
-         0) AS BIGINT) AS n_truth
-  FROM j)
+WITH {SQL_CONTAINMENT_DIRS},
+truth AS (SELECT COUNT(*) AS n_truth FROM dirs)
 -- the prefix bound is lossless by theorem, so the independent spec
 -- predicts the route count from the truth count: a single lost pair
 -- hash-mismatches n_route (and recall_ppm) against the live route
@@ -1111,23 +1055,24 @@ def exact_jaccard_count(sh: DataFrame, threshold: float) -> DataFrame:
     every threshold (q_minhash_recall_audit at 0.8,
     similarity_api.q_minhash_recall_t05 at 0.5 — round-7 review: two
     drifting copies would silently measure different 'truths')."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    rare = (sh.groupBy("sh60").agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= NGRAM_DF_CAP).select("sh60"))
-    capped = sh.join(rare, "sh60")
-    s1 = capped.select(F.col("doc_id").alias("d1"), "sh60")
-    s2 = capped.select(F.col("doc_id").alias("d2"), "sh60")
-    inter = (s1.join(s2, "sh60").filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2").agg(F.count("*").alias("i")))
-    jac = (F.col("i").cast("double")
-           / (F.col("sz1") + F.col("sz2") - F.col("i")).cast("double"))
-    return (inter
-            .join(sizes.select(F.col("doc_id").alias("d1"),
-                               F.col("sz").alias("sz1")), "d1")
-            .join(sizes.select(F.col("doc_id").alias("d2"),
-                               F.col("sz").alias("sz2")), "d2")
-            .filter(jac >= F.lit(float(threshold)))
+    return (capped_overlap(sh, NGRAM_DF_CAP)
+            .filter(_overlap_jaccard() >= F.lit(float(threshold)))
             .agg(F.count("*").alias("n_exact")))
+
+
+def sql_jaccard_recall(pair_ctes: str, threshold: float, m: str) -> str:
+    """Oracle of a jaccard recall audit: ``n_exact`` from the capped
+    overlap at ``threshold`` vs the sketch's verified ``pairs`` (defined
+    by ``pair_ctes``, which also supply ``shh`` and ``sizes``) counted as
+    ``m``, with recall in exact integer ppm."""
+    return f"""
+WITH {pair_ctes},
+{sql_capped_overlap_ctes(NGRAM_DF_CAP)},
+exact AS (SELECT COUNT(*) AS n_exact FROM overlap
+          WHERE {_SQL_OVERLAP_JACCARD} >= {threshold}),
+route AS (SELECT COUNT(*) AS {m} FROM pairs)
+{sql_recall_ppm("n_exact", m, "exact CROSS JOIN route")}
+"""
 
 
 def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,12 +1099,7 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     caches: list[DataFrame] = [sharr]
     lsh = _minhash_pairs(spark, sf_dir, caches, sharr=sharr).agg(
         F.count("*").alias("n_lsh"))
-    return finalize(
-        exact.crossJoin(lsh)
-        .select("n_exact", "n_lsh",
-                F.expr("CASE WHEN n_exact > 0 "
-                       "THEN n_lsh * 1000000 div n_exact END")
-                .alias("recall_ppm")), *caches)
+    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
 
 
 def _text_prefix_join(sharr: DataFrame, threshold: float,
@@ -1241,8 +1181,7 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_PREFIX_FILTER_JOIN = f"""
-WITH {_sql_shingles_cte(3)},
-shh AS (SELECT DISTINCT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM sh),
+WITH {_sql_shh_ctes()},
 sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
 inter AS (
   SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
@@ -1257,27 +1196,8 @@ WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}
 """
 
 
-ORACLE_MINHASH_RECALL = f"""
-WITH {_SQL_MINHASH_PAIR_CTES},
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-einter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-exact AS (
-  SELECT COUNT(*) AS n_exact
-  FROM einter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}),
-lsh AS (SELECT COUNT(*) AS n_lsh FROM pairs)
-SELECT n_exact, n_lsh,
-       CAST(CASE WHEN n_exact > 0 THEN n_lsh * 1000000 // n_exact END
-            AS BIGINT) AS recall_ppm
-FROM exact CROSS JOIN lsh
-"""
+ORACLE_MINHASH_RECALL = sql_jaccard_recall(_SQL_MINHASH_PAIR_CTES,
+                                           JACCARD_THRESHOLD, "n_lsh")
 
 
 # ---------------------------------------------------------------------------
@@ -1338,12 +1258,7 @@ def q_oph_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oph = _minhash_pairs(spark, sf_dir, caches, sharr=sharr,
                          sketch="oph").agg(
         F.count("*").alias("n_oph"))
-    return finalize(
-        exact.crossJoin(oph)
-        .select("n_exact", "n_oph",
-                F.expr("CASE WHEN n_exact > 0 "
-                       "THEN n_oph * 1000000 div n_exact END")
-                .alias("recall_ppm")), *caches)
+    return finalize(recall_ppm(exact, oph, "n_exact", "n_oph"), *caches)
 
 
 def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1396,27 +1311,8 @@ def _oracle_bucket_histogram() -> str:
             + side("oph", sql_oph_band_ctes(OPH_BINS, OPH_NUM_BANDS)))
 
 
-ORACLE_OPH_RECALL = f"""
-WITH {_SQL_OPH_PAIR_CTES},
-rare AS (SELECT sh60 FROM shh GROUP BY sh60
-         HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-capped AS (SELECT shh.doc_id, shh.sh60 FROM shh JOIN rare USING (sh60)),
-einter AS (
-  SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS i
-  FROM capped x JOIN capped y ON y.sh60 = x.sh60 AND x.doc_id < y.doc_id
-  GROUP BY 1, 2),
-exact AS (
-  SELECT COUNT(*) AS n_exact
-  FROM einter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}),
-oph_n AS (SELECT COUNT(*) AS n_oph FROM pairs)
-SELECT n_exact, n_oph,
-       CAST(CASE WHEN n_exact > 0 THEN n_oph * 1000000 // n_exact END
-            AS BIGINT) AS recall_ppm
-FROM exact CROSS JOIN oph_n
-"""
+ORACLE_OPH_RECALL = sql_jaccard_recall(_SQL_OPH_PAIR_CTES,
+                                       JACCARD_THRESHOLD, "n_oph")
 
 
 # ---------------------------------------------------------------------------
@@ -1492,7 +1388,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SIMHASH = f"""
 WITH tok AS (
   SELECT doc_id, unnest({SQL_TOKENS.format(col='text')}) AS token FROM documents),
-th AS (SELECT doc_id, {SQL_H60.format(e='token')} AS h FROM tok),
+th AS (SELECT doc_id, {h60_sql('token')} AS h FROM tok),
 votes AS (
   SELECT doc_id, bit,
          SUM(CASE WHEN (h >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -1755,7 +1651,7 @@ WITH tok AS (
          generate_subscripts({SQL_TOKENS.format(col='text')}, 1) - 1 AS pos
   FROM documents)
 SELECT doc_id,
-       bit_xor((({SQL_H60.format(e='token')} % {MERSENNE_P})
+       bit_xor((({h60_sql('token')} % {MERSENNE_P})
                 * ((pos * 2654435761) % {MERSENNE_P} + 1)) % {MERSENNE_P}) AS fingerprint
 FROM tok GROUP BY doc_id
 """
@@ -2051,7 +1947,7 @@ shn AS (
          unnest(list_transform(generate_series(1, greatest(len(tk) - {n - 1}, 0)),
                                i -> {concat})) AS shingle
   FROM toks),
-shh AS (SELECT doc_id, {SQL_H60.format(e='shingle')} AS sh60 FROM shn)
+shh AS (SELECT doc_id, {h60_sql('shingle')} AS sh60 FROM shn)
 """
 
 
@@ -2119,7 +2015,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_heavy_hitters_cms() -> str:
-    h = SQL_H60.format(e="(d::VARCHAR || ':' || term)")
+    h = h60_sql("(d::VARCHAR || ':' || term)")
     toks = SQL_TOKENS.format(col="text")
     return f"""
 WITH tok AS (SELECT unnest({toks}) AS term FROM documents),
@@ -2310,7 +2206,7 @@ ix AS (
   FROM t),
 segs AS (
   SELECT doc_id, seg_idx,
-         {SQL_H60.format(e=f"array_to_string(tk[seg_idx*{SEGMENT_TOKENS}+1:seg_idx*{SEGMENT_TOKENS}+{SEGMENT_TOKENS}], ' ')")} AS seg60,
+         {h60_sql(f"array_to_string(tk[seg_idx*{SEGMENT_TOKENS}+1:seg_idx*{SEGMENT_TOKENS}+{SEGMENT_TOKENS}], ' ')")} AS seg60,
          LEAST(len(tk) - seg_idx*{SEGMENT_TOKENS}, {SEGMENT_TOKENS}) AS seg_tokens
   FROM ix),
 df AS (SELECT seg60 FROM segs GROUP BY seg60
@@ -2446,12 +2342,16 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize(out, *caches)
 
 
-def _substring_spans_oracle() -> str:
+def _sql_dup_island_ctes(k: int) -> str:
+    """DuckDB spec of the substring-dedup span derivation: tokenized
+    corpus ``t`` (doc_id, tk), stride-1 k-token window hashes, the
+    corpus-repeat filter, and ``isl`` (doc_id, pos, island) numbering
+    each doc's duplicated window positions into gaps-and-islands chains
+    (positions p, q chain while q - p <= k). Shared by the span audit
+    and the rewrite oracles."""
     toks = SQL_TOKENS.format(col="text")
-    k = SPAN_TOKENS
-    wh = SQL_H60.format(e=f"array_to_string(tk[pos:pos+{k - 1}], ' ')")
-    return f"""
-WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
+    wh = h60_sql(f"array_to_string(tk[pos:pos+{k - 1}], ' ')")
+    return f"""t AS (SELECT doc_id, {toks} AS tk FROM documents),
 w AS (
   SELECT doc_id, tk,
          unnest(generate_series(1, GREATEST(len(tk) - {k} + 1, 0))) AS pos
@@ -2468,7 +2368,13 @@ brk AS (
   FROM dp),
 isl AS (SELECT doc_id, pos,
                SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        FROM brk),
+        FROM brk)"""
+
+
+def _substring_spans_oracle() -> str:
+    k = SPAN_TOKENS
+    return f"""
+WITH {_sql_dup_island_ctes(k)},
 per_isl AS (SELECT doc_id, island, MAX(pos) - MIN(pos) + {k} AS cov
             FROM isl GROUP BY 1, 2),
 per_doc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_spans,
@@ -2548,28 +2454,9 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _substring_rewrite_oracle() -> str:
-    toks = SQL_TOKENS.format(col="text")
     k = SPAN_TOKENS
-    wh = SQL_H60.format(e=f"array_to_string(tk[pos:pos+{k - 1}], ' ')")
     return f"""
-WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
-w AS (
-  SELECT doc_id, tk,
-         unnest(generate_series(1, GREATEST(len(tk) - {k} + 1, 0))) AS pos
-  FROM t),
-wh AS (SELECT doc_id, pos, {wh} AS w60 FROM w),
-dup AS (SELECT w60 FROM wh GROUP BY w60 HAVING COUNT(*) > 1),
-dp AS (SELECT doc_id, pos FROM wh WHERE w60 IN (SELECT w60 FROM dup)),
-brk AS (
-  SELECT doc_id, pos,
-         CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-                OR pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                   > {k}
-              THEN 1 ELSE 0 END AS brk
-  FROM dp),
-isl AS (SELECT doc_id, pos,
-               SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        FROM brk),
+WITH {_sql_dup_island_ctes(k)},
 spans AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + {k - 1} AS e
           FROM isl GROUP BY 1, 2),
 posns AS (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS pos

@@ -22,13 +22,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.hashing import h60
+from ..functions.hashing import h60, h60_sql
 from ..functions.text import tokens
 from ..localdf import local_df
-from .base import (QueryDef, finalize, load,
+from .base import (QueryDef, decode_stream_ts, event_micros,
+                   events_stream_schema, finalize, load,
                    scoped_cached_plan_aqe, stream_state_partitions)
 
-SQL_H60 = "(('0x' || substr(md5({e}), 1, 15))::BIGINT)"
 # the one DuckDB-side twin of functions.text.tokens(); every oracle that
 # tokenizes MUST use this constant so a tokenizer change can't half-apply
 SQL_TOKENS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t != '')"
@@ -165,18 +165,11 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (and the oracle's naive field extractions) would shift on a
     non-UTC driver machine."""
     path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = events_stream_schema(spark, path)
     stream = (spark.readStream.schema(raw_schema)
               .option("pathGlobFilter", "events.parquet")
               .parquet(sf_dir))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return decode_stream_ts(stream)
 
 
 def q_streaming_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,15 +289,9 @@ def _flush_staged_stream(spark: SparkSession, sf_dir: str, tag: str):
         schema=tbl.schema.remove_metadata())
     pq.write_table(sent, os.path.join(src_dir, "zz_flush.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = events_stream_schema(spark, src)
     stream = spark.readStream.schema(raw_schema).parquet(src_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = decode_stream_ts(stream)
     return stream, flush_ts
 
 
@@ -434,17 +421,11 @@ def q_streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
     pq.write_table(tbl.slice(0, half),
                    os.path.join(src_dir, "chunk_00.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = events_stream_schema(spark, src)
 
     def drain() -> None:
         stream = spark.readStream.schema(raw_schema).parquet(src_dir)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        stream = decode_stream_ts(stream)
         q = (stream.select("event_id", "ts", "event_type", "value")
              .writeStream.format("parquet")
              .option("path", sink_dir)
@@ -1215,7 +1196,7 @@ rates AS (
               AS BIGINT) AS rate_ppm
   FROM counts)
 SELECT d.source, r.rate_ppm, COUNT(*) AS n_docs,
-       CAST(SUM(CASE WHEN {SQL_H60.format(e=chr(39) + 'tmix_' + chr(39) + ' || d.doc_id::VARCHAR')} % 1000000
+       CAST(SUM(CASE WHEN {h60_sql(chr(39) + 'tmix_' + chr(39) + ' || d.doc_id::VARCHAR')} % 1000000
                      < r.rate_ppm THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM documents d JOIN rates r ON d.source = r.source
 GROUP BY d.source, r.rate_ppm
@@ -1231,7 +1212,7 @@ ORACLE_STRATIFIED_SAMPLE = f"""
 SELECT lang, COUNT(*) AS n_sampled,
        MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
 FROM documents
-WHERE {SQL_H60.format(e="'sample_' || doc_id::VARCHAR")} % 1000 < {_RATE_CASE}
+WHERE {h60_sql("'sample_' || doc_id::VARCHAR")} % 1000 < {_RATE_CASE}
 GROUP BY lang
 """
 
@@ -1254,7 +1235,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TRAIN_TEST_SPLIT = f"""
 WITH b AS (
   SELECT source,
-         {SQL_H60.format(e="'split_' || doc_id::VARCHAR")} % 10 AS bucket
+         {h60_sql("'split_' || doc_id::VARCHAR")} % 10 AS bucket
   FROM documents)
 SELECT source,
        CASE WHEN bucket <= 7 THEN 'train'
@@ -1744,7 +1725,6 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_source_mixture() -> str:
-    from ..functions.hashing import h60_sql
     cases = " ".join(f"WHEN '{s}' THEN {r}"
                      for s, r in sorted(MIX_RATES.items()))
     h = h60_sql("'mix_' || doc_id::VARCHAR")
@@ -1782,7 +1762,6 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_shard_balance() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("text")
     toks = SQL_TOKENS
     return f"""
@@ -1926,7 +1905,6 @@ def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kfold() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("'fold_' || doc_id::VARCHAR")
     return f"""
 SELECT {h} % {N_FOLDS} AS fold, source, COUNT(*) AS n_docs
@@ -2072,7 +2050,6 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_feature_hashing() -> str:
-    from ..functions.hashing import h60_sql
     hb = h60_sql("'fh_' || tok")
     hs = h60_sql("'fhs_' || tok")
     return f"""
@@ -2112,7 +2089,6 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_importance_resample() -> str:
-    from ..functions.hashing import h60_sql
     gate = h60_sql("'resample_' || CAST(doc_id AS VARCHAR)")
     return f"""
 WITH s AS (
@@ -2210,16 +2186,10 @@ def q_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(m_path, (now - 50, now - 50))
     os.utime(b_path, (now, now))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = events_stream_schema(spark, src)
     stream = (spark.readStream.schema(raw_schema)
               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = decode_stream_ts(stream)
     agg = (stream.withWatermark("ts", "1 day")
            .groupBy(F.window("ts", "1 day").alias("w"))
            .agg(F.count("*").alias("n")))
@@ -2265,11 +2235,7 @@ def q_cogrouped_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     src = load(spark, sf_dir, "events")
-    if dict(src.dtypes)["ts"] == "timestamp_ntz":
-        us = F.expr("timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '2000-01-01 00:00:00', ts)")
-    else:
-        us = F.expr("unix_micros(ts)")
+    us = event_micros(src)
     base = src.select("user_id", "event_id", "event_type", us.alias("us"))
     purchases = (base.filter(F.col("event_type") == "purchase")
                  .select("user_id", F.col("event_id").alias("p_id"),
@@ -2363,16 +2329,10 @@ def q_streaming_multibatch_backfill(spark: SparkSession, sf_dir: str) -> DataFra
         pq.write_table(tbl.slice(i * step, step),
                        os.path.join(src_dir, f"chunk_{i:02d}.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = events_stream_schema(spark, src)
     stream = (spark.readStream.schema(raw_schema)
               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = decode_stream_ts(stream)
 
     agg = (stream.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
            .agg(F.count("*").alias("n"),
@@ -2452,7 +2412,6 @@ def q_priority_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_priority_sample() -> str:
-    from ..functions.hashing import h60_sql
     h = h60_sql("'ps_' || CAST(doc_id AS VARCHAR)")
     return f"""
 WITH d AS (SELECT doc_id, source, n_chars,

@@ -17,7 +17,8 @@ from ..functions.similarity import (brute_force_topk, candidate_pairs, cosine,
                                     cosine_arrow, dot, guard_allpairs,
                                     l2_normed, verify_cosine)
 from ..localdf import local_df
-from .base import QueryDef, finalize, load
+from .base import QueryDef, finalize, load, recall_ppm, sql_recall_ppm
+from .textops import sql_component_ctes
 
 TOPK = 5
 N_QUERIES = 10          # vec_id < 10 are the query vectors
@@ -419,13 +420,7 @@ SELECT v1, v2, ROUND(score, 6) AS cosine FROM pairs
 
 ORACLE_EMB_COMPONENTS = f"""
 WITH RECURSIVE {_SRP_PAIR_CTES},
-bi AS (SELECT v1 AS a, v2 AS b FROM pairs UNION SELECT v2, v1 FROM pairs),
-nodes AS (SELECT DISTINCT a AS n FROM bi),
-r AS (
-  SELECT n AS a, n AS b FROM nodes
-  UNION
-  SELECT r.a, bi.b FROM r JOIN bi ON r.b = bi.a),
-comp AS (SELECT a AS vec_id, MIN(b) AS component FROM r GROUP BY a)
+{sql_component_ctes("pairs", "v1", "v2", "vec_id")}
 SELECT component, COUNT(*) AS n_vecs, MAX(vec_id) AS max_vec_id
 FROM comp GROUP BY component
 """
@@ -508,12 +503,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = (_vector_srp_join(load(spark, sf_dir, "embeddings"),
                             SRP_THRESHOLD, caches)
            .agg(F.count("*").alias("n_lsh")))
-    return finalize(
-        exact.crossJoin(lsh)
-        .select("n_exact", "n_lsh",
-                F.expr("CASE WHEN n_exact > 0 "
-                       "THEN n_lsh * 1000000 div n_exact END")
-                .alias("recall_ppm")), *caches)
+    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
 
 
 ORACLE_LSH_RECALL = f"""
@@ -523,10 +513,7 @@ WITH exact AS (
   WHERE {SQL_COS.format(a='a.embedding', b='b.embedding')} >= {SRP_THRESHOLD}),
 {_SRP_PAIR_CTES.lstrip()},
 lsh AS (SELECT COUNT(*) AS n_lsh FROM pairs)
-SELECT n_exact, n_lsh,
-       CAST(CASE WHEN n_exact > 0 THEN n_lsh * 1000000 // n_exact END
-            AS BIGINT) AS recall_ppm
-FROM exact CROSS JOIN lsh
+{sql_recall_ppm("n_exact", "n_lsh", "exact CROSS JOIN lsh")}
 """
 
 
@@ -1286,13 +1273,7 @@ def _semdedup_tail(assign_rel: str, threshold: float) -> str:
   JOIN embeddings e1 ON e1.vec_id = a.vec_id
   JOIN embeddings e2 ON e2.vec_id = b.vec_id
   WHERE {cos} >= {threshold}),
-bi AS (SELECT v1 AS a, v2 AS b FROM pr UNION SELECT v2, v1 FROM pr),
-nodes AS (SELECT DISTINCT a AS n FROM bi),
-r AS (
-  SELECT n AS a, n AS b FROM nodes
-  UNION
-  SELECT r.a, bi.b FROM r JOIN bi ON r.b = bi.a),
-comp AS (SELECT a AS vec_id, MIN(b) AS component FROM r GROUP BY a)
+{sql_component_ctes("pr", "v1", "v2", "vec_id")}
 SELECT t.vec_id, t.cl AS cluster,
        COALESCE(comp.component, t.vec_id) AS canonical_vec_id,
        CASE WHEN COALESCE(comp.component, t.vec_id) = t.vec_id

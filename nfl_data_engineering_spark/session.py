@@ -21,6 +21,10 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# AQE coalescing floor (see get_spark); a cluster profile that wants the
+# stock 1 MB floor sets the Spark conf on its own session.
+AQE_MIN_PARTITION_SIZE = "256k"
+
 
 def get_spark(app_name: str = "nfl-data-engineering-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -40,10 +44,9 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
         # triangle_count ran 5 tasks on 32 cores (guide §2.2). 256 KB
         # frees those stages to use the cores; at production scale
         # bytes/parallelism >> 1 MB, so the floor never binds and the
-        # partition sizing is unchanged. Env-overridable for cluster
-        # profiles that want the stock floor.
+        # partition sizing is unchanged.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "256k"))
+                AQE_MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # CollectLimit's incremental partition scan (1, then x4 per

@@ -1,5 +1,7 @@
 """Oracle parity for every catalog entry routed through the shared
-candidate-join-and-verify kernels (functions/similarity.py): each runs
+similarity kernels (functions/similarity.py: candidate join, exact
+verifies, df-capped overlap) or checked by a shared oracle CTE function
+(capped overlap, component replay, duplicate-window islands): each runs
 at the smoke scale and must match its DuckDB oracle under the
 driver-style dtype-strict comparison (parity.compare). The oracles are
 independent SQL specs, so a match shows the kernels verify the same
@@ -32,6 +34,13 @@ ROUTED = [
     "similarity_join_api", "similarity_join_staged",
     "similarity_containment_api", "auto_route_oph_join",
     "minhash_recall_t05", "oph_recall_t05",
+    # df-capped exact overlap and the containment direction gate
+    "ngram_jaccard_pairs", "containment_join", "containment_sketch_join",
+    "containment_recall_audit",
+    # embedding components (the shared component-replay oracle CTEs)
+    "semantic_dedup", "semantic_dedup_twolevel",
+    # duplicate-window islands (the shared island oracle CTEs)
+    "exact_substring_spans", "substring_dedup_rewrite",
 ]
 
 

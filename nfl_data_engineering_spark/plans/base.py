@@ -29,14 +29,17 @@ Determinism rules (the driver hash-compares Spark vs DuckDB values):
 
 from __future__ import annotations
 
+import atexit
 import functools
+import hashlib
 import os
-from contextlib import contextmanager
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.streaming import StreamingQuery
 
 from ..storage import (park_frame, park_ids, registry_rdd_ids,
                        release_frame, release_parked)
@@ -52,35 +55,93 @@ class QueryDef:
 
 
 # State-store partitions for the catalog's streaming aggregations; see
-# stream_state_partitions. A deployment with a larger key volume sets
+# drain_memory. A deployment with a larger key volume sets
 # spark.sql.shuffle.partitions on its own streaming queries.
 STREAM_STATE_PARTITIONS = 8
 
+# recentProgress of the last drain_memory query, one dict per micro-batch
+# (numInputRows, eventTime, ...): how the drain was batched, for tests
+LAST_DRAIN_PROGRESS: list[dict] = []
 
-@contextmanager
-def stream_state_partitions(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` around a streaming query's
-    start/awaitTermination so its STATE STORE partitioning is sized to the
-    aggregation, not to the session's batch default.
 
-    Every state partition pays a fixed per-micro-batch cost (store open,
-    delta file write, commit, maintenance) regardless of how many keys it
+def drain_memory(stream: DataFrame, sink: str, mode: str) -> StreamingQuery:
+    """Drain ``stream`` into the memory table ``sink`` in output mode
+    ``mode`` under trigger(availableNow): the query consumes everything
+    its source holds at start, then terminates. Returns the finished
+    query; ``spark.table(sink)`` reads the result and
+    LAST_DRAIN_PROGRESS holds its per-batch progress.
+
+    ``spark.sql.shuffle.partitions`` is scoped to STREAM_STATE_PARTITIONS
+    around the start and the wait, so the STATE STORE partitioning is
+    sized to the aggregation, not to the session's batch default. Every
+    state partition pays a fixed per-micro-batch cost (store open, delta
+    file write, commit, maintenance) regardless of how many keys it
     holds — measured 2.95 s vs 1.26 s for the 150-key daily rollup drain
-    at 32 vs 8 state partitions (guide §2.2's fixed-per-partition overhead
-    applied to state stores). The right count tracks key cardinality and
-    throughput, not the core count; STREAM_STATE_PARTITIONS (8) is sized
-    for the catalog's ~10^2-key streaming aggregations. Only the streaming
-    query started inside the scope binds this number (state layout is
-    fixed at first start); the follow-up batch read of the sink runs at
-    the restored session default. Results are partitioning-invariant —
-    only placement changes."""
+    at 32 vs 8 state partitions (the fixed per-partition overhead of
+    small tasks, applied to state stores). The right count tracks key
+    cardinality and throughput, not the core count; 8 is sized for the
+    catalog's ~10^2-key streaming aggregations. Only the streaming query
+    binds this number (state layout is fixed at first start); the
+    follow-up batch read of the sink runs at the restored session
+    default. Results are partitioning-invariant — only placement
+    changes."""
+    spark = stream.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
                    str(STREAM_STATE_PARTITIONS))
     try:
-        yield
+        q = (stream.writeStream.format("memory").queryName(sink)
+             .outputMode(mode).trigger(availableNow=True).start())
+        q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+    LAST_DRAIN_PROGRESS[:] = q.recentProgress
+    return q
+
+
+def events_stream(spark: SparkSession, src_dir: str, sample_path: str,
+                  **read_options) -> DataFrame:
+    """readStream over the events parquet files in ``src_dir``, typed
+    like the file ``sample_path``; ``read_options`` go to the reader
+    (pathGlobFilter, maxFilesPerTrigger). The nanosecond ``ts`` is read
+    as int64 nanos (Spark's reader rejects nanos) and rebuilt as
+    TIMESTAMP by integer division to micros; a native TIMESTAMP_NTZ is
+    cast, because watermarks need a TIMESTAMP. The session is pinned to
+    UTC so window boundaries and field extractions downstream match the
+    oracle's naive UTC wall time on any driver."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    stream = (spark.readStream.schema(spark.read.parquet(sample_path).schema)
+              .options(**read_options).parquet(src_dir))
+    if dict(stream.dtypes).get("ts") == "bigint":
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
+
+
+_CLEANUP_REGISTERED: set[str] = set()
+
+
+def scratch_dir(tag: str, sf_dir: str) -> str:
+    """Path of an entry's scratch dir, ``spark_graft_{tag}_{md5[:8]}_{pid}``
+    under the system temp dir (md5 of ``sf_dir``), removed at process
+    exit. pid-scoped because bench and parity harnesses run entries
+    concurrently, and write-then-read sequences (overwrite/append)
+    interleaved across processes would yield mixed files and wrong
+    counts. Each process therefore writes fresh copies, which would
+    accumulate in the temp dir without bound across harness runs if not
+    removed; removing only OUR pid's dirs keeps that race-free, since
+    another process's live dir is never touched. The caller creates the
+    dir (or lets a writer create it)."""
+    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = os.path.join(tempfile.gettempdir(),
+                        f"spark_graft_{tag}_{h}_{os.getpid()}")
+    if path not in _CLEANUP_REGISTERED:
+        _CLEANUP_REGISTERED.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def scoped_cached_plan_aqe(fn):
@@ -278,29 +339,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                              "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         return df
     return spark.read.parquet(path)
-
-
-def events_stream_schema(spark: SparkSession, path: str) -> StructType:
-    """Schema for a streaming read of events parquet files like ``path``:
-    the nanosecond ``ts`` is read as int64 nanos (Spark's reader rejects
-    nanos) and the session pinned to UTC, so the window boundaries and
-    field extractions downstream match the oracle's naive UTC wall time.
-    Pair the stream with :func:`decode_stream_ts`."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(path).schema
-
-
-def decode_stream_ts(stream: DataFrame) -> DataFrame:
-    """Rebuild a streamed events ``ts`` as TIMESTAMP: int64 nanos by
-    integer division to micros, a native TIMESTAMP_NTZ by cast (the
-    session is UTC, see events_stream_schema)."""
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def event_micros(events: DataFrame) -> Column:

@@ -15,10 +15,8 @@ driver records the weaker check, schema + row count).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,34 +25,7 @@ from ..io import upsert_partitioned
 from ..sources.html_table import scrape_tables_long
 from ..sources.rest_json import flatten_odds, odds_from_json_strings
 from ..localdf import local_df
-from .base import QueryDef, finalize, load
-
-
-def _tmp_path(tag: str, sf_dir: str) -> str:
-    # pid-scoped like lakeops' dirs: bench + parity harnesses run these
-    # entries concurrently, and write-then-read sequences (overwrite/append)
-    # interleaved across processes would yield mixed files and wrong counts.
-    # Each path self-registers for removal at process exit — pid scoping
-    # means every process writes fresh table copies, which would otherwise
-    # accumulate in /tmp without bound across harness runs. (Removing only
-    # OUR pid's dirs is what keeps this race-free: another process's live
-    # dir is never touched.)
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_{tag}_{h}_{os.getpid()}")
-    _register_cleanup(path)
-    return path
-
-
-_CLEANUP_REGISTERED: set[str] = set()
-
-
-def _register_cleanup(path: str) -> None:
-    import atexit
-    import shutil
-    if path not in _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+from .base import QueryDef, finalize, load, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +40,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     readback equals the source — which is what the oracle checks. Exercises
     S5 parquet sink, S6 hive partition derivation, dynamic partition
     overwrite, and S4 readback in one query."""
-    path = _tmp_path("upsert", sf_dir)
+    path = scratch_dir("upsert", sf_dir)
     # the source is scanned by both batches' writes plus the second
     # call's touched-partition probe — cache it for the entry's duration
     # (in-query cache, released via finalize; round-13: 3 rescans saved)
@@ -103,7 +74,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Java's Double.toString round-trips exactly, so the value sums are
     bit-identical to the source — the oracle aggregates the original
     parquet."""
-    path = _tmp_path("csv", sf_dir)
+    path = scratch_dir("csv", sf_dir)
     ev = load(spark, sf_dir, "events")
     (ev.select("event_id", "user_id", "event_type", "value")
      .write.mode("overwrite").option("header", "true").csv(path))
@@ -138,7 +109,7 @@ def q_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings rendered by repr — both round-trip exactly, so the readback
     matches the oracle's direct aggregation of the source parquet."""
     from ..sources.tabular import read_xlsx_pandas, write_excel
-    path = _tmp_path("xlsx", sf_dir) + ".xlsx"
+    path = scratch_dir("xlsx", sf_dir) + ".xlsx"
     ev = load(spark, sf_dir, "events")
     per_user = (ev.groupBy("user_id")
                 .agg(F.count("*").alias("n_events"),
@@ -170,7 +141,7 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's REST sources (get_odds.py:14-39) exercised as a sink.
     Jackson writes doubles shortest-round-trip, so values survive exactly;
     the oracle aggregates the original parquet."""
-    path = _tmp_path("json", sf_dir)
+    path = scratch_dir("json", sf_dir)
     ev = load(spark, sf_dir, "events")
     (ev.select("event_id", "user_id", "event_type", "value")
      .write.mode("overwrite").json(path))
@@ -196,7 +167,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (S5): binary-exact for every type, predicate pushdown on read. The
     readback filter prunes ORC stripes the same way parquet row-groups
     prune (the oracle applies the same predicate to the parquet source)."""
-    path = _tmp_path("orc", sf_dir)
+    path = scratch_dir("orc", sf_dir)
     orders = load(spark, sf_dir, "orders")
     orders.write.mode("overwrite").orc(path)
     back = spark.read.orc(path).filter(F.col("o_totalprice") > 1000.0)
@@ -393,10 +364,10 @@ def q_odds_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..sources.datasource import register_odds_source
-    # pid-scoped like _tmp_path: the rmtree+rewrite below racing another
+    # pid-scoped (base.scratch_dir): the rmtree+rewrite below racing another
     # process's in-flight glob/read on a shared dir is exactly the
     # cross-process corruption the pid tag exists to prevent
-    payload_dir = _tmp_path("odds_payloads", sf_dir)
+    payload_dir = scratch_dir("odds_payloads", sf_dir)
     # recreate from scratch: the reader globs every *.json in the dir, so
     # a stale payload from an older revision would silently become extra
     # input partitions
@@ -459,7 +430,7 @@ def q_box_scores_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pdf[list(reversed(pdf.columns.tolist()))]
 
     sched = season_schedules(spark, _BOX_YEARS, fetcher=fetcher)
-    path = _tmp_path("box_scores_csv", sf_dir)
+    path = scratch_dir("box_scores_csv", sf_dir)
     write_schedule_csv(sched, path)
     back = (spark.read.schema(SCHEDULE_SCHEMA)
             .option("header", True).csv(path))
@@ -555,7 +526,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit touched-partition list so it rewrites O(recent), not
     O(table)."""
     from ..io import compact_partitions, with_partition_cols
-    path = _tmp_path("compact", sf_dir)
+    path = scratch_dir("compact", sf_dir)
     ev = load(spark, sf_dir, "events").withColumnRenamed("ts", "timestamp")
     (with_partition_cols(ev)
      .repartition(16)                      # fragment: ~16 files/partition
@@ -590,7 +561,7 @@ def q_compact_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the realistic setting at 100 TB: one file per partition would
     serialize each partition's write through one task."""
     from ..io import compact_partitions, with_partition_cols
-    path = _tmp_path("compactN", sf_dir)
+    path = scratch_dir("compactN", sf_dir)
     ev = load(spark, sf_dir, "events").withColumnRenamed("ts", "timestamp")
     (with_partition_cols(ev)
      .repartition(16)
@@ -615,7 +586,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     any row. (Schema merge is a FILE-LEVEL union; at 100 TB enable it on
     the specific evolving table, not globally — footer merging costs a
     per-file read.)"""
-    path = _tmp_path("schemaevo", sf_dir)
+    path = scratch_dir("schemaevo", sf_dir)
     orders = load(spark, sf_dir, "orders")
     old = (orders.filter(F.col("o_orderkey") % 2 == 0)
            .select("o_orderkey", "o_totalprice"))
@@ -665,7 +636,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     format the join reads only the changed files."""
     from ..functions.hashing import h60
     from .base import cents
-    path = _tmp_path("snapdiff", sf_dir)
+    path = scratch_dir("snapdiff", sf_dir)
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("p"))
     base = orders.withColumn(
@@ -884,7 +855,7 @@ def q_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantified in tests/test_zorder.py; that's the point of the layout at
     100 TB: a 2-D box reads a sub-linear file subset on EITHER key)."""
     from ..io import write_zordered
-    path = _tmp_path("zorder", sf_dir)
+    path = scratch_dir("zorder", sf_dir)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice")
@@ -930,7 +901,7 @@ def q_zorder_pruning_3col(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges) is asserted in tests/test_zorder.py; the box bounds are
     literal-pushed like the 2-col twin."""
     from ..io import write_zordered
-    path = _tmp_path("zorder3", sf_dir)
+    path = scratch_dir("zorder3", sf_dir)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice")
@@ -994,7 +965,7 @@ def q_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.datasource import register_jsonl_sink
     register_jsonl_sink(spark)
-    path = _tmp_path("pysink", sf_dir)
+    path = scratch_dir("pysink", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     ev = load(spark, sf_dir, "events").select(
@@ -1045,7 +1016,7 @@ def q_file_stats_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decision is made without touching data files, and clustering
     quality (here: banding; zorder_pruning for multi-column) determines
     how many files survive the intersection test."""
-    path = _tmp_path("manifest", sf_dir)
+    path = scratch_dir("manifest", sf_dir)
     from .base import cents
     o = (load(spark, sf_dir, "orders")
          .select("o_orderkey", cents("o_totalprice").alias("cts"))

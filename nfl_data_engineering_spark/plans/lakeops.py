@@ -20,17 +20,14 @@ pipelines need once the data outgrows one node. See SURVEY.md §2 and §6.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h60_sql
 from ..io import write_bucketed
-from .base import (QueryDef, cents, dec as _dec, decode_stream_ts,
-                   event_micros, events_stream_schema, finalize, load,
-                   stream_state_partitions)
+from .base import (QueryDef, cents, dec as _dec, drain_memory, event_micros,
+                   events_stream, finalize, load, scratch_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -38,16 +35,6 @@ from .base import (QueryDef, cents, dec as _dec, decode_stream_ts,
 # ---------------------------------------------------------------------------
 
 _BUCKETS = 8
-
-
-def _pid_tmp(base_name: str) -> str:
-    """pid-scoped tmp dir registered for removal at process exit (same
-    growth-bounding as connectors._tmp_path: each process writes fresh
-    copies; only OUR pid's dirs are removed, so it stays race-free)."""
-    from .connectors import _register_cleanup
-    path = os.path.join(tempfile.gettempdir(), base_name)
-    _register_cleanup(path)
-    return path
 
 
 def q_bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,14 +46,12 @@ def q_bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The lineitem side is pre-aggregated to per-order revenue
     before bucketing (the summary table you'd actually materialize).
     Oracle recomputes the join from the raw parquet."""
-    # tag carries the sf AND the pid: concurrent harnesses (bench + parity)
-    # must not overwrite each other's table files mid-join
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-           + f"_{os.getpid()}")
-    rev_t, ord_t = f"graft_bkt_rev_{tag}", f"graft_bkt_ord_{tag}"
     # explicit external paths: the driver's session keeps its default
     # (cwd-relative) warehouse, so managed tables would land in cwd
-    base = _pid_tmp(f"spark_graft_bkt_{tag}")
+    base = scratch_dir("bkt", sf_dir)
+    # table names carry the sf AND the pid like the dir: concurrent
+    # harnesses (bench + parity) must not overwrite each other's tables
+    rev_t, ord_t = (f"{os.path.basename(base)}_{t}" for t in ("rev", "ord"))
 
     rev = (load(spark, sf_dir, "lineitem")
            .groupBy("l_orderkey")
@@ -522,10 +507,7 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 value_cols=["value", "op"],
                                 tiebreak_cols=["event_id"])
     sink = "streaming_cdc_apply_sink"
-    with stream_state_partitions(spark):
-        q = (latest.writeStream.format("memory").queryName(sink)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(latest, sink, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc())
     return (spark.table(sink)
@@ -565,9 +547,7 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     from ..streaming.ingest import upsert_stream
     from .training import _event_stream
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-           + f"_{os.getpid()}")
-    base = _pid_tmp(f"spark_graft_supsert_{tag}")
+    base = scratch_dir("supsert", sf_dir)
     table = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")
     q = upsert_stream(_event_stream(spark, sf_dir), table, ckpt,
@@ -621,10 +601,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .agg(F.count("*").alias("n_user_clicks")))
     enriched = enrich_stream(purchases, clicks_dim, key="user_id")
     sink = "streaming_enrich_sink"
-    with stream_state_partitions(spark):
-        q = (enriched.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(enriched, sink, "append")
     return spark.table(sink).select("event_id", "user_id", "value",
                                     "n_user_clicks")
 
@@ -1483,25 +1460,17 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..streaming.ingest import deduped_stream
-    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-           + f"_{os.getpid()}")
-    dup_dir = _pid_tmp(f"spark_graft_dupstream_{tag}")
+    dup_dir = scratch_dir("dupstream", sf_dir)
     shutil.rmtree(dup_dir, ignore_errors=True)
     os.makedirs(dup_dir)
     src = os.path.join(sf_dir, "events.parquet")
     shutil.copy(src, os.path.join(dup_dir, "copy_a.parquet"))
     shutil.copy(src, os.path.join(dup_dir, "copy_b.parquet"))
 
-    raw_schema = events_stream_schema(spark, src)
-    stream = spark.readStream.schema(raw_schema).parquet(dup_dir)
-    stream = decode_stream_ts(stream)
-
-    dd = deduped_stream(stream, watermark="40 days", key_cols=["event_id"])
+    dd = deduped_stream(events_stream(spark, dup_dir, src),
+                        watermark="40 days", key_cols=["event_id"])
     sink = "streaming_dedup_ingest_sink"
-    with stream_state_partitions(spark):
-        q = (dd.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(dd, sink, "append")
     return (spark.table(sink)
             .groupBy("event_type")
             .agg(F.count("*").alias("n"),

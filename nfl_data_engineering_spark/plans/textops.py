@@ -316,10 +316,17 @@ def _sql_pair_tail(threshold: float) -> str:
   SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
   FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
   WHERE a.doc_id < b.doc_id),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
+{_sql_verify_tail("cand", threshold)}"""
+
+
+def _sql_verify_tail(cand: str, threshold: float) -> str:
+    """CTEs from the candidate relation ``cand`` (d1, d2) over the
+    ``shh`` shingle hashes to ``pairs`` (d1, d2, jaccard): the exact
+    jaccard verify of every banded oracle, whatever its candidates."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
 inter AS (
   SELECT c.d1, c.d2, COUNT(*) AS i
-  FROM cand c JOIN shh x ON x.doc_id = c.d1 JOIN shh y ON y.doc_id = c.d2 AND y.sh60 = x.sh60
+  FROM {cand} c JOIN shh x ON x.doc_id = c.d1 JOIN shh y ON y.doc_id = c.d2 AND y.sh60 = x.sh60
   GROUP BY 1, 2),
 pairs AS (
   SELECT d1, d2, i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE AS jaccard
@@ -508,19 +515,8 @@ star AS (
            doc_id AS d2
     FROM bands)
   WHERE d1 != d2),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-inter AS (
-  SELECT c.d1, c.d2, COUNT(*) AS i
-  FROM star c JOIN shh x ON x.doc_id = c.d1
-  JOIN shh y ON y.doc_id = c.d2 AND y.sh60 = x.sh60
-  GROUP BY 1, 2),
-vpairs AS (
-  SELECT d1, d2
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}),
-{sql_component_ctes("vpairs")}"""
+{_sql_verify_tail("star", JACCARD_THRESHOLD)},
+{sql_component_ctes()}"""
 
 ORACLE_STAR_SURVIVORS = f"""
 WITH RECURSIVE {_SQL_STAR_COMP_CTES}
@@ -731,22 +727,11 @@ exm AS (SELECT md5(text) AS h, MIN(doc_id) AS exact_ref
         FROM documents WHERE doc_id % 4 <> 0 GROUP BY 1),
 inc AS (SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 4 = 0),
 cand AS (
-  SELECT DISTINCT a.doc_id AS di, b.doc_id AS de
+  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2   -- d1: incoming, d2: existing
   FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
   WHERE a.doc_id % 4 = 0 AND b.doc_id % 4 <> 0),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shh GROUP BY 1),
-inter AS (
-  SELECT c.di, c.de, COUNT(*) AS i
-  FROM cand c JOIN shh x ON x.doc_id = c.di
-  JOIN shh y ON y.doc_id = c.de AND y.sh60 = x.sh60
-  GROUP BY 1, 2),
-near AS (
-  SELECT di, MIN(de) AS near_ref
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = di
-  JOIN sizes s2 ON s2.doc_id = de
-  WHERE i::DOUBLE / (s1.sz + s2.sz - i)::DOUBLE >= {JACCARD_THRESHOLD}
-  GROUP BY 1)
+{_sql_verify_tail("cand", JACCARD_THRESHOLD)},
+near AS (SELECT d1 AS di, MIN(d2) AS near_ref FROM pairs GROUP BY 1)
 SELECT i.doc_id,
        CASE WHEN e.exact_ref IS NOT NULL THEN 'exact_dup'
             WHEN n.near_ref IS NOT NULL THEN 'near_dup'

@@ -17,7 +17,6 @@ reproduces results bit-for-bit.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -25,9 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.hashing import h60, h60_sql
 from ..functions.text import tokens
 from ..localdf import local_df
-from .base import (QueryDef, decode_stream_ts, event_micros,
-                   events_stream_schema, finalize, load,
-                   scoped_cached_plan_aqe, stream_state_partitions)
+from .base import (QueryDef, drain_memory, event_micros, events_stream,
+                   finalize, load, scratch_dir, scoped_cached_plan_aqe)
 
 # the one DuckDB-side twin of functions.text.tokens(); every oracle that
 # tokenizes MUST use this constant so a tokenizer change can't half-apply
@@ -98,10 +96,7 @@ def q_streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
                  .alias("sum_value")))
     sink = "streaming_daily_rollup_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(agg, sink, "complete")
     return (spark.table(sink)
             .select(F.col("w.start").alias("day"), "event_type", "n",
                     "sum_value"))
@@ -136,10 +131,7 @@ def q_streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
                  .alias("sum_value")))
     sink = "streaming_sliding_rollup_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(agg, sink, "complete")
     return (spark.table(sink)
             .select(F.col("w.start").alias("window_start"), "event_type",
                     "n", "sum_value"))
@@ -158,18 +150,10 @@ GROUP BY 1, 2
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the ts-type normalization
-    every streaming entry needs (nanos-as-long conversion; NTZ -> session
-    timestamp so watermarks accept it). Watermarks force an LTZ cast, so
-    the session zone is pinned to UTC here: otherwise window/day/partition
-    boundaries (and the oracle's naive field extractions) would shift on a
-    non-UTC driver machine."""
+    """The testdata events table as a stream (base.events_stream: UTC
+    session, ts rebuilt as TIMESTAMP so watermarks accept it)."""
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = events_stream_schema(spark, path)
-    stream = (spark.readStream.schema(raw_schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    return decode_stream_ts(stream)
+    return events_stream(spark, sf_dir, path, pathGlobFilter="events.parquet")
 
 
 def q_streaming_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,10 +175,7 @@ def q_streaming_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ts_col="ts", value_cols=["value"],
                                 tiebreak_cols=["event_id"])
     sink = "streaming_keep_latest_sink"
-    with stream_state_partitions(spark):
-        q = (latest.writeStream.format("memory").queryName(sink)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(latest, sink, "update")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").desc(), F.col("event_id").desc())
     return (spark.table(sink)
@@ -211,6 +192,28 @@ SELECT user_id, event_type, ts, value FROM (
 """
 
 
+def _purchase_click_join(stream: DataFrame, how: str, sink: str) -> DataFrame:
+    """Purchases of the events ``stream`` interval-joined (``how``) to the
+    same user's clicks from the preceding hour
+    (streaming/ingest.py:interval_join_streams), drained append-mode into
+    the memory table ``sink``; returns the sink as (user_id, purchase_ts,
+    purchase_event_id, click_ts, click_event_id)."""
+    from ..streaming.ingest import interval_join_streams
+    purchases = (stream.filter(F.col("event_type") == "purchase")
+                 .select("user_id", "ts", "event_id"))
+    clicks = (stream.filter(F.col("event_type") == "click")
+              .select("user_id", "ts", "event_id"))
+    joined = interval_join_streams(purchases, clicks, key="user_id",
+                                   ts_col="ts", lookback="1 hour",
+                                   watermark="1 day", how=how)
+    drain_memory(joined, sink, "append")
+    return (stream.sparkSession.table(sink)
+            .select("user_id", F.col("ts").alias("purchase_ts"),
+                    F.col("event_id").alias("purchase_event_id"),
+                    F.col("ts_r").alias("click_ts"),
+                    F.col("event_id_r").alias("click_event_id")))
+
+
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 stream-stream join, run for real: purchases joined to the same
     user's clicks from the preceding hour (streaming/ingest.py:
@@ -219,25 +222,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day). Inner interval joins emit matches eagerly, so the
     availableNow drain of a finite input yields exactly the batch range
     join the oracle computes."""
-    from ..streaming.ingest import interval_join_streams
-    stream = _event_stream(spark, sf_dir)
-    purchases = (stream.filter(F.col("event_type") == "purchase")
-                 .select("user_id", "ts", "event_id"))
-    clicks = (stream.filter(F.col("event_type") == "click")
-              .select("user_id", "ts", "event_id"))
-    joined = interval_join_streams(purchases, clicks, key="user_id",
-                                   ts_col="ts", lookback="1 hour",
-                                   watermark="1 day")
-    sink = "streaming_interval_join_sink"
-    with stream_state_partitions(spark):
-        q = (joined.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(sink)
-            .select("user_id", F.col("ts").alias("purchase_ts"),
-                    F.col("event_id").alias("purchase_event_id"),
-                    F.col("ts_r").alias("click_ts"),
-                    F.col("event_id_r").alias("click_event_id")))
+    return _purchase_click_join(_event_stream(spark, sf_dir), "inner",
+                                "streaming_interval_join_sink")
 
 
 ORACLE_STREAMING_INTERVAL_JOIN = """
@@ -272,10 +258,7 @@ def _flush_staged_stream(spark: SparkSession, sf_dir: str, tag: str):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .lakeops import _pid_tmp
-    full_tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-                + f"_{os.getpid()}")
-    src_dir = _pid_tmp(f"spark_graft_{tag}_{full_tag}")
+    src_dir = scratch_dir(tag, sf_dir)
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
     src = os.path.join(sf_dir, "events.parquet")
@@ -289,10 +272,7 @@ def _flush_staged_stream(spark: SparkSession, sf_dir: str, tag: str):
         schema=tbl.schema.remove_metadata())
     pq.write_table(sent, os.path.join(src_dir, "zz_flush.parquet"))
 
-    raw_schema = events_stream_schema(spark, src)
-    stream = spark.readStream.schema(raw_schema).parquet(src_dir)
-    stream = decode_stream_ts(stream)
-    return stream, flush_ts
+    return events_stream(spark, src_dir, src), flush_ts
 
 
 def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,25 +291,10 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + lookback per the inner-join analysis
     (streaming/ingest.py:interval_join_streams); the oracle is the plain
     batch LEFT JOIN over the single copy."""
-    from ..streaming.ingest import interval_join_streams
     stream, _ = _flush_staged_stream(spark, sf_dir, "lojstream")
-    purchases = (stream.filter(F.col("event_type") == "purchase")
-                 .select("user_id", "ts", "event_id"))
-    clicks = (stream.filter(F.col("event_type") == "click")
-              .select("user_id", "ts", "event_id"))
-    joined = interval_join_streams(purchases, clicks, key="user_id",
-                                   ts_col="ts", lookback="1 hour",
-                                   watermark="1 day", how="leftOuter")
-    sink = "streaming_left_outer_join_sink"
-    with stream_state_partitions(spark):
-        q = (joined.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(sink).filter(F.col("user_id") >= 0)
-            .select("user_id", F.col("ts").alias("purchase_ts"),
-                    F.col("event_id").alias("purchase_event_id"),
-                    F.col("ts_r").alias("click_ts"),
-                    F.col("event_id_r").alias("click_event_id")))
+    return (_purchase_click_join(stream, "leftOuter",
+                                 "streaming_left_outer_join_sink")
+            .filter(F.col("user_id") >= 0))
 
 
 ORACLE_STREAMING_LEFT_OUTER_JOIN = """
@@ -355,25 +320,10 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropping it (streaming/ingest.py:interval_join_streams) — without
     that coalesce every unmatched click would come out keyless. Oracle:
     the plain batch FULL JOIN under the identical interval condition."""
-    from ..streaming.ingest import interval_join_streams
     stream, _ = _flush_staged_stream(spark, sf_dir, "fojstream")
-    purchases = (stream.filter(F.col("event_type") == "purchase")
-                 .select("user_id", "ts", "event_id"))
-    clicks = (stream.filter(F.col("event_type") == "click")
-              .select("user_id", "ts", "event_id"))
-    joined = interval_join_streams(purchases, clicks, key="user_id",
-                                   ts_col="ts", lookback="1 hour",
-                                   watermark="1 day", how="fullOuter")
-    sink = "streaming_full_outer_join_sink"
-    with stream_state_partitions(spark):
-        q = (joined.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(sink).filter(F.col("user_id") >= 0)
-            .select("user_id", F.col("ts").alias("purchase_ts"),
-                    F.col("event_id").alias("purchase_event_id"),
-                    F.col("ts_r").alias("click_ts"),
-                    F.col("event_id_r").alias("click_event_id")))
+    return (_purchase_click_join(stream, "fullOuter",
+                                 "streaming_full_outer_join_sink")
+            .filter(F.col("user_id") >= 0))
 
 
 ORACLE_STREAMING_FULL_OUTER_JOIN = """
@@ -405,12 +355,8 @@ def q_streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .lakeops import _pid_tmp
-    full_tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-                + f"_{os.getpid()}")
-    src_dir = _pid_tmp(f"spark_graft_ckrestart_src_{full_tag}")
-    sink_dir = _pid_tmp(f"spark_graft_ckrestart_sink_{full_tag}")
-    ckpt_dir = _pid_tmp(f"spark_graft_ckrestart_ckpt_{full_tag}")
+    src_dir, sink_dir, ckpt_dir = (scratch_dir(f"ckrestart_{d}", sf_dir)
+                                   for d in ("src", "sink", "ckpt"))
     for d in (src_dir, sink_dir, ckpt_dir):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src_dir)
@@ -421,13 +367,11 @@ def q_streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
     pq.write_table(tbl.slice(0, half),
                    os.path.join(src_dir, "chunk_00.parquet"))
 
-    raw_schema = events_stream_schema(spark, src)
+    rows = (events_stream(spark, src_dir, src)
+            .select("event_id", "ts", "event_type", "value"))
 
     def drain() -> None:
-        stream = spark.readStream.schema(raw_schema).parquet(src_dir)
-        stream = decode_stream_ts(stream)
-        q = (stream.select("event_id", "ts", "event_type", "value")
-             .writeStream.format("parquet")
+        q = (rows.writeStream.format("parquet")
              .option("path", sink_dir)
              .option("checkpointLocation", ckpt_dir)
              .outputMode("append").trigger(availableNow=True).start())
@@ -470,10 +414,7 @@ def q_streaming_append_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
                  .cast("double").alias("sum_value")))
     sink = "streaming_append_rollup_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(agg, sink, "append")
     # the sentinel sits 30 days past the real max, so a cutoff 15 days
     # before flush cleanly separates its window from every real one
     from datetime import timedelta
@@ -538,10 +479,7 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
                  .alias("sum_value")))
     sink = "streaming_sessionization_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
+    drain_memory(agg, sink, "complete")
     return (spark.table(sink)
             .select("user_id",
                     F.col("w.start").alias("session_start"),
@@ -2138,10 +2076,7 @@ def q_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .lakeops import _pid_tmp
-    full_tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-                + f"_{os.getpid()}")
-    src_dir = _pid_tmp(f"spark_graft_latedrop_{full_tag}")
+    src_dir = scratch_dir("latedrop", sf_dir)
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
     src = os.path.join(sf_dir, "events.parquet")
@@ -2186,23 +2121,12 @@ def q_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(m_path, (now - 50, now - 50))
     os.utime(b_path, (now, now))
 
-    raw_schema = events_stream_schema(spark, src)
-    stream = (spark.readStream.schema(raw_schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    stream = decode_stream_ts(stream)
+    stream = events_stream(spark, src_dir, src, maxFilesPerTrigger=1)
     agg = (stream.withWatermark("ts", "1 day")
            .groupBy(F.window("ts", "1 day").alias("w"))
            .agg(F.count("*").alias("n")))
     sink = "streaming_late_drop_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    global _LAST_LATEDROP_PROGRESS
-    _LAST_LATEDROP_PROGRESS = [
-        {"rows": p.get("numInputRows"),
-         "wm": (p.get("eventTime") or {}).get("watermark")}
-        for p in q.recentProgress if isinstance(p, dict)]
+    drain_memory(agg, sink, "append")
     return (spark.table(sink)
             .select(F.col("w.start").alias("day"), "n"))
 
@@ -2289,7 +2213,6 @@ FROM p WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.user_id = p.user_id
 # ---------------------------------------------------------------------------
 
 BACKFILL_CHUNKS = 4
-_LAST_BACKFILL_NUM_BATCHES = -1   # set by the entry; read by tests
 
 
 def q_streaming_multibatch_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2299,7 +2222,7 @@ def q_streaming_multibatch_backfill(spark: SparkSession, sf_dir: str) -> DataFra
     as 4 chronological chunk files and consumed with maxFilesPerTrigger=1
     under trigger(availableNow), so the daily aggregation's state is
     built up across >= 4 separate microbatches (asserted in
-    tests/test_streaming_extras.py via recentProgress) exactly the way a
+    tests/test_round4b_plans.py via recentProgress) exactly the way a
     day-by-day historical backfill replays a 100 TB archive through the
     SAME query that then serves the live stream. Update-mode emissions
     land in the memory sink once per (day, batch-that-changed-it); the
@@ -2315,10 +2238,7 @@ def q_streaming_multibatch_backfill(spark: SparkSession, sf_dir: str) -> DataFra
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .lakeops import _pid_tmp
-    full_tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-                + f"_{os.getpid()}")
-    src_dir = _pid_tmp(f"spark_graft_backfill_{full_tag}")
+    src_dir = scratch_dir("backfill", sf_dir)
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
     src = os.path.join(sf_dir, "events.parquet")
@@ -2329,24 +2249,13 @@ def q_streaming_multibatch_backfill(spark: SparkSession, sf_dir: str) -> DataFra
         pq.write_table(tbl.slice(i * step, step),
                        os.path.join(src_dir, f"chunk_{i:02d}.parquet"))
 
-    raw_schema = events_stream_schema(spark, src)
-    stream = (spark.readStream.schema(raw_schema)
-              .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    stream = decode_stream_ts(stream)
-
+    stream = events_stream(spark, src_dir, src, maxFilesPerTrigger=1)
     agg = (stream.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
            .agg(F.count("*").alias("n"),
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
                  .alias("sum_value")))
     sink = "streaming_multibatch_backfill_sink"
-    with stream_state_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
-    global _LAST_BACKFILL_NUM_BATCHES
-    _LAST_BACKFILL_NUM_BATCHES = sum(
-        1 for p in q.recentProgress
-        if (p if isinstance(p, dict) else {}).get("numInputRows", 0) > 0)
+    drain_memory(agg, sink, "update")
     w = Window.partitionBy("day").orderBy(F.col("n").desc())
     return (spark.table(sink)
             .withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)

@@ -4,8 +4,9 @@ behavior is preserved — ``manager`` below IS pyspark's).
 
 Two constant-factor fixes for the per-task Python/Arrow fixed cost that
 VERDICT r12 item 1 named the largest cost class in the catalog (measured
-with tools/probe_arrow.py: a warm, reused worker still pays ~0.20-0.25 s
-per task BEFORE the UDF is entered):
+by timing an identity mapInArrow over a tiny cached frame at 1, 8 and 32
+partitions against the same frame's JVM-only noop write: a warm, reused
+worker still pays ~0.20-0.25 s per task BEFORE the UDF is entered):
 
 1. **Memoized ``importlib.invalidate_caches()``** — the dominant term.
    ``pyspark.worker_util.setup_spark_files`` invalidates Python's import

@@ -94,8 +94,10 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
     # — kills the measured ~0.2 s PER-TASK fixed cost every Python-
     # boundary task pays (the zipimporters on the worker PYTHONPATH
     # re-read their zip central directory on every task's
-    # importlib.invalidate_caches; see pydaemon.py and
-    # tools/probe_arrow.py for the measurement). Paid once per task —
+    # importlib.invalidate_caches; measured by timing an identity
+    # mapInArrow over a tiny cached frame at 1, 8 and 32 partitions
+    # against the same frame's JVM-only noop write, see pydaemon.py;
+    # perfbench/run.py --trace 1 reports python.tasks). Paid once per task —
     # millions of times over a 100 TB run; semantics unchanged
     # (addPyFile/addFile still re-invalidate). executorEnv.PYTHONPATH
     # makes the module importable by the worker python (the factory

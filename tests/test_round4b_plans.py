@@ -10,7 +10,7 @@ import os
 import pyspark.sql.functions as F
 
 
-from nfl_data_engineering_spark.plans import training as T  # noqa: E402
+from nfl_data_engineering_spark.plans import base, training as T  # noqa: E402
 from nfl_data_engineering_spark.plans.connectors import (  # noqa: E402
     MANIFEST_HI, MANIFEST_LO, q_file_stats_manifest)
 from nfl_data_engineering_spark.plans.lakeops import (  # noqa: E402
@@ -274,10 +274,9 @@ def test_cogrouped_asof_covers_every_purchase_once(spark):
 def test_late_drop_processed_three_batches_and_dropped_late(spark):
     out = {r["day"]: r["n"] for r in
            T.q_streaming_late_data_drop(spark, SF).collect()}
-    prog = T._LAST_LATEDROP_PROGRESS
-    fed = [p for p in prog if p.get("rows")]
+    fed = [p for p in base.LAST_DRAIN_PROGRESS if p["numInputRows"]]
     assert len(fed) == 3                  # events, sentinel, late batch
-    assert fed[2]["rows"] > 0             # the late file WAS read...
+    assert fed[2]["numInputRows"] > 0     # the late file WAS read...
     batch = (spark.read.parquet(os.path.join(SF, "events.parquet"))
              .groupBy(F.date_trunc("day", F.col("ts").cast("timestamp"))
                       .alias("day"))
@@ -399,7 +398,8 @@ def test_length_bucketing_beats_global_padding(spark):
 def test_multibatch_backfill_ran_multiple_batches(spark):
     out = {r["day"]: r for r in
            T.q_streaming_multibatch_backfill(spark, SF).collect()}
-    assert T._LAST_BACKFILL_NUM_BATCHES >= T.BACKFILL_CHUNKS
+    fed = [p for p in base.LAST_DRAIN_PROGRESS if p["numInputRows"] > 0]
+    assert len(fed) >= T.BACKFILL_CHUNKS
     batch = (spark.read.parquet(os.path.join(SF, "events.parquet"))
              .groupBy(F.date_trunc("day", F.col("ts").cast("timestamp"))
                       .alias("day"))

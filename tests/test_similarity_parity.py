@@ -1,11 +1,12 @@
-"""Oracle parity for every catalog entry routed through the shared
+"""Oracle parity for every catalog entry built on a shared helper: the
 similarity kernels (functions/similarity.py: candidate join, exact
-verifies, df-capped overlap) or checked by a shared oracle CTE function
-(capped overlap, component replay, duplicate-window islands): each runs
-at the smoke scale and must match its DuckDB oracle under the
-driver-style dtype-strict comparison (parity.compare). The oracles are
-independent SQL specs, so a match shows the kernels verify the same
-truth for every caller."""
+verifies, df-capped overlap), the shared oracle CTE functions (capped
+overlap, exact-jaccard verify, component replay, duplicate-window
+islands) and the entry scaffolding of plans/base.py (drain_memory,
+events_stream, scratch_dir). Each entry runs at the smoke scale and
+must match its DuckDB oracle under the driver-style dtype-strict
+comparison (parity.compare). The oracles are independent SQL specs, so
+a match shows each helper computes the same truth for every caller."""
 
 from __future__ import annotations
 
@@ -41,6 +42,16 @@ ROUTED = [
     "semantic_dedup", "semantic_dedup_twolevel",
     # duplicate-window islands (the shared island oracle CTEs)
     "exact_substring_spans", "substring_dedup_rewrite",
+    # streaming entries (the shared memory-sink drain, events-stream
+    # reader and scratch dirs) and the bucketed join's scratch tables
+    "streaming_daily_rollup", "streaming_sliding_rollup",
+    "streaming_keep_latest", "streaming_interval_join",
+    "streaming_left_outer_join", "streaming_full_outer_join",
+    "streaming_append_rollup", "streaming_multibatch_backfill",
+    "streaming_late_data_drop", "streaming_checkpoint_restart",
+    "streaming_sessionization", "streaming_cdc_apply", "streaming_enrich",
+    "streaming_upsert_sink", "streaming_dedup_ingest",
+    "bucketed_join_colocated",
 ]
 
 

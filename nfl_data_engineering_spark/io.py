@@ -10,15 +10,19 @@ with Spark-native equivalents:
 - writes: ``partitionBy("year","month")`` Hive layout, identical on-disk
   shape to the reference (README.md:43-60).
 - upsert: dynamic-partition-overwrite of only the partitions present in the
-  incoming batch, after union + keyed window dedup. At 100 TB this touches
-  O(changed partitions), not O(table).
+  incoming batch, after union + keyed window dedup. Existing rows are read
+  from those partitions' directories alone, so at 100 TB both the file
+  listing and the rewrite are O(changed partitions), not O(table). A
+  caller that knows the batch's partitions declares them
+  (``partitions=``): the write job itself then enforces the declaration
+  and no separate probe job runs; a new month reads nothing.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .operators.dedup import dedup_keep_latest
 
@@ -61,7 +65,8 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str = "timestamp",
 
 def upsert_partitioned(spark: SparkSession, new_df: DataFrame, path: str,
                        key_cols: list[str] | None, ts_col: str = "timestamp",
-                       tiebreak_cols: list[str] | None = None) -> None:
+                       tiebreak_cols: list[str] | None = None,
+                       partitions: list[tuple] | None = None) -> None:
     """Keyed upsert into a year/month-partitioned Parquet table.
 
     Semantics of the reference's read-concat-dedup-rewrite
@@ -71,26 +76,39 @@ def upsert_partitioned(spark: SparkSession, new_df: DataFrame, path: str,
       * ``key_cols=[...]`` -> keep the newest ``ts_col`` per key (rankings
         upsert, team_rankings_data_collector.py:41-45)
 
-    Implementation is Spark-native: read ONLY the partitions the new batch
-    touches (partition-pruned by the year/month IN-list predicate), union,
-    window-dedup, and dynamic-partition-overwrite exactly those partitions.
-    Idempotent: running the same batch twice is a fixed point.
+    Implementation is Spark-native: read ONLY the existing partition
+    directories the new batch touches, union, dedup, and
+    dynamic-partition-overwrite exactly those partitions. Idempotent:
+    running the same batch twice is a fixed point.
+
+    ``partitions`` is the (year, month) set the batch touches, when the
+    caller knows it (a collector stamps every row with one wall clock).
+    It replaces the ``distinct().collect()`` probe of the batch with a
+    guard that runs inside the write job: a row outside the declared set
+    raises before commit and the table is left untouched, so a wrong
+    declaration can never overwrite a month with a partial copy. With
+    ``partitions=None`` the batch is probed for its partitions first
+    (only when the table already holds data). A batch whose partitions
+    have no directory yet (a new month) skips the existing-row read and
+    its schema inference altogether.
     """
     new_part = with_partition_cols(new_df, ts_col)
-    merged = new_part
-    if _table_exists(path):
-        # the touched-partition scan of the batch is only needed to build
-        # the pruning predicate over EXISTING data — a first write (no
-        # table yet) skips the whole batch scan + collect (one fewer job
-        # and one fewer pass over the batch; round-13 profile)
+    if partitions is not None:
+        pred, dirs = _partition_scope(path, partitions)
+        new_part = new_part.filter(F.when(pred, F.lit(True)).otherwise(
+            F.raise_error(F.lit(
+                f"upsert_partitioned: a row lies outside the declared "
+                f"partitions {list(partitions)}"))))
+    elif _table_exists(path):
         touched = [tuple(r) for r in
                    new_part.select(*PARTITION_COLS).distinct().collect()]
-        existing = spark.read.parquet(path)
-        pred = F.lit(False)
-        for (y, m) in touched:
-            pred = pred | ((F.col("year") == y) & (F.col("month") == m))
-        existing = existing.filter(pred).select(*new_part.columns)
-        merged = existing.unionByName(new_part)
+        dirs = _partition_scope(path, touched)[1]
+    else:
+        dirs = []
+    merged = new_part
+    if dirs:
+        existing = spark.read.option("basePath", path).parquet(*dirs)
+        merged = existing.select(*new_part.columns).unionByName(new_part)
     part_cols = [F.col(c) for c in PARTITION_COLS]
     if key_cols is None:
         # Full-row dedup rides the LAYOUT exchange (guide §2.4 — two
@@ -308,19 +326,21 @@ def compact_partitions(spark: SparkSession, path: str,
     Incremental appends (streaming sink, repeated upserts) accumulate files
     per partition; scans then pay per-file open cost. This rewrites each
     partition down to ``target_files_per_partition`` files. ``partitions``
-    limits the rewrite to the listed (year, month) tuples — the periodic
+    limits the rewrite to the listed (year, month) tuples, read from their
+    directories alone (none existing: nothing to do) — the periodic
     compaction job passes the recently-written ones; None compacts the whole
     table (reference-scale only; at 100 TB always pass the touched set).
 
     Safe with dynamic partition overwrite: only the partitions present in
     the rewritten frame are replaced, atomically per partition.
     """
-    df = spark.read.parquet(path)
-    if partitions is not None:
-        pred = F.lit(False)
-        for (y, m) in partitions:
-            pred = pred | ((F.col("year") == y) & (F.col("month") == m))
-        df = df.filter(pred)
+    if partitions is None:
+        df = spark.read.parquet(path)
+    else:
+        dirs = _partition_scope(path, partitions)[1]
+        if not dirs:
+            return
+        df = spark.read.option("basePath", path).parquet(*dirs)
     part_cols = [F.col(c) for c in PARTITION_COLS]
     if target_files_per_partition <= 1:
         shuffled = df.repartition(*part_cols)
@@ -335,6 +355,20 @@ def compact_partitions(spark: SparkSession, path: str,
      .write.mode("overwrite")
      .partitionBy(*PARTITION_COLS)
      .parquet(path, compression="snappy"))
+
+
+def _partition_scope(path: str, partitions: list[tuple],
+                     ) -> tuple[Column, list[str]]:
+    """The year/month predicate over ``partitions`` and the directories of
+    those partitions that hold data under ``path``."""
+    pred, dirs = F.lit(False), []
+    for (y, m) in dict.fromkeys(map(tuple, partitions)):
+        pred = pred | ((F.col("year") == y) & (F.col("month") == m))
+        d = os.path.join(path, f"year={y}", f"month={m}")
+        if os.path.isdir(d) and any(f.endswith(".parquet")
+                                    for f in os.listdir(d)):
+            dirs.append(d)
+    return pred, dirs
 
 
 def _table_exists(path: str) -> bool:

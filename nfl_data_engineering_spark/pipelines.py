@@ -26,10 +26,22 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .io import upsert_partitioned
 from .sources.html_table import Fetcher, scrape_tables_long
-from .sources.rest_json import (build_odds_snapshot, market_coverage_gaps,
+from .sources.rest_json import (EXPECTED_MARKETS, build_odds_snapshot,
+                                market_counts, missing_markets,
                                 odds_from_json_strings, wall_clock_ts)
 
 RANKINGS_KEY_COLS = ["team", "date", "metric"]
+
+
+def _observed(obs: Observation, *names: str) -> dict:
+    """``obs.get``, or every metric 0 when the observation never reported.
+    AQE replaces a shuffle stage that wrote no rows with an empty relation,
+    and the observed metrics computed below that shuffle go with it, so a
+    missing result means the observed batch was empty (``obs.get`` would
+    fail on it)."""
+    if obs._jo.getAsJava().isEmpty():
+        return dict.fromkeys(names, 0)
+    return obs.get
 
 
 def run_odds_collection(spark: SparkSession, payloads: list[str],
@@ -37,18 +49,22 @@ def run_odds_collection(spark: SparkSession, payloads: list[str],
     """The odds pipeline: payload JSON -> 9-col snapshot -> idempotent
     append (full-row dedup guards double runs, odds_data_collector.py:40-44).
     Returns collection stats incl. the market-coverage check
-    (get_odds.py:68-79)."""
+    (get_odds.py:68-79).
+
+    The row count and the market check are observed during the upsert's
+    write job, and every row carries the one ``collected_at`` wall clock,
+    so the batch's partition is declared rather than probed: the snapshot
+    is computed once, by the write."""
     raw = odds_from_json_strings(spark, payloads)
     snap = build_odds_snapshot(raw, collected_at)
-    gaps = market_coverage_gaps(snap)
-    # row count via Observation: collected DURING the upsert's write pass,
-    # not a separate count() action — one computation of the snapshot
-    # instead of two (the reference pays len(df) for free only because
-    # pandas is already materialized, odds_data_collector.py:45)
     obs = Observation("odds_ingest")
-    snap = snap.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    upsert_partitioned(spark, snap, table_path, key_cols=None)
-    return {"rows_collected": obs.get["n_rows"], "missing_markets": gaps,
+    snap = snap.observe(obs, F.count(F.lit(1)).alias("n_rows"),
+                        *market_counts())
+    upsert_partitioned(spark, snap, table_path, key_cols=None,
+                       partitions=[(collected_at.year, collected_at.month)])
+    counts = _observed(obs, "n_rows", *EXPECTED_MARKETS)
+    return {"rows_collected": counts["n_rows"],
+            "missing_markets": missing_markets(counts),
             "table_path": table_path}
 
 
@@ -67,8 +83,10 @@ def run_rankings_collection(spark: SparkSession, registry: DataFrame,
     obs = Observation("rankings_ingest")
     stamped = stamped.observe(obs, F.count(F.lit(1)).alias("n_rows"))
     upsert_partitioned(spark, stamped, table_path,
-                       key_cols=RANKINGS_KEY_COLS)
-    return {"rows_collected": obs.get["n_rows"], "table_path": table_path}
+                       key_cols=RANKINGS_KEY_COLS,
+                       partitions=[(collected_at.year, collected_at.month)])
+    return {"rows_collected": _observed(obs, "n_rows")["n_rows"],
+            "table_path": table_path}
 
 
 # The reference's run-timestamp timezone (src/main.py:31-35): explicit

@@ -12,7 +12,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..schemas import ODDS_RAW
 
@@ -50,10 +50,18 @@ def flatten_odds(raw: DataFrame) -> DataFrame:
                     F.coalesce(F.col("oc.point"), F.lit(0.0)).alias("point")))
 
 
-def market_coverage_gaps(flat: DataFrame) -> list[str]:
-    """A4: expected-markets completeness check (get_odds.py:74-77)."""
-    found = {r["market"] for r in flat.select("market").distinct().collect()}
-    return sorted(set(EXPECTED_MARKETS) - found)
+def market_counts() -> list[Column]:
+    """A4: expected-markets completeness check (get_odds.py:74-77), as one
+    row count per expected market. Aggregates for ``DataFrame.observe``, so
+    the check rides the job that writes the snapshot; read the result
+    with ``missing_markets``."""
+    return [F.count_if(F.col("market") == m).alias(m)
+            for m in EXPECTED_MARKETS]
+
+
+def missing_markets(counts: dict) -> list[str]:
+    """The expected markets with no row, from ``market_counts`` values."""
+    return sorted(m for m in EXPECTED_MARKETS if not counts[m])
 
 
 def wall_clock_ts(collected_at: dt.datetime):

@@ -28,3 +28,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def jobs_submitted(spark):
+    """``jobs_submitted(group, fn)`` runs ``fn`` under a Spark job group and
+    returns how many jobs it submitted."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the listener bus; let it catch up
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

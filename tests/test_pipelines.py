@@ -65,6 +65,59 @@ def test_rankings_collection_keeps_latest(spark, tmp_path):
     assert len(out) == 1
     assert out[0]["value"] == "12.5"
     assert out[0]["timestamp"] == t2
+    # the declared (year, month) of the stamp leaves the row as it was
+    assert out[0].asDict() == {
+        "team": "Bears", "date": dt.date(2025, 11, 3),
+        "metric": "rankings_predictive_rating", "value": "12.5",
+        "timestamp": t2, "year": 2025, "month": 11}
+
+
+def _payload_without(market):
+    games = json.loads(json.dumps(PAYLOAD))
+    for bk in games[0]["bookmakers"]:
+        bk["markets"] = [m for m in bk["markets"] if m["key"] != market]
+    return json.dumps(games)
+
+
+def test_odds_collection_reports_missing_market(spark, tmp_path):
+    stats = run_odds_collection(spark, [_payload_without("totals")],
+                                str(tmp_path / "odds"),
+                                dt.datetime(2025, 11, 1, 12))
+    assert stats["missing_markets"] == ["totals"]
+    assert stats["rows_collected"] == 4
+
+
+def test_odds_collection_empty_payload(spark, tmp_path):
+    """An empty snapshot reports every market missing, both into a new
+    table and into a month that already holds rows (which it keeps)."""
+    path = str(tmp_path / "odds")
+    t = dt.datetime(2025, 11, 1, 12)
+    empty = {"rows_collected": 0,
+             "missing_markets": ["h2h", "spreads", "totals"],
+             "table_path": path}
+    assert run_odds_collection(spark, ["[]"], path, t) == empty
+    run_odds_collection(spark, [json.dumps(PAYLOAD)], path, t)
+    assert run_odds_collection(spark, [], path, t) == empty
+    assert spark.read.parquet(path).count() == 6
+
+
+def test_odds_collection_job_count(spark, tmp_path, jobs_submitted):
+    """The coverage check and the partition set ride the write: a repeat
+    snapshot into an existing month is the write plus one schema read of
+    that month, and a new month is the write alone."""
+    path = str(tmp_path / "odds")
+    payload = json.dumps(PAYLOAD)
+    nov, dec = dt.datetime(2025, 11, 1, 12), dt.datetime(2025, 12, 1, 12)
+    run_odds_collection(spark, [payload], path, nov)
+    again = jobs_submitted("odds_existing_month",
+                           lambda: run_odds_collection(spark, [payload],
+                                                       path, nov))
+    fresh = jobs_submitted("odds_new_month",
+                           lambda: run_odds_collection(spark, [payload],
+                                                       path, dec))
+    assert 1 <= again <= 3, again
+    assert 1 <= fresh <= 2, fresh
+    assert spark.read.parquet(path).count() == 12
 
 
 def test_handler_dispatch_and_backfill_date(spark, tmp_path):

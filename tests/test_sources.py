@@ -8,7 +8,6 @@ import json
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from nfl_data_engineering_spark.sources.html_table import scrape_tables_long
 from nfl_data_engineering_spark.sources.multimodal import (decode_features,
@@ -16,7 +15,6 @@ from nfl_data_engineering_spark.sources.multimodal import (decode_features,
                                                            synthesize_multimodal)
 from nfl_data_engineering_spark.sources.rest_json import (build_odds_snapshot,
                                                           flatten_odds,
-                                                          market_coverage_gaps,
                                                           odds_from_json_strings)
 
 SAMPLE_ODDS = [{
@@ -55,12 +53,6 @@ def test_odds_flatten_nine_column_contract(spark):
     assert all(r["point"] == 0.0 for r in h2h)
     totals = {r["outcome"] for r in rows if r["market"] == "totals"}
     assert totals == {"Over", "Under"}
-
-
-def test_market_coverage_check(spark):
-    raw = odds_from_json_strings(spark, [json.dumps(SAMPLE_ODDS)])
-    flat = flatten_odds(raw).filter(F.col("market") != "totals")
-    assert market_coverage_gaps(flat) == ["totals"]
 
 
 def test_odds_snapshot_timestamp(spark):

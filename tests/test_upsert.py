@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
+
 from nfl_data_engineering_spark.io import (compact_partitions,
                                            upsert_partitioned,
                                            write_bucketed,
@@ -49,6 +51,64 @@ def test_upsert_touches_only_new_partitions(spark, tmp_path):
     # dynamic partition overwrite must leave January untouched
     assert before == after
     assert spark.read.parquet(path).count() == 2
+
+
+def _table_tree(path):
+    """Every file and directory under ``path``, with each file's mtime."""
+    out = {}
+    for root, dirs, files in os.walk(path):
+        for d in dirs:
+            out[os.path.relpath(os.path.join(root, d), path)] = None
+        for f in files:
+            p = os.path.join(root, f)
+            out[os.path.relpath(p, path)] = os.path.getmtime(p)
+    return out
+
+
+def test_upsert_declared_partitions_guard(spark, tmp_path):
+    """A batch row outside the declared partitions fails the write before
+    commit: no file of the table is added, removed or rewritten. Without
+    the guard, January would be rewritten and February replaced by the
+    stray row alone."""
+    path = str(tmp_path / "tbl")
+    upsert_partitioned(spark, _batch(spark, [
+        (1, "jan", dt.datetime(2024, 1, 5)),
+        (2, "feb", dt.datetime(2024, 2, 5))]), path, key_cols=None)
+    rows = sorted(map(tuple, spark.read.parquet(path).collect()))
+    before = _table_tree(path)
+    stray = _batch(spark, [(3, "feb", dt.datetime(2024, 2, 6))])
+    with pytest.raises(Exception, match="outside the declared partitions"):
+        upsert_partitioned(spark, stray, path, key_cols=None,
+                           partitions=[(2024, 1)])
+    assert _table_tree(path) == before
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows
+
+
+def test_upsert_new_month_reads_nothing(spark, tmp_path, jobs_submitted,
+                                        monkeypatch):
+    """A batch for a month with no directory yet reads no existing rows,
+    so no schema-inference job runs, whether its partitions are declared
+    or probed; a declared new month is the write's jobs alone."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = str(tmp_path / "tbl")
+    upsert_partitioned(spark, _batch(spark, [(1, "jan", dt.datetime(
+        2024, 1, 5))]), path, key_cols=None)
+    reads, parquet = [], DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.append(paths)
+        return parquet(self, *paths, **options)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    declared = jobs_submitted("upsert_declared_new_month", lambda: (
+        upsert_partitioned(spark, _batch(spark, [(2, "feb", dt.datetime(
+            2024, 2, 5))]), path, key_cols=None, partitions=[(2024, 2)])))
+    upsert_partitioned(spark, _batch(spark, [(3, "mar", dt.datetime(
+        2024, 3, 5))]), path, key_cols=None)
+    monkeypatch.undo()
+    assert reads == []
+    assert 1 <= declared <= 2, declared
+    assert spark.read.parquet(path).count() == 3
 
 
 def _parquet_files(d):

@@ -61,7 +61,13 @@ EXTRA_RUN_QUERIES = frozenset({
 
 
 def _run(q, spark, sf_dir) -> float:
-    """Execute one query to full materialization."""
+    """Execute one query to full materialization, after releasing what
+    the previous run pinned (a repeat run must not read the caches its
+    predecessor filled) and collecting the garbage that leaves (GC debt
+    measured ~2x on the LSH queries)."""
+    release_deferred()
+    spark.catalog.clearCache()
+    spark._jvm.System.gc()
     t0 = time.time()
     q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.time() - t0
@@ -90,11 +96,6 @@ def _rep(sf_dir: str, rep: int,
         timings: dict[str, float] = {}
         deltas: dict[str, float] = {}
         for q in bench_queries():
-            # whatever an entry pins lives until the next release_deferred()
-            release_deferred()
-            spark.catalog.clearCache()
-            # keep GC debt off this query (measured ~2x on the LSH queries)
-            spark._jvm.System.gc()
             n_runs = 3 if q.name in EXTRA_RUN_QUERIES else 2
             runs = [_run(q, spark, sf_dir) for _ in range(n_runs)]
             timings[q.name] = min(runs)

@@ -131,11 +131,11 @@ def connected_components(edges: DataFrame, src: str = "a",
     # Storage discipline: round N's checkpoint reads only round N-1's, so
     # once N materializes (the convergence collect), N-1's blocks are
     # dead — released EXPLICITLY via registry diff + unpersist rather
-    # than left to the ContextCleaner's GC pace (the py4j-detach race of
-    # VERDICT r6 item 1). The FINAL labels checkpoint stays persisted —
-    # the caller's derived plans read it — with its ids exposed on
-    # labels._ckpt_ids, which plans.base.finalize(out, labels) releases
-    # once it has materialized every dependent.
+    # than left to the ContextCleaner's GC pace (a lost py4j detach
+    # pins a block for the session's life). The FINAL labels checkpoint
+    # stays persisted — the caller's derived plans read it — with its ids
+    # exposed on labels._ckpt_ids; plans.base.finalize(out, labels) parks
+    # their release until the next entry starts or release_deferred().
     from ..storage import CheckpointRotator
     spark = edges.sparkSession
     # Distributed path only: cache the edge frame (the loop reads it every

@@ -22,6 +22,14 @@ import os
 import sys
 import time
 
+# DuckDB budget of the oracle side: memory, and the disk its spills may
+# take. An oracle that needs more is reported as OOB (out of budget)
+# instead of growing this process, or its temp dir, until the host gives
+# out: at the 10x replica three oracles need over 5 GB of memory and
+# spill until the disk is full.
+ORACLE_MEMORY_LIMIT = "4GB"
+ORACLE_SPILL_LIMIT = "16GB"
+
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
 
@@ -81,6 +89,38 @@ def compare(spark_pdf, duck_pdf) -> list[str]:
     return errs
 
 
+def check_entry(fn, sql: str | None, con) -> tuple[str, list[str]]:
+    """Run one entry (``fn()`` builds its Spark frame) against its
+    oracle ``sql`` on the DuckDB connection ``con``. Returns (outcome,
+    messages); outcome is OK, SKIP (no oracle: rows-only), FAIL, or OOB
+    when the oracle runs out of the connection's memory or spill
+    budget."""
+    import duckdb
+    try:
+        spark_pdf = fn().toPandas()
+    except Exception as e:
+        return "FAIL", [f"spark error: {str(e)[:300]}"]
+    if sql is None:
+        try:
+            canon(spark_pdf, "spark")
+        except TypeError as e:
+            return "FAIL", [str(e)]
+        return "SKIP", [f"no oracle (rows-only) — {len(spark_pdf)} rows"]
+    try:
+        duck_pdf = con.execute(sql).df()
+    except duckdb.OutOfMemoryException as e:
+        return "OOB", [f"oracle out of the DuckDB budget: {str(e)[:200]}"]
+    except Exception as e:
+        return "FAIL", [f"oracle error: {str(e)[:250]}"]
+    try:
+        errs = compare(spark_pdf, duck_pdf)
+    except TypeError as e:
+        errs = [str(e)]
+    if errs:
+        return "FAIL", errs
+    return "OK", [f"{len(spark_pdf)} rows"]
+
+
 def main():
     import duckdb
 
@@ -88,9 +128,10 @@ def main():
     # invocation): the external harness loads __spark_entry__, so parity
     # must smoke that exact surface — a regression confined to it (broken
     # import, renamed function) would otherwise pass a registry-direct
-    # mirror while the real driver fails to load the catalog (round-7
-    # review finding). The packaged console script, run from outside the
-    # repo, falls back to the registry the entry module delegates to.
+    # mirror while the real driver fails to load the catalog. The
+    # packaged console script, run from outside the repo, falls back to
+    # the registry the entry module delegates to. Either way each entry
+    # drains what the previous one parked (registry.queries).
     try:
         import __spark_entry__ as se
         queries, oracle_sql = se.queries, se.oracle_sql
@@ -100,7 +141,7 @@ def main():
         # raised INSIDE __spark_entry__ (broken import within it) is
         # exactly the entry-surface regression this path exists to smoke —
         # swallowing it would mask the failure behind a passing registry
-        # mirror (ADVICE r7).
+        # mirror.
         if e.name != "__spark_entry__":
             raise
         from .plans.registry import oracle_sql, queries
@@ -119,55 +160,35 @@ def main():
         from .session import get_spark
         spark = get_spark("parity")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{ORACLE_MEMORY_LIMIT}'")
+    con.execute(f"SET max_temp_directory_size = '{ORACLE_SPILL_LIMIT}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, os_ = queries(), oracle_sql()
-    failures = []
+    failures, oob = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        # whatever an entry pins lives until the next release_deferred()
-        from .plans.base import release_deferred
-        release_deferred()
         spark.catalog.clearCache()
         t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            spark_pdf = df.toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {str(e)[:300]}")
+        outcome, msgs = check_entry(lambda: fn(spark, sf_dir),
+                                    os_.get(name), con)
+        if outcome == "FAIL":
             failures.append(name)
-            continue
-        if name not in os_:
-            try:
-                canon(spark_pdf, "spark")
-                print(f"SKIP {name}: no oracle (rows-only) — "
-                      f"{len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
-            except TypeError as e:
-                print(f"FAIL {name}: {e}")
-                failures.append(name)
-            continue
-        try:
-            duck_pdf = con.execute(os_[name]).df()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {str(e)[:250]}")
-            failures.append(name)
-            continue
-        try:
-            errs = compare(spark_pdf, duck_pdf)
-        except TypeError as e:
-            errs = [str(e)]
-        if errs:
             print(f"FAIL {name}:")
-            for e in errs[:6]:
+            for e in msgs[:6]:
                 print(f"   {e}")
-            failures.append(name)
-        else:
-            print(f"OK   {name}: {len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
+            continue
+        if outcome == "OOB":
+            oob.append(name)
+        print(f"{outcome:<4} {name}: {msgs[0]} [{time.time()-t0:.1f}s]")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    if oob:
+        print(f"{len(oob)} oracles out of budget (OOB: memory "
+              f"{ORACLE_MEMORY_LIMIT}, spill {ORACLE_SPILL_LIMIT}): {oob}")
     spark.stop()
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failures or oob else 0)
 
 
 if __name__ == "__main__":

@@ -41,8 +41,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..storage import (park_frame, park_ids, registry_rdd_ids,
-                       release_frame, release_parked)
+from ..storage import park_frame, release_parked
 
 
 @dataclass(frozen=True)
@@ -191,95 +190,30 @@ def scoped_cached_plan_aqe(fn):
     return wrap
 
 
-def _no_finalize() -> bool:
-    """Opt-out flag, truthy ONLY for explicit on-values — '0'/'false'/''
-    keep finalization ON (ADVICE r5: any-non-empty was backwards for a
-    user exporting SPARK_GRAFT_NO_FINALIZE=0)."""
-    return os.environ.get("SPARK_GRAFT_NO_FINALIZE", "").lower() in (
-        "1", "true", "yes")
+def finalize(result: DataFrame, *held: DataFrame) -> DataFrame:
+    """Park the release of every ``held`` frame on the storage ledger
+    (storage.park_frame) and return ``result`` unchanged, still lazy. A
+    held frame is a cache the result reads, or a checkpointed helper
+    whose ``_ckpt_ids`` it reads (the connected-components labels, the
+    BPE token table).
 
-
-def _reliable_checkpoint() -> bool:
-    """Cluster-mode switch (VERDICT r6 item 7): swap finalize()'s eager
-    localCheckpoint — non-replicated executor-local blocks, unrecoverable
-    on executor loss — for a RELIABLE checkpoint written under the
-    context's checkpoint dir (HDFS/S3 on a real cluster). The caller must
-    have run spark.sparkContext.setCheckpointDir(...) first; Spark raises
-    if not. Same explicit-true parsing as the opt-out flag."""
-    return os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "").lower() in (
-        "1", "true", "yes")
-
-
-def finalize(result: DataFrame, *held: DataFrame,
-             pair_table: bool = False) -> DataFrame:
-    """Release an entry's fan-out storage without losing its benefit:
-    materialize `result` executor-side (eager localCheckpoint — the
-    cached intermediates are read exactly once more, no driver
-    round-trip), then release every `held` frame: unpersist a cache, or
-    unpersist a checkpointed helper frame's ``_ckpt_ids`` (the connected-
-    components labels, the BPE token table). Without this, a session
-    running the full query catalog accumulates storage-memory entries
-    for the life of the SparkSession (ADVICE r4). The trade is
-    materializing the (small, post-filter) RESULT to release the (large,
-    pre-aggregation) intermediates — the same move as writing a stage's
-    output and dropping its scratch tables on a cluster.
-
-    Lifetime: whatever an entry pins — this checkpoint, and the caches
-    ``pair_table`` parks — lives until the runner's next
-    release_deferred(). The ledger holds the checkpoint's registry ids,
-    not the frame, so a caller that never drains it still gets
-    ContextCleaner release once the returned frame is garbage.
-
-    Two trade-offs a cluster deployment must know (ADVICE r5):
-
-    * localCheckpoint stores NON-REPLICATED executor-local blocks with
-      lineage truncated — an executor loss makes the returned frame
-      unrecoverable (cache() could recompute; checkpoint cannot). Fine
-      in local mode and for driver-collected results; a long-lived
-      cluster pipeline sets SPARK_GRAFT_RELIABLE_CHECKPOINT=1 (plus
-      sparkContext.setCheckpointDir to a durable path) to swap in a
-      reliable checkpoint — files under the checkpoint dir, so nothing
-      is parked — tested in tests/test_finalize.py.
-    * finalization makes the QueryDef.spark() call EAGERLY execute the
-      query at plan-construction time. Plan-only consumers (explain
-      dumps, schema checks, tools/audit_plans.py) must set
-      SPARK_GRAFT_NO_FINALIZE=1 to get the raw lazy plan back; nothing
-      is released then, since that plan still reads every held frame
-      (acceptable in one-off processes).
-
-    ``pair_table=True`` marks entries whose RESULT is the largest frame
-    in the plan (pair-enumeration outputs: ~10^8 legitimate rows at the
-    100x replica for the minhash baseline — SCALE.md). Eagerly
-    checkpointing that to executor storage to free two SMALLER caches
-    would invert the "small result, large intermediates" trade, so
-    instead the raw plan is returned and the held caches are parked:
-    they stay hot through the result's consumption (the pair plan reads
-    them)."""
-    if _no_finalize():
-        return result
-    if pair_table:
-        for h in held:
-            park_frame(h)
-        return result
-    if _reliable_checkpoint():
-        out = result.checkpoint(eager=True)
-    else:
-        # the registry diff may also catch cache blocks this job filled;
-        # those unpersist below and unpersist_rdd_ids skips absent ids
-        spark = result.sparkSession
-        before = registry_rdd_ids(spark)
-        out = result.localCheckpoint(eager=True)
-        park_ids(spark, registry_rdd_ids(spark) - before)
+    Lifetime: whatever an entry pins lives until the next entry starts
+    (``registry.queries()`` drains the ledger before each entry) or the
+    runner's next release_deferred(), so the held frames stay cached
+    while the result is consumed. Without the ledger a session running
+    the full query catalog would keep every entry's caches for its whole
+    life. finalize itself submits no job: the entry's work runs in the
+    caller's action, and a plan-only consumer (explain dumps, schema
+    checks, tools/audit_plans.py) sees the real lazy plan."""
     for h in held:
-        release_frame(h)
-    return out
+        park_frame(h)
+    return result
 
 
 def release_deferred() -> int:
     """Release everything catalog entries parked since the last call
-    (storage.release_parked: checkpoint ids and pair_table caches);
-    returns how many storage entries were freed. Idempotent; catalog
-    runners call it between entries."""
+    (storage.release_parked); returns how many storage entries were
+    freed. Idempotent; catalog runners call it between entries."""
     return release_parked()
 
 

@@ -970,10 +970,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.col("x").alias("src"), F.col("y").alias("dst")))
     tri = wedges.join(oriented.select("src", "dst"),
                       ["src", "dst"], "left_semi")
-    # finalize: materialize the 1-row summary, then release the caches —
-    # without it the persisted graph outlives the entry for the whole
-    # session (ADVICE r4). n_edges is the cache-fill count the entry
-    # already ran — same number, one fewer 1-row aggregate branch.
+    # finalize parks the caches' release — without it the persisted
+    # graph outlives the entry for the whole session. n_edges is the
+    # cache-fill count the entry already ran — same number, one fewer
+    # 1-row aggregate branch.
     return finalize(
         deg.agg(F.count("*").alias("n_nodes"))
         .withColumn("n_edges", F.lit(n_edges).cast("bigint"))

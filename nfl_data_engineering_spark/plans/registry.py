@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .base import QueryDef
+from .base import QueryDef, release_deferred
 from .connectors import CONNECTOR_QUERIES
 from .lakeops import LAKEOPS_QUERIES
 from .relational import RELATIONAL_QUERIES
@@ -71,8 +72,20 @@ _BY_NAME = {q.name: q for q in CATALOG}
 assert len(_BY_NAME) == len(CATALOG), "duplicate query names in catalog"
 
 
+def _drained(fn: Callable[[SparkSession, str], DataFrame]
+             ) -> Callable[[SparkSession, str], DataFrame]:
+    """``fn`` preceded by release_deferred(): a runner that never drains
+    the ledger still frees what the previous entry pinned when the next
+    one starts."""
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_deferred()
+        return fn(spark, sf_dir)
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {q.name: q.spark for q in CATALOG}
+    return {q.name: _drained(q.spark) for q in CATALOG}
 
 
 def oracle_sql() -> dict[str, str]:

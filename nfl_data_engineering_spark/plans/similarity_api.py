@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from ..functions.hashing import (RECALL_FLOOR, minhash_band_config,
                                  oph_auto_cutover)
 from ..functions.text import shingle_hash_arrays
+from ..storage import park_frame, release_frame
 from .base import (QueryDef, finalize, load, recall_ppm,
                    scoped_cached_plan_aqe)
 from .textops import (CONTAINMENT_PCT, JACCARD_THRESHOLD, NUM_BANDS,
@@ -208,8 +209,8 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
     peak shuffle disk is the SUM of the families. A disk-constrained
     deployment should stage family by family, bounding peak spill at
     max(family): that is :func:`similarity_join_staged` (each result
-    materialized via plans.base.finalize and its caches released before
-    the next dispatch). Measured at the 100x replica: the monolithic
+    filled into a cache and its own caches released before the next
+    dispatch). Measured at the 100x replica: the monolithic
     4-family union exceeded a 78 GB local spill budget that per-family
     staging stayed well inside (SCALE.md round-8 replica sweep).
     """
@@ -311,12 +312,14 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
 
 
 def similarity_join_staged(specs: list[dict]) -> DataFrame:
-    """Family-SEQUENTIAL multi-family similarity join (VERDICT r8 item 5
-    — the code form of the peak-spill remedy similarity_join's docstring
-    prescribes in prose): dispatch each family through
-    :func:`similarity_join`, MATERIALIZE its result (plans.base.finalize:
-    eager checkpoint) and release its caches before the next family
-    dispatches, then return the union of the checkpointed parts.
+    """Family-SEQUENTIAL multi-family similarity join (the code form of
+    the peak-spill remedy similarity_join's docstring prescribes in
+    prose): dispatch each family through :func:`similarity_join`, fill
+    its tagged result into a cache, release the family's own caches
+    before the next family dispatches, then return the union of the
+    cached parts. The parts are parked on the storage ledger, so they
+    live until the next entry starts or the runner's next
+    release_deferred().
 
     Because each family's shuffles complete before the next family
     starts, peak shuffle-spill disk is **max(family)** instead of the
@@ -360,10 +363,14 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
         tagged = res.select(
             F.lit(spec["family"]).alias("family"), "id1", "id2",
             F.round(F.col("score").cast("double"), 6).alias("score"))
-        # finalize WITHOUT pair_table: the eager checkpoint is the
-        # staging barrier — this family's shuffles run to completion and
-        # its caches release before the next dispatch is even built
-        parts.append(finalize(tagged, *caches))
+        # the staging barrier: this family's shuffles run to completion
+        # and its caches release before the next dispatch is even built
+        part = tagged.cache()
+        part.count()
+        for c in caches:
+            release_frame(c)
+        park_frame(part)
+        parts.append(part)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -428,7 +435,7 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
            .unionByName(tag(pf, "jaccard_prefix"))
            .unionByName(tag(hm, "hamming_simhash"))
            .unionByName(tag(sp, "cosine_srp")))
-    return finalize(out, *caches, pair_table=True)
+    return finalize(out, *caches)
 
 
 def q_similarity_join_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,7 +444,7 @@ def q_similarity_join_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's one measured spill hazard must be driver-exercised,
     not library-only): the same four family dispatches as
     q_similarity_join_api, but run through similarity_join_staged so
-    each family materializes (eager checkpoint) and releases its caches
+    each family fills its cached part and releases its caches
     BEFORE the next family dispatches — peak shuffle-spill disk is
     max(family), not sum(families) (measured at the 100x replica: 34.7
     GB peak vs the monolith's >78 GB budget blow — SCALE.md rounds 8-9).
@@ -483,7 +490,7 @@ def q_similarity_containment_api(spark: SparkSession, sf_dir: str) -> DataFrame:
                           metric="containment", caches=caches)
     out = res.select(F.lit("containment").alias("family"),
                      "id1", "id2", "score")
-    return finalize(out, *caches, pair_table=True)
+    return finalize(out, *caches)
 
 
 ORACLE_CONTAINMENT_API = f"""
@@ -622,7 +629,7 @@ def q_auto_route_oph_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
                        F.round(F.col("score"), 6).alias("jaccard"),
                        F.lit(routed).alias("routed_kernel"))
-    return finalize(out, *caches, pair_table=True)
+    return finalize(out, *caches)
 
 
 ORACLE_AUTO_ROUTE_OPH = f"""

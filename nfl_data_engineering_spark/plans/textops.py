@@ -172,12 +172,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     via array_distinct — no dropDuplicates shuffle."""
     caches: list[DataFrame] = []
     pairs = _minhash_pairs(spark, sf_dir, caches)
-    # pair_table: the verified-pair RESULT is the largest frame here
-    # (~10^8 rows at the 100x replica) — checkpointing it to free two
-    # smaller caches would invert the trade; defer the release instead
     return finalize(
         pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard")),
-        *caches, pair_table=True)
+        *caches)
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,8 +766,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize(
         capped_overlap(sh, NGRAM_DF_CAP)
         .filter(jac >= 0.7)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard")), sh,
-        pair_table=True)
+        .select("d1", "d2", F.round(jac, 6).alias("jaccard")), sh)
 
 
 def _overlap_jaccard() -> Column:
@@ -856,7 +852,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("sub_doc_id", "super_doc_id",
                    F.expr("i * 1000 div sz_sub")
                     .alias("containment_x1000")))
-    return finalize(out, sh, pair_table=True)
+    return finalize(out, sh)
 
 
 def containment_directions(ov: DataFrame, t_pm: int) -> DataFrame:
@@ -993,7 +989,7 @@ def q_containment_sketch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("sub_doc_id", "super_doc_id",
                    F.expr("i * 1000 div sz_sub")
                     .alias("containment_x1000")))
-    return finalize(out, sh, pair_table=True)
+    return finalize(out, sh)
 
 
 @scoped_cached_plan_aqe
@@ -1161,8 +1157,7 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = _text_prefix_join(sharr, JACCARD_THRESHOLD, caches)
     return finalize(
         verified.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
-                        F.round("score", 6).alias("jaccard")),
-        *caches, pair_table=True)
+                        F.round("score", 6).alias("jaccard")), *caches)
 
 
 ORACLE_PREFIX_FILTER_JOIN = f"""
@@ -1212,7 +1207,7 @@ def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _minhash_pairs(spark, sf_dir, caches, sketch="oph")
     return finalize(
         pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard")),
-        *caches, pair_table=True)
+        *caches)
 
 
 _SQL_OPH_PAIR_CTES = sql_oph_pair_ctes(OPH_BINS, OPH_NUM_BANDS,

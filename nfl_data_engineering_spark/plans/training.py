@@ -527,7 +527,7 @@ def _bpe_loop(tok: DataFrame, steps: int):
     mid-loop failure releases every live step checkpoint before
     propagating. The FINAL table's ids ride back on ``tok._ckpt_ids``:
     the trainer drops the table and releases them at once; the encoder
-    releases them after its finalize materializes."""
+    parks them through finalize."""
     from ..storage import CheckpointRotator
     out_rows = []
     rot = CheckpointRotator(tok.sparkSession)
@@ -634,10 +634,9 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", "n_base_tokens", "n_tokens",
                    F.expr("n_tokens * 1000000 div n_base_tokens")
                     .alias("compression_ppm")))
-    # finalize materializes the rollup, after which the encoded table's
-    # final checkpoint has no live reader: finalize releases its
-    # _ckpt_ids (skipped under SPARK_GRAFT_NO_FINALIZE, where the
-    # returned plan is still lazy and reads that checkpoint)
+    # the lazy rollup reads the encoded table's final checkpoint:
+    # finalize parks the release of its _ckpt_ids until the next entry
+    # starts or release_deferred()
     return finalize(out, encoded)
 
 

@@ -71,15 +71,6 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # reliable-checkpoint mode (SPARK_GRAFT_RELIABLE_CHECKPOINT=1)
-        # writes one checkpoint DIR per finalized entry under the context
-        # checkpoint dir; without this flag those files live until context
-        # stop, so a long-lived service's checkpoint dir grows linearly
-        # with queries run. ContextCleaner file deletion is safe here in a
-        # way GC-paced BLOCK release was not (VERDICT r6 item 1): a missed
-        # cleanup leaks disk, never blocks — and a derived lazy plan keeps
-        # the JVM RDD reachable, so its files are never deleted early.
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # bucketed-table writes (io.write_bucketed) need a warehouse; keep
         # it out of the repo tree
         .config("spark.sql.warehouse.dir",

@@ -4,14 +4,16 @@ Spark frees a cache only on an explicit unpersist, and a
 localCheckpoint's blocks only when the ContextCleaner notices the
 JVM-side RDD became garbage — from Python that chain also needs py4j to
 deliver the wrapper's detach message, so it is GC-paced and can lose a
-detach, pinning one block for the session's life (VERDICT r6 item 1).
+detach, pinning one block for the session's life (seen about once per
+three full-suite runs before this ledger existed).
 
 One ledger takes the GC out of the path: ``plans.base.finalize`` parks
-a release action per checkpoint (its registry ids, never the frame) and
-per deferred cache, and ``release_parked()`` — called through
-``plans.base.release_deferred()`` by every catalog runner between
-entries — runs them all. Whatever an entry pins lives until the
-runner's next ``release_deferred()``.
+one release action per held frame (a cache, or a checkpointed helper's
+``_ckpt_ids``), and ``release_parked()`` — called through
+``plans.base.release_deferred()`` before each entry
+``registry.queries()`` hands out and by every catalog runner between
+entries — runs them all. Whatever an entry pins lives until the next
+entry starts or the runner's next ``release_deferred()``.
 """
 
 from __future__ import annotations
@@ -54,10 +56,10 @@ class CheckpointRotator:
     min-label rounds, the BPE merge rounds): round N's checkpoint reads
     only round N-1's, so once N materializes, N-1's blocks are dead and
     are unpersisted EXPLICITLY — no ContextCleaner, no GC pacing (the
-    py4j-detach race of VERDICT r6 item 1). One shared implementation so
-    the protocol's subtleties (snapshot-then-release ordering, first-round
-    empty set, final ``prev_ids`` hand-off to ``_ckpt_ids``) cannot drift
-    between loops (round-8 review finding).
+    py4j-detach race in the module docstring). One shared implementation
+    so the protocol's subtleties (snapshot-then-release ordering,
+    first-round empty set, final ``prev_ids`` hand-off to ``_ckpt_ids``)
+    cannot drift between the two loops.
 
     Same context-global-registry caveat as the loops themselves: diffs
     attribute every id created between snapshots to this loop, so run one
@@ -129,21 +131,12 @@ def park_frame(df: DataFrame) -> None:
     _LEDGER.append((df.sparkSession, lambda: release_frame(df)))
 
 
-def park_ids(spark, ids) -> None:
-    """Park a checkpoint's registry ids on the ledger — the ids, not the
-    frame, so a caller that never drains the ledger still gets
-    ContextCleaner release once the frame is garbage."""
-    if ids:
-        ids = frozenset(ids)
-        _LEDGER.append((spark, lambda: unpersist_rdd_ids(spark, ids)))
-
-
 def release_parked() -> int:
     """Run every ledger action; returns how many storage entries were
     freed. An action stays parked only when it fails on a LIVE session
-    (a transient py4j error must not leak its blocks for the session's
-    lifetime — round-8 review finding); on a stopped session the blocks
-    died with the JVM and the action is dropped."""
+    (dropping it on a transient py4j error would leak its blocks for the
+    session's lifetime); on a stopped session the blocks died with the
+    JVM and the action is dropped."""
     n = 0
     keep: list[tuple[object, Callable[[], int]]] = []
     for spark, release in _LEDGER:

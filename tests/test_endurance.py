@@ -4,8 +4,7 @@ SparkSession, the way the external driver and a long-lived service
 would, and assert the session ends with zero leaked storage:
 
 * the CacheManager must be empty — a q_* that caches an intermediate
-  and never hands it to finalize() pins it for the session's lifetime
-  (the ADVICE-r4 leak this exists to fix);
+  and never hands it to finalize() pins it for the session's lifetime;
 * no persisted RDD the catalog created may remain in the block registry
   after the last release_deferred() — whatever an entry pins lives
   until the runner's next release_deferred(), with no GC in the path.
@@ -21,7 +20,7 @@ import warnings
 def _persistent_rdds(spark) -> dict[int, str]:
     """id -> 'Name MapPartitionsRDD[42] at localCheckpoint at <callsite>'
     for every RDD in the context's persistent registry. The callsite is
-    what lets a failure name its creator (VERDICT r6 item 1)."""
+    what lets a failure name its creator."""
     out: dict[int, str] = {}
     it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
     while it.hasNext():
@@ -33,7 +32,7 @@ def _persistent_rdds(spark) -> dict[int, str]:
 def _run_catalog(spark, sf_dir) -> tuple[list[str], dict[int, str]]:
     """Returns the failures plus a per-id attribution map (id -> creating
     entry) so a surviving block names its creator, not just a py4j
-    '<unknown>:0' callsite (VERDICT r6 item 1)."""
+    '<unknown>:0' callsite."""
     from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.plans.registry import CATALOG
 
@@ -54,17 +53,15 @@ def _run_catalog(spark, sf_dir) -> tuple[list[str], dict[int, str]]:
     return failures, created_by
 
 
-def test_full_catalog_single_session_releases_all_storage(
-        spark, sf_dir, monkeypatch):
-    # finalization ON — this test exists to prove it works
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
+def test_full_catalog_single_session_releases_all_storage(spark, sf_dir):
     spark.catalog.clearCache()   # start clean regardless of test order
 
     # Blocks registered BEFORE the catalog runs belong to sibling tests
     # sharing the session fixture, not to the engine under test: the
     # assertion below owns only ids created DURING the catalog run, so
-    # suite order can't fail this test for another test's hygiene
-    # (VERDICT r6: in-suite red / in-isolation green was exactly that).
+    # suite order can't fail this test for another test's hygiene (a
+    # sibling's pinned block once made this red in-suite and green in
+    # isolation).
     # Siblings still get named — a non-empty baseline is warned loudly.
     baseline = _persistent_rdds(spark)
     if baseline:

@@ -1,19 +1,19 @@
-"""finalize()'s checkpoint modes (plans/base.py).
-
-Default: eager localCheckpoint (executor-local, non-replicated — the
-local-mode/driver-collect trade documented in finalize's docstring).
-SPARK_GRAFT_RELIABLE_CHECKPOINT=1 swaps in a reliable checkpoint under
-the context's checkpoint dir — the cluster-mode switch VERDICT r6 item 7
-asked to make actionable. Both modes must release the caches they were
-handed and return the same rows."""
+"""finalize()'s contract (plans/base.py): park the release of every held
+frame on the storage ledger and return the result unchanged, still lazy.
+finalize submits no job; a held frame stays filled while the result is
+consumed and is released by the next release_deferred() — or when the
+next entry ``registry.queries()`` hands out starts."""
 
 from __future__ import annotations
 
+import os
+import sys
 
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-
-from nfl_data_engineering_spark.plans.base import finalize  # noqa: E402
+from nfl_data_engineering_spark.plans.base import finalize, release_deferred
+from nfl_data_engineering_spark.storage import registry_rdd_ids
 
 
 def _frame(spark):
@@ -21,42 +21,59 @@ def _frame(spark):
             .select(F.col("id"), (F.col("id") % 7).alias("k")))
 
 
-def test_finalize_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def _filled_cache(spark):
     cache = _frame(spark).cache()
     cache.count()
+    return cache
+
+
+def test_finalize_is_lazy_and_parks_held_caches(spark, jobs_submitted):
+    """finalize submits 0 jobs and returns the result itself; the held
+    cache stays cached while the result is consumed and is unpersisted
+    by the next release_deferred()."""
+    release_deferred()
+    cache = _filled_cache(spark)
     result = cache.groupBy("k").agg(F.count("*").alias("n"))
-    out = finalize(result, cache)
-    # reliable checkpoint: materialized to the checkpoint dir, cache freed
-    assert sorted(r["n"] for r in out.collect()) == [142] + [143] * 6
-    assert any((tmp_path / "ckpt").rglob("*")), \
-        "reliable checkpoint wrote nothing under the checkpoint dir"
-    assert cache.storageLevel.useMemory is False, \
-        "finalize(reliable) failed to unpersist the cache it was handed"
+    out = []
+    assert jobs_submitted("finalize-lazy",
+                          lambda: out.append(finalize(result, cache))) == 0
+    assert out[0] is result
+    assert cache.storageLevel != StorageLevel.NONE, \
+        "finalize must not release a held frame the result still reads"
+    assert sorted(r["n"] for r in result.collect()) == [142] + [143] * 6
+    assert cache.storageLevel != StorageLevel.NONE, \
+        "a held cache must stay cached while the result is consumed"
+    assert release_deferred() >= 1
+    assert cache.storageLevel == StorageLevel.NONE, \
+        "release_deferred() must unpersist the parked cache"
 
 
-def test_finalize_checkpoint_release_is_deterministic(spark, monkeypatch):
+def _checkpointed(spark):
+    """A checkpointed helper frame with its registry ids on _ckpt_ids,
+    the shape of the connected-components labels and the BPE table."""
+    before = registry_rdd_ids(spark)
+    helper = _frame(spark).localCheckpoint(eager=True)
+    helper._ckpt_ids = registry_rdd_ids(spark) - before
+    assert helper._ckpt_ids, "eager localCheckpoint must register an RDD"
+    return helper
+
+
+def test_finalize_checkpoint_release_is_deterministic(spark):
     """Whatever an entry pins lives until the runner's next
     release_deferred(): a lazy child derived from a finalized frame stays
     readable after the parent wrapper is deleted, and the next
-    release_deferred() removes every created id from the persistent
-    registry IMMEDIATELY — no gc.collect(), no JVM System.gc(), no poll
-    (the ContextCleaner/py4j-detach chain this replaces lost a detach
-    about once per three full-suite runs, VERDICT r6 item 1)."""
-    from nfl_data_engineering_spark.plans.base import release_deferred
-    from nfl_data_engineering_spark.storage import registry_rdd_ids
-
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    release_deferred() removes the held checkpoint's ids from the
+    persistent registry IMMEDIATELY — no gc.collect(), no JVM
+    System.gc(), no poll (the ContextCleaner/py4j-detach chain the
+    ledger replaces lost a detach about once per three full-suite
+    runs)."""
     release_deferred()                       # drain other tests' leftovers
-    before = registry_rdd_ids(spark)
-    parent = finalize(_frame(spark).groupBy("k").agg(F.count("*").alias("n")))
-    created = registry_rdd_ids(spark) - before
-    assert created, "eager localCheckpoint must register a persistent RDD"
+    helper = _checkpointed(spark)
+    created = set(helper._ckpt_ids)
+    parent = finalize(helper.groupBy("k").agg(F.count("*").alias("n")),
+                      helper)
     child = parent.filter(F.col("n") > 142)  # lazy: reads the checkpoint
-    del parent                               # refcount death — no gc needed
+    del parent, helper                       # refcount death — no gc needed
     assert child.count() == 6, "derive-then-drop must stay readable"
     assert created <= registry_rdd_ids(spark)
     assert release_deferred() >= len(created)
@@ -66,95 +83,118 @@ def test_finalize_checkpoint_release_is_deterministic(spark, monkeypatch):
 
 def test_finalize_cc_releases_labels_checkpoint(spark, sf_dir, monkeypatch):
     """Under the DISTRIBUTED connected-components path (driver fast path
-    disabled), a CC entry must leave at most its own finalize checkpoint
-    in the registry — every min-label round checkpoint AND the final
-    labels checkpoint are released explicitly (finalize(out, labels)
-    releases its ``_ckpt_ids``), not left to the ContextCleaner."""
+    disabled), every min-label round checkpoint is released inside the
+    entry; the final labels checkpoint (``_ckpt_ids``) stays registered
+    while the result is consumed and leaves the registry at
+    release_deferred(), with nothing the entry created left behind."""
     from nfl_data_engineering_spark.operators import dedup as D
-    from nfl_data_engineering_spark.plans.base import release_deferred
+    from nfl_data_engineering_spark.plans import base
     from nfl_data_engineering_spark.plans.registry import _BY_NAME
-    from nfl_data_engineering_spark.storage import registry_rdd_ids
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
     monkeypatch.setattr(D, "_CC_DRIVER_EDGE_CAP", 0)
+    parked = []
+    park = base.park_frame
+    monkeypatch.setattr(base, "park_frame",
+                        lambda df: (parked.append(df), park(df)))
     release_deferred()
     spark.catalog.clearCache()
     before = registry_rdd_ids(spark)
     df = _BY_NAME["dedup_components"].spark(spark, sf_dir)
     assert df.count() > 0
+    labels = [set(h._ckpt_ids) for h in parked
+              if getattr(h, "_ckpt_ids", None) is not None]
+    assert len(labels) == 1 and labels[0], \
+        "finalize must be handed the labels checkpoint"
     mid = registry_rdd_ids(spark) - before
-    assert len(mid) <= 1, (
-        f"CC entry left {len(mid)} persistent RDDs beyond its own "
-        f"finalize checkpoint: {mid}")
+    assert labels[0] <= mid, \
+        "the labels checkpoint must stay registered until release_deferred()"
+    assert mid == labels[0], (
+        f"CC entry left persistent RDDs beyond its labels checkpoint: "
+        f"{mid - labels[0]}")
     del df
     release_deferred()
     assert not (registry_rdd_ids(spark) - before)
 
 
-def test_finalize_default_mode_unchanged(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
-    cache = _frame(spark).cache()
-    cache.count()
-    result = cache.groupBy("k").agg(F.count("*").alias("n"))
-    out = finalize(result, cache)
-    assert sorted(r["n"] for r in out.collect()) == [142] + [143] * 6
-    assert cache.storageLevel.useMemory is False
-
-
 def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
-    """A ledger item whose release fails on a LIVE session must stay
-    parked for the next release_deferred() (round-8 review: dropping it on
-    ANY exception leaked the blocks for the session's lifetime); on a
-    stopped session it is dropped — its blocks died with the JVM."""
+    """A parked frame whose release fails on a LIVE session must stay
+    parked for the next release_deferred() (dropping it on any exception
+    would leak its blocks for the session's lifetime); on a stopped
+    session it is dropped — its blocks died with the JVM."""
     import nfl_data_engineering_spark.storage as storage
-    from nfl_data_engineering_spark.plans.base import release_deferred
-    from nfl_data_engineering_spark.storage import registry_rdd_ids
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_FINALIZE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
     release_deferred()
+    orig = storage.release_frame
 
-    def finalized():
-        before = registry_rdd_ids(spark)
-        out = finalize(_frame(spark).groupBy("k").agg(F.count("*")))
-        created = registry_rdd_ids(spark) - before
-        assert created
-        return out, created
-
-    orig = storage.unpersist_rdd_ids
-
-    def hiccup(*a):
+    def hiccup(df):
         raise RuntimeError("transient py4j hiccup")
 
-    # live session: the failed item is retried by the next call (`out`
-    # keeps each checkpoint reachable, so only the ledger can free it)
-    out, created = finalized()
-    monkeypatch.setattr(storage, "unpersist_rdd_ids", hiccup)
+    def parked_cache():
+        cache = _filled_cache(spark)
+        finalize(cache.groupBy("k").agg(F.count("*")), cache)
+        return cache
+
+    # live session: the failed item is retried by the next call
+    cache = parked_cache()
+    monkeypatch.setattr(storage, "release_frame", hiccup)
     assert release_deferred() == 0
-    assert created <= registry_rdd_ids(spark), \
-        "blocks must survive a failed release attempt"
-    monkeypatch.setattr(storage, "unpersist_rdd_ids", orig)
-    assert release_deferred() >= len(created)   # retried
-    assert not (registry_rdd_ids(spark) & created)
+    assert cache.storageLevel != StorageLevel.NONE, \
+        "a cache must survive a failed release attempt"
+    monkeypatch.setattr(storage, "release_frame", orig)
+    assert release_deferred() >= 1   # retried
+    assert cache.storageLevel == StorageLevel.NONE
 
     # stopped session: the failed item is dropped, not retried
-    out, created = finalized()
-    monkeypatch.setattr(storage, "unpersist_rdd_ids", hiccup)
+    cache = parked_cache()
+    monkeypatch.setattr(storage, "release_frame", hiccup)
     monkeypatch.setattr(storage, "_session_stopped", lambda s: True)
     assert release_deferred() == 0
-    monkeypatch.setattr(storage, "unpersist_rdd_ids", orig)
+    monkeypatch.setattr(storage, "release_frame", orig)
     assert release_deferred() == 0, "a stopped session's item must drop"
-    assert created <= registry_rdd_ids(spark)
-    assert orig(spark, created) == len(created)   # clean up by hand
+    assert cache.storageLevel != StorageLevel.NONE
+    cache.unpersist()                # clean up by hand
+
+
+def test_queries_loop_drains_each_entry(spark, sf_dir, monkeypatch):
+    """A runner's loop over ``__spark_entry__.queries()`` that consumes
+    each entry and never calls release_deferred(). Starting an entry
+    must release what the previous one pinned — a pair-table shingle cache (containment_join), the
+    connected-components labels checkpoint (dedup_components, on its
+    distributed path) — so the session ends with only the last entry's
+    storage."""
+    from nfl_data_engineering_spark.operators import dedup as D
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import __spark_entry__ as se
+
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGE_CAP", 0)
+
+    release_deferred()
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    base_ids = registry_rdd_ids(spark)
+    qs = se.queries()
+    earlier: set[int] = set()
+    for name in ("heavy_hitters_cms", "containment_join",
+                 "dedup_components", "best_snapshot"):
+        earlier |= registry_rdd_ids(spark) - base_ids
+        assert qs[name](spark, sf_dir).count() >= 0
+    assert not (earlier & registry_rdd_ids(spark)), \
+        "an earlier entry's persisted RDDs outlived the next entry's start"
+    assert cm.isEmpty(), \
+        "an earlier entry's cache outlived the next entry's start"
+    release_deferred()
+    assert not (registry_rdd_ids(spark) - base_ids)
 
 
 def test_cached_plan_aqe_scope_sets_restores_and_rightsizes(spark):
     """scoped_cached_plan_aqe (plans/base.py): inside the scope AQE may
     coalesce a cache-filling plan (a tiny post-shuffle cache materializes
     in far fewer partitions than spark.sql.shuffle.partitions — the fixed
-    per-partition Arrow/task cost the round-12 unigram/containment
-    entries pay without it); the conf is restored on exit and on error."""
+    per-partition Arrow/task cost the unigram/containment entries pay
+    without it); the conf is restored on exit and on error."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     from nfl_data_engineering_spark.plans.base import scoped_cached_plan_aqe
 

@@ -19,17 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tools.audit_plans import audit  # noqa: E402
 
 
-def test_bench_set_plans_no_cartesian(spark, sf_dir, monkeypatch):
-    # audit the real lazy plan, not the post-finalize checkpoint scan
-    monkeypatch.setenv("SPARK_GRAFT_NO_FINALIZE", "1")
+def test_bench_set_plans_no_cartesian(spark, sf_dir):
     from nfl_data_engineering_spark.plans.registry import bench_queries
 
     qs = bench_queries()
     assert len(qs) >= 40, "bench set unexpectedly shrank"
     rows, failed = audit(spark, sf_dir, qs)
-    # NO_FINALIZE leaves each entry's caches pinned; this is a one-off
-    # audit pass, release them so later tests aren't billed for them
-    spark.catalog.clearCache()
     assert not failed, (
         f"un-allowlisted cartesian/nested-loop plans: {failed} — either "
         f"fix the plan or (for a bounded-broadcast baseline) add an "
@@ -40,3 +35,7 @@ def test_bench_set_plans_no_cartesian(spark, sf_dir, monkeypatch):
     errored = {r["name"]: r["error"] for r in rows if "error" in r}
     assert not errored, f"bench queries failed to execute: {errored}"
     assert len(audited) == len(qs)
+    # entries return lazy plans, so the audit reads the real joins rather
+    # than a scan of a materialized result
+    joins = {r["name"]: r["joins"] for r in rows if "error" not in r}
+    assert joins["similarity_join_api"] != "-"

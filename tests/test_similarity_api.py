@@ -229,7 +229,7 @@ def test_staged_equals_monolithic_union(spark, sf_dir):
     """similarity_join_staged (VERDICT r8 item 5) must produce exactly
     the monolithic q_similarity_join_api union — same four families,
     same tagged rows — while materializing family by family. Its
-    checkpointed parts live until the next release_deferred(), which
+    cached parts live until the next release_deferred(), which
     therefore runs only after the union is collected."""
     from nfl_data_engineering_spark.plans.registry import _BY_NAME
     from nfl_data_engineering_spark.plans.similarity_api import (
@@ -299,8 +299,53 @@ def test_staged_shared_shingles_passthrough(spark, sf_dir):
     assert got == want and got
 
 
+def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
+    """When similarity_join_staged returns, every family's own caches are
+    already unpersisted (each family ran to completion behind its
+    barrier) and only the parked parts stay cached, until the next
+    release_deferred()."""
+    from pyspark.storagelevel import StorageLevel
+
+    from nfl_data_engineering_spark.plans import similarity_api as api
+    from nfl_data_engineering_spark.storage import registry_rdd_ids
+
+    family_caches, parts = [], []
+    join, park = api.similarity_join, api.park_frame
+
+    def spy_join(*a, **kw):
+        family_caches.append(kw["caches"])
+        return join(*a, **kw)
+
+    monkeypatch.setattr(api, "similarity_join", spy_join)
+    monkeypatch.setattr(api, "park_frame",
+                        lambda df: (parts.append(df), park(df)))
+    release_deferred()
+    spark.catalog.clearCache()
+    before = registry_rdd_ids(spark)
+    docs = load(spark, sf_dir, "documents")
+    staged = api.similarity_join_staged([
+        {"family": "jaccard_minhash", "df": docs, "id_col": "doc_id",
+         "col": "text", "threshold": JACCARD_THRESHOLD},
+        {"family": "hamming_simhash", "df": docs, "id_col": "doc_id",
+         "col": "text", "threshold": SIMHASH_MAX_HAMMING,
+         "metric": "hamming"},
+    ])
+    assert len(family_caches) == 2 and all(family_caches)
+    assert all(c.storageLevel == StorageLevel.NONE
+               for caches in family_caches for c in caches), \
+        "a family's caches must be released at its barrier"
+    assert len(parts) == 2
+    assert all(p.storageLevel != StorageLevel.NONE for p in parts)
+    assert len(registry_rdd_ids(spark) - before) == len(parts), \
+        "only the filled parts may stay persisted"
+    assert staged.count() > 0
+    release_deferred()
+    assert all(p.storageLevel == StorageLevel.NONE for p in parts)
+    assert not (registry_rdd_ids(spark) - before)
+
+
 def test_staged_single_spec_no_self_cycle(spark, sf_dir):
-    """A single-spec staged call returns that family's finalized part
+    """A single-spec staged call returns that family's cached part
     with the same pairs as a direct similarity_join call."""
     from nfl_data_engineering_spark.plans.similarity_api import (
         similarity_join, similarity_join_staged)

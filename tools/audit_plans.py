@@ -79,9 +79,11 @@ def audit(spark, sf_dir: str, qs) -> tuple[list[dict], list[str]]:
     """Execute each query and summarize its FINAL AQE plan. Returns
     (rows, failed) where rows carry the markdown-table fields and failed
     lists queries planning an un-allowlisted cartesian / nested-loop
-    join. Caller must set SPARK_GRAFT_NO_FINALIZE=1 BEFORE building the
-    queries so the audit sees the real join/exchange structure rather
-    than a post-finalize checkpoint scan (plans/base.py:finalize)."""
+    join. Entries return lazy plans (plans/base.py:finalize), so the
+    audit sees the real join/exchange structure; what each entry pins is
+    released once its plan is read."""
+    from nfl_data_engineering_spark.plans.base import release_deferred
+
     rows, failed = [], []
     for q in qs:
         try:
@@ -96,6 +98,8 @@ def audit(spark, sf_dir: str, qs) -> tuple[list[dict], list[str]]:
         except Exception as e:  # streaming entries have no batch plan
             rows.append({"name": q.name, "error": type(e).__name__})
             continue
+        finally:
+            release_deferred()
         s = summarize(plan)
         s["name"] = q.name
         s["flagged"] = s["bad"] and q.name not in ALLOW_NESTED_LOOP
@@ -106,9 +110,6 @@ def audit(spark, sf_dir: str, qs) -> tuple[list[dict], list[str]]:
 
 
 def main() -> None:
-    # audit the REAL plan, not the post-finalize checkpoint scan
-    # (plans/base.py:finalize) — caches leak in this one-off process, fine
-    os.environ["SPARK_GRAFT_NO_FINALIZE"] = "1"
     from nfl_data_engineering_spark.plans.registry import CATALOG
     from nfl_data_engineering_spark.session import get_spark
 

@@ -5,9 +5,8 @@ the before/after plan evidence the optimization rounds commit under
 Usage: python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
        (default sf_dir /root/testdata/sf0.1; default query set = bench set)
 
-Writes ``<out_dir>/<query>_<suffix>.txt``. Runs with
-SPARK_GRAFT_NO_FINALIZE=1 so the dump shows the real join/exchange
-structure rather than a post-finalize checkpoint scan. The dump is the
+Writes ``<out_dir>/<query>_<suffix>.txt``. Entries return lazy plans,
+so the dump shows the real join/exchange structure. The dump is the
 INITIAL plan (AdaptiveSparkPlan isFinalPlan=false) — the plan shape an
 optimizer change is judged by; AQE runtime rewrites are captured by
 tools/audit_plans.py, which executes the query.
@@ -26,7 +25,7 @@ except ImportError:  # not pip-installed: tools/ is sys.path[0], not the repo
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_NO_FINALIZE"] = "1"
+    from nfl_data_engineering_spark.plans.base import release_deferred
     from nfl_data_engineering_spark.plans.registry import CATALOG
     from nfl_data_engineering_spark.session import get_spark
 
@@ -51,6 +50,7 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted")
         except Exception as e:  # streaming entries have no batch plan
             plan = f"(no batch plan: {type(e).__name__}: {e})\n"
+        release_deferred()
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path}")

@@ -46,8 +46,8 @@ def connected_components(edges: DataFrame, src: str = "a",
 
     CONCURRENCY CONTRACT: the distributed loop releases superseded round
     checkpoints by diffing the context's persistent-RDD registry around
-    its own materializations (the deterministic-release design of
-    VERDICT r6 item 1). The registry is context-global, so a SECOND
+    its own materializations (storage.CheckpointRotator, so no release
+    waits on the GC). The registry is context-global, so a SECOND
     driver thread persisting frames while this loop runs would have its
     ids mis-attributed to a round and unpersisted. Run one
     connected_components at a time per SparkSession — every in-repo
@@ -80,7 +80,7 @@ def connected_components(edges: DataFrame, src: str = "a",
     # a second job collected it; the common small-graph path paid cache
     # registration + two jobs + unpersist for data it read once). The
     # read is bounded to cap+1 rows of two ids — the same driver-read
-    # class as the centroid/cut tables audited in VERDICT r5. limit's
+    # class as the centroid/cut tables of the vector entries. limit's
     # CollectLimit scans all partitions in its FIRST attempt because
     # session.py raises spark.sql.limit.initialNumPartitions (these
     # capped guards want one pass, not the incremental scale-up, and the
@@ -113,8 +113,7 @@ def connected_components(edges: DataFrame, src: str = "a",
         # mixed src/dst types (int src, bigint dst) widen through the
         # explode(array(struct,struct)) coercion, so collected values can
         # exceed the src column's type — and the distributed path returns
-        # the widened type, which the fast path must match (round-8
-        # review finding).
+        # the widened type, which the fast path must match.
         schema = bi_plan.select(F.col("a").alias("n"),
                                 F.col("a").alias("label")).schema
         # pandas+Arrow local table, not the 32-slice pickle parallelize —
@@ -134,78 +133,59 @@ def connected_components(edges: DataFrame, src: str = "a",
     # than left to the ContextCleaner's GC pace (a lost py4j detach
     # pins a block for the session's life). The FINAL labels checkpoint
     # stays persisted — the caller's derived plans read it — with its ids
-    # exposed on labels._ckpt_ids; plans.base.finalize(out, labels) parks
-    # their release until the next entry starts or release_deferred().
-    from ..storage import CheckpointRotator
+    # exposed on labels._ckpt_ids for the caller to park
+    # (storage.park_frame) until the next entry starts or
+    # release_deferred().
+    from ..storage import CheckpointRotator, pin, stage
     spark = edges.sparkSession
+    # exact convergence scalar at any scale: see docstring
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     # Distributed path only: cache the edge frame (the loop reads it every
     # round) and right-size the iteration to the measured edge count —
     # min-label rounds over 32+ near-empty partitions pay pure scheduling
     # overhead per round (measured: 4.6 s of CC on a 247-edge graph before
     # the right-sizing, ~1 s after). parts scales back up with the graph,
-    # so a 100 TB pair graph still spreads. bi_cached keeps its own name:
-    # unpersist must target the EXACT plan that was cached — after
-    # `bi = bi_cached.coalesce(parts)` the name points at a coalesce
-    # wrapping the cached Deduplicate, and unpersisting THAT is a
-    # CacheManager miss, leaking the entry for the session's lifetime
-    # (tests/test_endurance.py, round 6). The cache-filling count sits
-    # BEFORE the loop's failure handler, so it needs its own
-    # release-on-raise (ADVICE r8).
-    bi_cached = bi_plan.cache()
-    try:
-        n_edges = bi_cached.count()
-    except BaseException:
+    # so a 100 TB pair graph still spreads. The stage releases the edge
+    # cache when the loop ends, also when the fill or the loop raises;
+    # pin parks the exact cached plan, so rebinding ``bi`` to the
+    # coalesce below cannot turn the release into a CacheManager miss.
+    with stage():
+        bi = pin(bi_plan)
+        n_edges = bi.count()
+        rot = CheckpointRotator(spark)
         try:
-            bi_cached.unpersist()
-        except Exception:
-            pass
-        raise
-    # exact convergence scalar at any scale: see docstring
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    rot = CheckpointRotator(spark)
-    try:
-        # max(cap, 1): tests force this path by monkeypatching the cap
-        # to 0, and the coalesce right-sizing must degrade to per-edge
-        # partitions, not divide by zero. Inside the guarded region: the
-        # .rdd plan conversion can itself fail (job cancellation, py4j),
-        # and outside the try it would leak the edge cache (round-9
-        # review finding).
-        parts = max(1, min(bi_cached.rdd.getNumPartitions(),
-                           n_edges // max(_CC_DRIVER_EDGE_CAP, 1)))
-        bi = bi_cached.coalesce(parts)
-        labels = (bi.select(F.col("a").alias("n")).distinct()
-                  .withColumn("label", F.col("n")).coalesce(parts)
-                  .localCheckpoint(eager=False))
-        old_sum = labels.agg(label_sum).collect()[0][0]
-        rot.rotate()
-        while True:
-            neigh = (bi.join(labels.withColumnRenamed("n", "a")
-                             .withColumnRenamed("label", "nlabel"), "a")
-                     .select(F.col("b").alias("n"),
-                             F.col("nlabel").alias("label")))
-            labels = (labels.unionByName(neigh)
-                      .groupBy("n").agg(F.min("label").alias("label"))
-                      .coalesce(parts)
+            # max(cap, 1): tests force this path by monkeypatching the
+            # cap to 0, and the coalesce right-sizing must degrade to
+            # per-edge partitions, not divide by zero.
+            parts = max(1, min(bi.rdd.getNumPartitions(),
+                               n_edges // max(_CC_DRIVER_EDGE_CAP, 1)))
+            bi = bi.coalesce(parts)
+            labels = (bi.select(F.col("a").alias("n")).distinct()
+                      .withColumn("label", F.col("n")).coalesce(parts)
                       .localCheckpoint(eager=False))
-            new_sum = labels.agg(label_sum).collect()[0][0]
-            rot.rotate()   # round N-1: dead once N exists
-            if new_sum == old_sum:
-                break
-            old_sum = new_sum
-    except BaseException:
-        # executor loss / OOM / cancellation mid-loop: without this, the
-        # bidirectional-edge cache and up to two live round checkpoints
-        # stay registered for the session's lifetime — the exact leak
-        # class the explicit-release machinery exists to prevent (round-8
-        # review finding). Release everything THIS call registered and
-        # let the failure propagate.
-        try:
-            bi_cached.unpersist()
-        except Exception:
-            pass
-        rot.release_all()
-        raise
-    bi_cached.unpersist()
+            old_sum = labels.agg(label_sum).collect()[0][0]
+            rot.rotate()
+            while True:
+                neigh = (bi.join(labels.withColumnRenamed("n", "a")
+                                 .withColumnRenamed("label", "nlabel"), "a")
+                         .select(F.col("b").alias("n"),
+                                 F.col("nlabel").alias("label")))
+                labels = (labels.unionByName(neigh)
+                          .groupBy("n").agg(F.min("label").alias("label"))
+                          .coalesce(parts)
+                          .localCheckpoint(eager=False))
+                new_sum = labels.agg(label_sum).collect()[0][0]
+                rot.rotate()   # round N-1: dead once N exists
+                if new_sum == old_sum:
+                    break
+                old_sum = new_sum
+        except BaseException:
+            # executor loss / OOM / cancellation mid-loop: without this,
+            # up to two live round checkpoints stay registered for the
+            # session's lifetime. Release every round THIS call
+            # registered and let the failure propagate.
+            rot.release_all()
+            raise
     labels._ckpt_ids = rot.prev_ids
     return labels
 

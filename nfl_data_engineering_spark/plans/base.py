@@ -41,7 +41,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..storage import park_frame, release_parked
+from ..storage import release_parked
 
 
 @dataclass(frozen=True)
@@ -190,30 +190,14 @@ def scoped_cached_plan_aqe(fn):
     return wrap
 
 
-def finalize(result: DataFrame, *held: DataFrame) -> DataFrame:
-    """Park the release of every ``held`` frame on the storage ledger
-    (storage.park_frame) and return ``result`` unchanged, still lazy. A
-    held frame is a cache the result reads, or a checkpointed helper
-    whose ``_ckpt_ids`` it reads (the connected-components labels, the
-    BPE token table).
-
-    Lifetime: whatever an entry pins lives until the next entry starts
-    (``registry.queries()`` drains the ledger before each entry) or the
-    runner's next release_deferred(), so the held frames stay cached
-    while the result is consumed. Without the ledger a session running
-    the full query catalog would keep every entry's caches for its whole
-    life. finalize itself submits no job: the entry's work runs in the
-    caller's action, and a plan-only consumer (explain dumps, schema
-    checks, tools/audit_plans.py) sees the real lazy plan."""
-    for h in held:
-        park_frame(h)
-    return result
-
-
 def release_deferred() -> int:
-    """Release everything catalog entries parked since the last call
-    (storage.release_parked); returns how many storage entries were
-    freed. Idempotent; catalog runners call it between entries."""
+    """Release everything catalog entries pinned or parked since the
+    last call (storage.release_parked); returns how many storage
+    entries were freed. Idempotent; catalog runners call it between
+    entries, and ``registry.queries()`` calls it before each entry, so
+    whatever an entry pins stays cached while its result is consumed.
+    Without it a session running the full query catalog would keep
+    every entry's caches for its whole life."""
     return release_parked()
 
 

@@ -25,7 +25,8 @@ from ..io import upsert_partitioned
 from ..sources.html_table import scrape_tables_long
 from ..sources.rest_json import flatten_odds, odds_from_json_strings
 from ..localdf import local_df
-from .base import QueryDef, finalize, load, scratch_dir
+from ..storage import pin
+from .base import QueryDef, load, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -43,18 +44,17 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("upsert", sf_dir)
     # the source is scanned by both batches' writes plus the second
     # call's touched-partition probe — cache it for the entry's duration
-    # (in-query cache, released via finalize; round-13: 3 rescans saved)
-    ev = (load(spark, sf_dir, "events").withColumnRenamed("ts", "timestamp")
-          .cache())
+    # (in-query cache, pinned until the next entry starts: 3 rescans saved)
+    ev = pin(load(spark, sf_dir, "events")
+             .withColumnRenamed("ts", "timestamp"))
     first = ev.filter(F.month("timestamp") <= 6)
     upsert_partitioned(spark, first, path, key_cols=None, ts_col="timestamp")
     upsert_partitioned(spark, ev, path, key_cols=None, ts_col="timestamp")
     back = spark.read.parquet(path)
-    return finalize(
-        back.groupBy("year", "month")
-        .agg(F.count("*").alias("n"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-              .alias("sum_value")), ev)
+    return (back.groupBy("year", "month")
+            .agg(F.count("*").alias("n"),
+                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
+                  .alias("sum_value")))
 
 
 ORACLE_UPSERT_ROUNDTRIP = """

@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h60_sql
 from ..io import write_bucketed
+from ..storage import pin
 from .base import (QueryDef, cents, dec as _dec, drain_memory, event_micros,
-                   events_stream, finalize, load, scratch_dir)
+                   events_stream, load, scratch_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -927,9 +928,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reduce ran in ONE task (measured 0.72 s serial at sf0.1); with a
     # repartition the agg keeps the shuffle's full parallelism and only
     # the ~3.6k surviving edges cross the extra (trivial) exchange.
-    edges = (op.groupBy("u", "v").agg(F.count("*").alias("supp"))
-             .filter(F.col("supp") >= _TRI_MIN_SUPPORT)
-             .select("u", "v")).repartition(1).persist()
+    edges = pin(op.groupBy("u", "v").agg(F.count("*").alias("supp"))
+                .filter(F.col("supp") >= _TRI_MIN_SUPPORT)
+                .select("u", "v").repartition(1))
     n_edges = edges.count()   # cache fill doubles as the edge census
     # deg and oriented are each consumed by SEVERAL branches below (deg
     # three times, oriented three times), and oriented's lineage contains
@@ -942,10 +943,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the 1-partition edge cache (guide §7.3 / §3.3 — very wide
     # reuse makes planning itself the bottleneck; materialize to
     # truncate the plan).
-    deg = (edges.select(F.col("u").alias("node"))
-           .unionAll(edges.select(F.col("v").alias("node")))
-           .groupBy("node").agg(F.count("*").alias("d"))) \
-        .coalesce(1).persist()
+    deg = pin(edges.select(F.col("u").alias("node"))
+              .unionAll(edges.select(F.col("v").alias("node")))
+              .groupBy("node").agg(F.count("*").alias("d"))
+              .coalesce(1))
     e = (edges
          .join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")),
                "u")
@@ -953,11 +954,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                "v"))
     lo_first = ((F.col("du") < F.col("dv"))
                 | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))))
-    oriented = e.select(
+    oriented = pin(e.select(
         F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("ddst")) \
-        .persist()
+        F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("ddst")))
     oriented.count()   # fill before the three-branch fan-out
     w1 = oriented.select("src", F.col("dst").alias("x"),
                          F.col("ddst").alias("dx"))
@@ -970,16 +970,12 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.col("x").alias("src"), F.col("y").alias("dst")))
     tri = wedges.join(oriented.select("src", "dst"),
                       ["src", "dst"], "left_semi")
-    # finalize parks the caches' release — without it the persisted
-    # graph outlives the entry for the whole session. n_edges is the
-    # cache-fill count the entry already ran — same number, one fewer
-    # 1-row aggregate branch.
-    return finalize(
-        deg.agg(F.count("*").alias("n_nodes"))
-        .withColumn("n_edges", F.lit(n_edges).cast("bigint"))
-        .crossJoin(tri.agg(F.count("*").alias("n_triangles")))
-        .select("n_nodes", "n_edges", "n_triangles"),
-        edges, deg, oriented)
+    # n_edges is the cache-fill count the entry already ran — same
+    # number, one fewer 1-row aggregate branch.
+    return (deg.agg(F.count("*").alias("n_nodes"))
+            .withColumn("n_edges", F.lit(n_edges).cast("bigint"))
+            .crossJoin(tri.agg(F.count("*").alias("n_triangles")))
+            .select("n_nodes", "n_edges", "n_triangles"))
 
 
 ORACLE_TRIANGLE_COUNT = f"""

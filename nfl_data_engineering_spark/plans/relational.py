@@ -18,7 +18,8 @@ from ..operators.timeseries import zero_filled_counts
 from ..operators.windows import exp_weighted_mean, topk_per_group, trailing_mean
 from ..functions.hashing import h60_sql
 from ..localdf import local_df
-from .base import QueryDef, cents, dec as _dec, event_micros, finalize, load
+from ..storage import pin
+from .base import QueryDef, cents, dec as _dec, event_micros, load
 
 
 # ---------------------------------------------------------------------------
@@ -3688,8 +3689,8 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache both hash sets: each feeds its own sketch, the union sketch,
     # the exact-audit counts and the intersection join (4+ consumers) —
     # uncached, every consumer would rescan events and re-shuffle the
-    # distinct; released through finalize once the report materializes
-    hv, hc = hashes("view").cache(), hashes("click").cache()
+    # distinct; pinned, so released when the next entry starts
+    hv, hc = pin(hashes("view")), pin(hashes("click"))
     hv.count(), hc.count()   # eager: consumers race a lazy cache
     est_expr = F.when(
         F.col("got") < KMV_K, F.col("got").cast("bigint")).otherwise(
@@ -3724,12 +3725,11 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                            .agg(F.count("*").alias("exact"))
                            .select(F.lit("intersection").alias("set_name"),
                                    "exact")))
-    return finalize(
-        ests.join(exacts, "set_name")
-        .select("set_name", "est", F.col("exact").cast("bigint")
-                .alias("exact_distinct"),
-                F.expr("(est - exact) * 1000000 div exact")
-                 .alias("err_ppm")), hv, hc)
+    return (ests.join(exacts, "set_name")
+            .select("set_name", "est", F.col("exact").cast("bigint")
+                    .alias("exact_distinct"),
+                    F.expr("(est - exact) * 1000000 div exact")
+                     .alias("err_ppm")))
 
 
 def _oracle_kmv_set_ops() -> str:

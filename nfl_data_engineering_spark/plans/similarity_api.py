@@ -46,9 +46,8 @@ from pyspark.sql import types as T
 from ..functions.hashing import (RECALL_FLOOR, minhash_band_config,
                                  oph_auto_cutover)
 from ..functions.text import shingle_hash_arrays
-from ..storage import park_frame, release_frame
-from .base import (QueryDef, finalize, load, recall_ppm,
-                   scoped_cached_plan_aqe)
+from ..storage import park_frame, pin, stage
+from .base import QueryDef, load, recall_ppm, scoped_cached_plan_aqe
 from .textops import (CONTAINMENT_PCT, JACCARD_THRESHOLD, NUM_BANDS,
                       NUM_HASHES, ORACLE_MINHASH_LSH,
                       ORACLE_PREFIX_FILTER_JOIN, ORACLE_SIMHASH,
@@ -138,7 +137,6 @@ def _resolve_auto_sketch(sharr: DataFrame) -> str:
 
 def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                     metric: str = "auto", exact: bool = False,
-                    caches: list[DataFrame] | None = None,
                     shingles: DataFrame | None = None,
                     sketch: str = "auto") -> DataFrame:
     """Self-similarity join: all (id1, id2, score) pairs with id1 < id2
@@ -192,9 +190,10 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
       by the pigeonhole theorem at any bound. Every path is
       candidates-by-equi-join + exact verification: linear scans at
       100 TB, never all-pairs.
-    * ``caches`` collects the frames each kernel pins (shingle arrays,
-      band sketches, norm tables) for the caller to release — route them
-      through plans.base.finalize / release_deferred, NOT a leak.
+    * The frames each kernel caches (shingle arrays, band sketches,
+      norm tables) are pinned (storage.pin): they live until the
+      caller's next plans.base.release_deferred(), or the end of an
+      enclosing storage.stage().
     * ``shingles``: a precomputed cached frame from
       ``shingle_hash_arrays(df, id_col, col)`` (aliased doc_id/sh_arr,
       one hash array per doc; kernels that need per-shingle rows derive
@@ -209,7 +208,7 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
     peak shuffle disk is the SUM of the families. A disk-constrained
     deployment should stage family by family, bounding peak spill at
     max(family): that is :func:`similarity_join_staged` (each result
-    filled into a cache and its own caches released before the next
+    filled into a cache and its own pins released before the next
     dispatch). Measured at the 100x replica: the monolithic
     4-family union exceeded a 78 GB local spill budget that per-family
     staging stayed well inside (SCALE.md round-8 replica sweep).
@@ -226,8 +225,6 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
             raise ValueError(
                 f"no similarity metric for column type {dt.simpleString()}; "
                 f"pass metric= explicitly")
-    if caches is None:
-        caches = []
     if sketch not in ("auto", "kdraw", "oph"):
         raise ValueError(f"unknown sketch {sketch!r} "
                          "(expected 'auto', 'kdraw' or 'oph')")
@@ -244,11 +241,10 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
             raise ValueError(f"metric={metric!r} needs a string column")
         sharr = shingles
         if sharr is None:
-            sharr = shingle_hash_arrays(
+            sharr = pin(shingle_hash_arrays(
                 df.select(F.col(id_col).alias("doc_id"),
                           F.col(col).alias("text")),
-                "doc_id", "text", n=3).cache()
-            caches.append(sharr)
+                "doc_id", "text", n=3))
             sharr.count()
         if metric == "containment":
             # ASYMMETRIC family: ordered (id1=sub,
@@ -280,10 +276,10 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                         / F.col("sz_sub").cast("double"), 6)
                  .alias("score"))
         if exact:
-            return _text_prefix_join(sharr, threshold, caches)
+            return _text_prefix_join(sharr, threshold)
         if sketch == "auto":
             sketch = _resolve_auto_sketch(sharr)
-        return _text_banded_join(sharr, threshold, caches, sketch)
+        return _text_banded_join(sharr, threshold, sketch)
     if exact:
         # the simhash chunk join is already exact AT THE BOUND and the
         # SRP path has no lossless variant — silently ignoring the flag
@@ -302,11 +298,11 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                 f"got {threshold!r}")
         std = df.select(F.col(id_col).alias("doc_id"),
                         F.col(col).alias("text"))
-        return _text_simhash_join(std, t, caches)
+        return _text_simhash_join(std, t)
     if metric == "cosine":
         std = df.select(F.col(id_col).alias("vec_id"),
                         F.col(col).alias("embedding"))
-        return _vector_srp_join(std, threshold, caches)
+        return _vector_srp_join(std, threshold)
     raise ValueError(f"unknown metric {metric!r} (expected 'jaccard', "
                      "'containment', 'hamming' or 'cosine')")
 
@@ -314,12 +310,12 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
 def similarity_join_staged(specs: list[dict]) -> DataFrame:
     """Family-SEQUENTIAL multi-family similarity join (the code form of
     the peak-spill remedy similarity_join's docstring prescribes in
-    prose): dispatch each family through :func:`similarity_join`, fill
-    its tagged result into a cache, release the family's own caches
-    before the next family dispatches, then return the union of the
-    cached parts. The parts are parked on the storage ledger, so they
-    live until the next entry starts or the runner's next
-    release_deferred().
+    prose): dispatch each family through :func:`similarity_join` and
+    fill its tagged result into a cache inside one ``storage.stage()``,
+    so the family's own pins are released before the next family
+    dispatches, then return the union of the cached parts. The parts
+    are parked on the storage ledger, so they live until the next entry
+    starts or the runner's next release_deferred().
 
     Because each family's shuffles complete before the next family
     starts, peak shuffle-spill disk is **max(family)** instead of the
@@ -338,37 +334,35 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
     q_similarity_join_api's union: (family, id1, id2,
     score double rounded 6).
 
-    ``shingles`` (VERDICT r9 item 6): a caller running several TEXT
-    families over ONE corpus can pass the same precomputed cached frame
-    from ``shingle_hash_arrays`` on each such spec, trading the
-    staged form's one re-shingling linear scan per family (the +27%
-    wall premium measured at the 10x replica) for a pinned cache that
-    lives ACROSS the family barriers — i.e. peak storage is no longer
-    strictly max(family): the shingle frame's blocks add to every
-    family's peak. The caller owns that frame's lifetime (it is NOT on
-    any family's cache list and survives every staging barrier); release
-    it after the union is consumed. Measured A/B at the 10x replica in
-    SCALE.md round 10."""
+    ``shingles``: a caller running several TEXT families over ONE
+    corpus can pass the same precomputed cached frame from
+    ``shingle_hash_arrays`` on each such spec, trading the staged
+    form's one re-shingling linear scan per family (the +27% wall
+    premium measured at the 10x replica) for a pinned cache that lives
+    ACROSS the family barriers — i.e. peak storage is no longer strictly
+    max(family): the shingle frame's blocks add to every family's peak.
+    The caller owns that frame's lifetime: it was cached outside every
+    family's stage, so no barrier releases it; release it after the
+    union is consumed. Measured A/B at the 10x replica in SCALE.md
+    round 10."""
     if not specs:
         raise ValueError("similarity_join_staged: empty spec list")
     parts: list[DataFrame] = []
     for spec in specs:
-        caches: list[DataFrame] = []
-        res = similarity_join(
-            spec["df"], spec["id_col"], spec["col"], spec["threshold"],
-            metric=spec.get("metric", "auto"),
-            exact=bool(spec.get("exact", False)), caches=caches,
-            shingles=spec.get("shingles"),
-            sketch=spec.get("sketch", "auto"))
-        tagged = res.select(
-            F.lit(spec["family"]).alias("family"), "id1", "id2",
-            F.round(F.col("score").cast("double"), 6).alias("score"))
         # the staging barrier: this family's shuffles run to completion
-        # and its caches release before the next dispatch is even built
-        part = tagged.cache()
-        part.count()
-        for c in caches:
-            release_frame(c)
+        # and its pins release before the next dispatch is even built
+        with stage():
+            res = similarity_join(
+                spec["df"], spec["id_col"], spec["col"], spec["threshold"],
+                metric=spec.get("metric", "auto"),
+                exact=bool(spec.get("exact", False)),
+                shingles=spec.get("shingles"),
+                sketch=spec.get("sketch", "auto"))
+            tagged = res.select(
+                F.lit(spec["family"]).alias("family"), "id1", "id2",
+                F.round(F.col("score").cast("double"), 6).alias("score"))
+            part = tagged.cache()
+            part.count()
         park_frame(part)
         parts.append(part)
     out = parts[0]
@@ -386,14 +380,12 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatcher reaches each real algorithm end-to-end."""
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    caches: list[DataFrame] = []
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    caches.append(sharr)
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: minhash + prefix dispatches race a lazy cache
     # sketch pinned: this entry's oracle replays k-draw banding, and an
     # oracle must never depend on a data-dependent route (the 'auto'
     # default would route here on corpus shape; its attestation lives in
-    # q_sketch_route_report) — round-10 review finding
+    # q_sketch_route_report)
     #
     # Round 12 (guide §2.6 — overlap independent jobs): each family
     # dispatch eagerly fills its own sketch caches (bands / prefix table
@@ -404,24 +396,23 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scheduler back-fill each job's straggler tail with the next
     # family's tasks (measured at sf0.1: 5.2-5.5 s vs 7.7-9.6 s warm,
     # identical union). Same result set by construction: the dispatches
-    # share only the immutable cached sharr, and caches.append is
-    # GIL-atomic. The STAGED entry (q_similarity_join_staged) keeps its
-    # deliberately sequential shape — its contract is bounding peak
-    # storage to max(family), the opposite trade.
+    # share only the immutable cached sharr, and each pin's ledger
+    # append is GIL-atomic. The STAGED entry (q_similarity_join_staged)
+    # keeps its deliberately sequential shape — its contract is bounding
+    # peak storage to max(family), the opposite trade.
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_mh = pool.submit(
             similarity_join, docs, "doc_id", "text", JACCARD_THRESHOLD,
-            caches=caches, shingles=sharr, sketch="kdraw")
+            shingles=sharr, sketch="kdraw")
         f_pf = pool.submit(
             similarity_join, docs, "doc_id", "text", JACCARD_THRESHOLD,
-            exact=True, caches=caches, shingles=sharr)
+            exact=True, shingles=sharr)
         f_hm = pool.submit(
             similarity_join, docs, "doc_id", "text", SIMHASH_MAX_HAMMING,
-            metric="hamming", caches=caches)
+            metric="hamming")
         f_sp = pool.submit(
-            similarity_join, emb, "vec_id", "embedding", SRP_THRESHOLD,
-            caches=caches)
+            similarity_join, emb, "vec_id", "embedding", SRP_THRESHOLD)
         mh, pf, hm, sp = (f.result() for f in (f_mh, f_pf, f_hm, f_sp))
 
     def tag(dfp: DataFrame, family: str) -> DataFrame:
@@ -431,23 +422,22 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.round(F.col("score").cast("double"), 6)
                            .alias("score"))
 
-    out = (tag(mh, "jaccard_minhash")
-           .unionByName(tag(pf, "jaccard_prefix"))
-           .unionByName(tag(hm, "hamming_simhash"))
-           .unionByName(tag(sp, "cosine_srp")))
-    return finalize(out, *caches)
+    return (tag(mh, "jaccard_minhash")
+            .unionByName(tag(pf, "jaccard_prefix"))
+            .unionByName(tag(hm, "hamming_simhash"))
+            .unionByName(tag(sp, "cosine_srp")))
 
 
 def q_similarity_join_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staged (family-SEQUENTIAL) similarity join as a checked
-    catalog entry (VERDICT r9 item 4 — the deployment-shape answer to
-    the engine's one measured spill hazard must be driver-exercised,
-    not library-only): the same four family dispatches as
-    q_similarity_join_api, but run through similarity_join_staged so
-    each family fills its cached part and releases its caches
-    BEFORE the next family dispatches — peak shuffle-spill disk is
-    max(family), not sum(families) (measured at the 100x replica: 34.7
-    GB peak vs the monolith's >78 GB budget blow — SCALE.md rounds 8-9).
+    catalog entry, so the deployment-shape answer to the engine's one
+    measured spill hazard is oracle-checked, not library-only: the
+    same four family dispatches as q_similarity_join_api, but run
+    through similarity_join_staged so each family fills its cached part
+    and releases its pins BEFORE the next family dispatches — peak
+    shuffle-spill disk is max(family), not sum(families) (measured at
+    the 100x replica: 34.7 GB peak vs the monolith's >78 GB budget blow
+    — SCALE.md rounds 8-9).
     The oracle is the identical UNION ALL of the four families'
     independent specs, so a hash match proves staging changes the
     execution SHAPE and nothing about the result. Text specs pin
@@ -473,8 +463,8 @@ def q_similarity_join_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
 @scoped_cached_plan_aqe
 def q_similarity_containment_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract test for the containment dispatch through the
-    similarity_join front door (VERDICT r11 item 2 — containment was
-    the only similarity family reachable solely as a standalone entry):
+    similarity_join front door, so containment is not reachable solely
+    as a standalone entry:
     ``metric='containment'`` at the standard 0.90 gate over documents,
     tagged with the family literal like q_similarity_join_api's union
     rows. The oracle is the INDEPENDENT df-capped quadratic containment
@@ -485,12 +475,10 @@ def q_similarity_containment_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio rounding every jaccard/SRP family entry uses (plans.base rule
     7's tolerated form)."""
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
     res = similarity_join(docs, "doc_id", "text", CONTAINMENT_PCT / 100,
-                          metric="containment", caches=caches)
-    out = res.select(F.lit("containment").alias("family"),
-                     "id1", "id2", "score")
-    return finalize(out, *caches)
+                          metric="containment")
+    return res.select(F.lit("containment").alias("family"),
+                      "id1", "id2", "score")
 
 
 ORACLE_CONTAINMENT_API = f"""
@@ -516,7 +504,7 @@ def q_sketch_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parity match additionally PROVES the HLL-based live decision
     agrees with the exact-statistic decision on this corpus.
 
-    The routed_kernel parity claim is GATED (ADVICE r10): the live value
+    The routed_kernel parity claim is GATED: the live value
     is HLL-estimated (rsd 0.02), so on a corpus whose exact avg
     shingles/doc lands within HLL error of the cutover the live and
     exact decisions can legitimately differ — both kernels are fine
@@ -530,7 +518,7 @@ def q_sketch_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shipped corpora the statistic is far outside the band, so the
     strong claim is what actually gets attested."""
     docs = load(spark, sf_dir, "documents")
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()
     routed = _resolve_auto_sketch(sharr)   # the live router, HLL statistic
     in_band = F.expr(
@@ -539,20 +527,19 @@ def q_sketch_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact statistic from the array frame: sum(size) == the exploded
     # count(*), countDistinct over non-empty docs == the exploded
     # countDistinct (the explode dropped empty docs) — same integers
-    out = (sharr.filter(F.size("sh_arr") > 0)
-           .agg(F.sum(F.size("sh_arr")).alias("n_shingles"),
-                F.countDistinct("doc_id").alias("n_docs"))
-           .select(
-               "n_shingles", "n_docs",
-               F.expr("n_shingles * 1000 div n_docs")
-                .alias("avg_shingles_x1000"),
-               F.when(F.expr(f"n_shingles * 1000 >= "
-                             f"n_docs * {ROUTE_CUTOVER_X1000}"),
-                      F.lit("oph")).otherwise(F.lit("kdraw"))
-                .alias("kernel"),
-               F.when(in_band, F.lit("boundary"))
-                .otherwise(F.lit(routed)).alias("routed_kernel")))
-    return finalize(out, sharr)
+    return (sharr.filter(F.size("sh_arr") > 0)
+            .agg(F.sum(F.size("sh_arr")).alias("n_shingles"),
+                 F.countDistinct("doc_id").alias("n_docs"))
+            .select(
+                "n_shingles", "n_docs",
+                F.expr("n_shingles * 1000 div n_docs")
+                 .alias("avg_shingles_x1000"),
+                F.when(F.expr(f"n_shingles * 1000 >= "
+                              f"n_docs * {ROUTE_CUTOVER_X1000}"),
+                       F.lit("oph")).otherwise(F.lit("kdraw"))
+                 .alias("kernel"),
+                F.when(in_band, F.lit("boundary"))
+                 .otherwise(F.lit(routed)).alias("routed_kernel")))
 
 
 ORACLE_SKETCH_ROUTE_REPORT = f"""
@@ -619,17 +606,14 @@ def q_auto_route_oph_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = sup.unionByName(
         sup.select((F.col("doc_id") + AUTO_ROUTE_OFFSET).alias("doc_id"),
                    "text"))
-    caches: list[DataFrame] = []
-    sharr = shingle_hash_arrays(corpus, "doc_id", "text", n=3).cache()
-    caches.append(sharr)
+    sharr = pin(shingle_hash_arrays(corpus, "doc_id", "text", n=3))
     sharr.count()   # eager: router + banding + verify race a lazy cache
     routed = _resolve_auto_sketch(sharr)
     pairs = similarity_join(corpus, "doc_id", "text", JACCARD_THRESHOLD,
-                            caches=caches, shingles=sharr, sketch="auto")
-    out = pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
-                       F.round(F.col("score"), 6).alias("jaccard"),
-                       F.lit(routed).alias("routed_kernel"))
-    return finalize(out, *caches)
+                            shingles=sharr, sketch="auto")
+    return pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                        F.round(F.col("score"), 6).alias("jaccard"),
+                        F.lit(routed).alias("routed_kernel"))
 
 
 ORACLE_AUTO_ROUTE_OPH = f"""
@@ -653,7 +637,8 @@ _T05_HASHES, _T05_BANDS = minhash_band_config(MINHASH_T05)
 
 def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall audit for the threshold-DERIVED band config at a second
-    threshold (VERDICT r6 item 3's validation leg): exact all-pairs
+    threshold (the validation leg of deriving bands from the threshold):
+    exact all-pairs
     jaccard >= 0.5 (the df-capped shingle self-join, the same baseline
     as q_minhash_recall_audit) vs the similarity_join front door at
     threshold=0.5, which minhash_band_config resolves to 64 hashes / 32
@@ -663,9 +648,7 @@ def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-jaccard gate, so recall_ppm = |lsh| * 1e6 / |exact| and must
     sit at/above the S-curve floor."""
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    caches.append(sharr)
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: exact + lsh branches race a lazy cache
     exact = exact_jaccard_count(
         sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
@@ -674,12 +657,10 @@ def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 64x32 band config (q_oph_recall_t05 is the OPH twin) and its
     # oracle replays k-draw banding — the 'auto' default would silently
     # measure OPH under the 'minhash' label on a long-doc corpus
-    # (round-10 review finding)
     lsh = similarity_join(docs, "doc_id", "text", MINHASH_T05,
-                          caches=caches, shingles=sharr,
-                          sketch="kdraw").agg(
+                          shingles=sharr, sketch="kdraw").agg(
         F.count("*").alias("n_lsh"))
-    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
+    return recall_ppm(exact, lsh, "n_exact", "n_lsh")
 
 
 ORACLE_MINHASH_RECALL_T05 = sql_jaccard_recall(
@@ -699,17 +680,15 @@ def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm discipline as every other recall audit; the sketch runs
     through the same front door a user calls (sketch='oph')."""
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    caches.append(sharr)
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: exact + oph branches race a lazy cache
     exact = exact_jaccard_count(
         sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
         MINHASH_T05)
     oph = similarity_join(docs, "doc_id", "text", MINHASH_T05,
-                          caches=caches, shingles=sharr, sketch="oph").agg(
+                          shingles=sharr, sketch="oph").agg(
         F.count("*").alias("n_oph"))
-    return finalize(recall_ppm(exact, oph, "n_exact", "n_oph"), *caches)
+    return recall_ppm(exact, oph, "n_exact", "n_oph")
 
 
 ORACLE_OPH_RECALL_T05 = sql_jaccard_recall(

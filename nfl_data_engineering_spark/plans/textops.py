@@ -33,8 +33,9 @@ from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
                               explode_shingle_hashes, explode_tokens, lang_id,
                               regex_token_count, shingle_hash_arrays, shingles,
                               tokens)
-from .base import (QueryDef, finalize, load, recall_ppm,
-                   scoped_cached_plan_aqe, sql_recall_ppm)
+from ..storage import park_frame, pin, stage
+from .base import (QueryDef, load, recall_ppm, scoped_cached_plan_aqe,
+                   sql_recall_ppm)
 
 # DuckDB twin of functions/text.py tokens().
 SQL_TOKENS = "list_filter(regexp_split_to_array(lower({col}), '\\s+'), t -> t != '')"
@@ -103,7 +104,7 @@ NUM_BANDS = minhash_band_config(JACCARD_THRESHOLD, NUM_HASHES)[1]
 
 
 def _text_banded_join(sharr: DataFrame, threshold: float,
-                      caches: list[DataFrame], sketch: str) -> DataFrame:
+                      sketch: str) -> DataFrame:
     """Banded-sketch bucketing -> candidate equi-join -> exact jaccard
     verify over the per-doc hash-array frame (doc_id, sh_arr); returns
     (id1, id2, score) with score >= ``threshold``. The band config is
@@ -126,8 +127,7 @@ def _text_banded_join(sharr: DataFrame, threshold: float,
     else:
         bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", n_hashes,
                                      n_bands)
-    bands = bands.cache()
-    caches.append(bands)
+    bands = pin(bands)
     bands.count()   # eager: both candidate sides race a lazy cache
     cand = candidate_pairs(bands, "doc_id", ["band", "band_key"],
                            "id1", "id2")
@@ -136,24 +136,19 @@ def _text_banded_join(sharr: DataFrame, threshold: float,
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str,
-                   caches: list[DataFrame],
                    sharr: DataFrame | None = None,
                    sketch: str = "kdraw") -> DataFrame:
     """Verified near-dup pairs (d1, d2, jaccard) with jaccard >=
     JACCARD_THRESHOLD over the documents table: _text_banded_join at the
-    catalog threshold, with the entries' column names. The frames it
-    caches are appended to ``caches`` for the calling entry to release
-    (base.finalize, or an unpersist once components converge).
+    catalog threshold, with the entries' column names.
 
-    A caller that already holds the cached shingle-array frame passes it
-    as ``sharr`` (tracked in its own caches list), so the plan is cached
-    and released exactly once; otherwise it is cached here and filled by
-    the bands' eager count."""
+    A caller that already holds the pinned shingle-array frame passes it
+    as ``sharr``, so the plan is cached and released exactly once;
+    otherwise it is pinned here and filled by the bands' eager count."""
     if sharr is None:
         docs = load(spark, sf_dir, "documents")
-        sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-        caches.append(sharr)
-    pairs = _text_banded_join(sharr, JACCARD_THRESHOLD, caches, sketch)
+        sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
+    pairs = _text_banded_join(sharr, JACCARD_THRESHOLD, sketch)
     return pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
                         F.col("score").alias("jaccard"))
 
@@ -170,11 +165,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of shingle strings (same result on both engines — the oracle
     hashes identically), and within-doc shingle dedup happens row-locally
     via array_distinct — no dropDuplicates shuffle."""
-    caches: list[DataFrame] = []
-    pairs = _minhash_pairs(spark, sf_dir, caches)
-    return finalize(
-        pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard")),
-        *caches)
+    pairs = _minhash_pairs(spark, sf_dir)
+    return pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,17 +182,16 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB recursive CTE computing min reachable id — same
     fixpoint, declaratively."""
     from ..operators.dedup import connected_components
-    caches: list[DataFrame] = []
-    pairs = _minhash_pairs(spark, sf_dir, caches).select("d1", "d2")
-    labels = connected_components(pairs, "d1", "d2")
     # labels is localCheckpoint-materialized inside connected_components,
-    # so the helper caches are out of the result's lineage — release now
-    for c in caches:
-        c.unpersist()
-    out = (labels.groupBy(F.col("label").alias("component"))
-           .agg(F.count("*").alias("n_docs"),
-                F.max("n").alias("max_doc_id")))
-    return finalize(out, labels)
+    # so the pair caches are out of the result's lineage: the stage
+    # releases them once it returns
+    with stage():
+        pairs = _minhash_pairs(spark, sf_dir).select("d1", "d2")
+        labels = connected_components(pairs, "d1", "d2")
+    park_frame(labels)
+    return (labels.groupBy(F.col("label").alias("component"))
+            .agg(F.count("*").alias("n_docs"),
+                 F.max("n").alias("max_doc_id")))
 
 
 def _labeled_docs(docs: DataFrame, labels: DataFrame) -> DataFrame:
@@ -224,17 +215,15 @@ def q_dedup_survivor_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     small against the corpus — so the finishing join broadcasts."""
     from ..operators.dedup import connected_components
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    caches: list[DataFrame] = []
-    pairs = _minhash_pairs(spark, sf_dir, caches).select("d1", "d2")
-    labels = connected_components(pairs, "d1", "d2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
+    with stage():        # labels checkpointed -> caches out of lineage
+        pairs = _minhash_pairs(spark, sf_dir).select("d1", "d2")
+        labels = connected_components(pairs, "d1", "d2")
+    park_frame(labels)
     canon = F.coalesce(F.col("label"), F.col("doc_id"))
-    out = (_labeled_docs(docs, labels)
-           .select("doc_id", canon.alias("canonical_doc_id"),
-                   (canon == F.col("doc_id")).cast("int")
-                   .alias("is_survivor")))
-    return finalize(out, labels)
+    return (_labeled_docs(docs, labels)
+            .select("doc_id", canon.alias("canonical_doc_id"),
+                    (canon == F.col("doc_id")).cast("int")
+                    .alias("is_survivor")))
 
 
 def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,21 +239,19 @@ def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-component window sort — computed over LABELED members only
     (|docs-in-pairs| rows; a full-corpus groupBy would shuffle ~|corpus|
     rows because every singleton is its own component, and the finishing
-    join would be corpus-vs-corpus — round-10 review finding), so the
-    survivor frame is one row per MULTI-member component and both
-    finishing joins broadcast at 100 TB; singletons coalesce to
-    themselves.
+    join would be corpus-vs-corpus), so the survivor frame is one row
+    per MULTI-member component and both finishing joins broadcast at
+    100 TB; singletons coalesce to themselves.
 
     Reference parity: generalizes the keep-one-per-key preference rule
     of the odds dedup (odds_data_collector.py:40-44) from key equality
     to near-dup clusters with a quality preference."""
     from ..operators.dedup import connected_components
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    caches: list[DataFrame] = []
-    pairs = _minhash_pairs(spark, sf_dir, caches).select("d1", "d2")
-    labels = connected_components(pairs, "d1", "d2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
+    with stage():        # labels checkpointed -> caches out of lineage
+        pairs = _minhash_pairs(spark, sf_dir).select("d1", "d2")
+        labels = connected_components(pairs, "d1", "d2")
+    park_frame(labels)
     member = _labeled_docs(docs, labels).withColumn(
         "component", F.coalesce("label", "doc_id"))
     surv = (member.filter(F.col("label").isNotNull())
@@ -275,12 +262,11 @@ def q_dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("component",
                     (-F.col("m.neg_id")).alias("survivor_doc_id")))
     final_surv = F.coalesce("survivor_doc_id", "doc_id")
-    out = (member.join(surv, "component", "left")
-           .select("doc_id", "component",
-                   final_surv.alias("survivor_doc_id"),
-                   (F.col("doc_id") == final_surv).cast("int")
-                   .alias("is_survivor")))
-    return finalize(out, labels)
+    return (member.join(surv, "component", "left")
+            .select("doc_id", "component",
+                    final_surv.alias("survivor_doc_id"),
+                    (F.col("doc_id") == final_surv).cast("int")
+                    .alias("is_survivor")))
 
 
 def sql_minhash_band_ctes(num_hashes: int, num_bands: int) -> str:
@@ -435,23 +421,20 @@ JOIN (SELECT component, survivor_doc_id FROM surv WHERE rn = 1) s
 """
 
 
-def _star_verified_pairs(spark: SparkSession, sf_dir: str,
-                         caches: list[DataFrame] | None = None) -> DataFrame:
+def _star_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket -> star edges (member -> bucket minimum, O(members) per
     bucket) -> exact-jaccard verification against the representative.
     Shared by the star survivor table and the cross-shard audit; the
-    shingle cache is appended to `caches` for the caller to release.
-    The cache fills LAZILY: all three sharr consumers (bands + both
-    verify sides) materialize inside the ONE connected-components probe
-    job, where BlockManager's per-partition loading locks guarantee each
-    partition computes once — an eager count() is a whole extra
-    pass-shaped job per entry (leakage/star walls 1.83/1.48 s with it,
-    1.79/1.41 s without, at sf0.1)."""
+    shingle cache is pinned (storage.pin). It fills LAZILY: all three
+    sharr consumers (bands + both verify sides) materialize inside the
+    ONE connected-components probe job, where BlockManager's
+    per-partition loading locks guarantee each partition computes once —
+    an eager count() is a whole extra pass-shaped job per entry
+    (leakage/star walls 1.83/1.48 s with it, 1.79/1.41 s without, at
+    sf0.1)."""
     from pyspark.sql import Window
     docs = load(spark, sf_dir, "documents")
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    if caches is not None:
-        caches.append(sharr)
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     # bands has exactly ONE consumer here (the bucket-min window), so it
     # is deliberately NOT cached. The groupBy-min + member-join
     # alternative was A/B'd in round 6 (3-run min at sf0.1): window form
@@ -491,18 +474,16 @@ def q_dedup_star_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     same way as A1/A2, at corpus scale."""
     from ..operators.dedup import connected_components
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    verified = _star_verified_pairs(spark, sf_dir, caches)
-    labels = connected_components(verified, "d1", "d2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
+    with stage():        # labels checkpointed -> caches out of lineage
+        verified = _star_verified_pairs(spark, sf_dir)
+        labels = connected_components(verified, "d1", "d2")
+    park_frame(labels)
     canon = F.coalesce(F.col("label"), F.col("doc_id"))
-    out = (docs.select("doc_id")
-           .join(labels.withColumnRenamed("n", "doc_id"), "doc_id", "left")
-           .select("doc_id", canon.alias("canonical_doc_id"),
-                   (canon == F.col("doc_id")).cast("int")
-                   .alias("is_survivor")))
-    return finalize(out, labels)
+    return (docs.select("doc_id")
+            .join(labels.withColumnRenamed("n", "doc_id"), "doc_id", "left")
+            .select("doc_id", canon.alias("canonical_doc_id"),
+                    (canon == F.col("doc_id")).cast("int")
+                    .alias("is_survivor")))
 
 
 _SQL_STAR_COMP_CTES = f"""{_SQL_MINHASH_BAND_CTES},
@@ -537,11 +518,10 @@ def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
     from .training import N_SHARDS
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    labels = connected_components(
-        _star_verified_pairs(spark, sf_dir, caches), "d1", "d2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
+    with stage():        # labels checkpointed -> caches out of lineage
+        labels = connected_components(
+            _star_verified_pairs(spark, sf_dir), "d1", "d2")
+    park_frame(labels)
     members = (labels.withColumnRenamed("n", "doc_id")
                .join(docs.select(
                    "doc_id",
@@ -550,14 +530,13 @@ def q_cross_shard_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (members.groupBy("label")
            .agg(F.count("*").alias("n_docs"),
                 F.countDistinct("shard").alias("n_shards")))
-    out = per.agg(
+    return per.agg(
         F.count("*").alias("n_clusters"),
         F.sum((F.col("n_shards") > 1).cast("int")).cast("bigint")
          .alias("n_split_clusters"),
         F.expr("CASE WHEN count(*) > 0 THEN "
                "sum(CAST(n_shards > 1 AS INT)) * 1000000 div count(*) END")
          .alias("split_ppm"))
-    return finalize(out, labels)
 
 
 def _oracle_cross_shard_audit() -> str:
@@ -604,11 +583,10 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds no shuffle beyond the survivor join."""
     from ..operators.dedup import connected_components
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    labels = connected_components(
-        _star_verified_pairs(spark, sf_dir, caches), "d1", "d2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
+    with stage():        # labels checkpointed -> caches out of lineage
+        labels = connected_components(
+            _star_verified_pairs(spark, sf_dir), "d1", "d2")
+    park_frame(labels)
     canon = F.coalesce(F.col("label"), F.col("doc_id"))
 
     def bucket(c):
@@ -630,15 +608,14 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                         # the raw bucket: buckets 0-7 all map to 'train',
                         # so most bucket migrations are train->train and
                         # counting them would overstate the leakage the
-                        # cluster keying prevents (ADVICE r6, medium)
+                        # cluster keying prevents
                         (split_of(bucket(canon))
                          != split_of(bucket(F.col("doc_id"))))
                         .cast("int").alias("moved")))
-    out = (assigned.groupBy("split")
-           .agg(F.count("*").alias("n_docs"),
-                F.sum("clustered").cast("bigint").alias("n_clustered_docs"),
-                F.sum("moved").cast("bigint").alias("n_rescued_docs")))
-    return finalize(out, labels)
+    return (assigned.groupBy("split")
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum("clustered").cast("bigint").alias("n_clustered_docs"),
+                 F.sum("moved").cast("bigint").alias("n_rescued_docs")))
 
 
 ORACLE_LEAKAGE_SAFE_SPLIT = f"""
@@ -692,15 +669,15 @@ def q_incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy(F.md5("text").alias("h"))
               .agg(F.min("doc_id").alias("exact_ref")))
     inc = docs.filter(is_inc).select("doc_id", F.md5("text").alias("h"))
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     # cache bands: the incoming and existing sides below each consume it,
     # and without the cache each side re-runs the 64-draw minhash fold
     # over the full corpus (measured ~0.7s of the entry at sf0.1).
     # ONE eager fill: bands.count() reads sharr, so it fills BOTH caches
     # in a single job (a separate sharr.count() measured 1.71 vs 1.52 s
     # at sf0.1); the verify tail then reads the already-warm sharr.
-    bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
-                                 NUM_BANDS).cache()
+    bands = pin(minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
+                                     NUM_BANDS))
     bands.count()
     cand = candidate_pairs(bands, "doc_id", ["band", "band_key"], "di", "de",
                            probe=is_inc)
@@ -710,12 +687,11 @@ def q_incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     status = (F.when(F.col("exact_ref").isNotNull(), F.lit("exact_dup"))
               .when(F.col("near_ref").isNotNull(), F.lit("near_dup"))
               .otherwise(F.lit("new")))
-    return finalize(
-        inc.join(ex_min, "h", "left")
-        .join(near.withColumnRenamed("di", "doc_id"), "doc_id", "left")
-        .select("doc_id", status.alias("status"),
-                F.coalesce("exact_ref", "near_ref", F.lit(-1))
-                .alias("ref_doc_id")), sharr, bands)
+    return (inc.join(ex_min, "h", "left")
+            .join(near.withColumnRenamed("di", "doc_id"), "doc_id", "left")
+            .select("doc_id", status.alias("status"),
+                    F.coalesce("exact_ref", "near_ref", F.lit(-1))
+                    .alias("ref_doc_id")))
 
 
 ORACLE_INCREMENTAL_DEDUP = f"""
@@ -761,12 +737,11 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, not string (identical result on both engines; int64 shuffle
     keys; row-local within-doc dedup)."""
     docs = load(spark, sf_dir, "documents")
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
     jac = _overlap_jaccard()
-    return finalize(
-        capped_overlap(sh, NGRAM_DF_CAP)
-        .filter(jac >= 0.7)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard")), sh)
+    return (capped_overlap(sh, NGRAM_DF_CAP)
+            .filter(jac >= 0.7)
+            .select("d1", "d2", F.round(jac, 6).alias("jaccard")))
 
 
 def _overlap_jaccard() -> Column:
@@ -844,15 +819,14 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: generalizes the dedup contract of
     odds_data_collector.py:40-44 to asymmetric near-superset identity."""
     docs = load(spark, sf_dir, "documents")
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
     sh.count()   # eager: sizes/rare/capped consumers race a lazy cache,
     #              and the fill must land inside the cached-plan-AQE scope
-    out = (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
-                                  CONTAINMENT_PCT * 10)
-           .select("sub_doc_id", "super_doc_id",
-                   F.expr("i * 1000 div sz_sub")
-                    .alias("containment_x1000")))
-    return finalize(out, sh)
+    return (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
+                                   CONTAINMENT_PCT * 10)
+            .select("sub_doc_id", "super_doc_id",
+                    F.expr("i * 1000 div sz_sub")
+                     .alias("containment_x1000")))
 
 
 def containment_directions(ov: DataFrame, t_pm: int) -> DataFrame:
@@ -970,8 +944,8 @@ def containment_prefix_pairs(sh: DataFrame, t_pm: int) -> DataFrame:
 
 @scoped_cached_plan_aqe
 def q_containment_sketch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The containment scale route as a checked entry (VERDICT r11 item
-    3): containment_prefix_pairs at the standard 0.90 gate, emitting the
+    """The containment scale route as a checked entry:
+    containment_prefix_pairs at the standard 0.90 gate, emitting the
     SAME (sub_doc_id, super_doc_id, containment_x1000) schema as
     q_containment_join. The oracle is the INDEPENDENT df-capped
     quadratic spec (ORACLE_CONTAINMENT_JOIN, identical column aliases),
@@ -983,13 +957,12 @@ def q_containment_sketch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 10x-replica A/B vs the full df-capped self-join is in
     SCALE.md round 12."""
     docs = load(spark, sf_dir, "documents")
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
     sh.count()   # eager: sizes/dfreq/prefix/index consumers race a lazy cache
-    out = (containment_prefix_pairs(sh, CONTAINMENT_PCT * 10)
-           .select("sub_doc_id", "super_doc_id",
-                   F.expr("i * 1000 div sz_sub")
-                    .alias("containment_x1000")))
-    return finalize(out, sh)
+    return (containment_prefix_pairs(sh, CONTAINMENT_PCT * 10)
+            .select("sub_doc_id", "super_doc_id",
+                    F.expr("i * 1000 div sz_sub")
+                     .alias("containment_x1000")))
 
 
 @scoped_cached_plan_aqe
@@ -1007,14 +980,14 @@ def q_containment_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both counts share one shingle cache; the 1-row x 1-row crossJoin is
     the audits' bounded scaffold shape."""
     docs = load(spark, sf_dir, "documents")
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=3).cache()
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
     sh.count()
     truth = (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
                                     CONTAINMENT_PCT * 10)
              .agg(F.count("*").alias("n_truth")))
     route = (containment_prefix_pairs(sh, CONTAINMENT_PCT * 10)
              .agg(F.count("*").alias("n_route")))
-    return finalize(recall_ppm(truth, route, "n_truth", "n_route"), sh)
+    return recall_ppm(truth, route, "n_truth", "n_route")
 
 
 ORACLE_CONTAINMENT_RECALL = f"""
@@ -1071,20 +1044,18 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before a corpus job; the exact side is the quadratic baseline, so
     sample first at 100 TB (recall estimates compose)."""
     docs = load(spark, sf_dir, "documents")
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: exact + lsh branches race a lazy cache
     # the df-capped quadratic truth needs per-shingle rows: derive them
     # from the cached arrays with one row-local explode (no re-hash)
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
     exact = exact_jaccard_count(sh, JACCARD_THRESHOLD)
-    caches: list[DataFrame] = [sharr]
-    lsh = _minhash_pairs(spark, sf_dir, caches, sharr=sharr).agg(
+    lsh = _minhash_pairs(spark, sf_dir, sharr=sharr).agg(
         F.count("*").alias("n_lsh"))
-    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
+    return recall_ppm(exact, lsh, "n_exact", "n_lsh")
 
 
-def _text_prefix_join(sharr: DataFrame, threshold: float,
-                      caches: list[DataFrame]) -> DataFrame:
+def _text_prefix_join(sharr: DataFrame, threshold: float) -> DataFrame:
     """Prefix-filter exact set-similarity join over the per-doc hash-array
     frame; returns (id1, id2, score) with jaccard score >= ``threshold``.
     The prefix-length and length-filter arithmetic runs on the EXACT
@@ -1117,11 +1088,10 @@ def _text_prefix_join(sharr: DataFrame, threshold: float,
     ranked = (sh.join(dfreq, "sh60")
               .withColumn("rn", F.row_number().over(
                   Window.partitionBy("doc_id").orderBy("df", "sh60"))))
-    pre = (ranked
-           .filter(F.col("rn")
-                   <= F.expr(f"sz - (({p} * sz + {q - 1}) div {q}) + 1"))
-           .select("doc_id", "sh60", "sz")).cache()
-    caches.append(pre)
+    pre = pin(ranked
+              .filter(F.col("rn")
+                      <= F.expr(f"sz - (({p} * sz + {q - 1}) div {q}) + 1"))
+              .select("doc_id", "sh60", "sz"))
     pre.count()   # eager: both candidate sides race a lazy cache
     cand = candidate_pairs(
         pre, "doc_id", ["sh60"], "id1", "id2", carry=("sz",),
@@ -1152,12 +1122,10 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # no eager sharr fill: the prefix table's eager fill computes through
     # it and fills both caches in one job
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
-    caches: list[DataFrame] = [sharr]
-    verified = _text_prefix_join(sharr, JACCARD_THRESHOLD, caches)
-    return finalize(
-        verified.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
-                        F.round("score", 6).alias("jaccard")), *caches)
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
+    verified = _text_prefix_join(sharr, JACCARD_THRESHOLD)
+    return verified.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                           F.round("score", 6).alias("jaccard"))
 
 
 ORACLE_PREFIX_FILTER_JOIN = f"""
@@ -1203,11 +1171,8 @@ def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator of the same resemblance), so the oracle replays THIS
     pipeline; q_oph_recall_audit measures it against the exact-pair
     truth."""
-    caches: list[DataFrame] = []
-    pairs = _minhash_pairs(spark, sf_dir, caches, sketch="oph")
-    return finalize(
-        pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard")),
-        *caches)
+    pairs = _minhash_pairs(spark, sf_dir, sketch="oph")
+    return pairs.select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
 
 
 _SQL_OPH_PAIR_CTES = sql_oph_pair_ctes(OPH_BINS, OPH_NUM_BANDS,
@@ -1230,15 +1195,13 @@ def q_oph_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether the 64x hash saving is free at a given threshold — run this
     before switching a corpus job's sketch kernel."""
     docs = load(spark, sf_dir, "documents")
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: exact + oph branches race a lazy cache
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
     exact = exact_jaccard_count(sh, JACCARD_THRESHOLD)
-    caches: list[DataFrame] = [sharr]
-    oph = _minhash_pairs(spark, sf_dir, caches, sharr=sharr,
-                         sketch="oph").agg(
+    oph = _minhash_pairs(spark, sf_dir, sharr=sharr, sketch="oph").agg(
         F.count("*").alias("n_oph"))
-    return finalize(recall_ppm(exact, oph, "n_exact", "n_oph"), *caches)
+    return recall_ppm(exact, oph, "n_exact", "n_oph")
 
 
 def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,7 +1217,7 @@ def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     float log. Two sketch passes + two (band, band_key) aggregates; the
     shingle frame is computed once and shared."""
     docs = load(spark, sf_dir, "documents")
-    sharr = shingle_hash_arrays(docs, "doc_id", "text", n=3).cache()
+    sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     sharr.count()   # eager: both family branches race a lazy cache
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
 
@@ -1269,11 +1232,10 @@ def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.lit(tag).alias("family"), "log2_size",
                         "n_buckets", "pair_slots", "max_bucket"))
 
-    out = fam("kdraw", minhash_bands_arrays(
+    return fam("kdraw", minhash_bands_arrays(
         sharr, "doc_id", "sh_arr", NUM_HASHES, NUM_BANDS)
     ).unionByName(fam("oph", oph_bands_fast(
         sh, "doc_id", "sh60", OPH_BINS, OPH_NUM_BANDS, hashed=True)))
-    return finalize(out, sharr)
 
 
 def _oracle_bucket_histogram() -> str:
@@ -1303,8 +1265,7 @@ SIMHASH_BITS = 60
 SIMHASH_MAX_HAMMING = 3
 
 
-def _text_simhash_join(std: DataFrame, max_hamming: int,
-                       caches: list[DataFrame]) -> DataFrame:
+def _text_simhash_join(std: DataFrame, max_hamming: int) -> DataFrame:
     """SimHash pigeonhole chunk join over (doc_id, text), generic over the
     distance bound; returns (id1, id2, score = hamming distance) with
     score <= ``max_hamming``. The 60-bit signature is split into
@@ -1320,8 +1281,7 @@ def _text_simhash_join(std: DataFrame, max_hamming: int,
     The difference from the jaccard family: no second derived cache
     whose fill would compute this one as a by-product."""
     toked = explode_tokens(std, "doc_id", "text")
-    sims = simhash(toked, "doc_id", "token", bits=SIMHASH_BITS).cache()
-    caches.append(sims)
+    sims = pin(simhash(toked, "doc_id", "token", bits=SIMHASH_BITS))
     sims.count()   # eager: both chunk-join sides race a lazy cache
     chunks = int(max_hamming) + 1
     base = SIMHASH_BITS // chunks
@@ -1358,11 +1318,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead (the q_dedup_star_survivors pattern applies unchanged to
     simhash chunks)."""
     docs = load(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    pairs = _text_simhash_join(docs, SIMHASH_MAX_HAMMING, caches)
-    return finalize(
-        pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
-                     F.col("score").alias("hamming")), *caches)
+    pairs = _text_simhash_join(docs, SIMHASH_MAX_HAMMING)
+    return pairs.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
+                        F.col("score").alias("hamming"))
 
 
 ORACLE_SIMHASH = f"""
@@ -1898,7 +1856,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the shingle lambda (no CSE inside higher-order functions;
     # measured 155 s for the bare 8-gram explode on a 50 k-doc replica vs
     # ~3 s through the materialized-token helper)
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=CONTAM_N).cache()
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=CONTAM_N))
     ev = (sh.filter(F.col("doc_id") % EVAL_MOD == 0)
           .select(F.col("doc_id").alias("eval_doc_id"), "sh60"))
     tr = (sh.filter(F.col("doc_id") % EVAL_MOD != 0)
@@ -1911,10 +1869,10 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.countDistinct("train_doc_id").alias("n_train_docs")))
     out = base.join(hits, "eval_doc_id", "left").fillna(
         0, ["n_contaminated", "n_train_docs"])
-    return finalize(out.select(
+    return out.select(
         "eval_doc_id", "n_shingles", "n_contaminated", "n_train_docs",
         (F.col("n_contaminated").cast("double") / F.col("n_shingles"))
-        .alias("contamination_ratio")), sh)
+        .alias("contamination_ratio"))
 
 
 def _contam_shingles_sql(n: int) -> str:
@@ -1975,7 +1933,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream is aggregated exactly once."""
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("term"))
-    term_counts = tok.groupBy("term").agg(F.count("*").alias("tc")).cache()
+    term_counts = pin(tok.groupBy("term").agg(F.count("*").alias("tc")))
     ks = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("d")
     bucket = F.pmod(
         h60(F.concat(F.col("d").cast("string"), F.lit(":"), F.col("term"))),
@@ -1988,10 +1946,9 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
              .orderBy(F.col("exact_n").desc(), "term").limit(CMS_TOPK))
     cand = (exact.select("term", "exact_n", ks)
             .withColumn("bucket", bucket))
-    return finalize(
-        cand.join(F.broadcast(counters), ["d", "bucket"])
-        .groupBy("term", "exact_n")
-        .agg(F.min("c").alias("cms_est")), term_counts)
+    return (cand.join(F.broadcast(counters), ["d", "bucket"])
+            .groupBy("term", "exact_n")
+            .agg(F.min("c").alias("cms_est")))
 
 
 def _oracle_heavy_hitters_cms() -> str:
@@ -2049,12 +2006,12 @@ def q_bloom_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it per branch (measured 31s -> ~6s at sf0.1 with the cache+reuse).
     # explode_shingle_hashes materializes the token array before the
     # shingle lambda (see q_contamination_check for the measured cliff)
-    sh = explode_shingle_hashes(docs, "doc_id", "text", n=CONTAM_N).cache()
-    ev = (sh.filter(F.col("doc_id") % EVAL_MOD == 0)
-          .select(F.col("doc_id").alias("eval_doc_id"), "sh60").distinct()
-          .cache())
-    tr = (sh.filter(F.col("doc_id") % EVAL_MOD != 0).select("sh60")
-          .distinct().cache())
+    sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=CONTAM_N))
+    ev = pin(sh.filter(F.col("doc_id") % EVAL_MOD == 0)
+             .select(F.col("doc_id").alias("eval_doc_id"), "sh60")
+             .distinct())
+    tr = pin(sh.filter(F.col("doc_id") % EVAL_MOD != 0).select("sh60")
+             .distinct())
 
     hm = F.col("sh60") % F.lit(MERSENNE_P)
     positions = F.array(*[
@@ -2073,13 +2030,12 @@ def q_bloom_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("bloom_hit").alias("n_bloom_candidates")))
     exact = (ev.join(tr, "sh60", "left_semi")
              .groupBy("eval_doc_id").agg(F.count("*").alias("n_exact")))
-    return finalize(
-        per_doc.join(exact, "eval_doc_id", "left")
-        .fillna(0, ["n_exact"])
-        .select("eval_doc_id", "n_shingles", "n_bloom_candidates",
-                F.col("n_exact").alias("n_exact_matches"),
-                (F.col("n_bloom_candidates") - F.col("n_exact"))
-                .alias("n_false_positives")), sh, ev, tr)
+    return (per_doc.join(exact, "eval_doc_id", "left")
+            .fillna(0, ["n_exact"])
+            .select("eval_doc_id", "n_shingles", "n_bloom_candidates",
+                    F.col("n_exact").alias("n_exact_matches"),
+                    (F.col("n_bloom_candidates") - F.col("n_exact"))
+                    .alias("n_false_positives")))
 
 
 def _oracle_bloom_prefilter() -> str:
@@ -2146,14 +2102,14 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = F.concat_ws(
         " ", F.slice(F.col("__toks"),
                      F.col("seg_idx") * SEGMENT_TOKENS + 1, SEGMENT_TOKENS))
-    segs = (docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
-            .select("doc_id", "__toks",
-                    F.explode(F.sequence(F.lit(0), n_seg - 1)).alias("seg_idx"))
-            .select("doc_id", "seg_idx",
-                    h60(seg).alias("seg60"),
-                    F.least(F.size("__toks") - F.col("seg_idx") * SEGMENT_TOKENS,
-                            F.lit(SEGMENT_TOKENS)).alias("seg_tokens"))
-            .cache())
+    segs = pin(
+        docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
+        .select("doc_id", "__toks",
+                F.explode(F.sequence(F.lit(0), n_seg - 1)).alias("seg_idx"))
+        .select("doc_id", "seg_idx",
+                h60(seg).alias("seg60"),
+                F.least(F.size("__toks") - F.col("seg_idx") * SEGMENT_TOKENS,
+                        F.lit(SEGMENT_TOKENS)).alias("seg_tokens")))
     df = (segs.groupBy("seg60")
           .agg(F.countDistinct("doc_id").alias("df"))
           .filter(F.col("df") > SEGMENT_DF_CAP))
@@ -2164,14 +2120,13 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (segs.groupBy("doc_id")
             .agg(F.count("*").alias("n_segments"),
                  F.sum("seg_tokens").alias("n_tokens")))
-    return finalize(
-        base.join(removed, "doc_id", "left")
-        .fillna(0, ["n_removed", "tokens_removed"])
-        .select("doc_id", "n_segments",
-                F.col("n_tokens").cast("bigint").alias("n_tokens"),
-                "n_removed",
-                F.col("tokens_removed").cast("bigint")
-                 .alias("tokens_removed")), segs)
+    return (base.join(removed, "doc_id", "left")
+            .fillna(0, ["n_removed", "tokens_removed"])
+            .select("doc_id", "n_segments",
+                    F.col("n_tokens").cast("bigint").alias("n_tokens"),
+                    "n_removed",
+                    F.col("tokens_removed").cast("bigint")
+                     .alias("tokens_removed")))
 
 
 def _segment_dedup_oracle() -> str:
@@ -2214,8 +2169,7 @@ SPAN_TOKENS = 8     # window width; production substring dedup uses ~50
                     # docs while keeping the plan shape identical
 
 
-def _dup_window_spans(t: DataFrame, k: int,
-                      caches: list[DataFrame]) -> DataFrame:
+def _dup_window_spans(t: DataFrame, k: int) -> DataFrame:
     """Shared span derivation for the substring-dedup family: stride-1
     k-token window hashes over the tokenized corpus ``t`` (doc_id, tk),
     corpus-repeat filter (window content occurring more than once
@@ -2226,8 +2180,7 @@ def _dup_window_spans(t: DataFrame, k: int,
     duplicated windows have no row. One implementation feeds BOTH the
     audit (q_exact_substring_spans) and the rewrite
     (q_substring_dedup_rewrite) so the two entries'
-    removed_tokens == dup_tokens contract cannot drift (round-7 review
-    finding).
+    removed_tokens == dup_tokens contract cannot drift.
 
     Round-13 shape (guide §2.3/§2.4 — the round-12 row-local array
     doctrine applied to the window-hash frame): the per-doc hash ARRAY is
@@ -2240,15 +2193,13 @@ def _dup_window_spans(t: DataFrame, k: int,
     one w60 exchange was built and MEASURED SLOWER (1.93 vs 1.63 s at
     sf0.1) — the dup table broadcasts here, so the semi probe pays no
     second shuffle, and the window's full |windows| sort is pure cost."""
-    wh_arr = (t.filter(F.size("tk") >= k)
-              .select("doc_id",
-                      F.transform(
-                          F.sequence(F.lit(1), F.size("tk") - k + 1),
-                          lambda pos: h60(F.concat_ws(
-                              " ", F.slice(F.col("tk"), pos, k))))
-                       .alias("wh"))
-              .cache())
-    caches.append(wh_arr)
+    wh_arr = pin(t.filter(F.size("tk") >= k)
+                 .select("doc_id",
+                         F.transform(
+                             F.sequence(F.lit(1), F.size("tk") - k + 1),
+                             lambda pos: h60(F.concat_ws(
+                                 " ", F.slice(F.col("tk"), pos, k))))
+                          .alias("wh")))
     wh_arr.count()   # eager: both explode consumers race a lazy cache
     wins = wh_arr.select("doc_id", F.posexplode("wh").alias("pos0", "w60"))
     dup = (wins.groupBy("w60").agg(F.count("*").alias("cnt"))
@@ -2290,19 +2241,17 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc hash ARRAY — positions implicit in the index); the corpus-
     repeat decision is a count window over ONE w60 exchange; the island
     merge and the span report are row-local array arithmetic per doc.
-    The hash-array frame is cached across its two consumers and released
-    via finalize — at 100 TB persist it to a scratch table instead, same
+    The hash-array frame is pinned (storage.pin) across its two
+    consumers — at 100 TB persist it to a scratch table instead, same
     plan either way."""
     docs = load(spark, sf_dir, "documents")
     k = SPAN_TOKENS
-    caches: list[DataFrame] = []
     # cache the tokenization: base + the window fill both read it
     # (pre-filter to len >= k inside the helper: sequence(1, n) with
     # n < 1 would DESCEND — the Spark trap documented at q_segment_dedup)
-    t = docs.select("doc_id", tokens(F.col("text")).alias("tk")).cache()
-    caches.append(t)
+    t = pin(docs.select("doc_id", tokens(F.col("text")).alias("tk")))
     base = t.select("doc_id", F.size("tk").cast("bigint").alias("n_tokens"))
-    spans = _dup_window_spans(t, k, caches)
+    spans = _dup_window_spans(t, k)
     # the span report is row-local over the per-doc spans array (cov per
     # island = e - s + 1); no (doc_id, island) aggregation exists anymore
     per_doc = spans.select(
@@ -2311,15 +2260,14 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate("spans", F.lit(0).cast("bigint"),
                     lambda acc, sp: acc + (sp["e"] - sp["s"] + 1))
         .alias("dup_tokens"))
-    out = (base.join(per_doc, "doc_id", "left")
-           .select("doc_id", "n_tokens",
-                   F.coalesce("n_dup_spans", F.lit(0)).cast("bigint")
-                    .alias("n_dup_spans"),
-                   F.coalesce("dup_tokens", F.lit(0)).cast("bigint")
-                    .alias("dup_tokens"))
-           .withColumn("dup_ppm", F.expr(
-               "dup_tokens * 1000000 div greatest(n_tokens, 1)")))
-    return finalize(out, *caches)
+    return (base.join(per_doc, "doc_id", "left")
+            .select("doc_id", "n_tokens",
+                    F.coalesce("n_dup_spans", F.lit(0)).cast("bigint")
+                     .alias("n_dup_spans"),
+                    F.coalesce("dup_tokens", F.lit(0)).cast("bigint")
+                     .alias("dup_tokens"))
+            .withColumn("dup_ppm", F.expr(
+                "dup_tokens * 1000000 div greatest(n_tokens, 1)")))
 
 
 def _sql_dup_island_ctes(k: int) -> str:
@@ -2397,12 +2345,10 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, pos-range) anti-join + per-doc collect_list reassembly."""
     docs = load(spark, sf_dir, "documents")
     k = SPAN_TOKENS
-    caches: list[DataFrame] = []
     # cache the tokenization: counts, the window fill and the posexplode
-    # all read it (3 scans of documents otherwise — round-7 review)
-    t = docs.select("doc_id", tokens(F.col("text")).alias("tk")).cache()
-    caches.append(t)
-    spans = _dup_window_spans(t, k, caches)
+    # all read it (3 scans of documents otherwise)
+    t = pin(docs.select("doc_id", tokens(F.col("text")).alias("tk")))
+    spans = _dup_window_spans(t, k)
     # Round 13: the surgery is ROW-LOCAL. Spans per doc are disjoint,
     # sorted, with >= 1 kept token between islands (the gap rule), so the
     # kept tokens are exactly the slices BETWEEN spans: kept ranges
@@ -2422,15 +2368,14 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         starts, ends,
         lambda a, b: F.slice(F.col("tk"), a, F.greatest(b - a + 1,
                                                         F.lit(0)))))
-    out = (t.join(spans, "doc_id", "left")
-           .select("doc_id", n.cast("bigint").alias("n_tokens"),
-                   kept.alias("kept"))
-           .select("doc_id", "n_tokens",
-                   F.size("kept").cast("bigint").alias("kept_tokens"),
-                   (F.col("n_tokens") - F.size("kept")).cast("bigint")
-                    .alias("removed_tokens"),
-                   F.md5(F.concat_ws(" ", "kept")).alias("cleaned_hash")))
-    return finalize(out, *caches)
+    return (t.join(spans, "doc_id", "left")
+            .select("doc_id", n.cast("bigint").alias("n_tokens"),
+                    kept.alias("kept"))
+            .select("doc_id", "n_tokens",
+                    F.size("kept").cast("bigint").alias("kept_tokens"),
+                    (F.col("n_tokens") - F.size("kept")).cast("bigint")
+                     .alias("removed_tokens"),
+                    F.md5(F.concat_ws(" ", "kept")).alias("cleaned_hash")))
 
 
 def _substring_rewrite_oracle() -> str:

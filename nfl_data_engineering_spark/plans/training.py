@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.hashing import h60, h60_sql
 from ..functions.text import tokens
 from ..localdf import local_df
+from ..storage import park_frame, pin, release_frame
 from .base import (QueryDef, drain_memory, event_micros, events_stream,
-                   finalize, load, scratch_dir, scoped_cached_plan_aqe)
+                   load, scratch_dir, scoped_cached_plan_aqe)
 
 # the one DuckDB-side twin of functions.text.tokens(); every oracle that
 # tokenizes MUST use this constant so a tokenizer change can't half-apply
@@ -520,14 +521,14 @@ def _bpe_loop(tok: DataFrame, steps: int):
     Storage discipline: step N's eager checkpoint reads step N-1's, so
     once N materializes, N-1's blocks are dead — released EXPLICITLY via
     the shared storage.CheckpointRotator (the same protocol as the CC
-    min-label loop; one implementation so the two cannot drift — round-8
-    review finding) instead of waiting on the ContextCleaner's GC pace
-    (the py4j-detach race of VERDICT r6 item 1; a BPE_STEPS-deep loop
-    otherwise piles up one pinned checkpoint per round until GC). A
-    mid-loop failure releases every live step checkpoint before
-    propagating. The FINAL table's ids ride back on ``tok._ckpt_ids``:
-    the trainer drops the table and releases them at once; the encoder
-    parks them through finalize."""
+    min-label loop; one implementation so the two cannot drift) instead
+    of waiting on the ContextCleaner's GC pace (a lost py4j detach pins
+    a block for the session's life; a BPE_STEPS-deep loop otherwise
+    piles up one pinned checkpoint per round until GC). A mid-loop
+    failure releases every live step checkpoint before propagating. The
+    FINAL table's ids ride back on ``tok._ckpt_ids``: the trainer drops
+    the table and releases them at once; the encoder parks them
+    (storage.park_frame)."""
     from ..storage import CheckpointRotator
     out_rows = []
     rot = CheckpointRotator(tok.sparkSession)
@@ -601,8 +602,7 @@ def q_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     final_tok, out_rows = _bpe_loop(tok, BPE_STEPS)
     # the trainer reports only the merge log — the final token table's
     # checkpoint is dead on arrival; release it explicitly
-    from ..storage import unpersist_rdd_ids
-    unpersist_rdd_ids(spark, getattr(final_tok, "_ckpt_ids", set()))
+    release_frame(final_tok)
     return local_df(
         spark, out_rows,
         "step int, left_tok string, right_tok string, n_merged bigint")
@@ -630,14 +630,14 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_base_tokens"))
     n_after = encoded.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"))
-    out = (n_before.join(n_after, "doc_id")
-           .select("doc_id", "n_base_tokens", "n_tokens",
-                   F.expr("n_tokens * 1000000 div n_base_tokens")
-                    .alias("compression_ppm")))
-    # the lazy rollup reads the encoded table's final checkpoint:
-    # finalize parks the release of its _ckpt_ids until the next entry
-    # starts or release_deferred()
-    return finalize(out, encoded)
+    # the lazy rollup reads the encoded table's final checkpoint: its
+    # _ckpt_ids stay registered until the next entry starts or
+    # release_deferred()
+    park_frame(encoded)
+    return (n_before.join(n_after, "doc_id")
+            .select("doc_id", "n_base_tokens", "n_tokens",
+                    F.expr("n_tokens * 1000000 div n_base_tokens")
+                     .alias("compression_ppm")))
 
 
 def _bpe_oracle() -> str:
@@ -869,13 +869,12 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation passes, both re-scores — not a proxy. Completes the
     tokenizer-training story next to bpe_merge_train (the reference has
     no tokenizer; parity target is the brief's text-analysis pillar)."""
-    words = _unigram_words(load(spark, sf_dir, "documents")).cache()
+    words = pin(_unigram_words(load(spark, sf_dir, "documents")))
     words.count()    # eager: seed + both E-passes race a lazy cache
     cnt, vocab = _unigram_em(spark, words)
-    out = (cnt.join(vocab, "piece")
-           .select("piece", F.col("c").alias("em_count"),
-                   F.col("lp").alias("logp_nanonats")))
-    return finalize(out, words)
+    return (cnt.join(vocab, "piece")
+            .select("piece", F.col("c").alias("em_count"),
+                    F.col("lp").alias("logp_nanonats")))
 
 
 @scoped_cached_plan_aqe
@@ -890,7 +889,7 @@ def q_unigram_lm_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge list with an off-by-one apply pass is exactly what a
     doc-level count catches, the bpe_encode discipline)."""
     docs = load(spark, sf_dir, "documents")
-    words = _unigram_words(docs).cache()
+    words = pin(_unigram_words(docs))
     words.count()
     _, vocab = _unigram_em(spark, words)
     final = {r["piece"]: r["lp"] for r in vocab.collect()}
@@ -900,14 +899,13 @@ def q_unigram_lm_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id",
                   F.substring("w", 1, UNIGRAM_MAX_WORD).alias("word"))
           .groupBy("doc_id", "word").agg(F.count("*").alias("k")))
-    out = (dw.join(np, "word")
-           .groupBy("doc_id")
-           .agg(F.sum(F.col("k") * F.length("word")).alias("n_chars"),
-                F.sum(F.col("k") * F.col("np")).alias("n_pieces"))
-           .select("doc_id", "n_chars", "n_pieces",
-                   F.expr("n_pieces * 1000000 div n_chars")
-                   .alias("compression_ppm")))
-    return finalize(out, words)
+    return (dw.join(np, "word")
+            .groupBy("doc_id")
+            .agg(F.sum(F.col("k") * F.length("word")).alias("n_chars"),
+                 F.sum(F.col("k") * F.col("np")).alias("n_pieces"))
+            .select("doc_id", "n_chars", "n_pieces",
+                    F.expr("n_pieces * 1000000 div n_chars")
+                    .alias("compression_ppm")))
 
 
 @scoped_cached_plan_aqe
@@ -929,7 +927,7 @@ def q_unigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked angle on one dataflow — plus one vocab join to price
     the pieces."""
     docs = load(spark, sf_dir, "documents")
-    words = _unigram_words(docs).cache()
+    words = pin(_unigram_words(docs))
     words.count()
     _, vocab = _unigram_em(spark, words)
     final = {r["piece"]: r["lp"] for r in vocab.collect()}
@@ -947,13 +945,12 @@ def q_unigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum(F.col("k") * F.col("nll")).alias("nll_nanonats")))
     tot = stats.agg(F.sum("nll_nanonats").alias("tn"),
                     F.sum("n_pieces").alias("tp"))
-    out = (stats.crossJoin(tot)   # 1-row corpus total: bounded
-           .select("doc_id", "n_pieces", "nll_nanonats",
-                   F.expr("nll_nanonats div n_pieces")
-                   .alias("avg_nll_nanonats"),
-                   F.expr("CASE WHEN nll_nanonats * tp <= tn * n_pieces "
-                          "THEN 1 ELSE 0 END").cast("bigint").alias("kept")))
-    return finalize(out, words)
+    return (stats.crossJoin(tot)   # 1-row corpus total: bounded
+            .select("doc_id", "n_pieces", "nll_nanonats",
+                    F.expr("nll_nanonats div n_pieces")
+                    .alias("avg_nll_nanonats"),
+                    F.expr("CASE WHEN nll_nanonats * tp <= tn * n_pieces "
+                           "THEN 1 ELSE 0 END").cast("bigint").alias("kept")))
 
 
 def _unigram_oracle() -> tuple[str, str, str]:
@@ -1774,14 +1771,14 @@ def q_token_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) and re-aggregated for the source totals, global counts, and
     grand total; then one vocab-sized equi-join + two broadcasts. The
     first cut ran the tokenizer explode four times — once per derived
-    aggregate plus an eager driver count (round-9 review finding); at
+    aggregate plus an eager driver count; at
     the design point that is three extra full-corpus scans. No window,
     no skew key — 'the' is one row per source after the first
     aggregate."""
     docs = load(spark, sf_dir, "documents")
     terms = docs.select("source",
                         F.explode(tokens(F.col("text"))).alias("token"))
-    st = terms.groupBy("source", "token").agg(F.count("*").alias("c")).cache()
+    st = pin(terms.groupBy("source", "token").agg(F.count("*").alias("c")))
     st.count()   # eager: four derived consumers race a lazy cache
     stot = st.groupBy("source").agg(F.sum("c").alias("ns"))
     g = st.groupBy("token").agg(F.sum("c").alias("cg"))
@@ -1791,13 +1788,12 @@ def q_token_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     val = (st.join(g, "token").join(F.broadcast(stot), "source")
            .crossJoin(F.broadcast(tot))
            .withColumn("iv", F.round(p * F.log(p / q) * 1e9).cast("bigint")))
-    out = (val.groupBy("source")
-           .agg(F.max("ns").alias("n_tokens"),
-                F.count("*").alias("vocab_size"),
-                F.sum("iv").alias("s"))
-           .select("source", "n_tokens", "vocab_size",
-                   F.round(F.col("s") / 1e9, 6).alias("kl_nats")))
-    return finalize(out, st)
+    return (val.groupBy("source")
+            .agg(F.max("ns").alias("n_tokens"),
+                 F.count("*").alias("vocab_size"),
+                 F.sum("iv").alias("s"))
+            .select("source", "n_tokens", "vocab_size",
+                    F.round(F.col("s") / 1e9, 6).alias("kl_nats")))
 
 
 def _oracle_token_kl() -> str:

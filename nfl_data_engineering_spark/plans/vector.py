@@ -17,7 +17,8 @@ from ..functions.similarity import (brute_force_topk, candidate_pairs, cosine,
                                     cosine_arrow, dot, guard_allpairs,
                                     l2_normed, verify_cosine)
 from ..localdf import local_df
-from .base import QueryDef, finalize, load, recall_ppm, sql_recall_ppm
+from ..storage import park_frame, pin, stage
+from .base import QueryDef, load, recall_ppm, sql_recall_ppm
 from .textops import sql_component_ctes
 
 TOPK = 5
@@ -75,7 +76,7 @@ def _ivf_probe_topk(spark: SparkSession, sf_dir: str, nprobe: int,
     against the tiny centroid table), scan ONLY those cells (broadcast
     equi-join against the cell-bucketed corpus), rank globally across the
     probed cells with the pinned (score desc, vec_id) order."""
-    emb = load(spark, sf_dir, "embeddings").cache()
+    emb = pin(load(spark, sf_dir, "embeddings"))
     cents = exact_label_centroids(emb)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
@@ -92,10 +93,9 @@ def _ivf_probe_topk(spark: SparkSession, sf_dir: str, nprobe: int,
     scored = pairs.select(
         *out_cols, cosine(F.col("embedding"), F.col("q_vec")).alias("score"))
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return finalize(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select(*out_cols, "rank", F.round("score", 6).alias("score")), emb)
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOPK)
+            .select(*out_cols, "rank", F.round("score", 6).alias("score")))
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,12 +269,10 @@ def q_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with/aggregate form, because an unrolled 64-term sum exceeds the
     codegen method-size limit and drops the stage to interpreted eval
     (measured 4x slower)."""
-    caches: list[DataFrame] = []
     verified = _vector_srp_join(load(spark, sf_dir, "embeddings"),
-                                SRP_THRESHOLD, caches)
-    return finalize(
-        verified.select(F.col("id1").alias("v1"), F.col("id2").alias("v2"),
-                        F.round("score", 6).alias("cosine")), *caches)
+                                SRP_THRESHOLD)
+    return verified.select(F.col("id1").alias("v1"), F.col("id2").alias("v2"),
+                           F.round("score", 6).alias("cosine"))
 
 
 def _srp_bands(emb: DataFrame, bits: int) -> DataFrame:
@@ -316,8 +314,7 @@ def _srp_bands(emb: DataFrame, bits: int) -> DataFrame:
             .select("vec_id", F.posexplode("ks").alias("band", "band_key")))
 
 
-def _vector_srp_join(vecs: DataFrame, threshold: float,
-                     caches: list[DataFrame]) -> DataFrame:
+def _vector_srp_join(vecs: DataFrame, threshold: float) -> DataFrame:
     """SRP-LSH candidates -> exact-cosine verify over a (vec_id,
     embedding) frame; returns (id1, id2, score) with score >=
     ``threshold``. The band width is corpus-adaptive (srp_bits): the
@@ -325,15 +322,12 @@ def _vector_srp_join(vecs: DataFrame, threshold: float,
     constant baked into the sketch UDF — only the oracle computes it in
     SQL. The bands are cached because both candidate sides read them
     (uncached, the hyperplane sketch recomputes per side); the norms are
-    cached for the two verify sides. Both are appended to ``caches``
-    for the caller to release."""
+    cached for the two verify sides. Both are pinned (storage.pin)."""
     bits = srp_bits(vecs.count())
-    bands = _srp_bands(vecs, bits).cache()
-    caches.append(bands)
+    bands = pin(_srp_bands(vecs, bits))
     cand = candidate_pairs(bands, "vec_id", ["band", "band_key"],
                            "id1", "id2")
-    normed = l2_normed(vecs).cache()
-    caches.append(normed)
+    normed = pin(l2_normed(vecs))
     return verify_cosine(normed, threshold, "id1", "id2", cand)
 
 
@@ -348,16 +342,14 @@ def q_embedding_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence sum). Oracle: DuckDB recursive CTE over the identical
     pair graph."""
     from ..operators.dedup import connected_components
-    caches: list[DataFrame] = []
-    pairs = _vector_srp_join(load(spark, sf_dir, "embeddings"),
-                             SRP_THRESHOLD, caches)
-    labels = connected_components(pairs, "id1", "id2")
-    for c in caches:     # labels checkpointed -> caches out of lineage
-        c.unpersist()
-    out = (labels.groupBy(F.col("label").alias("component"))
-           .agg(F.count("*").alias("n_vecs"),
-                F.max("n").alias("max_vec_id")))
-    return finalize(out, labels)
+    with stage():        # labels checkpointed -> caches out of lineage
+        pairs = _vector_srp_join(load(spark, sf_dir, "embeddings"),
+                                 SRP_THRESHOLD)
+        labels = connected_components(pairs, "id1", "id2")
+    park_frame(labels)
+    return (labels.groupBy(F.col("label").alias("component"))
+            .agg(F.count("*").alias("n_vecs"),
+                 F.max("n").alias("max_vec_id")))
 
 
 def _srp_band_ctes() -> str:
@@ -440,7 +432,7 @@ def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     is_eval = F.col("vec_id") % 5 == 0
     bits = srp_bits(emb.count())
-    bands = _srp_bands(emb, bits).cache()
+    bands = pin(_srp_bands(emb, bits))
     cand = candidate_pairs(bands, "vec_id", ["band", "band_key"], "vt", "vr",
                            probe=is_eval)
     # norms deliberately uncached: each vector is scored on one side only
@@ -448,14 +440,13 @@ def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("vt")
             .agg(F.count("*").alias("nh"), F.min("vr").alias("ref")))
     tests = emb.filter(is_eval).select("vec_id")
-    return finalize(
-        tests.join(hits.withColumnRenamed("vt", "vec_id"),
-                   "vec_id", "left")
-        .select("vec_id",
-                F.coalesce("nh", F.lit(0)).alias("n_train_hits"),
-                F.coalesce("ref", F.lit(-1)).alias("ref_vec_id"),
-                F.col("nh").isNotNull().cast("int")
-                .alias("is_contaminated")), bands)
+    return (tests.join(hits.withColumnRenamed("vt", "vec_id"),
+                       "vec_id", "left")
+            .select("vec_id",
+                    F.coalesce("nh", F.lit(0)).alias("n_train_hits"),
+                    F.coalesce("ref", F.lit(-1)).alias("ref_vec_id"),
+                    F.col("nh").isNotNull().cast("int")
+                    .alias("is_contaminated")))
 
 
 def _oracle_semantic_contamination() -> str:
@@ -499,11 +490,10 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "lsh_recall_audit exact side")
     exact = (verify_cosine(l2_normed(emb), SRP_THRESHOLD, "v1", "v2")
              .agg(F.count("*").alias("n_exact")))
-    caches: list[DataFrame] = []
     lsh = (_vector_srp_join(load(spark, sf_dir, "embeddings"),
-                            SRP_THRESHOLD, caches)
+                            SRP_THRESHOLD)
            .agg(F.count("*").alias("n_lsh")))
-    return finalize(recall_ppm(exact, lsh, "n_exact", "n_lsh"), *caches)
+    return recall_ppm(exact, lsh, "n_exact", "n_lsh")
 
 
 ORACLE_LSH_RECALL = f"""
@@ -607,7 +597,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to integer nano-units so the 4-part sum is order-free, and
     ranking orders by the integer sum itself."""
     import numpy as np
-    emb = load(spark, sf_dir, "embeddings").cache()
+    emb = pin(load(spark, sf_dir, "embeddings"))
     cent_rows = (emb.select("label", F.posexplode("embedding")
                             .alias("d", "v"))
                  .groupBy("label", "d")
@@ -669,11 +659,10 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.sum(F.round(F.col("part") * 1e9).cast("bigint"))
                    .alias("s")))
     w = Window.partitionBy("q_id").orderBy(F.col("s").desc(), F.col("vec_id"))
-    return finalize(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("q_id", "vec_id", "rank",
-                F.round(F.col("s") / 1e9, 6).alias("approx_dot")), emb)
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOPK)
+            .select("q_id", "vec_id", "rank",
+                    F.round(F.col("s") / 1e9, 6).alias("approx_dot")))
 
 
 _SQL_PQ_CTES = f"""u AS (
@@ -884,18 +873,16 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cs DESC, cl); centroids go through exact decimal sums +
     round(6); the reported mean cosine quantizes each addend to integer
     nano-units BEFORE summing (order-free)."""
-    emb = (load(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding").cache())
+    emb = pin(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     cents = [(r["vec_id"], list(r["embedding"]))
              for r in emb.filter(F.col("vec_id") < KMEANS_K).collect()]
     for _ in range(KMEANS_REFITS):
         cents = _kmeans_recenter(_kmeans_assign(emb, cents))
     final = _kmeans_assign(emb, cents)
-    return finalize(
-        final.groupBy(F.col("cl").alias("cluster"))
-        .agg(F.count("*").alias("n_members"),
-             F.round(F.sum(F.round(F.col("cs") * 1e9).cast("bigint"))
-                     / 1e9 / F.count("*"), 6).alias("avg_cos")), emb)
+    return (final.groupBy(F.col("cl").alias("cluster"))
+            .agg(F.count("*").alias("n_members"),
+                 F.round(F.sum(F.round(F.col("cs") * 1e9).cast("bigint"))
+                         / 1e9 / F.count("*"), 6).alias("avg_cos")))
 
 
 def _kmeans_cte_parts(k_sql: str = str(KMEANS_K)) -> list[str]:
@@ -1074,10 +1061,9 @@ def _fine_recenter(assigned: DataFrame) -> DataFrame:
 
 
 def _semdedup_two_level(emb: DataFrame, k: int,
-                        cluster_size: int | None = None,
-                        ) -> tuple[DataFrame, DataFrame]:
+                        cluster_size: int | None = None) -> DataFrame:
     """SemDeDup's scaling path for derived K past the driver-broadcast
-    gate (VERDICT r8 item 4): cluster the corpus COARSELY with
+    gate: cluster the corpus COARSELY with
     k1 = ceil(sqrt(K)) driver-held centroids (the proven q_kmeans
     dataflow), then run an independent fine Lloyd WITHIN each coarse
     cell, entirely distributed:
@@ -1093,23 +1079,21 @@ def _semdedup_two_level(emb: DataFrame, k: int,
     Vectors never change coarse cell, so the fine problem is
     embarrassingly parallel across cells; cross-CELL near-dups are
     missed by the same documented design trade as cross-cluster ones in
-    the single-level path. Returns (final (vec_id, embedding, cl) with
-    cl = fine seed vec_id — the same id scheme as the single level — and
-    the coarse cache for the caller to release).
+    the single-level path. Returns the final (vec_id, embedding, cl)
+    with cl = fine seed vec_id — the same id scheme as the single level;
+    the coarse assignment is pinned (storage.pin).
 
     ``cluster_size`` (None -> the production SEMDEDUP_CLUSTER_SIZE)
     parametrizes the per-cell fine-seed ceiling so the driver-checked
     q_semantic_dedup_twolevel entry can pin a SMALL target and make the
-    fine level genuinely refine at catalog scale factors (VERDICT r10
-    item 4)."""
+    fine level genuinely refine at catalog scale factors."""
     k1 = _semdedup_coarse_k(k)
     cents = [(r["vec_id"], list(r["embedding"]))
              for r in emb.filter(F.col("vec_id") < k1).collect()]
     for _ in range(KMEANS_REFITS):
         cents = _kmeans_recenter(_kmeans_assign(emb, cents))
-    coarse = (_kmeans_assign(emb, cents)
-              .select("vec_id", "embedding", F.col("cl").alias("ccl"))
-              .cache())
+    coarse = pin(_kmeans_assign(emb, cents)
+                 .select("vec_id", "embedding", F.col("cl").alias("ccl")))
     coarse.count()   # eager: the fine passes reference it repeatedly
     size = SEMDEDUP_CLUSTER_SIZE if cluster_size is None else cluster_size
     seeded = (coarse
@@ -1118,7 +1102,8 @@ def _semdedup_two_level(emb: DataFrame, k: int,
               .withColumn("__rn", F.row_number().over(
                   Window.partitionBy("ccl").orderBy("vec_id"))))
     # integer ceiling division via `div` — the same arithmetic as the
-    # oracle's `//` and _semdedup_k's -(-n // size) (ADVICE r7 doctrine)
+    # oracle's `//` and _semdedup_k's -(-n // size): integer, never a
+    # float ceil
     k2 = F.greatest(F.lit(1).cast("bigint"),
                     F.expr(f"(__cnt + {size - 1}) div {size}"))
     fcents = (seeded.filter(F.col("__rn") <= k2)
@@ -1126,9 +1111,8 @@ def _semdedup_two_level(emb: DataFrame, k: int,
                       F.col("embedding").alias("cent")))
     for _ in range(KMEANS_REFITS):
         fcents = _fine_recenter(_fine_assign_pass(coarse, fcents))
-    final = (_fine_assign_pass(coarse, fcents)
-             .select("vec_id", "embedding", F.col("fcl").alias("cl")))
-    return final, coarse
+    return (_fine_assign_pass(coarse, fcents)
+            .select("vec_id", "embedding", F.col("fcl").alias("cl")))
 
 
 def _semdedup_pair_kernel(threshold: float):
@@ -1179,26 +1163,26 @@ def _semdedup_pair_kernel(threshold: float):
     return fn
 
 
-def _semdedup_survivors(final: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _semdedup_survivors(final: DataFrame) -> DataFrame:
     """Shared SemDeDup tail over a final (vec_id, embedding, cl)
     assignment: within-cluster Arrow pairwise kernel at
     SEMDEDUP_THRESHOLD -> connected components -> per-vector survivor
-    table (vec_id, cluster, canonical_vec_id, is_survivor). One copy
-    serves the single-level entry and the two-level entry — a drifting
-    copy would silently verify a different dedup contract (the
-    round-9 shared-tail doctrine)."""
+    table (vec_id, cluster, canonical_vec_id, is_survivor); the
+    component labels are parked (storage.park_frame). One copy serves
+    the single-level entry and the two-level entry — a drifting copy
+    would silently verify a different dedup contract."""
     from ..operators.dedup import connected_components
     pairs = final.groupBy("cl").applyInPandas(
         _semdedup_pair_kernel(float(SEMDEDUP_THRESHOLD)),
         "v1 long, v2 long")
     labels = connected_components(pairs, "v1", "v2")
+    park_frame(labels)
     canon = F.coalesce(F.col("label"), F.col("vec_id"))
-    out = (final.select("vec_id", F.col("cl").alias("cluster"))
-           .join(labels.withColumnRenamed("n", "vec_id"), "vec_id", "left")
-           .select("vec_id", "cluster", canon.alias("canonical_vec_id"),
-                   (canon == F.col("vec_id")).cast("int")
-                    .alias("is_survivor")))
-    return out, labels
+    return (final.select("vec_id", F.col("cl").alias("cluster"))
+            .join(labels.withColumnRenamed("n", "vec_id"), "vec_id", "left")
+            .select("vec_id", "cluster", canon.alias("canonical_vec_id"),
+                    (canon == F.col("vec_id")).cast("int")
+                     .alias("is_survivor")))
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1235,28 +1219,22 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seeded by the K lowest vec_ids, exact-decimal recenter, argmax tie
     to lowest cluster id); pair cosine is the sequential fold both
     engines share; canonical = component-minimum vec_id."""
-    emb = (load(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding").cache())
+    emb = pin(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     k = _semdedup_k(emb.count())
-    caches = [emb]
     if k <= SEMDEDUP_MAX_K:
         cents = [(r["vec_id"], list(r["embedding"]))
                  for r in emb.filter(F.col("vec_id") < k).collect()]
         for _ in range(KMEANS_REFITS):
             cents = _kmeans_recenter(_kmeans_assign(emb, cents))
-        final = (_kmeans_assign(emb, cents)
-                 .select("vec_id", "embedding", "cl").cache())
+        final = pin(_kmeans_assign(emb, cents)
+                    .select("vec_id", "embedding", "cl"))
     else:
         # centroid table past the driver/broadcast budget: two-level
         # clustering (coarse driver-held, fine distributed) — the gate
-        # comment's escape hatch, now real (VERDICT r8 item 4)
-        fine, coarse = _semdedup_two_level(emb, k)
-        caches.append(coarse)
-        final = fine.cache()
+        # comment's escape hatch
+        final = pin(_semdedup_two_level(emb, k))
     final.count()   # eager: pair kernel + survivor join race a lazy cache
-    caches.append(final)
-    out, labels = _semdedup_survivors(final)
-    return finalize(out, labels, *caches)
+    return _semdedup_survivors(final)
 
 
 def _semdedup_tail(assign_rel: str, threshold: float) -> str:
@@ -1382,7 +1360,7 @@ _SEMDEDUP_TL_K1_SQL = f"""(
 
 def q_semantic_dedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TWO-LEVEL SemDeDup path as a driver-checked catalog entry
-    (VERDICT r10 item 4: the 500k-centroid gate means q_semantic_dedup's
+    (the 500k-centroid gate means q_semantic_dedup's
     two-level branch never executes at catalog SF — only the forced
     monkeypatch unit test exercised it, outside the driver's oracle).
     Same contract as q_semantic_dedup (per-vector survivor table), but
@@ -1401,15 +1379,12 @@ def q_semantic_dedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors; at the production gate crossing it is ~2500*sqrt(K) per
     coarse cell — both bounded, both distributed. The entry's purpose
     is correctness attestation of the scale path, not speed at sf0.1."""
-    emb = (load(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding").cache())
+    emb = pin(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     k = _semdedup_k(emb.count(), SEMDEDUP_TL_CLUSTER_SIZE)
-    fine, coarse = _semdedup_two_level(
-        emb, k, cluster_size=SEMDEDUP_TL_CLUSTER_SIZE)
-    final = fine.cache()
+    final = pin(_semdedup_two_level(
+        emb, k, cluster_size=SEMDEDUP_TL_CLUSTER_SIZE))
     final.count()   # eager: pair kernel + survivor join race a lazy cache
-    out, labels = _semdedup_survivors(final)
-    return finalize(out, labels, emb, coarse, final)
+    return _semdedup_survivors(final)
 
 
 ORACLE_SEMANTIC_DEDUP_TWOLEVEL = _semdedup_two_level_oracle(

@@ -71,6 +71,10 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # the console progress bar writes into the same terminal stream
+        # as the tools' line-oriented output (parity's OK/FAIL lines)
+        # and splits those lines; the Spark UI keeps the progress
+        .config("spark.ui.showConsoleProgress", "false")
         # bucketed-table writes (io.write_bucketed) need a warehouse; keep
         # it out of the repo tree
         .config("spark.sql.warehouse.dir",

@@ -7,23 +7,29 @@ deliver the wrapper's detach message, so it is GC-paced and can lose a
 detach, pinning one block for the session's life (seen about once per
 three full-suite runs before this ledger existed).
 
-One ledger takes the GC out of the path: ``plans.base.finalize`` parks
-one release action per held frame (a cache, or a checkpointed helper's
-``_ckpt_ids``), and ``release_parked()`` — called through
-``plans.base.release_deferred()`` before each entry
-``registry.queries()`` hands out and by every catalog runner between
-entries — runs them all. Whatever an entry pins lives until the next
-entry starts or the runner's next ``release_deferred()``.
+One ledger takes the GC out of the path. A frame's lifetime is declared
+where the frame is made: ``pin(df)`` caches it and parks its release on
+the ledger in the same call, and ``park_frame`` parks a checkpointed
+helper's ``_ckpt_ids`` (the CC labels, the BPE token table).
+``release_parked()`` — called through ``plans.base.release_deferred()``
+before each entry ``registry.queries()`` hands out and by every catalog
+runner between entries — runs them all, so whatever an entry pins lives
+until the next entry starts or the runner's next ``release_deferred()``,
+also when the entry raised before returning. A ``stage()`` block
+releases what was parked inside it on exit, for caches that are dead
+before the entry returns (the pair caches once connected components
+has checkpointed its labels, one family's caches at a staging barrier).
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-# (session, release action returning the storage entries it freed)
-_LEDGER: list[tuple[object, Callable[[], int]]] = []
+# the held frames whose release (release_frame) is parked
+_LEDGER: list[DataFrame] = []
 
 
 def registry_rdd_ids(spark) -> set[int]:
@@ -128,22 +134,52 @@ def release_frame(df: DataFrame) -> int:
 
 def park_frame(df: DataFrame) -> None:
     """Park a held frame's release (release_frame) on the ledger."""
-    _LEDGER.append((df.sparkSession, lambda: release_frame(df)))
+    _LEDGER.append(df)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Cache ``df`` and park the release of that exact cached frame;
+    returns it. Submits no job: the cache fills on its first action."""
+    cached = df.cache()
+    park_frame(cached)
+    return cached
+
+
+def _release(frames: list[DataFrame]) -> tuple[int, list[DataFrame]]:
+    """Release each frame; returns how many storage entries were freed
+    and the frames to keep parked. A frame stays parked only when its
+    release fails on a LIVE session (dropping it on a transient py4j
+    error would leak its blocks for the session's lifetime); on a
+    stopped session the blocks died with the JVM and it is dropped."""
+    n = 0
+    keep: list[DataFrame] = []
+    for df in frames:
+        try:
+            n += release_frame(df)
+        except Exception:
+            if not _session_stopped(df.sparkSession):
+                keep.append(df)
+    return n, keep
 
 
 def release_parked() -> int:
-    """Run every ledger action; returns how many storage entries were
-    freed. An action stays parked only when it fails on a LIVE session
-    (dropping it on a transient py4j error would leak its blocks for the
-    session's lifetime); on a stopped session the blocks died with the
-    JVM and the action is dropped."""
-    n = 0
-    keep: list[tuple[object, Callable[[], int]]] = []
-    for spark, release in _LEDGER:
-        try:
-            n += release()
-        except Exception:
-            if not _session_stopped(spark):
-                keep.append((spark, release))
+    """Release every parked frame; returns how many storage entries
+    were freed (failed releases stay parked, see _release)."""
+    n, keep = _release(_LEDGER)
     _LEDGER[:] = keep
     return n
+
+
+@contextmanager
+def stage() -> Iterator[None]:
+    """On exit, normal or raising, release exactly the frames parked
+    inside the block; what was parked before it stays parked. A frame
+    another driver thread parks meanwhile counts as inside, so stages
+    run on single-threaded paths only (as every stage here does)."""
+    mark = len(_LEDGER)
+    try:
+        yield
+    finally:
+        inside = _LEDGER[mark:]
+        del _LEDGER[mark:]
+        _LEDGER.extend(_release(inside)[1])

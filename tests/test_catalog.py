@@ -1,7 +1,7 @@
 """CATALOG.md (the generated catalog index) must stay in sync with
 plans/registry.py — a new/renamed/moved entry that isn't regenerated
-turns the suite red here. Every column (name, family, file:line, oracle
-kind, bench pin) is derived live from the registry."""
+turns the suite red here. Every column (name, family, file::function,
+oracle kind, bench pin) is derived live from the registry."""
 
 from __future__ import annotations
 

@@ -1,10 +1,10 @@
-"""Full-catalog endurance proof for the storage ledger (plans/base.py
-finalize / release_deferred): run EVERY catalog entry in ONE
+"""Full-catalog endurance proof for the storage ledger (storage.pin /
+plans.base.release_deferred): run EVERY catalog entry in ONE
 SparkSession, the way the external driver and a long-lived service
 would, and assert the session ends with zero leaked storage:
 
 * the CacheManager must be empty — a q_* that caches an intermediate
-  and never hands it to finalize() pins it for the session's lifetime;
+  without storage.pin pins it for the session's lifetime;
 * no persisted RDD the catalog created may remain in the block registry
   after the last release_deferred() — whatever an entry pins lives
   until the runner's next release_deferred(), with no GC in the path.
@@ -76,8 +76,8 @@ def test_full_catalog_single_session_releases_all_storage(spark, sf_dir):
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), (
         "CacheManager entries leaked past their catalog entry — some q_* "
-        "caches an intermediate without routing it through finalize()'s "
-        "caches list / release_deferred()")
+        "caches an intermediate without storage.pin, so "
+        "release_deferred() never releases it")
 
     # 2) the last release_deferred() freed every registry id the catalog
     # created — no gc.collect(), no System.gc(), no poll

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nfl_data_engineering_spark.functions.hashing import h60
-from nfl_data_engineering_spark.plans.base import load
+from nfl_data_engineering_spark.plans.base import load, release_deferred
 from nfl_data_engineering_spark.plans.registry import _BY_NAME
 from nfl_data_engineering_spark.plans.textops import _star_verified_pairs
 from nfl_data_engineering_spark.operators.dedup import connected_components
@@ -22,10 +22,9 @@ def test_no_cluster_spans_splits(spark, sf_dir):
     coalesce(label, doc_id), h60 bucket -> split), then checked against
     the raw EDGES rather than the component labels — grouping by label
     and asserting one split per label would be true by construction
-    (split is a pure function of label; ADVICE r6). The edge form fails
+    (split is a pure function of label). The edge form fails
     if component labeling ever gives two linked docs different labels."""
-    caches = []
-    edges = _star_verified_pairs(spark, sf_dir, caches)
+    edges = _star_verified_pairs(spark, sf_dir)
     labels = connected_components(edges, "d1", "d2")
     docs = load(spark, sf_dir, "documents").select("doc_id")
     canon = F.coalesce(F.col("label"), F.col("doc_id"))
@@ -42,8 +41,7 @@ def test_no_cluster_spans_splits(spark, sf_dir):
                   .join(per_doc.select(F.col("doc_id").alias("d2"),
                                        F.col("split").alias("s2")), "d2")
                   .filter(F.col("s1") != F.col("s2")).count())
-    for c in caches:
-        c.unpersist()
+    release_deferred()
     assert straddlers == 0
 
 

@@ -100,17 +100,12 @@ def test_families_match_standalone_entries(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    caches = []
-    mh = _pairs(similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD,
-                                caches=caches))
+    mh = _pairs(similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD))
     pf = _pairs(similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD,
-                                exact=True, caches=caches))
+                                exact=True))
     hm = _pairs(similarity_join(docs, "doc_id", "text", SIMHASH_MAX_HAMMING,
-                                metric="hamming", caches=caches))
-    sp = _pairs(similarity_join(emb, "vec_id", "embedding", SRP_THRESHOLD,
-                                caches=caches))
-    for c in caches:
-        c.unpersist()
+                                metric="hamming"))
+    sp = _pairs(similarity_join(emb, "vec_id", "embedding", SRP_THRESHOLD))
     release_deferred()
 
     ref_mh = {(r["d1"], r["d2"]) for r in
@@ -140,11 +135,8 @@ def test_oph_sketch_route(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    caches = []
     oph = _pairs(similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD,
-                                 caches=caches, sketch="oph"))
-    for c in caches:
-        c.unpersist()
+                                 sketch="oph"))
     release_deferred()
     ref = {(r["d1"], r["d2"]) for r in
            _BY_NAME["dedup_minhash_oph"].spark(spark, sf_dir).collect()}
@@ -171,7 +163,7 @@ def test_oph_sketch_route(spark, sf_dir):
 
 
 def test_auto_sketch_routes_on_corpus_shape(spark, sf_dir):
-    """VERDICT r9 item 3: sketch='auto' (now the default) must route on
+    """sketch='auto' (the default) must route on
     the measured avg shingles/doc vs the K*ln(K) slot-fill cutover —
     k-draw below it (short fragments, densification-correlation regime),
     OPH at/above it (long docs, slots full). Pin the router both ways on
@@ -214,13 +206,9 @@ def test_auto_sketch_routes_on_corpus_shape(spark, sf_dir):
         [(1, base), (2, base), (3, " ".join(
             rng.choice(words) for _ in range(320)))],
         "doc_id int, text string")
-    caches = []
-    auto = _pairs(similarity_join(docs2, "doc_id", "text", 0.8,
-                                  caches=caches))
+    auto = _pairs(similarity_join(docs2, "doc_id", "text", 0.8))
     oph = _pairs(similarity_join(docs2, "doc_id", "text", 0.8,
-                                 caches=caches, sketch="oph"))
-    for c in caches:
-        c.unpersist()
+                                 sketch="oph"))
     release_deferred()
     assert auto == oph == {(1, 2)}
 
@@ -259,12 +247,12 @@ def test_staged_equals_monolithic_union(spark, sf_dir):
 
 
 def test_staged_shared_shingles_passthrough(spark, sf_dir):
-    """VERDICT r9 item 6: text specs can share ONE precomputed cached
-    shingle frame (trading the per-family re-shingle scan for a pinned
-    cache that lives across the staging barriers). Results must be
-    identical to the re-shingling form, and the caller-owned frame must
-    still be cached (no family's finalize released it) until the caller
-    releases it."""
+    """Text specs can share ONE precomputed cached shingle frame
+    (trading the per-family re-shingle scan for a pinned cache that
+    lives across the staging barriers). Results must be identical to
+    the re-shingling form, and the caller-owned frame must still be
+    cached (no family's stage released it) until the caller releases
+    it."""
     from pyspark.storagelevel import StorageLevel
 
     from nfl_data_engineering_spark.functions.text import (
@@ -300,23 +288,34 @@ def test_staged_shared_shingles_passthrough(spark, sf_dir):
 
 
 def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
-    """When similarity_join_staged returns, every family's own caches are
+    """When similarity_join_staged returns, every family's own pins are
     already unpersisted (each family ran to completion behind its
     barrier) and only the parked parts stay cached, until the next
     release_deferred()."""
+    import sys
+
     from pyspark.storagelevel import StorageLevel
 
+    from nfl_data_engineering_spark import storage
     from nfl_data_engineering_spark.plans import similarity_api as api
     from nfl_data_engineering_spark.storage import registry_rdd_ids
 
-    family_caches, parts = [], []
-    join, park = api.similarity_join, api.park_frame
+    family_pins, parts = [], []
+    join, pin, park = api.similarity_join, storage.pin, api.park_frame
 
     def spy_join(*a, **kw):
-        family_caches.append(kw["caches"])
+        family_pins.append([])
         return join(*a, **kw)
 
+    def spy_pin(df):
+        family_pins[-1].append(pin(df))
+        return family_pins[-1][-1]
+
     monkeypatch.setattr(api, "similarity_join", spy_join)
+    # every module that imported storage.pin calls it by its own name
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "pin", None) is pin:
+            monkeypatch.setattr(mod, "pin", spy_pin)
     monkeypatch.setattr(api, "park_frame",
                         lambda df: (parts.append(df), park(df)))
     release_deferred()
@@ -330,10 +329,10 @@ def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
          "col": "text", "threshold": SIMHASH_MAX_HAMMING,
          "metric": "hamming"},
     ])
-    assert len(family_caches) == 2 and all(family_caches)
+    assert len(family_pins) == 2 and all(family_pins)
     assert all(c.storageLevel == StorageLevel.NONE
-               for caches in family_caches for c in caches), \
-        "a family's caches must be released at its barrier"
+               for pins in family_pins for c in pins), \
+        "a family's pins must be released at its barrier"
     assert len(parts) == 2
     assert all(p.storageLevel != StorageLevel.NONE for p in parts)
     assert len(registry_rdd_ids(spark) - before) == len(parts), \
@@ -355,11 +354,8 @@ def test_staged_single_spec_no_self_cycle(spark, sf_dir):
         {"family": "jaccard_minhash", "df": docs, "id_col": "doc_id",
          "col": "text", "threshold": JACCARD_THRESHOLD}])
     got = {(r["id1"], r["id2"]) for r in staged.collect()}
-    caches = []
     want = _pairs(similarity_join(docs, "doc_id", "text",
-                                  JACCARD_THRESHOLD, caches=caches))
-    for c in caches:
-        c.unpersist()
+                                  JACCARD_THRESHOLD))
     release_deferred()
     assert got == want
 
@@ -381,7 +377,7 @@ def test_bench_reps_arg_parsing():
 
 
 def test_containment_dispatch(spark, sf_dir):
-    """metric='containment' (VERDICT r11 item 2): the one ASYMMETRIC
+    """metric='containment': the one ASYMMETRIC
     family through the front door. Ordered (id1=sub, id2=super) pairs
     must equal the standalone q_containment_join entry's pair set at
     the same gate; exact= is accepted either way (the kernel is always
@@ -401,17 +397,13 @@ def test_containment_dispatch(spark, sf_dir):
     with pytest.raises(ValueError, match="sketch="):
         similarity_join(docs, "doc_id", "text", t, metric="containment",
                         sketch="oph")
-    caches = []
     got = {(r["id1"], r["id2"]) for r in
            similarity_join(docs, "doc_id", "text", t,
-                           metric="containment", caches=caches).collect()}
+                           metric="containment").collect()}
     # exact=True promises losslessness, which is what always runs
     got_exact = {(r["id1"], r["id2"]) for r in
                  similarity_join(docs, "doc_id", "text", t,
-                                 metric="containment", exact=True,
-                                 caches=caches).collect()}
-    for c in caches:
-        c.unpersist()
+                                 metric="containment", exact=True).collect()}
     release_deferred()
     ref = {(r["sub_doc_id"], r["super_doc_id"]) for r in
            _BY_NAME["containment_join"].spark(spark, sf_dir).collect()}

@@ -7,15 +7,19 @@ _sql_verify_tail). The streaming entries' memory-sink drain and the
 entries' scratch-dir tag live in one helper each (plans/base.py:
 drain_memory, scratch_dir). A hand-written copy could drift and
 silently verify a different truth than the one every other entry
-uses."""
+uses. A cache under plans/ and operators/ is made only by storage.pin,
+which parks its release where the cache is made; the one exception is
+the staged barrier's part, parked once its family's stage has
+released the family's pins."""
 
 from __future__ import annotations
 
 import pathlib
 import re
 
-PLANS = (pathlib.Path(__file__).resolve().parents[1]
-         / "nfl_data_engineering_spark" / "plans")
+PACKAGE = (pathlib.Path(__file__).resolve().parents[1]
+           / "nfl_data_engineering_spark")
+PLANS = PACKAGE / "plans"
 
 # Spark kernels: no copy at all under plans/
 COPIES = {
@@ -42,6 +46,10 @@ SCAFFOLD = {
     "scratch-dir tag": re.compile(r"hashlib\.md5\(\s*sf_dir\b"),
 }
 
+# a bare cache: allowed under plans/ and operators/ only as ALLOWED_CACHE
+BARE_CACHE = re.compile(r"\.(?:cache\(\)|persist\()")
+ALLOWED_CACHE = {("similarity_api.py", "part = tagged.cache()")}
+
 
 def _matches(pat: re.Pattern) -> list[str]:
     found = []
@@ -51,6 +59,19 @@ def _matches(pat: re.Pattern) -> list[str]:
             line = src.count("\n", 0, m.start()) + 1
             found.append(f"{path.name}:{line}")
     return found
+
+
+def test_caches_are_made_by_pin():
+    found = []
+    for path in sorted([*PLANS.glob("*.py"),
+                        *(PACKAGE / "operators").glob("*.py")]):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if (BARE_CACHE.search(line)
+                    and (path.name, line.strip()) not in ALLOWED_CACHE):
+                found.append(f"{path.parent.name}/{path.name}:{n}: "
+                             f"{line.strip()}")
+    assert not found, ("cache through storage.pin, which parks the "
+                       "release:\n" + "\n".join(found))
 
 
 def test_no_kernel_copies_under_plans():
@@ -89,6 +110,9 @@ def test_lint_catches_the_copies_it_names():
              '             .outputMode("complete")')
     tag = ("    tag = (hashlib.md5(sf_dir.encode()).hexdigest()[:8]\n"
            '           + f"_{os.getpid()}")')
+    cache = ('    sh = explode_shingle_hashes(docs, "doc_id", "text", '
+             'n=3).cache()')
+    persist = '             .select("u", "v")).repartition(1).persist()'
     assert COPIES["banded candidate join"].search(join)
     assert COPIES["exact-cosine score"].search(score)
     assert COPIES["df-capped shingle self-join"].search(capped)
@@ -97,3 +121,4 @@ def test_lint_catches_the_copies_it_names():
     assert SQL_CTES["exact-jaccard verify"].search(sql_verify)
     assert SCAFFOLD["memory-sink drain"].search(drain)
     assert SCAFFOLD["scratch-dir tag"].search(tag)
+    assert BARE_CACHE.search(cache) and BARE_CACHE.search(persist)

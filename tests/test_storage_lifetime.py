@@ -1,51 +1,120 @@
-"""finalize()'s contract (plans/base.py): park the release of every held
-frame on the storage ledger and return the result unchanged, still lazy.
-finalize submits no job; a held frame stays filled while the result is
-consumed and is released by the next release_deferred() — or when the
-next entry ``registry.queries()`` hands out starts."""
+"""The storage-lifetime contract (storage.py): ``pin(df)`` caches a frame
+and parks its release on the ledger in the same call, submitting no job;
+``park_frame`` parks a checkpointed helper's ``_ckpt_ids``. A parked
+frame stays filled while the entry's result is consumed and is released
+by the next release_deferred() — or when the next entry
+``registry.queries()`` hands out starts. A ``stage()`` block releases
+exactly what was parked inside it, on a normal or a raising exit."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from nfl_data_engineering_spark.plans.base import finalize, release_deferred
-from nfl_data_engineering_spark.storage import registry_rdd_ids
+from nfl_data_engineering_spark import storage
+from nfl_data_engineering_spark.plans.base import release_deferred
+from nfl_data_engineering_spark.storage import (park_frame, pin,
+                                                registry_rdd_ids, stage)
 
 
-def _frame(spark):
-    return (spark.range(0, 1000)
+def _frame(spark, n=1000):
+    return (spark.range(0, n)
             .select(F.col("id"), (F.col("id") % 7).alias("k")))
 
 
-def _filled_cache(spark):
-    cache = _frame(spark).cache()
+def _filled_pin(spark, n=1000):
+    """A filled pinned cache; distinct ``n`` give distinct cache entries
+    (equal plans share one CacheManager entry)."""
+    cache = pin(_frame(spark, n))
     cache.count()
     return cache
 
 
-def test_finalize_is_lazy_and_parks_held_caches(spark, jobs_submitted):
-    """finalize submits 0 jobs and returns the result itself; the held
-    cache stays cached while the result is consumed and is unpersisted
-    by the next release_deferred()."""
+def _parked(df) -> bool:
+    return any(p is df for p in storage._LEDGER)
+
+
+def test_pin_submits_no_job_and_parks_the_cached_frame(spark,
+                                                        jobs_submitted):
+    """pin submits 0 jobs and returns the cached frame itself, parked on
+    the ledger."""
     release_deferred()
-    cache = _filled_cache(spark)
-    result = cache.groupBy("k").agg(F.count("*").alias("n"))
+    frame = _frame(spark)
     out = []
-    assert jobs_submitted("finalize-lazy",
-                          lambda: out.append(finalize(result, cache))) == 0
-    assert out[0] is result
-    assert cache.storageLevel != StorageLevel.NONE, \
-        "finalize must not release a held frame the result still reads"
+    assert jobs_submitted("pin-lazy", lambda: out.append(pin(frame))) == 0
+    assert out[0] is frame
+    assert frame.storageLevel != StorageLevel.NONE
+    assert _parked(frame), "pin must park the frame it cached"
+    assert release_deferred() >= 1
+    assert frame.storageLevel == StorageLevel.NONE
+
+
+def test_pinned_frame_lives_until_the_next_drain(spark):
+    """A pinned frame stays cached while the result that reads it is
+    consumed; the next release_deferred() unpersists it."""
+    release_deferred()
+    cache = _filled_pin(spark)
+    result = cache.groupBy("k").agg(F.count("*").alias("n"))
     assert sorted(r["n"] for r in result.collect()) == [142] + [143] * 6
     assert cache.storageLevel != StorageLevel.NONE, \
-        "a held cache must stay cached while the result is consumed"
+        "a pinned cache must stay cached while the result is consumed"
     assert release_deferred() >= 1
     assert cache.storageLevel == StorageLevel.NONE, \
-        "release_deferred() must unpersist the parked cache"
+        "release_deferred() must unpersist the pinned cache"
+    assert not _parked(cache)
+
+
+def test_stage_releases_only_its_own_pins(spark):
+    """A stage() releases what was pinned inside it when the block ends,
+    also when the block raises, and leaves what was pinned before it
+    cached and parked."""
+    release_deferred()
+    outer = _filled_pin(spark)
+    with stage():
+        inner = _filled_pin(spark, 1001)
+        assert inner.storageLevel != StorageLevel.NONE
+    assert inner.storageLevel == StorageLevel.NONE, \
+        "the stage must release what was pinned inside it"
+    assert not _parked(inner)
+    assert outer.storageLevel != StorageLevel.NONE and _parked(outer), \
+        "the stage must leave an earlier pin alone"
+
+    with pytest.raises(RuntimeError, match="inside the stage"):
+        with stage():
+            failed = _filled_pin(spark, 1002)
+            raise RuntimeError("inside the stage")
+    assert failed.storageLevel == StorageLevel.NONE, \
+        "a raising stage must still release its pins"
+    assert outer.storageLevel != StorageLevel.NONE and _parked(outer)
+    release_deferred()
+    assert outer.storageLevel == StorageLevel.NONE
+
+
+def test_entry_that_raises_leaves_nothing_pinned(spark, sf_dir,
+                                                 monkeypatch):
+    """An entry that raises after pinning (dedup_minhash_lsh with its
+    candidate join failing, after the shingle arrays and bands are
+    cached) leaves nothing behind once the runner drains the ledger."""
+    from nfl_data_engineering_spark.plans import registry, textops
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected candidate-join failure")
+
+    release_deferred()
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    base_ids = registry_rdd_ids(spark)
+    monkeypatch.setattr(textops, "candidate_pairs", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        registry.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    assert not cm.isEmpty(), "the entry must have pinned before raising"
+    release_deferred()
+    assert cm.isEmpty(), "a raising entry's pins outlived the drain"
+    assert registry_rdd_ids(spark) == base_ids
 
 
 def _checkpointed(spark):
@@ -58,9 +127,9 @@ def _checkpointed(spark):
     return helper
 
 
-def test_finalize_checkpoint_release_is_deterministic(spark):
-    """Whatever an entry pins lives until the runner's next
-    release_deferred(): a lazy child derived from a finalized frame stays
+def test_parked_checkpoint_release_is_deterministic(spark):
+    """Whatever an entry parks lives until the runner's next
+    release_deferred(): a lazy child derived from a parked frame stays
     readable after the parent wrapper is deleted, and the next
     release_deferred() removes the held checkpoint's ids from the
     persistent registry IMMEDIATELY — no gc.collect(), no JVM
@@ -70,8 +139,8 @@ def test_finalize_checkpoint_release_is_deterministic(spark):
     release_deferred()                       # drain other tests' leftovers
     helper = _checkpointed(spark)
     created = set(helper._ckpt_ids)
-    parent = finalize(helper.groupBy("k").agg(F.count("*").alias("n")),
-                      helper)
+    park_frame(helper)
+    parent = helper.groupBy("k").agg(F.count("*").alias("n"))
     child = parent.filter(F.col("n") > 142)  # lazy: reads the checkpoint
     del parent, helper                       # refcount death — no gc needed
     assert child.count() == 6, "derive-then-drop must stay readable"
@@ -81,30 +150,27 @@ def test_finalize_checkpoint_release_is_deterministic(spark):
         "checkpoint blocks must leave the registry at release_deferred()"
 
 
-def test_finalize_cc_releases_labels_checkpoint(spark, sf_dir, monkeypatch):
+def test_cc_labels_checkpoint_lives_until_the_drain(spark, sf_dir,
+                                                    monkeypatch):
     """Under the DISTRIBUTED connected-components path (driver fast path
-    disabled), every min-label round checkpoint is released inside the
-    entry; the final labels checkpoint (``_ckpt_ids``) stays registered
-    while the result is consumed and leaves the registry at
-    release_deferred(), with nothing the entry created left behind."""
+    disabled), every min-label round checkpoint and the pair caches are
+    released inside the entry; the final labels checkpoint
+    (``_ckpt_ids``) stays registered while the result is consumed and
+    leaves the registry at release_deferred(), with nothing the entry
+    created left behind."""
     from nfl_data_engineering_spark.operators import dedup as D
-    from nfl_data_engineering_spark.plans import base
     from nfl_data_engineering_spark.plans.registry import _BY_NAME
 
     monkeypatch.setattr(D, "_CC_DRIVER_EDGE_CAP", 0)
-    parked = []
-    park = base.park_frame
-    monkeypatch.setattr(base, "park_frame",
-                        lambda df: (parked.append(df), park(df)))
     release_deferred()
     spark.catalog.clearCache()
     before = registry_rdd_ids(spark)
     df = _BY_NAME["dedup_components"].spark(spark, sf_dir)
     assert df.count() > 0
-    labels = [set(h._ckpt_ids) for h in parked
+    labels = [set(h._ckpt_ids) for h in storage._LEDGER
               if getattr(h, "_ckpt_ids", None) is not None]
     assert len(labels) == 1 and labels[0], \
-        "finalize must be handed the labels checkpoint"
+        "the entry must park the labels checkpoint"
     mid = registry_rdd_ids(spark) - before
     assert labels[0] <= mid, \
         "the labels checkpoint must stay registered until release_deferred()"
@@ -121,21 +187,14 @@ def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
     parked for the next release_deferred() (dropping it on any exception
     would leak its blocks for the session's lifetime); on a stopped
     session it is dropped — its blocks died with the JVM."""
-    import nfl_data_engineering_spark.storage as storage
-
     release_deferred()
     orig = storage.release_frame
 
     def hiccup(df):
         raise RuntimeError("transient py4j hiccup")
 
-    def parked_cache():
-        cache = _filled_cache(spark)
-        finalize(cache.groupBy("k").agg(F.count("*")), cache)
-        return cache
-
     # live session: the failed item is retried by the next call
-    cache = parked_cache()
+    cache = _filled_pin(spark)
     monkeypatch.setattr(storage, "release_frame", hiccup)
     assert release_deferred() == 0
     assert cache.storageLevel != StorageLevel.NONE, \
@@ -145,7 +204,7 @@ def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
     assert cache.storageLevel == StorageLevel.NONE
 
     # stopped session: the failed item is dropped, not retried
-    cache = parked_cache()
+    cache = _filled_pin(spark)
     monkeypatch.setattr(storage, "release_frame", hiccup)
     monkeypatch.setattr(storage, "_session_stopped", lambda s: True)
     assert release_deferred() == 0
@@ -158,10 +217,10 @@ def test_sweep_retries_on_transient_release_error(spark, monkeypatch):
 def test_queries_loop_drains_each_entry(spark, sf_dir, monkeypatch):
     """A runner's loop over ``__spark_entry__.queries()`` that consumes
     each entry and never calls release_deferred(). Starting an entry
-    must release what the previous one pinned — a pair-table shingle cache (containment_join), the
-    connected-components labels checkpoint (dedup_components, on its
-    distributed path) — so the session ends with only the last entry's
-    storage."""
+    must release what the previous one pinned — a pair-table shingle
+    cache (containment_join), the connected-components labels
+    checkpoint (dedup_components, on its distributed path) — so the
+    session ends with only the last entry's storage."""
     from nfl_data_engineering_spark.operators import dedup as D
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(

@@ -79,9 +79,10 @@ def audit(spark, sf_dir: str, qs) -> tuple[list[dict], list[str]]:
     """Execute each query and summarize its FINAL AQE plan. Returns
     (rows, failed) where rows carry the markdown-table fields and failed
     lists queries planning an un-allowlisted cartesian / nested-loop
-    join. Entries return lazy plans (plans/base.py:finalize), so the
-    audit sees the real join/exchange structure; what each entry pins is
-    released once its plan is read."""
+    join. Entries return lazy plans (their caches are pinned with
+    storage.pin, which submits no job), so the audit sees the real
+    join/exchange structure; what each entry pins is released once its
+    plan is read."""
     from nfl_data_engineering_spark.plans.base import release_deferred
 
     rows, failed = [], []

@@ -1,7 +1,8 @@
 """Generate CATALOG.md — the machine-readable index of the query catalog:
 one line per registry entry with its SURVEY.md §2 / family tag, defining
-file:line, oracle kind and bench-pin flag, all derived live from
-plans/registry.py.
+``file::function``, oracle kind and bench-pin flag, all derived live from
+plans/registry.py. No line numbers, so an edit inside a plan module
+leaves the index unchanged unless it adds, renames or moves an entry.
 
 Usage:  python tools/make_catalog.py [--check]
 
@@ -37,9 +38,8 @@ def generate() -> str:
     for q in CATALOG:
         fn = inspect.unwrap(q.spark)
         src = os.path.relpath(inspect.getsourcefile(fn), REPO)
-        line = inspect.getsourcelines(fn)[1]
         lines.append(
-            f"| {q.name} | {q.ops} | {src}:{line} "
+            f"| {q.name} | {q.ops} | {src}::{fn.__name__} "
             f"| {'sql' if q.oracle else 'rows'} "
             f"| {'pin' if q.bench else ''} |")
     return "\n".join(lines) + "\n"

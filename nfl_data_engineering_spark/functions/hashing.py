@@ -512,8 +512,3 @@ def simhash(tokened: DataFrame, id_col: str, token_col: str,
         "ELSE CAST(0 AS BIGINT) END)"
         for j in range(bits))
     return summed.selectExpr(f"`{id_col}`", f"({sketch_sql}) AS `{out_col}`")
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two int64 sketches."""
-    return F.bit_count(a.bitwiseXOR(b))

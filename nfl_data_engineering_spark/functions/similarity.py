@@ -1,4 +1,4 @@
-"""Vector similarity (cosine, brute-force top-k, IVF-partitioned ANN) and
+"""Vector similarity (cosine, brute-force top-k) and
 the candidate-join-and-verify kernel every similarity-join entry shares:
 candidate_pairs (keyed equi-join -> distinct id pairs),
 verify_jaccard_arrays and verify_cosine (exact verification), plus the
@@ -15,10 +15,11 @@ Scale shape:
 - brute-force: broadcast the (small) query set, score each corpus partition
   independently, per-partition top-k via window. Corpus-side linear scan —
   the right baseline, and embarrassingly parallel.
-- IVF: partition the corpus by a coarse quantizer (here: nearest centroid),
-  probe only the query's cell(s). Centroids are a tiny broadcast table; the
-  probe is a partition-pruned equi-join. This is the 100 TB path: the scan
-  per query drops by ~|cells|.
+- IVF (plans/vector.py, _ivf_probe_topk): partition the corpus by a
+  coarse quantizer (nearest centroid), probe only the query's cell(s).
+  Centroids are a tiny broadcast table; the probe is a partition-pruned
+  equi-join. This is the 100 TB path: the scan per query drops by
+  ~|cells|.
 """
 
 from __future__ import annotations
@@ -256,43 +257,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     scored = pairs.select(
         F.col(q_id_col), F.col(id_col),
         cosine_arrow()(F.col(vec_col), F.col(q_vec_col)).alias("score"))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def label_centroids(corpus: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Per-cell mean vector — the coarse quantizer's codebook. With no
-    trained codebook we use the provided partition labels as cells."""
-    dim_df = corpus.select(F.size(vec_col).alias("d")).limit(1)
-    dim = dim_df.collect()[0]["d"]
-    agg = [F.avg(F.col(vec_col)[i].cast("double")).alias(f"c{i}") for i in range(dim)]
-    cents = corpus.groupBy(label_col).agg(*agg)
-    return cents.select(F.col(label_col).alias("cell"),
-                        F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("centroid"))
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-             k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding",
-             label_col: str = "label", q_id_col: str = "q_id",
-             q_vec_col: str = "q_vec", nprobe: int = 1) -> DataFrame:
-    """IVF ANN: route each query to its ``nprobe`` nearest centroid cells,
-    scan only those cells. Same output schema as brute_force_topk."""
-    q_cells = queries.crossJoin(F.broadcast(centroids)).select(
-        F.col(q_id_col), F.col(q_vec_col), F.col("cell"),
-        cosine(F.col(q_vec_col), F.col("centroid")).alias("cscore"))
-    wq = Window.partitionBy(q_id_col).orderBy(F.col("cscore").desc(), F.col("cell"))
-    routed = (q_cells.withColumn("crank", F.row_number().over(wq))
-              .filter(F.col("crank") <= nprobe)
-              .select(q_id_col, q_vec_col, "cell"))
-    # equi-join on cell => only the probed partitions are scanned per query
-    pairs = corpus.join(F.broadcast(routed),
-                        (F.col(label_col) == F.col("cell"))
-                        & (F.col(id_col) != F.col(q_id_col)))
-    scored = pairs.select(
-        F.col(q_id_col), F.col(id_col),
-        cosine(F.col(vec_col), F.col(q_vec_col)).alias("score"))
     w = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(), F.col(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))

@@ -1,5 +1,5 @@
-"""Text-analysis functions: tokenization, shingling, language ID, quality
-scoring, fingerprinting.
+"""Text-analysis functions: tokenization, shingling, language ID,
+fingerprinting (the ppm quality features live in plans/textops.py).
 
 Generalizes the reference's string-cleaning surface (SURVEY.md §2.2 T3-T5,
 §2.7) into the text ops a training-data pipeline needs. Everything is
@@ -220,28 +220,6 @@ def lang_id(text_col: Column) -> Column:
 
     kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return F.pandas_udf(kernel, "string")(text_col)
-
-
-def quality_features(text_col: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio / mean-word-length features —
-    the standard cheap quality signals."""
-    toks = tokens(text_col)
-    n_tok = F.size(toks)
-    n_chars = F.length(text_col)
-    punct = F.length(text_col) - F.length(F.regexp_replace(text_col, r"[^\w\s]", ""))
-    stop_arr = F.lit(list(STOPWORDS))
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    mean_wl = F.when(n_tok > 0,
-                     F.aggregate(toks, F.lit(0).cast("bigint"),
-                                 lambda acc, t: acc + F.length(t)).cast("double") / n_tok
-                     ).otherwise(F.lit(0.0))
-    return {
-        "n_chars": n_chars.cast("bigint"),
-        "n_tokens": n_tok.cast("bigint"),
-        "punct_ratio": F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(0.0),
-        "stopword_ratio": F.when(n_tok > 0, n_stop.cast("double") / n_tok).otherwise(0.0),
-        "mean_word_len": mean_wl,
-    }
 
 
 def doc_fingerprint(df: DataFrame, id_col: str, text_col: str,

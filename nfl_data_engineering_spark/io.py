@@ -29,15 +29,6 @@ from .operators.dedup import dedup_keep_latest
 PARTITION_COLS = ("year", "month")
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
 def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     """Derive Hive partition columns from the event-time column.
 
@@ -185,11 +176,6 @@ def morton_key_multi(cols, bits: int = 8):
             z = z.bitwiseOR(
                 F.shiftleft(F.shiftright(c, i).bitwiseAND(1), n * i + j))
     return z
-
-
-def morton_key(a, b, bits: int = 16):
-    """Two-column Morton key (a in even bit positions, b in odd)."""
-    return morton_key_multi([a, b], bits)
 
 
 def quantile_cells(col: str, cuts: list[float], bits: int = 8):

@@ -14,6 +14,8 @@ Reference semantics:
 
 from __future__ import annotations
 
+from contextlib import suppress
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 # Bidirectional-edge count at or below which connected_components runs
@@ -44,17 +46,9 @@ def connected_components(edges: DataFrame, src: str = "a",
     shallow (diameter a few hops), so this is a handful of shuffles — the
     survivor-selection step of a dedup pipeline at any scale.
 
-    CONCURRENCY CONTRACT: the distributed loop releases superseded round
-    checkpoints by diffing the context's persistent-RDD registry around
-    its own materializations (storage.CheckpointRotator, so no release
-    waits on the GC). The registry is context-global, so a SECOND
-    driver thread persisting frames while this loop runs would have its
-    ids mis-attributed to a round and unpersisted. Run one
-    connected_components at a time per SparkSession — every in-repo
-    runner (parity, bench, the endurance test, the external driver) is
-    single-threaded per session. On any mid-loop failure the cache and
-    all live round checkpoints this call created are released before the
-    exception propagates.
+    On any mid-loop failure the edge cache and the live round
+    checkpoints this call made are released before the exception
+    propagates; storage other callers made is never touched.
     """
     # Symmetrize via explode, NOT union of two selects: the union form
     # executes the (often expensive — a 5-join verified-pair plan in the
@@ -76,9 +70,9 @@ def connected_components(edges: DataFrame, src: str = "a",
     # ~2 s of pure overhead on that 247-edge graph.
     #
     # ONE capped driver read both DECIDES the path and, below the cap, IS
-    # the edge set (round 12 — previously a count job filled a cache and
-    # a second job collected it; the common small-graph path paid cache
-    # registration + two jobs + unpersist for data it read once). The
+    # the edge set (a count job filling a cache and a second job
+    # collecting it would make the common small-graph path pay cache
+    # registration + two jobs + unpersist for data it reads once). The
     # read is bounded to cap+1 rows of two ids — the same driver-read
     # class as the centroid/cut tables of the vector entries. limit's
     # CollectLimit scans all partitions in its FIRST attempt because
@@ -129,15 +123,13 @@ def connected_components(edges: DataFrame, src: str = "a",
     # truncated on that first materialization all the same.
     # Storage discipline: round N's checkpoint reads only round N-1's, so
     # once N materializes (the convergence collect), N-1's blocks are
-    # dead — released EXPLICITLY via registry diff + unpersist rather
-    # than left to the ContextCleaner's GC pace (a lost py4j detach
-    # pins a block for the session's life). The FINAL labels checkpoint
-    # stays persisted — the caller's derived plans read it — with its ids
-    # exposed on labels._ckpt_ids for the caller to park
-    # (storage.park_frame) until the next entry starts or
-    # release_deferred().
-    from ..storage import CheckpointRotator, pin, stage
-    spark = edges.sparkSession
+    # dead — released EXPLICITLY by its own frame (storage.release_frame)
+    # rather than left to the ContextCleaner's GC pace (a lost py4j
+    # detach pins a block for the session's life). The FINAL labels
+    # checkpoint stays persisted — the caller's derived plans read it —
+    # for the caller to park (storage.park_frame) until the next entry
+    # starts or release_deferred().
+    from ..storage import pin, release_frame, stage
     # exact convergence scalar at any scale: see docstring
     label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     # Distributed path only: cache the edge frame (the loop reads it every
@@ -152,7 +144,7 @@ def connected_components(edges: DataFrame, src: str = "a",
     with stage():
         bi = pin(bi_plan)
         n_edges = bi.count()
-        rot = CheckpointRotator(spark)
+        live: list[DataFrame] = []   # this call's unreleased rounds
         try:
             # max(cap, 1): tests force this path by monkeypatching the
             # cap to 0, and the coalesce right-sizing must degrade to
@@ -163,8 +155,8 @@ def connected_components(edges: DataFrame, src: str = "a",
             labels = (bi.select(F.col("a").alias("n")).distinct()
                       .withColumn("label", F.col("n")).coalesce(parts)
                       .localCheckpoint(eager=False))
+            live.append(labels)
             old_sum = labels.agg(label_sum).collect()[0][0]
-            rot.rotate()
             while True:
                 neigh = (bi.join(labels.withColumnRenamed("n", "a")
                                  .withColumnRenamed("label", "nlabel"), "a")
@@ -174,19 +166,21 @@ def connected_components(edges: DataFrame, src: str = "a",
                           .groupBy("n").agg(F.min("label").alias("label"))
                           .coalesce(parts)
                           .localCheckpoint(eager=False))
+                live.append(labels)
                 new_sum = labels.agg(label_sum).collect()[0][0]
-                rot.rotate()   # round N-1: dead once N exists
+                release_frame(live.pop(0))   # round N-1: dead once N exists
                 if new_sum == old_sum:
                     break
                 old_sum = new_sum
         except BaseException:
             # executor loss / OOM / cancellation mid-loop: without this,
             # up to two live round checkpoints stay registered for the
-            # session's lifetime. Release every round THIS call
-            # registered and let the failure propagate.
-            rot.release_all()
+            # session's lifetime. Release them (best-effort: a dead
+            # session has no blocks left) and let the failure propagate.
+            for f in live:
+                with suppress(Exception):
+                    release_frame(f)
             raise
-    labels._ckpt_ids = rot.prev_ids
     return labels
 
 

@@ -8,17 +8,7 @@ handles venue-timezone localization (src/main.py:31-35).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-
-def hourly_spine(spark: SparkSession, start: str, end_exclusive: str) -> DataFrame:
-    """T14: one row per hour in [start, end) — pd.date_range(inclusive='left')
-    semantics (weather_client.py:132-137)."""
-    return (spark.range(1)
-            .select(F.explode(F.sequence(
-                F.to_timestamp(F.lit(start)),
-                F.to_timestamp(F.lit(end_exclusive)) - F.expr("interval 1 hour"),
-                F.expr("interval 1 hour"))).alias("ts")))
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def spine_from_bounds(df: DataFrame, ts_col: str, interval: str = "1 hour") -> DataFrame:

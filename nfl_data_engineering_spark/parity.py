@@ -152,10 +152,14 @@ def main():
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # driver-session simulation: the external harness passes its OWN
         # SparkSession, not our tuned one — every query must survive a
-        # bone-stock session (no custom confs beyond master)
+        # bone-stock session (no custom confs beyond master). The one
+        # conf it sets is display-only: Spark's console progress bar
+        # would split the OK/FAIL lines; no query setting changes.
         from pyspark.sql import SparkSession
         spark = (SparkSession.builder.appName("parity-vanilla")
-                 .master("local[8]").getOrCreate())
+                 .master("local[8]")
+                 .config("spark.ui.showConsoleProgress", "false")
+                 .getOrCreate())
     else:
         from .session import get_spark
         spark = get_spark("parity")

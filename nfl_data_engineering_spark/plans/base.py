@@ -41,7 +41,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..storage import release_parked
+# catalog runners (bench, perfbench, tools/) drain the ledger from here
+from ..storage import release_deferred  # noqa: F401
 
 
 @dataclass(frozen=True)
@@ -188,17 +189,6 @@ def scoped_cached_plan_aqe(fn):
             else:
                 spark.conf.set(key, old)
     return wrap
-
-
-def release_deferred() -> int:
-    """Release everything catalog entries pinned or parked since the
-    last call (storage.release_parked); returns how many storage
-    entries were freed. Idempotent; catalog runners call it between
-    entries, and ``registry.queries()`` calls it before each entry, so
-    whatever an entry pins stays cached while its result is consumed.
-    Without it a session running the full query catalog would keep
-    every entry's caches for its whole life."""
-    return release_parked()
 
 
 def recall_ppm(truth: DataFrame, route: DataFrame, n: str,

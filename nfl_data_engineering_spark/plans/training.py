@@ -18,6 +18,7 @@ reproduces results bit-for-bit.
 from __future__ import annotations
 
 import os
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -519,19 +520,17 @@ def _bpe_loop(tok: DataFrame, steps: int):
     two catalog entries check the same dataflow from two angles.
 
     Storage discipline: step N's eager checkpoint reads step N-1's, so
-    once N materializes, N-1's blocks are dead — released EXPLICITLY via
-    the shared storage.CheckpointRotator (the same protocol as the CC
-    min-label loop; one implementation so the two cannot drift) instead
-    of waiting on the ContextCleaner's GC pace (a lost py4j detach pins
-    a block for the session's life; a BPE_STEPS-deep loop otherwise
-    piles up one pinned checkpoint per round until GC). A mid-loop
-    failure releases every live step checkpoint before propagating. The
-    FINAL table's ids ride back on ``tok._ckpt_ids``: the trainer drops
-    the table and releases them at once; the encoder parks them
-    (storage.park_frame)."""
-    from ..storage import CheckpointRotator
+    once N materializes, N-1's blocks are dead — released EXPLICITLY by
+    its own frame (storage.release_frame, as the CC min-label loop does)
+    instead of waiting on the ContextCleaner's GC pace (a lost py4j
+    detach pins a block for the session's life; a BPE_STEPS-deep loop
+    otherwise piles up one pinned checkpoint per round until GC). A
+    mid-loop failure releases the live step checkpoints before
+    propagating. The FINAL table is returned still persisted: the
+    trainer drops the table and releases it at once; the encoder parks
+    it (storage.park_frame)."""
     out_rows = []
-    rot = CheckpointRotator(tok.sparkSession)
+    live: list[DataFrame] = []   # this call's unreleased steps
     try:
         for step in range(1, steps + 1):
             wdoc = Window.partitionBy("doc_id").orderBy("pos")
@@ -569,12 +568,15 @@ def _bpe_loop(tok: DataFrame, steps: int):
                                   F.concat_ws("_", F.lit(a), F.lit(b)))
                             .otherwise(F.col("t")).alias("t"))
                    .localCheckpoint(eager=True))
-            rot.rotate()                     # step N-1: dead once N exists
+            live.append(tok)
+            if len(live) == 2:
+                release_frame(live.pop(0))   # step N-1: dead once N exists
     except BaseException:
-        rot.release_all()
+        for f in live:
+            with suppress(Exception):    # a dead session has no blocks
+                release_frame(f)
         raise
-    tok._ckpt_ids = rot.prev_ids             # final table: caller releases
-    return tok, out_rows
+    return tok, out_rows                     # final table: caller releases
 
 
 def q_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,9 +632,8 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_base_tokens"))
     n_after = encoded.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"))
-    # the lazy rollup reads the encoded table's final checkpoint: its
-    # _ckpt_ids stay registered until the next entry starts or
-    # release_deferred()
+    # the lazy rollup reads the encoded table's final checkpoint: it stays
+    # registered until the next entry starts or release_deferred()
     park_frame(encoded)
     return (n_before.join(n_after, "doc_id")
             .select("doc_id", "n_base_tokens", "n_tokens",

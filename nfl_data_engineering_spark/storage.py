@@ -7,18 +7,23 @@ deliver the wrapper's detach message, so it is GC-paced and can lose a
 detach, pinning one block for the session's life (seen about once per
 three full-suite runs before this ledger existed).
 
-One ledger takes the GC out of the path. A frame's lifetime is declared
-where the frame is made: ``pin(df)`` caches it and parks its release on
-the ledger in the same call, and ``park_frame`` parks a checkpointed
-helper's ``_ckpt_ids`` (the CC labels, the BPE token table).
-``release_parked()`` — called through ``plans.base.release_deferred()``
-before each entry ``registry.queries()`` hands out and by every catalog
-runner between entries — runs them all, so whatever an entry pins lives
-until the next entry starts or the runner's next ``release_deferred()``,
-also when the entry raised before returning. A ``stage()`` block
-releases what was parked inside it on exit, for caches that are dead
-before the entry returns (the pair caches once connected components
-has checkpointed its labels, one family's caches at a staging barrier).
+One rule takes the GC out of the path: storage is released by the frame
+that was made. ``pin(df)`` caches a frame and parks that cached frame
+on the ledger in the same call; ``park_frame`` parks a checkpointed
+frame (the CC labels, the BPE token table), whose plan reads the
+checkpoint's own RDD. ``release_frame`` frees either one, so no release
+reads the context-global persistent-RDD registry and no release can
+free storage another caller made. The iterative loops (CC min-label
+rounds, BPE merge rounds) free round N-1's frame once round N has
+materialized, and the rounds still live when they raise.
+``release_deferred()`` — called before each entry ``registry.queries()``
+hands out and by every catalog runner between entries — releases every
+parked frame, so whatever an entry pins lives until the next entry
+starts or the runner's next ``release_deferred()``, also when the entry
+raised before returning. A ``stage()`` block releases what was parked
+inside it on exit, for caches that are dead before the entry returns
+(the pair caches once connected components has checkpointed its labels,
+one family's caches at a staging barrier).
 """
 
 from __future__ import annotations
@@ -27,86 +32,10 @@ from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 # the held frames whose release (release_frame) is parked
 _LEDGER: list[DataFrame] = []
-
-
-def registry_rdd_ids(spark) -> set[int]:
-    """Ids currently in the context's persistent-RDD registry."""
-    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    out: set[int] = set()
-    while it.hasNext():
-        out.add(int(it.next()))
-    return out
-
-
-def unpersist_rdd_ids(spark, ids) -> int:
-    """Explicitly unpersist the given registry ids (non-blocking), via
-    the public JavaRDD.unpersist on the registry's own wrappers. Ids no
-    longer registered are skipped — double-release is a no-op."""
-    if not ids:
-        return 0
-    n = 0
-    it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-    while it.hasNext():
-        e = it.next()
-        if int(e.getKey()) in ids:
-            e.getValue().unpersist(False)
-            n += 1
-    return n
-
-
-class CheckpointRotator:
-    """Registry-diff release for iterative checkpoint loops (the CC
-    min-label rounds, the BPE merge rounds): round N's checkpoint reads
-    only round N-1's, so once N materializes, N-1's blocks are dead and
-    are unpersisted EXPLICITLY — no ContextCleaner, no GC pacing (the
-    py4j-detach race in the module docstring). One shared implementation
-    so the protocol's subtleties (snapshot-then-release ordering,
-    first-round empty set, final ``prev_ids`` hand-off to ``_ckpt_ids``)
-    cannot drift between the two loops.
-
-    Same context-global-registry caveat as the loops themselves: diffs
-    attribute every id created between snapshots to this loop, so run one
-    rotating loop at a time per SparkSession.
-
-    Usage::
-
-        rot = CheckpointRotator(spark)
-        try:
-            for ...:
-                frame = plan.localCheckpoint(...)
-                ... materialize frame ...
-                rot.rotate()          # releases round N-1's blocks
-        except BaseException:
-            rot.release_all()         # failure path: release every round
-            raise
-        result._ckpt_ids = rot.prev_ids   # final round: caller releases
-    """
-
-    def __init__(self, spark) -> None:
-        self.spark = spark
-        self._base = registry_rdd_ids(spark)
-        self._seen = set(self._base)
-        self.prev_ids: set[int] = set()
-
-    def rotate(self) -> None:
-        """Call after materializing round N: release round N-1's blocks
-        and adopt round N's ids as the new previous round."""
-        now = registry_rdd_ids(self.spark)
-        unpersist_rdd_ids(self.spark, self.prev_ids)
-        self.prev_ids = now - self._seen
-        self._seen = now
-
-    def release_all(self) -> None:
-        """Failure path: release every id registered since construction
-        (best-effort — a dead session has no blocks left to release)."""
-        try:
-            unpersist_rdd_ids(self.spark,
-                              registry_rdd_ids(self.spark) - self._base)
-        except Exception:
-            pass
 
 
 def _session_stopped(spark) -> bool:
@@ -122,13 +51,19 @@ def _session_stopped(spark) -> bool:
 
 
 def release_frame(df: DataFrame) -> int:
-    """Release what a held frame pins: a checkpointed helper's registry
-    ids (``_ckpt_ids``: the CC labels, the BPE token table), else its
-    cache. Returns how many storage entries were freed."""
-    ids = getattr(df, "_ckpt_ids", None)
-    if ids is not None:
-        return unpersist_rdd_ids(df.sparkSession, ids)
-    df.unpersist()
+    """Release what a held frame pins: its cache, or, for a checkpointed
+    frame, the checkpoint RDD its plan reads (a localCheckpoint frame's
+    logical plan is a LogicalRDD over exactly the RDD the checkpoint
+    persisted). Submits no job; returns how many storage entries were
+    freed."""
+    plan = df._jdf.queryExecution().logical()
+    # a cached frame over a LogicalRDD (a createDataFrame frame) is a pin:
+    # its cache, not its source RDD, is what it holds
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and df.storageLevel == StorageLevel.NONE):
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
     return 1
 
 
@@ -162,9 +97,13 @@ def _release(frames: list[DataFrame]) -> tuple[int, list[DataFrame]]:
     return n, keep
 
 
-def release_parked() -> int:
-    """Release every parked frame; returns how many storage entries
-    were freed (failed releases stay parked, see _release)."""
+def release_deferred() -> int:
+    """Release every parked frame; returns how many storage entries were
+    freed (failed releases stay parked, see _release). Idempotent;
+    catalog runners call it between entries, and ``registry.queries()``
+    calls it before each entry, so whatever an entry pins stays cached
+    while its result is consumed. Without it a session running the full
+    query catalog would keep every entry's caches for its whole life."""
     n, keep = _release(_LEDGER)
     _LEDGER[:] = keep
     return n

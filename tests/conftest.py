@@ -47,3 +47,18 @@ def jobs_submitted(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
     return count
+
+
+@pytest.fixture
+def registry_ids(spark):
+    """``registry_ids()`` returns the ids in the context's persistent-RDD
+    registry. Tests observe the registry through it; package code never
+    reads the registry (it releases storage by the frame that made it)."""
+    def ids() -> set[int]:
+        it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+        out: set[int] = set()
+        while it.hasNext():
+            out.add(int(it.next()))
+        return out
+    return ids
+

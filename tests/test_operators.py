@@ -198,41 +198,43 @@ def test_connected_components_mixed_key_types(spark):
     assert labels[2] == 2 and labels[3] == 2
 
 
-def test_connected_components_failure_releases_storage(spark, monkeypatch):
+def test_connected_components_failure_releases_storage(spark, monkeypatch,
+                                                        registry_ids):
     """A mid-loop failure must not leak the bidirectional-edge cache or
-    live round checkpoints (round-8 review): force the distributed path,
-    inject a failure at the first convergence collect, and assert the
-    persistent registry returns to its pre-call state."""
+    live round checkpoints: force the distributed path, inject a failure
+    at the first convergence collect, and assert the persistent registry
+    returns to its pre-call state."""
     import pytest
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from nfl_data_engineering_spark.operators import dedup as D
     from nfl_data_engineering_spark.plans.base import release_deferred
-    from nfl_data_engineering_spark.storage import registry_rdd_ids
 
     release_deferred()
     spark.catalog.clearCache()
     monkeypatch.setattr(D, "_CC_DRIVER_EDGE_CAP", 0)
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "a: long, b: long")
-    before = registry_rdd_ids(spark)
+    before = registry_ids()
 
     calls = {"n": 0}
-    import nfl_data_engineering_spark.storage as storage
-    orig = storage.unpersist_rdd_ids
+    orig = DataFrame.collect
 
-    def boom_on_first_round(spark_, ids):
-        # CC imports this from storage at call time; the failure path
-        # itself calls the same name, so only the FIRST (in-loop) call
-        # raises — the cleanup call must still work
+    def boom_on_first_round(self):
+        # collect 1 is the capped edge read that picks the path; collect
+        # 2 is the first convergence sum, run for real (the round's
+        # checkpoint and the edge cache are filled) before it raises
         calls["n"] += 1
-        if calls["n"] == 1:
+        out = orig(self)
+        if calls["n"] == 2:
             raise RuntimeError("injected mid-loop failure")
-        return orig(spark_, ids)
+        return out
 
-    monkeypatch.setattr(storage, "unpersist_rdd_ids", boom_on_first_round)
+    monkeypatch.setattr(DataFrame, "collect", boom_on_first_round)
     with pytest.raises(RuntimeError, match="injected"):
         D.connected_components(edges)
     monkeypatch.undo()
-    leaked = registry_rdd_ids(spark) - before
+    assert calls["n"] == 2
+    leaked = registry_ids() - before
     assert not leaked, f"mid-loop failure leaked registry ids: {leaked}"
 
 

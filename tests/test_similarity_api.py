@@ -287,7 +287,8 @@ def test_staged_shared_shingles_passthrough(spark, sf_dir):
     assert got == want and got
 
 
-def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
+def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch,
+                                             registry_ids):
     """When similarity_join_staged returns, every family's own pins are
     already unpersisted (each family ran to completion behind its
     barrier) and only the parked parts stay cached, until the next
@@ -298,7 +299,6 @@ def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
 
     from nfl_data_engineering_spark import storage
     from nfl_data_engineering_spark.plans import similarity_api as api
-    from nfl_data_engineering_spark.storage import registry_rdd_ids
 
     family_pins, parts = [], []
     join, pin, park = api.similarity_join, storage.pin, api.park_frame
@@ -320,7 +320,7 @@ def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
                         lambda df: (parts.append(df), park(df)))
     release_deferred()
     spark.catalog.clearCache()
-    before = registry_rdd_ids(spark)
+    before = registry_ids()
     docs = load(spark, sf_dir, "documents")
     staged = api.similarity_join_staged([
         {"family": "jaccard_minhash", "df": docs, "id_col": "doc_id",
@@ -335,12 +335,12 @@ def test_staged_barrier_releases_each_family(spark, sf_dir, monkeypatch):
         "a family's pins must be released at its barrier"
     assert len(parts) == 2
     assert all(p.storageLevel != StorageLevel.NONE for p in parts)
-    assert len(registry_rdd_ids(spark) - before) == len(parts), \
+    assert len(registry_ids() - before) == len(parts), \
         "only the filled parts may stay persisted"
     assert staged.count() > 0
     release_deferred()
     assert all(p.storageLevel == StorageLevel.NONE for p in parts)
-    assert not (registry_rdd_ids(spark) - before)
+    assert not (registry_ids() - before)
 
 
 def test_staged_single_spec_no_self_cycle(spark, sf_dir):

@@ -10,7 +10,10 @@ silently verify a different truth than the one every other entry
 uses. A cache under plans/ and operators/ is made only by storage.pin,
 which parks its release where the cache is made; the one exception is
 the staged barrier's part, parked once its family's stage has
-released the family's pins."""
+released the family's pins. No package code reads the context-global
+persistent-RDD registry: a release diffed off it frees whatever
+appeared, whoever made it, so storage is released by the frame that
+made it (storage.release_frame)."""
 
 from __future__ import annotations
 
@@ -50,6 +53,10 @@ SCAFFOLD = {
 BARE_CACHE = re.compile(r"\.(?:cache\(\)|persist\()")
 ALLOWED_CACHE = {("similarity_api.py", "part = tagged.cache()")}
 
+# a registry read, or the registry-diff ids once set on frames: nowhere
+# in the package
+REGISTRY_READ = re.compile(r"getPersistentRDDs|_ckpt_ids")
+
 
 def _matches(pat: re.Pattern) -> list[str]:
     found = []
@@ -72,6 +79,17 @@ def test_caches_are_made_by_pin():
                              f"{line.strip()}")
     assert not found, ("cache through storage.pin, which parks the "
                        "release:\n" + "\n".join(found))
+
+
+def test_no_registry_reads_in_the_package():
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if REGISTRY_READ.search(line):
+                found.append(f"{path.relative_to(PACKAGE)}:{n}: "
+                             f"{line.strip()}")
+    assert not found, ("release storage by its frame "
+                       "(storage.release_frame):\n" + "\n".join(found))
 
 
 def test_no_kernel_copies_under_plans():
@@ -113,6 +131,9 @@ def test_lint_catches_the_copies_it_names():
     cache = ('    sh = explode_shingle_hashes(docs, "doc_id", "text", '
              'n=3).cache()')
     persist = '             .select("u", "v")).repartition(1).persist()'
+    registry = ("    it = spark.sparkContext._jsc.getPersistentRDDs()"
+                ".keySet().iterator()")
+    diff_ids = "    labels._ckpt_ids = rot.prev_ids"
     assert COPIES["banded candidate join"].search(join)
     assert COPIES["exact-cosine score"].search(score)
     assert COPIES["df-capped shingle self-join"].search(capped)
@@ -122,3 +143,4 @@ def test_lint_catches_the_copies_it_names():
     assert SCAFFOLD["memory-sink drain"].search(drain)
     assert SCAFFOLD["scratch-dir tag"].search(tag)
     assert BARE_CACHE.search(cache) and BARE_CACHE.search(persist)
+    assert REGISTRY_READ.search(registry) and REGISTRY_READ.search(diff_ids)

@@ -4,7 +4,6 @@ capabilities of dan8239/nfl-data-engineering, rebuilt Spark-first.
 Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, Arrow, shuffle sizing)
-- ``schemas``    : declared StructTypes (the reference infers; we declare)
 - ``io``         : partitioned Parquet read/write + keyed upsert writer
 - ``operators/`` : relational/dataflow ops from SURVEY.md §2 (clean, dedup,
                    joins, windows, records, timeseries)

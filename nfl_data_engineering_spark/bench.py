@@ -3,24 +3,21 @@
 JSON line: {"metric": ..., "unit": "sec", "queries": {name: sec},
 "sf": ..., "reps": N, "value": total_sec}.
 
-Protocol (VERDICT r8 item 3 — min-of-N across fresh sessions is the
-DEFAULT): the whole pinned set is repeated ``--min-of N`` times (default
-2, env SPARK_GRAFT_BENCH_REPS), each repetition in a freshly built
-SparkSession (previous one stopped), and the reported per-query time is
-the minimum across repetitions. Single-session totals were observed to
-swing ±15% with machine state (r7's 45.4-58.4 s spread on an unchanged
-tree; r8's near-uniform +13%), which burned three drift adjudications in
-round 8 alone — all "jitter". Scope of the isolation, stated honestly:
+Protocol (min-of-N across fresh sessions is the DEFAULT): the whole pinned set
+is repeated ``--min-of N`` times (default 2, env SPARK_GRAFT_BENCH_REPS), each
+repetition in a freshly built SparkSession (previous one stopped), and the
+reported per-query time is the minimum across repetitions. Single-session
+totals were observed to swing ±15% with machine state (a 45.4-58.4 s spread on
+an unchanged tree; a near-uniform +13% on another). Scope of the isolation:
 stopping the context resets BlockManager storage, the CacheManager, and
-shuffle/scheduler state per rep, but local mode keeps ONE JVM for the
-whole process, so JIT/codegen caches and heap history carry across reps
-(later reps run warm — which the min-estimator wants) and the estimator
-suppresses machine-state noise by taking the min across repetitions,
-not by per-rep JVM isolation. Within each rep every query is still run
-twice back-to-back and takes the min (steady-state estimator; JIT/GC
-jitter dominates single runs at this data size); the three entries
-whose deltas rode the ±0.4 s noise floor across rounds 8-10 get a third
-in-rep run (EXTRA_RUN_QUERIES — VERDICT r10 item 7).
+shuffle/scheduler state per rep, but local mode keeps ONE JVM for the whole
+process, so JIT/codegen caches and heap history carry across reps (later reps
+run warm — which the min-estimator wants) and the estimator suppresses
+machine-state noise by taking the min across repetitions, not by per-rep JVM
+isolation. Within each rep every query is still run twice back-to-back and
+takes the min (steady-state estimator; JIT/GC jitter dominates single runs at
+this data size); the entries whose deltas ride the noise floor get a third
+in-rep run (EXTRA_RUN_QUERIES).
 
 Each query is executed to completion (noop sink materializes every
 output column; count() would let Catalyst skip projections) after a
@@ -46,15 +43,13 @@ from .session import get_spark
 
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
 
-# Queries whose run-to-run delta rode the ±0.4 s noise floor across
-# rounds 8-10 (VERDICT r10 item 7: three drift adjudications were jitter)
-# get a third in-rep run — min-of-3 within each rep, on top of the
-# min-across-reps — so round-over-round comparison stops tracking
-# machine state on exactly the entries where drift triage is expensive.
-# pricing_summary joined in round 13 (VERDICT r12 item 6: it breached the
-# >10% band two rounds running with identical plans — scan-bound, so its
-# wall tracks machine state; the round-13 re-measure put it back inside
-# the r11 band, and min-of-3 keeps it there).
+# Queries whose run-to-run delta rides the ±0.4 s noise floor get a
+# third in-rep run — min-of-3 within each rep, on top of the
+# min-across-reps — so run-to-run comparison stops tracking machine
+# state on exactly the entries where drift triage is expensive.
+# pricing_summary is scan-bound, so its wall tracks machine state: it
+# moved by >10% between runs with identical plans, and min-of-3 holds
+# it steady.
 EXTRA_RUN_QUERIES = frozenset({
     "similarity_join_api", "leakage_safe_split", "dedup_star_survivors",
     "pricing_summary"})
@@ -81,9 +76,8 @@ def _rep(sf_dir: str, rep: int,
     ({name: sec}, {name: max-min spread across the in-rep runs}).
     ``env_out``, if given, receives the session's effective master and
     scheduler parallelism so the JSON line can attest the core count it
-    actually ran with (VERDICT r12 item 2: the driver's scaling check
-    could not distinguish "ignores $SPARK_GRAFT_CPUS" from "driver-bound
-    at this SF" because the bench never echoed the effective master)."""
+    actually ran with: without it a scaling check cannot tell "ignores
+    $SPARK_GRAFT_CPUS" from "driver-bound at this SF"."""
     spark = get_spark(f"bench-rep{rep}")
     if env_out is not None:
         env_out["master"] = spark.sparkContext.master
@@ -110,7 +104,7 @@ def _rep(sf_dir: str, rep: int,
 def _reps_requested(argv: list[str]) -> int:
     """--min-of N / --min-of=N (CLI) beats SPARK_GRAFT_BENCH_REPS (env)
     beats 2. A missing or non-integer value is a clear usage error, not
-    an IndexError/ValueError traceback (round-9 review finding)."""
+    an IndexError/ValueError traceback."""
     def parse(val: str) -> int:
         try:
             return max(1, int(val))
@@ -131,8 +125,8 @@ def _reps_requested(argv: list[str]) -> int:
 def main() -> None:
     # stale names would silently degrade an entry back to min-of-2 and
     # put its delta back on the noise floor — the exact triage cost the
-    # set exists to remove (round-11 review finding; same rule as
-    # registry._PRIORITY's stale-name assert)
+    # set exists to remove (same rule as registry._PRIORITY's
+    # stale-name assert)
     stale = EXTRA_RUN_QUERIES - {q.name for q in bench_queries()}
     assert not stale, f"EXTRA_RUN_QUERIES not in the bench set: {stale}"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -154,15 +148,15 @@ def main() -> None:
     queries = {name: round(t, 3) for name, t in best.items()}
     # run-to-run deltas go to STDERR: they are jitter diagnostics, and
     # keeping them out of the stdout JSON matters — the external driver
-    # records only a bounded TAIL of stdout, and r4/r5's delta-inflated
-    # line overflowed that window, cutting off the leading fields and
-    # breaking the driver's parse ("parsed": null in BENCH_r05.json).
+    # records only a bounded TAIL of stdout, and a delta-inflated line
+    # overflowed that window, cutting off the leading fields and
+    # breaking the driver's parse.
     print("# run_delta: "
           + json.dumps({n: round(d, 3) for n, d in deltas.items()}),
           file=sys.stderr)
     # field order is deliberate: queries first, headline total LAST, so a
     # tail-truncated capture still ends with the machine-readable total.
-    # master/parallelism/sf_dir are ADDITIONS (VERDICT r12 item 2): they
+    # master/parallelism/sf_dir are ADDITIONS: they
     # attest the effective core count so a ~1 scaling ratio is verifiable
     # as "driver-bound at this SF" rather than "harness ignores CPUS".
     print(json.dumps({

@@ -46,8 +46,7 @@ def h60_sql(expr: str) -> str:
 # derivation, so the budget and the banding share one source: a retune
 # propagates to textops' standalone entries AND the similarity_join
 # front door (whose calls rely on minhash_band_config's default) —
-# a hardcoded default would let the two silently diverge (round-8
-# review finding).
+# a hardcoded default would let the two silently diverge.
 NUM_HASHES = 64
 
 # The catalog-wide default jaccard threshold (textops.JACCARD_THRESHOLD
@@ -64,8 +63,8 @@ RECALL_FLOOR = 0.99
 def minhash_band_config(threshold: float,
                         num_hashes: int = NUM_HASHES) -> tuple[int, int]:
     """Derive (num_hashes, num_bands) from the caller's jaccard threshold
-    (VERDICT r6 item 3 — a module-constant 0.8-tuned config silently gave
-    a threshold=0.5 caller ~64% recall). Keep the hash budget fixed and
+    (a module-constant 0.8-tuned config silently gave a threshold=0.5
+    caller ~64% recall). Keep the hash budget fixed and
     pick the FEWEST bands — i.e. the LONGEST rows-per-band r = n/b, the
     sharpest S-curve and the fewest false candidates — whose catch
     probability at the threshold still clears RECALL_FLOOR. Recall is
@@ -81,11 +80,10 @@ def minhash_band_config(threshold: float,
     (dedup_minhash_lsh, incremental_corpus_dedup, dedup_star_survivors)
     and the front-door API derive banding from the SAME rule — a caller
     re-tuning JACCARD_THRESHOLD can no longer silently re-inherit the
-    0.8-tuned band count (VERDICT r7 item 5)."""
+    0.8-tuned band count."""
     # every divisor ascending, not just powers of two: a caller passing a
     # non-power-of-two budget (e.g. 48) must still get the fewest-bands
     # qualifying config (b=24, r=2 at t=0.5), not the r=1 fallback
-    # (round-7 review finding)
     for b in range(1, num_hashes + 1):
         if num_hashes % b == 0:
             r = num_hashes // b
@@ -142,7 +140,7 @@ def lsh_band_keys(signatures: DataFrame, id_col: str,
     ``bands=None`` resolves through minhash_band_config at the catalog's
     DEFAULT_JACCARD_THRESHOLD under the given budget — a literal default
     decoupled from the derivation would hand a library caller 0.8-tuned
-    recall after any NUM_HASHES retune (ADVICE r8). Callers at a
+    recall after any NUM_HASHES retune. Callers at a
     different threshold pass ``minhash_band_config(t)[1]``.
     """
     if bands is None:
@@ -156,59 +154,6 @@ def lsh_band_keys(signatures: DataFrame, id_col: str,
                  .alias("band_key")))
 
 
-def minhash_bands_fast(shingled: DataFrame, id_col: str, shingle_col: str,
-                       num_hashes: int = NUM_HASHES, bands: int | None = None,
-                       hashed: bool = False) -> DataFrame:
-    """(id, shingle) rows -> (id, band, band_key) rows, columnar fast path.
-
-    Semantically identical to minhash_signatures + lsh_band_keys but with no
-    seed explode: the num_hashes draws are computed as columns per shingle
-    (slopes/intercepts are Python-precomputed literals from the same md5
-    derivation), folded with num_hashes map-side-partial MIN aggregates in a
-    single (id)-keyed groupBy, then band keys assembled per row. Input rows
-    never multiply — at 100 TB that's a 64x shuffle-volume reduction over
-    the exploded form.
-
-    ``hashed=True`` means ``shingle_col`` already holds h60 values (callers
-    that also need the hash for an intersection join compute it once).
-
-    ``bands=None`` resolves through minhash_band_config at the catalog's
-    DEFAULT_JACCARD_THRESHOLD under the given budget (ADVICE r8 — see
-    lsh_band_keys). These kernels take the band COUNT, not a threshold,
-    so a caller at a different threshold must pass
-    ``minhash_band_config(t)[1]`` — every catalog caller does.
-    """
-    if bands is None:
-        bands = minhash_band_config(DEFAULT_JACCARD_THRESHOLD, num_hashes)[1]
-    a = [1 + h60_py(f"mh_a_{i}") % (MERSENNE_P - 1) for i in range(num_hashes)]
-    b = [h60_py(f"mh_b_{i}") % MERSENNE_P for i in range(num_hashes)]
-    base = F.col(shingle_col) if hashed else h60(F.col(shingle_col))
-    hm = (base % MERSENNE_P).alias("__hm")
-    # NULL shingles are IGNORED — same rule as oph_bands_fast. The MIN
-    # aggregates below skip NULLs anyway for a doc with SOME null
-    # shingles, but without this filter an ALL-null-shingle doc still
-    # emitted band rows (every __mh{i} NULL -> concat_ws skips them ->
-    # md5('') is one constant band key), silently banding every such doc
-    # together — a quadratic candidate bucket OPH's filtered kernel does
-    # not produce (ADVICE r10). With the filter both kernels share one
-    # contract: a doc with no (non-null) shingles yields no rows.
-    # The draw/band expressions are built as SQL TEXT parsed JVM-side in a
-    # handful of py4j calls, not as composed Column objects: profiling the
-    # round-12 bench showed ~0.75 s of pure DRIVER time per call just
-    # constructing the 64 draw Columns through py4j (one round-trip per
-    # nested call), visible as a zero-jobs-running gap in the job timeline
-    # (guide §7.3 — driver-side work). Identical parsed plan, A/B'd
-    # byte-identical band rows.
-    per_shingle = shingled.select(F.col(id_col), hm).filter(
-        F.col("__hm").isNotNull()).selectExpr(
-        f"`{id_col}`",
-        *[f"({a[i]}L * __hm + {b[i]}L) % {MERSENNE_P}L AS __mh{i}"
-          for i in range(num_hashes)])
-    sig = per_shingle.groupBy(id_col).agg(
-        *[F.expr(f"min(__mh{i}) AS __mh{i}") for i in range(num_hashes)])
-    return _band_assembly_expr(sig, id_col, num_hashes, bands)
-
-
 def minhash_bands_arrays(docarr: DataFrame, id_col: str, arr_col: str,
                          num_hashes: int = NUM_HASHES,
                          bands: int | None = None) -> DataFrame:
@@ -217,15 +162,15 @@ def minhash_bands_arrays(docarr: DataFrame, id_col: str, arr_col: str,
     distinct-hash array (functions.text.shingle_hash_arrays), each of
     the ``num_hashes`` universal draws is an array_min over a transform
     of that array, and band keys assemble per row — semantically
-    identical to minhash_bands_fast over the exploded rows (same a/b
-    parameters, same md5 band keys; pinned by test), but with NO explode
-    and NO (id)-keyed aggregation at all. Where minhash_bands_fast pays
-    64 aggregate-buffer updates per shingle row through a hash
-    aggregate, this form does the same arithmetic inside one projection
-    — measured 0.36 s vs 0.66 s at sf0.1 with byte-identical band rows,
-    and at 100 TB it removes the aggregation machinery from the sketch
-    pass entirely (the per-doc array is the row's own payload; guide
-    §2.4's remove-the-shuffle rule applied to the map side).
+    identical to the reference pair minhash_signatures + lsh_band_keys
+    over the exploded, NULL-filtered rows (same a/b parameters, same md5
+    band keys; pinned by test), but with NO explode and NO (id)-keyed
+    aggregation at all. An exploded columnar form pays 64
+    aggregate-buffer updates per shingle row through a hash aggregate;
+    this form does the same arithmetic inside one projection — measured
+    0.36 s vs 0.66 s at sf0.1 with byte-identical band rows, and at
+    100 TB it removes the aggregation machinery from the sketch pass
+    entirely (the per-doc array is the row's own payload).
 
     The ``__hm`` pre-reduction column is deliberately a NAMED projection
     consumed by 64 downstream expressions: Spark's CollapseProject does
@@ -234,20 +179,22 @@ def minhash_bands_arrays(docarr: DataFrame, id_col: str, arr_col: str,
     not 64 times.
 
     NULL array elements are dropped and a doc with no (non-null)
-    elements yields no rows — the same contract as the exploded kernels
-    (minhash_bands_fast / oph_bands_fast). ``bands=None`` resolves
-    through minhash_band_config at the catalog default, the shared
-    single-source rule (ADVICE r8)."""
+    elements yields no rows — the same contract as oph_bands_fast. An
+    all-null doc that emitted rows would get md5('') as every band key
+    (concat_ws skips the NULL minima) and band with every other such doc
+    in one quadratic candidate bucket. ``bands=None`` resolves through
+    minhash_band_config at the catalog default, the shared
+    single-source rule."""
     if bands is None:
         bands = minhash_band_config(DEFAULT_JACCARD_THRESHOLD, num_hashes)[1]
     a = [1 + h60_py(f"mh_a_{i}") % (MERSENNE_P - 1) for i in range(num_hashes)]
     b = [h60_py(f"mh_b_{i}") % MERSENNE_P for i in range(num_hashes)]
     # Built as SQL TEXT parsed JVM-side (3 py4j calls total), not composed
     # Column objects: constructing the 64 transform/array_min draw Columns
-    # through py4j cost ~1.0 s of pure driver time PER CALL (measured,
-    # round 12 — the zero-jobs gap in every jaccard entry's job timeline;
-    # guide §7.3). Same parsed plan, A/B'd byte-identical band rows,
-    # construction 0.97 s -> 0.09 s.
+    # through py4j cost ~1.0 s of pure driver time PER CALL (measured:
+    # the zero-jobs gap in every jaccard entry's job timeline). Same
+    # parsed plan, A/B'd byte-identical band rows, construction
+    # 0.97 s -> 0.09 s.
     src = (docarr.selectExpr(
         f"`{id_col}`",
         f"filter(transform(`{arr_col}`, s -> s % {MERSENNE_P}L), "
@@ -265,10 +212,9 @@ def minhash_bands_arrays(docarr: DataFrame, id_col: str, arr_col: str,
 def _band_assembly_expr(sig: DataFrame, id_col: str, num_hashes: int,
                         bands: int) -> DataFrame:
     """(id, __mh0..__mh{n-1}) -> (id, band, band_key): md5 band keys over
-    rows-per-band minhash groups, emitted via one explode. Shared tail of
-    minhash_bands_fast / minhash_bands_arrays (identical md5/concat_ws
-    semantics as the round-11 struct-array form; SQL-text construction for
-    the same py4j reason as the kernels)."""
+    rows-per-band minhash groups, emitted via one explode (the same
+    md5/concat_ws band keys as lsh_band_keys; SQL-text construction for
+    the same py4j reason as the kernel)."""
     rpb = num_hashes // bands
     band_structs = [
         "struct({j} AS band, md5(concat_ws(',', {cols})) AS band_key)".format(
@@ -306,12 +252,12 @@ def oph_bands_fast(shingled: DataFrame, id_col: str, shingle_col: str,
     Shrivastava/Li rotation densification, which restores the unbiased
     resemblance estimate.
 
-    Why it exists next to minhash_bands_fast: the k-draw kernel spends
-    num_bins draw+aggregate-update pairs per shingle; this kernel spends
-    one. Measured honestly at the 100x replica with full band
+    Why it exists next to the k-draw kernel: an exploded k-draw kernel
+    spends num_bins draw+aggregate-update pairs per shingle; this kernel
+    spends one. Measured at the 100x replica with full band
     materialization — noop writes, because a bare .count() silently
-    PRUNES the band columns and with them most of either kernel's work
-    (SCALE.md round 9): on that SHORT-doc corpus (~53 shingles/doc) the
+    PRUNES the band columns and with them most of either kernel's work:
+    on that SHORT-doc corpus (~53 shingles/doc) the
     per-doc assembly + extra slot shuffle still outweigh the saved
     draws (4.35 s vs 2.81 s); the balance tips to OPH as shingles/doc
     grows, since per-shingle work is 1 update vs 64 while the per-doc
@@ -340,21 +286,17 @@ def oph_bands_fast(shingled: DataFrame, id_col: str, shingle_col: str,
 
     ``bands=None`` resolves through minhash_band_config at the catalog's
     DEFAULT_JACCARD_THRESHOLD (same single-source rule as lsh_band_keys /
-    minhash_bands_fast — ADVICE r8); callers at a different threshold
+    minhash_bands_arrays); callers at a different threshold
     pass ``minhash_band_config(t, num_bins)[1]``.
     """
     if bands is None:
         bands = minhash_band_config(DEFAULT_JACCARD_THRESHOLD, num_bins)[1]
     base = F.col(shingle_col) if hashed else h60(F.col(shingle_col))
-    # NULL shingles are IGNORED, matching the k-draw kernel
-    # (minhash_bands_fast now carries the same explicit filter — per
-    # ADVICE r10 the earlier "MIN skips NULLs" argument covered per-
-    # shingle NULLs but not an ALL-null doc, which k-draw used to band
-    # under a constant md5('') key) and simhash's explicit null rule —
-    # without the filter a NULL __hm propagates to __bin and
-    # map_from_entries rejects the NULL map key with an opaque runtime
-    # error mid-job (ADVICE r9). Catalog paths never produce NULL
-    # shingles; an external hashed=True caller can.
+    # NULL shingles are IGNORED, matching the k-draw kernel's explicit
+    # filter and simhash's null rule — without the filter a NULL __hm
+    # propagates to __bin and map_from_entries rejects the NULL map key
+    # with an opaque runtime error mid-job. Catalog paths never produce
+    # NULL shingles; an external hashed=True caller can.
     per = (shingled
            .select(F.col(id_col), (base % MERSENNE_P).alias("__hm"))
            .filter(F.col("__hm").isNotNull())
@@ -384,7 +326,7 @@ def oph_bands_fast(shingled: DataFrame, id_col: str, shingle_col: str,
     # value — referenced freely without re-evaluation.
     #
     # That single-expression shape is load-bearing, not style. TWO
-    # rejected shapes, both measured (SCALE.md round 9): the naive O(K^2)
+    # rejected shapes, both measured at the 100x replica: the naive O(K^2)
     # all-rotations scan, and — the subtle one — the doubling levels (or
     # the dens array) materialized as NAMED PROJECTION COLUMNS: the
     # optimizer collapses adjacent Projects and re-inlines the producing
@@ -402,7 +344,6 @@ def oph_bands_fast(shingled: DataFrame, id_col: str, shingle_col: str,
         # P/num_bins >= 2^26 and a doc's OWN slot minimum would lose to a
         # distance-1 borrow — silently wrong bands on BOTH engines (the
         # oracle replays the same formula), so fail loudly instead
-        # (round-9 review finding)
         raise ValueError(
             f"num_bins={num_bins} leaves slot values up to "
             f"{MERSENNE_P // num_bins} >= OPH_DENS_BASE={OPH_DENS_BASE}; "
@@ -450,9 +391,9 @@ def oph_auto_cutover(num_bins: int = OPH_BINS) -> float:
     gap); above it slots are full, the correlation vanishes (pair_slots
     within 1% at ~2,120 shingles/doc) and OPH's 1-update-per-shingle
     sketch pass wins 5.6x. Both measured at the 100x replica under full
-    materialization — SCALE.md round 9. Lives here, next to the kernels
-    and OPH_BINS, so a bin retune moves the cutover with it (VERDICT r9
-    item 3: the kernel guideline must be code, not a docstring)."""
+    materialization. Lives here, next to the kernels and OPH_BINS, so a
+    bin retune moves the cutover with it: the kernel guideline is code,
+    not a docstring."""
     return num_bins * math.log(num_bins)
 
 
@@ -470,15 +411,15 @@ def simhash(tokened: DataFrame, id_col: str, token_col: str,
     # NULL tokens must be IGNORED, not voted: h60(NULL) is NULL, the bit
     # test evaluates to NULL, and when().otherwise(-1) would count every
     # null row as a -1 vote on all bits — two docs with identical real
-    # tokens but different null counts would sketch differently (round-8
-    # review finding). A doc whose tokens are ALL null gets no sketch row
+    # tokens but different null counts would sketch differently. A doc
+    # whose tokens are ALL null gets no sketch row
     # (more honest than the all-zeros sketch the bias produced).
     # Vote/assembly expressions as SQL TEXT parsed JVM-side: composing the
     # conditional-sum + bit-assembly Columns through py4j cost ~0.95 s of
-    # pure driver time per call (measured, round 12 — the zero-jobs gap of
-    # guide §7.3).
-    # PACKED COUNTERS (round 12, guide §2.3 narrower-shuffle + fewer
-    # aggregate-buffer updates): instead of ``bits`` ±1 vote sums, each
+    # pure driver time per call (measured: a zero-jobs gap in the job
+    # timeline).
+    # PACKED COUNTERS (a narrower shuffle and fewer aggregate-buffer
+    # updates): instead of ``bits`` ±1 vote sums, each
     # int64 aggregate packs the set-bit COUNTS of TWO sketch positions in
     # 31-bit slots — sum((h>>j & 1) + ((h>>j' & 1) << 31)) — halving the
     # per-row buffer updates AND the shuffled aggregate width. The vote

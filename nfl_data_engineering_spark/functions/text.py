@@ -115,21 +115,20 @@ def shingle_hash_arrays(df: DataFrame, id_col: str, text_col: str,
     array_distinct chain, so ``explode(sh_arr)`` reproduces that
     function's rows exactly).
 
-    This is the round-12 optimization pivot for the jaccard families
-    (guide §2.3/§2.4 — shuffle/aggregate row counts drop from
-    |shingle rows| to |docs|): downstream per-doc work that previously
-    exploded and re-aggregated runs ROW-LOCALLY on the array instead —
-    MinHash minima via array_min/transform (hashing.minhash_bands_arrays),
-    set sizes via size(sh_arr), and the exact-jaccard verification of a
-    candidate pair via size(array_intersect(a1, a2)) — no explode, no
-    (doc)-keyed aggregation, no per-pair intersection groupBy, and the
-    size-lookup joins disappear (measured at sf0.1: build 0.49 s vs the
-    exploded build's 0.67 s; bands 0.36 s vs 0.66 s; verify tail 0.24 s
-    vs 0.61 s — identical outputs). Consumers that genuinely need
-    per-shingle rows (document frequency, the df-capped self-join
-    family, the OPH slot groupBy) derive them with one row-local
-    ``select(explode(sh_arr))`` over the cached arrays — paying the
-    explode, but never re-tokenizing or re-hashing.
+    This is the row-local form of the jaccard families (shuffle and
+    aggregate row counts drop from |shingle rows| to |docs|): downstream
+    per-doc work that previously exploded and re-aggregated runs ROW-LOCALLY on
+    the array instead — MinHash minima via array_min/transform
+    (hashing.minhash_bands_arrays), set sizes via size(sh_arr), and the
+    exact-jaccard verification of a candidate pair via size(array_intersect(a1,
+    a2)) — no explode, no (doc)-keyed aggregation, no per-pair intersection
+    groupBy, and the size-lookup joins disappear (measured at sf0.1: build 0.49
+    s vs the exploded build's 0.67 s; bands 0.36 s vs 0.66 s; verify tail 0.24
+    s vs 0.61 s — identical outputs). Consumers that genuinely need per-shingle
+    rows (document frequency, the df-capped self-join family, the OPH slot
+    groupBy) derive them with one row-local ``select(explode(sh_arr))`` over
+    the cached arrays — paying the explode, but never re-tokenizing or
+    re-hashing.
 
     Scale note: a row's array is bounded by its document's distinct
     shingle count — the same per-row payload class as the ``text``
@@ -186,7 +185,7 @@ def lang_id(text_col: Column) -> Column:
     count of marker-word occurrences per language; winner = max score
     with (score desc, code asc) tie-break; 'und' on zero hits or NULL
     text). One vectorized pass with set lookups — ~50x the interpreted
-    higher-order-filter form on replica corpora (SCALE.md round 4)."""
+    higher-order-filter form on replica corpora."""
     import re
 
     import pandas as pd

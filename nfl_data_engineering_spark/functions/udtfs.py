@@ -18,7 +18,9 @@ import re
 
 from pyspark.sql.functions import udtf
 
-_RECORD_RE = re.compile(r"^(\d+)-(\d+)(?:-(\d+))?$")
+from ..operators.records import RECORD_RE
+
+_RECORD_RE = re.compile(RECORD_RE)
 
 
 @udtf(returnType="outcome string, n int")

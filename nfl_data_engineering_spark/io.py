@@ -102,8 +102,8 @@ def upsert_partitioned(spark: SparkSession, new_df: DataFrame, path: str,
         merged = existing.select(*new_part.columns).unionByName(new_part)
     part_cols = [F.col(c) for c in PARTITION_COLS]
     if key_cols is None:
-        # Full-row dedup rides the LAYOUT exchange (guide §2.4 — two
-        # operations keyed compatibly share one shuffle): identical rows
+        # Full-row dedup rides the LAYOUT exchange (two operations keyed
+        # compatibly share one shuffle): identical rows
         # have identical (year, month), so the layout repartition already
         # co-locates every duplicate group, and because the partition
         # columns are a subset of the dedup key (= all columns) Spark's
@@ -186,12 +186,12 @@ def quantile_cells(col: str, cuts: list[float], bits: int = 8):
     whole-stage-codegen'd as nested if/else. (A higher-order
     filter/aggregate over the cut array would be O(|cuts|) AND
     interpreted per element — measured 5x slower than even the old
-    global-ntile layout at sf0.1; the same Catalyst-HOF trap SCALE.md
-    documents for the SRP sketch.) NULL and NaN land in cell 0 via an
-    explicit guard: Arrow's pandas conversion collapses null and NaN
-    into one NaN, so cell(NULL) == cell(NaN) is forced — and without
-    the guard Spark's NaN-is-greatest SQL ordering would send NaN to
-    the TOP cell here while the kernel sent it to 0.
+    global-ntile layout at sf0.1; the same Catalyst-HOF trap
+    plans/vector._srp_bands documents for the SRP sketch.) NULL and NaN land in
+    cell 0 via an explicit guard: Arrow's pandas conversion collapses null and
+    NaN into one NaN, so cell(NULL) == cell(NaN) is forced — and without the
+    guard Spark's NaN-is-greatest SQL ordering would send NaN to the TOP cell
+    here while the kernel sent it to 0.
 
     Low-cardinality columns yield few DISTINCT cuts; the raw cell index is
     stretched to the full [0, 2^bits) range so the column still occupies
@@ -224,8 +224,8 @@ def _quantile_cells_arrow(cuts: list[float], bits: int = 8):
     Returns identical cells: side='right' == #cuts <= v, NaN/null -> raw
     cell 0, same floor-scaling to [0, 2^bits). The expression form stays
     available for SQL-only/no-Python contexts; the layout job defaults to
-    this kernel (same boundary SCALE.md documents for the SRP sketch —
-    Catalyst expression trees are the wrong tool for wide per-row
+    this kernel (same boundary plans/vector._srp_bands documents for the
+    SRP sketch — Catalyst expression trees are the wrong tool for wide per-row
     numerics)."""
     import numpy as np
     import pandas as pd

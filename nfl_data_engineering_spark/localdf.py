@@ -2,8 +2,8 @@
 
 ``spark.createDataFrame(list_of_rows, schema)`` ships the rows through the
 RDD pickle path: defaultParallelism slices, one Python worker round-trip
-per slice — measured 0.44 s warm for 1,600 rows on local[32] (guide §4:
-every Python-boundary crossing is a per-TASK cost, and this one pays it
+per slice — measured 0.44 s warm for 1,600 rows on local[32] (every
+Python-boundary crossing is a per-TASK cost, and this one pays it
 32 times for driver-local data). Routing the same rows through a pandas
 frame + Arrow (`spark.sql.execution.arrow.pyspark.enabled`, on in
 session.py) serializes ONE Arrow batch JVM-side with no Python workers at

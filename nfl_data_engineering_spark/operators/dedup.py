@@ -198,7 +198,7 @@ def dedup_keep_latest(df: DataFrame, key_cols: list[str], ts_col: str = "timesta
     w = Window.partitionBy(*key_cols).orderBy(*order)
     # collision-proof scratch name: withColumn would silently REPLACE a
     # pre-existing '__rn' column and drop would then delete the caller's
-    # data (round-8 review finding)
+    # data
     rn = "__rn"
     while rn in df.columns:
         rn += "_"

@@ -4,7 +4,7 @@ row-count + column names + order-insensitive values.
 
 The comparison is deliberately dtype-strict, mirroring the driver's
 pandas-based canonicalizer (sort columns by name, sort_values over all
-columns, hash): round 1 showed that a DuckDB HUGEINT sum (-> float64/object
+columns, hash): a DuckDB HUGEINT sum (-> float64/object
 in .df()) hash-mismatches a Spark int64 even when the values are equal, and
 that list-valued cells crash pandas sort_values outright. So this tool
 compares through pandas frames, flags dtype-kind mismatches and unhashable

@@ -97,7 +97,7 @@ def run_rankings_collection(spark: SparkSession, registry: DataFrame,
 # 'US/Central': US/* are deprecated BACKWARD links (identical rules)
 # that slim tzdata builds strip, and a module-import-time
 # ZoneInfoNotFoundError would break even explicit-date backfills that
-# never touch the zone (round-11 review finding).
+# never touch the zone.
 RUN_TZ = zoneinfo.ZoneInfo("America/Chicago")
 
 
@@ -112,9 +112,8 @@ def resolve_run_datetime(date: str | None,
       or when the job runs.
     * no date: ``now_utc`` (now() when None; injectable for tests)
       converted to Central wall time — a run at 2024-12-01T03:30Z
-      stamps 2024-11-30 21:30 and lands in the 2024/11 partition, the
-      reference behavior VERDICT r10 item 3 flagged as the last
-      unmirrored divergence (the old now-UTC stamp put it in 2024/12).
+      stamps 2024-11-30 21:30 and lands in the 2024/11 partition, as
+      the reference does (a now-UTC stamp would put it in 2024/12).
 
     Naive-Central (not tz-aware), stamped downstream via
     ``wall_clock_ts`` (string literal + ``to_timestamp``) so both the
@@ -122,8 +121,7 @@ def resolve_run_datetime(date: str | None,
     interpreted in the SESSION timezone — the same wall clock lands in
     the same partition regardless of driver-process TZ (a bare
     ``F.lit(naive datetime)`` would convert via the process zone and
-    could shift a near-midnight run across a partition boundary,
-    ADVICE r11)."""
+    could shift a near-midnight run across a partition boundary)."""
     if date:
         return dt.datetime.fromisoformat(date)
     now = now_utc if now_utc is not None else dt.datetime.now(dt.timezone.utc)
@@ -142,7 +140,7 @@ def handler(spark: SparkSession, event: dict,
     warning — the reference guards with ``if collector in
     eligible_collectors`` and silently drops them (src/main.py:38-40), and
     raising here would also abort the REMAINING collectors of a
-    multi-collector event where the reference runs them (ADVICE r11)."""
+    multi-collector event where the reference runs them."""
     run_dt = resolve_run_datetime(event.get("date"))
     results = {}
     for name in event.get("collectors_to_run") or []:

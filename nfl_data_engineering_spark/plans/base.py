@@ -157,8 +157,8 @@ def scoped_cached_plan_aqe(fn):
     table caches as 32 near-empty partitions and every Viterbi
     mapInPandas over it launches 32 Python tasks that each pay the
     ~0.25 s fixed Arrow/worker cost for a row or two of work (measured:
-    the whole unigram family, guide §2.2's fixed-per-partition overhead
-    at the Python boundary). Inside the scope AQE right-sizes the cache
+    the whole unigram family, a fixed per-partition overhead at the
+    Python boundary). Inside the scope AQE right-sizes the cache
     to its actual bytes; at 100 TB the same caches are GB-scale and AQE's
     bytes/parallelism target keeps them wide, so nothing degrades — the
     flag only matters where the cache is small, exactly where the fixed
@@ -223,6 +223,15 @@ def cents(col):
     if isinstance(col, str):
         col = F.col(col)
     return F.round(col * 100).cast("bigint")
+
+
+def rank_exact_accuracy(df: DataFrame) -> Column:
+    """``percentile_approx`` accuracy that keeps the sketch rank-exact
+    over ``df``'s rows: max(1e6, 10*N), so exactness does not silently
+    expire when N crosses a fixed accuracy. Costs one count job (a
+    bounded scalar probe); at sketch-bound scale, where N exceeds the
+    accuracy memory budget, pin a fixed accuracy instead."""
+    return F.lit(max(1_000_000, 10 * df.count()))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Lakehouse / scale-pattern query catalog (round 3 additions).
+"""Lakehouse / scale-pattern query catalog.
 
 Patterns a 100 TB Spark deployment leans on daily, each expressed so the
 DuckDB oracle can hash-verify the *result* while the Spark plan carries the
@@ -28,7 +28,7 @@ from ..functions.hashing import h60_sql
 from ..io import write_bucketed
 from ..storage import pin
 from .base import (QueryDef, cents, dec as _dec, drain_memory, event_micros,
-                   events_stream, load, scratch_dir)
+                   events_stream, load, rank_exact_accuracy, scratch_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -886,17 +886,16 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical id-ordered three-way self-join (orientation is a
     counting-invariant permutation, so the two formulations must agree
     exactly)."""
-    # Pair generation is ROW-LOCAL (round 12, guide §2.4 — remove the
-    # shuffle): one aggregation builds the per-order sorted distinct part
-    # set (collect_set dedupes repeated parts — a part on several lines
-    # of one order counts once), and the (u < v) pairs are enumerated
-    # inside the row with array expressions. The former shape —
-    # distinct + self-join on l_orderkey — paid a second shuffle of the
-    # item table and the join hash-build for pairs that never leave
-    # their order; measured 0.89 -> 0.66 s to the support-filtered edge
-    # list at sf0.1, byte-identical edges (exceptAll empty both ways).
-    # Skew is unchanged: a d-part basket emits d(d-1)/2 pairs in one
-    # task either way (the self-join also keys the blow-up on one order).
+    # Pair generation is ROW-LOCAL (no pair shuffle): one aggregation builds
+    # the per-order sorted distinct part set (collect_set dedupes repeated
+    # parts — a part on several lines of one order counts once), and the
+    # (u < v) pairs are enumerated inside the row with array expressions. The former
+    # shape — distinct + self-join on l_orderkey — paid a second shuffle of the
+    # item table and the join hash-build for pairs that never leave their
+    # order; measured 0.89 -> 0.66 s to the support-filtered edge list at
+    # sf0.1, byte-identical edges (exceptAll empty both ways). Skew is
+    # unchanged: a d-part basket emits d(d-1)/2 pairs in one task either way
+    # (the self-join also keys the blow-up on one order).
     ps = (load(spark, sf_dir, "lineitem")
           .groupBy("l_orderkey")
           .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
@@ -937,12 +936,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deg twice — uncached, the final 1-row report's logical plan inlines
     # ~10 copies of these multi-join subtrees and Catalyst spent a
     # measured 0.71 s of pure driver time optimizing it (the largest
-    # single cost left in this entry at sf0.1, round-13 job timeline).
+    # single cost left in this entry's sf0.1 job timeline).
     # Caching the two dimension-sized frames collapses every consumer to
     # an InMemoryRelation ref; the fills are one near-trivial job each
-    # over the 1-partition edge cache (guide §7.3 / §3.3 — very wide
-    # reuse makes planning itself the bottleneck; materialize to
-    # truncate the plan).
+    # over the 1-partition edge cache (very wide reuse makes planning
+    # itself the bottleneck; materialize to truncate the plan).
     deg = pin(edges.select(F.col("u").alias("node"))
               .unionAll(edges.select(F.col("v").alias("node")))
               .groupBy("node").agg(F.count("*").alias("d"))
@@ -1299,9 +1297,7 @@ def q_rfm_segmentation_cutoffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile twin: r_score 1 = most recent, f_score 1 = most orders,
     m_score 1 = top spend. Cross-engine exactness: rank-exact GK sketch
     at accuracy >> N == DuckDB quantile_disc (both ceil(p*N)); accuracy
-    adapts to the customer count (max(1e6, 10*N) via a bounded scalar
-    probe — see q_spend_quartiles_cutoffs for the sketch-bound-scale
-    note)."""
+    adapts to the customer count (base.rank_exact_accuracy)."""
     orders = load(spark, sf_dir, "orders")
     per_cust = (orders.groupBy("o_custkey")
                 .agg(F.datediff(F.lit("1998-12-31").cast("date"),
@@ -1310,7 +1306,7 @@ def q_rfm_segmentation_cutoffs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.count("*").alias("n_orders"),
                      F.sum(cents("o_totalprice")).alias("spend_c")))
     probs = F.array(*[F.lit(p) for p in (0.2, 0.4, 0.6, 0.8)])
-    acc = F.lit(max(1_000_000, 10 * per_cust.count()))
+    acc = rank_exact_accuracy(per_cust)
     cuts = per_cust.agg(
         F.percentile_approx("recency_days", probs, acc).alias("rc"),
         F.percentile_approx("n_orders", probs, acc).alias("fc"),

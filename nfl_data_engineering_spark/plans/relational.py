@@ -19,7 +19,8 @@ from ..operators.windows import exp_weighted_mean, topk_per_group, trailing_mean
 from ..functions.hashing import h60_sql
 from ..localdf import local_df
 from ..storage import pin
-from .base import QueryDef, cents, dec as _dec, event_micros, load
+from .base import (QueryDef, cents, dec as _dec, event_micros, load,
+                   rank_exact_accuracy)
 
 
 # ---------------------------------------------------------------------------
@@ -749,7 +750,7 @@ def sorted_group_vals(value) -> Column:
     """Aggregate expression for the sorted-array exact-percentile kernel:
     the group's non-null values as one ascending double array. Paired with
     :func:`percentile_from_sorted` this computes `percentile(v, p)`
-    BIT-IDENTICALLY (hex-compared per bound at all three SFs, round 13)
+    BIT-IDENTICALLY (hex-compared per bound at all three SFs)
     but ~2x faster at sf0.1: `Percentile` builds a per-group value->count
     OpenHashMap in update, serializes it through the partial aggregation,
     merges 32 of them and SORTS the keys at eval — `collect_list` rides
@@ -801,7 +802,7 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = F.try_divide(sum_sq - sum_v * sum_v / n, (n - 1).cast("double"))
     # all three ranks from ONE sorted-array buffer (sorted_group_vals /
     # percentile_from_sorted — Percentile's exact arithmetic, so output
-    # identical; round-13 kernel, ~2x over the map-buffer percentile())
+    # identical; ~2x over the map-buffer percentile())
     return (ev.groupBy("event_type").agg(
         n.alias("n"),
         sorted_group_vals(F.col("value")).alias("__a"),
@@ -846,7 +847,7 @@ def q_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("l_linenumber").cast("string"))
     samp = li.filter(h60(key) % SAMPLE_QUANT_MOD == 0)
     # all four ranks from ONE sorted-array buffer over the (monotone)
-    # DOUBLE cast — the round-13 sorted kernel; identical output (same
+    # DOUBLE cast — the sorted kernel; identical output (same
     # sorted values, Percentile's exact interpolation arithmetic)
     return (samp.groupBy("l_returnflag")
             .agg(F.count("*").alias("n_sampled"),
@@ -1495,18 +1496,16 @@ def q_spend_quartiles_cutoffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is rank-exact and Spark's percentile_approx returns the value
     at rank ceil(p*N) — the same convention as DuckDB's quantile_disc
     (verified empirically, including tie blocks). Accuracy ADAPTS to the
-    customer count (max(1e6, 10*N), a bounded scalar probe) so
-    rank-exactness doesn't silently expire when N crosses the fixed
-    accuracy; at genuinely sketch-bound scale (N beyond the accuracy
-    memory budget) pin a fixed accuracy and accept half-a-cell boundary
-    blur — value-based bucketing stays deterministic, only the cut
+    customer count (base.rank_exact_accuracy); at genuinely sketch-bound
+    scale pin a fixed accuracy and accept half-a-cell boundary blur —
+    value-based bucketing stays deterministic, only the cut
     placement blurs. All money stays in integer cents (rule 7); the mean
     is an integer floor division."""
     o = load(spark, sf_dir, "orders")
     spend = (o.groupBy("o_custkey")
              .agg(F.sum(cents("o_totalprice")).alias("spend_c")))
     probs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-    acc = F.lit(max(1_000_000, 10 * spend.count()))
+    acc = rank_exact_accuracy(spend)
     cuts = spend.agg(
         F.percentile_approx("spend_c", probs, acc).alias("c")
     ).select(F.col("c")[0].alias("c25"), F.col("c")[1].alias("c50"),
@@ -2173,10 +2172,10 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hex-compared identical at all three SFs): replaces the percentile()
     # map-buffer aggregate, whose per-group value->count OpenHashMap
     # build/merge/key-sort measured 1.02 s vs 0.57 s for the same bounds
-    # at sf0.1 (round 13; earlier round-12 steps — array form over
-    # separate aggregates 1.85x, double keys over BigDecimal ~1.2x —
-    # are subsumed by this kernel). Double cast stays monotone; the
-    # interpolation converts via the same toDouble Percentile uses.
+    # at sf0.1 (it also subsumes the array form over separate
+    # aggregates, 1.85x, and double keys over BigDecimal, ~1.2x). Double cast
+    # stays monotone; the interpolation converts via the same toDouble
+    # Percentile uses.
     bounds = (li.groupBy("l_returnflag")
               .agg(sorted_group_vals(F.col("l_extendedprice")).alias("a"))
               .select("l_returnflag",
@@ -2932,11 +2931,11 @@ def q_late_shipment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (late = shipped > LATE_SHIP_DAYS after order date), top-20 by offense
     count — the TPC-H Q21 double-EXISTS shape, expressed as ONE keyed
     aggregation plus a same-key window census instead of correlated
-    subqueries. Round 12 (guide §2.4): the previous two-aggregation +
-    self-join form gave the per-(order, supplier) frame TWO consumers, and
-    branch-specific pruning de-canonicalized the subtrees so the whole
-    lineitem⋈orders + groupBy DAG executed twice (plan audit: 5 exchanges,
-    duplicated subtree). Now: repartition by l_orderkey ONCE — the
+    subqueries. A two-aggregation + self-join form gave the
+    per-(order, supplier) frame TWO consumers, and branch-specific
+    pruning de-canonicalized the subtrees so the whole lineitem⋈orders +
+    groupBy DAG executed twice (plan audit: 5 exchanges, duplicated
+    subtree). Instead: repartition by l_orderkey ONCE — the
     (l_orderkey, l_suppkey) aggregation, the per-order n_supp/n_late
     census (count/sum windows over the same key), and the only-late-
     supplier filter all reuse that partitioning — then one groupBy per
@@ -3037,7 +3036,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     # both exact medians through the sorted-array kernel (bit-identical
     # to percentile(); see sorted_group_vals — measured ~2x on the
-    # trimmed_mean bounds at sf0.1, round 13)
+    # trimmed_mean bounds at sf0.1)
     med = (ev.groupBy("event_type")
            .agg(sorted_group_vals(F.col("value")).alias("a"))
            .select("event_type",
@@ -3181,10 +3180,9 @@ def q_revenue_gini_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bin = #cuts strictly below rev, as a BALANCED nested-when binary
     # search (O(log |cuts|) codegen comparisons on the one taken branch)
     # — NOT a Catalyst higher-order filter over the cut array, which
-    # evaluates interpreted per element: the exact trap io.quantile_cells
-    # and SCALE.md's SRP-sketch/z-order measurements document (~9x at
-    # 600k rows / 64 cuts). Strict '<' keeps revenue ties in one bin so
-    # the (rev, o_custkey) tiebreak stays within-bin.
+    # evaluates interpreted per element: the trap io.quantile_cells
+    # documents (~9x at 600k rows / 64 cuts). Strict '<' keeps revenue ties in
+    # one bin so the (rev, o_custkey) tiebreak stays within-bin.
     def _tree(lo: int, hi: int):
         if lo == hi:
             return F.lit(lo)
@@ -4144,7 +4142,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
            # the products form in decimal(38,0): n*prefix reaches
            # ~2.4e3 * total-cents and passes int64 once total revenue
            # passes ~$4e13 — Spark's non-ANSI int64 product would wrap
-           # silently and corrupt the argmax (ADVICE r4). The argmax
+           # silently and corrupt the argmax. The argmax
            # ordering runs on the exact decimal; the emitted bigint is
            # the output's documented ceiling.
            .withColumn("s_dec",

@@ -71,28 +71,27 @@ from .vector import ORACLE_COSINE_LSH, SRP_THRESHOLD, _vector_srp_join
 # engine-portable (a float ln() could differ in the last ulp across libm
 # builds), and compared the SAME way by the live router so a corpus whose
 # exact per-mille average lands in the float-vs-floor sliver cannot get
-# 'oph' from the report but 'kdraw' from the router (ADVICE r10).
+# 'oph' from the report but 'kdraw' from the router.
 ROUTE_CUTOVER_X1000 = int(oph_auto_cutover() * 1000)
 
 # Half-width of the routing boundary band, in per-mille of the cutover:
 # q_sketch_route_report only CLAIMS router/exact agreement when the exact
 # avg-shingles/doc statistic sits outside cutover*(1 ± 80/1000) — i.e.
-# ±8%, 4 sigma of the router's rsd=0.02 HLL estimate (widened from the
-# original 2.5-sigma ±5% per ADVICE r11: at 2.5 sigma an adversarially
-# shaped corpus still had ~1% parity-flake probability; at 4 sigma it is
-# ~6e-5). Inside the band both report and oracle emit 'boundary' instead
-# of a kernel name, so the parity attestation cannot break on a future
-# corpus/SF whose shape lands within HLL error of the cutover (ADVICE
-# r10; either kernel is fine there — the statistic only routes, exact
-# verify guards correctness). The shipped corpora sit far outside even
-# the widened band, so the strong live==exact claim is still what gets
-# attested.
+# ±8%, 4 sigma of the router's rsd=0.02 HLL estimate (at 2.5 sigma,
+# ±5%, an adversarially shaped corpus still had ~1% parity-flake
+# probability; at 4 sigma it is ~6e-5). Inside the band both report and
+# oracle emit 'boundary' instead of a kernel name, so the parity
+# attestation cannot break on a future corpus/SF whose shape lands
+# within HLL error of the cutover (either kernel is fine there — the
+# statistic only routes, exact verify guards correctness). The shipped corpora
+# sit far outside even the widened band, so the strong live==exact claim is
+# still what gets attested.
 ROUTE_BOUNDARY_PM = 80
 
 
 def _resolve_auto_sketch(sharr: DataFrame) -> str:
     """Route the approximate-jaccard kernel on MEASURED corpus shape
-    (VERDICT r9 item 3 — the OPH-vs-k-draw guideline as code): ONE
+    (the OPH-vs-k-draw guideline as code): ONE
     aggregate over the already-computed (and cached) shingle frame —
     count(*) beside an HLL approx_count_distinct(doc_id), a single-pass
     partial-agg reduce, no re-shuffle of the data, one bounded driver
@@ -107,19 +106,19 @@ def _resolve_auto_sketch(sharr: DataFrame) -> str:
     nudge the cutover point, never correctness. The rsd is pinned at
     0.02 because Spark's approx_count_distinct DEFAULT is 0.05 — left
     implicit, the divergence band would be 2.5x wider than this
-    docstring (and q_sketch_route_report's parity argument) states
-    (round-10 review finding). An empty corpus routes to k-draw (either
+    docstring (and q_sketch_route_report's parity argument) states. An
+    empty corpus routes to k-draw (either
     kernel yields no rows).
 
     The comparison is the integer per-mille form n*1000 >= d *
     ROUTE_CUTOVER_X1000 — the SAME quantized cutover the route report
-    and its oracle use, so all three share one decision boundary; the
-    float K*ln(K) compare the router used before ADVICE r10 left a
-    truncated sliver (exact per-mille avg in [floor(c*1000), c*1000))
-    where the report said 'oph' but the router picked 'kdraw'.
+    and its oracle use, so all three share one decision boundary; a
+    float K*ln(K) compare would leave a truncated sliver (exact
+    per-mille avg in [floor(c*1000), c*1000)) where the report said
+    'oph' but the router picked 'kdraw'.
 
-    Round 12: the statistic is computed from the per-doc ARRAY frame —
-    n = sum(size(sh_arr)) equals the old exploded count(*) exactly, and
+    The statistic is computed from the per-doc ARRAY frame —
+    n = sum(size(sh_arr)) equals an exploded count(*) exactly, and
     the HLL sketch over doc_id is insert-idempotent (adding a doc once
     or once-per-shingle writes the same registers), so d is the
     identical estimate; empty-array docs are filtered like the explode
@@ -163,8 +162,9 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
       densified slots correlate across bands) and ``'oph'``
       (One-Permutation Hashing: one draw per shingle instead of 64, so
       per-shingle sketch CPU is 64x lower at a fixed per-doc assembly
-      cost — wins on long-doc corpora, measured 5.6x; trade in SCALE.md
-      round 9, recall audited by q_oph_recall_audit/q_oph_recall_t05).
+      cost — wins on long-doc corpora, measured 5.6x; trade in
+      functions.hashing.oph_bands_fast, recall audited by
+      q_oph_recall_audit/q_oph_recall_t05).
       The knob is only meaningful on that path, so any other dispatch
       rejects an explicit kernel rather than silently ignoring it
       (the exact-flag rule); ``'auto'`` is accepted everywhere because
@@ -211,7 +211,7 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
     filled into a cache and its own pins released before the next
     dispatch). Measured at the 100x replica: the monolithic
     4-family union exceeded a 78 GB local spill budget that per-family
-    staging stayed well inside (SCALE.md round-8 replica sweep).
+    staging stayed well inside (34.7 GB peak).
     """
     dt = df.schema[col].dataType
     if metric == "auto":
@@ -322,8 +322,8 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
     **sum(families)** a monolithic lazy union pays when one job runs
     every family's shuffles concurrently (measured: the monolithic
     4-family union exceeded a 78 GB local spill budget at the 100x
-    replica that per-family staging stayed well inside — SCALE.md
-    round-8 sweep; the trade is that each text family re-shingles its
+    replica that per-family staging stayed well inside, 34.7 GB peak;
+    the trade is that each text family re-shingles its
     corpus, one extra linear scan per family, instead of sharing one
     pinned shingle cache across concurrently-running families).
 
@@ -343,8 +343,10 @@ def similarity_join_staged(specs: list[dict]) -> DataFrame:
     max(family): the shingle frame's blocks add to every family's peak.
     The caller owns that frame's lifetime: it was cached outside every
     family's stage, so no barrier releases it; release it after the
-    union is consumed. Measured A/B at the 10x replica in SCALE.md
-    round 10."""
+    union is consumed. Measured at the 10x replica (4-family staged
+    run, fresh session per mode): 169.8 s re-shingling per family vs
+    109.8 s sharing a 21.9 MB shingle cache, the same 711,291 rows and
+    the same 0.10 GB scratch peak."""
     if not specs:
         raise ValueError("similarity_join_staged: empty spec list")
     parts: list[DataFrame] = []
@@ -387,7 +389,7 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default would route here on corpus shape; its attestation lives in
     # q_sketch_route_report)
     #
-    # Round 12 (guide §2.6 — overlap independent jobs): each family
+    # Overlap independent jobs: each family
     # dispatch eagerly fills its own sketch caches (bands / prefix table
     # / simhash signatures / SRP norms), and running the four dispatches
     # sequentially serializes those cache-fill jobs even though none of
@@ -436,8 +438,8 @@ def q_similarity_join_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     through similarity_join_staged so each family fills its cached part
     and releases its pins BEFORE the next family dispatches — peak
     shuffle-spill disk is max(family), not sum(families) (measured at
-    the 100x replica: 34.7 GB peak vs the monolith's >78 GB budget blow
-    — SCALE.md rounds 8-9).
+    the 100x replica: 34.7 GB peak vs the monolith's >78 GB budget
+    blow).
     The oracle is the identical UNION ALL of the four families'
     independent specs, so a hash match proves staging changes the
     execution SHAPE and nothing about the result. Text specs pin
@@ -560,7 +562,7 @@ FROM stats
 """
 
 
-# --- sketch='auto' selecting OPH, end to end (VERDICT r10 item 5) ------
+# --- sketch='auto' selecting OPH, end to end ----------------------------
 # q_sketch_route_report attests the routing DECISION and the OPH entries
 # pin the kernel, but no driver-checked entry ran the 'auto' default and
 # had it SELECT OPH end-to-end. This fixture makes that route static by
@@ -577,9 +579,8 @@ AUTO_ROUTE_GROUP = 32
 # Replica-id offset far above any reachable super-doc gid: doc_ids are
 # bigint, so 2^40 leaves no collision cliff — the old 1e6 offset would
 # have silently merged a base super-doc with a replica one on any corpus
-# island holding >= 32M consecutive doc_ids (round-11 review finding;
-# both engines replay the same fixture, so parity would NOT have caught
-# the merged ids).
+# island holding >= 32M consecutive doc_ids (both engines replay the same
+# fixture, so parity would NOT have caught the merged ids).
 AUTO_ROUTE_OFFSET = 1 << 40
 
 
@@ -673,7 +674,7 @@ def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether the cheaper sketch stays safe when the banding loosens.
     t=0.5 derives to 64 slots / 32 bands (rows-per-band 2), where a
     LOW-fill doc's densified slots are most likely to dominate a 2-row
-    band key — exactly the correlation regime the round-9 replica
+    band key — exactly the correlation regime the short-doc replica
     analysis flagged — so the independent S-curve argument is weakest
     here and the measured number is the load-bearing one. Same
     exact-pair truth (df-capped quadratic self-join at 0.5) and

@@ -25,8 +25,7 @@ from pyspark.sql import (Column, DataFrame, SparkSession, Window,
 from ..functions.hashing import (
     DEFAULT_JACCARD_THRESHOLD as hashing_default_threshold, MERSENNE_P,
     NUM_HASHES, OPH_BINS, OPH_DENS_BASE, h60, h60_py, h60_sql,
-    minhash_band_config, minhash_bands_arrays, minhash_bands_fast,
-    oph_bands_fast, simhash)
+    minhash_band_config, minhash_bands_arrays, oph_bands_fast, simhash)
 from ..functions.similarity import (candidate_pairs, capped_overlap,
                                     verify_jaccard_arrays)
 from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
@@ -34,8 +33,8 @@ from ..functions.text import (LANG_MARKERS, STOPWORDS, WORD_RE, doc_fingerprint,
                               regex_token_count, shingle_hash_arrays, shingles,
                               tokens)
 from ..storage import park_frame, pin, stage
-from .base import (QueryDef, load, recall_ppm, scoped_cached_plan_aqe,
-                   sql_recall_ppm)
+from .base import (QueryDef, load, rank_exact_accuracy, recall_ppm,
+                   scoped_cached_plan_aqe, sql_recall_ppm)
 
 # DuckDB twin of functions/text.py tokens().
 SQL_TOKENS = "list_filter(regexp_split_to_array(lower({col}), '\\s+'), t -> t != '')"
@@ -89,17 +88,16 @@ FROM documents GROUP BY 1
 # NUM_HASHES is imported from functions.hashing (single source with the
 # band derivation and the front door's default budget) and re-exported
 # here for the entries and tests that always read it from textops.
-# The threshold likewise aliases hashing.DEFAULT_JACCARD_THRESHOLD
-# (ADVICE r8): the band kernels' bands=None default resolves against
+# The threshold likewise aliases hashing.DEFAULT_JACCARD_THRESHOLD:
+# the band kernels' bands=None default resolves against
 # THAT constant, so the catalog threshold and the kernel default cannot
 # drift apart.
 JACCARD_THRESHOLD = hashing_default_threshold
 # Band count DERIVED from the threshold via the shared S-curve rule
-# (functions.hashing.minhash_band_config) rather than pinned at 16
-# (VERDICT r7 item 5): 0.8 under the 64-hash budget resolves to the
-# proven 64x16 config, so every hash-checked output below is unchanged —
-# but re-tuning JACCARD_THRESHOLD now re-derives the banding instead of
-# silently re-inheriting 0.8-tuned recall (the r7 front-door fix).
+# (functions.hashing.minhash_band_config) rather than pinned at 16:
+# 0.8 under the 64-hash budget resolves to the proven 64x16 config,
+# and re-tuning JACCARD_THRESHOLD re-derives the banding instead of
+# silently re-inheriting 0.8-tuned recall.
 NUM_BANDS = minhash_band_config(JACCARD_THRESHOLD, NUM_HASHES)[1]
 
 
@@ -273,7 +271,7 @@ def sql_minhash_band_ctes(num_hashes: int, num_bands: int) -> str:
     """DuckDB replay of the MinHash banding pipeline, parameterized over
     the band configuration so threshold-derived configs (the
     similarity_join front door derives (b, r) from the caller's
-    threshold, VERDICT r6 item 3) get the same independent oracle as the
+    threshold) get the same independent oracle as the
     module-constant 64x16 entries."""
     return f"""{_sql_shh_ctes()},
 params AS (
@@ -437,7 +435,7 @@ def _star_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     # bands has exactly ONE consumer here (the bucket-min window), so it
     # is deliberately NOT cached. The groupBy-min + member-join
-    # alternative was A/B'd in round 6 (3-run min at sf0.1): window form
+    # alternative was A/B'd (3-run min at sf0.1): window form
     # 3.93s vs groupBy form 4.18s end-to-end — the extra bands cache
     # fill + join overhead eats the per-stage window-sort savings, and
     # at 100 TB both forms sort |docs x bands| rows on (band, band_key)
@@ -578,7 +576,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures the counterfactual, not a residual.
 
     Scale shape: everything rides the already-measured star path
-    (SCALE.md round-6: 24.5 s at the 100x replica) plus two row-local
+    (24.5 s at the 100x replica) plus two row-local
     projections and one |splits|-row rollup; the split assignment itself
     adds no shuffle beyond the survivor join."""
     from ..operators.dedup import connected_components
@@ -787,8 +785,8 @@ FROM overlap WHERE {_SQL_OVERLAP_JACCARD} >= 0.7
 
 # Asymmetric-containment gate, integer per-cent: C(sub, super) =
 # |S_sub ∩ S_super| / |S_sub| >= 0.90 is evaluated as i*100 >= sz_sub*90
-# so neither engine touches a float at the decision boundary (the
-# ADVICE r7 integer-arithmetic doctrine).
+# so neither engine touches a float at the decision boundary (integer
+# arithmetic at every checked gate).
 CONTAINMENT_PCT = 90
 
 
@@ -874,7 +872,7 @@ FROM dirs
 def containment_prefix_pairs(sh: DataFrame, t_pm: int) -> DataFrame:
     """Ordered containment pairs via the ASYMMETRIC PREFIX BOUND — the
     scale route for containment that q_containment_join's docstring
-    names (VERDICT r11 item 3), chosen over asymmetric minwise hashing
+    names, chosen over asymmetric minwise hashing
     because a symmetric sketch cannot band containment: C(A,B) >= t
     only implies jaccard >= t/(1 + |B|/|A| - t), which -> 0 as the
     size ratio grows — the quote-inside-boilerplate pair the operator
@@ -900,7 +898,8 @@ def containment_prefix_pairs(sh: DataFrame, t_pm: int) -> DataFrame:
     candidates only — both direction gates row-local on the unordered
     candidate row, exactly q_containment_join's explode form.
 
-    WIN CONDITION (measured, SCALE.md round 12): the route beats the
+    WIN CONDITION (measured in fresh sessions, rows equal between the
+    two kernels in every run): the route beats the
     plain df-capped self-join when the corpus has a torso of
     mid-frequency shingles (templates/boilerplate with df in the
     tens-to-hundreds, under the cap) and sparse true pairs — there the
@@ -909,9 +908,11 @@ def containment_prefix_pairs(sh: DataFrame, t_pm: int) -> DataFrame:
     corpora where most candidate pairs are true pairs) the shared
     verification stage dominates both routes and the plain join's
     lower constant wins — that corpus is the one you exact-dedup
-    first. A PPJoin-style positional filter was measured and REJECTED:
-    the global rarity order correlates across docs, so it cut
-    candidates only ~17% while paying a second window-ranked pass.
+    first. Measured: 1M docs over 1000 df=500 templates, route
+    126.9-301.7 s vs 906.9 s; the dense sf0.1 x10 replica (10-way
+    exact-dup groups), route 97.7 s vs 29.2 s. A PPJoin-style positional filter
+    was measured and REJECTED: the global rarity order correlates across docs,
+    so it cut candidates only ~17% while paying a second window-ranked pass.
 
     ``t_pm``: integer per-mille threshold (900 = the 0.90 gate);
     ceil(t*sz) is the integer form (t_pm*sz + 999) div 1000, so no
@@ -953,9 +954,8 @@ def q_containment_sketch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     full self-join — the same oracle discipline as
     q_prefix_filter_join's uncapped-quadratic spec. The candidate pass
     probes ~(1-t) of each doc's tokens (its rarity prefix) against the
-    index instead of joining every token against every token — the
-    measured 10x-replica A/B vs the full df-capped self-join is in
-    SCALE.md round 12."""
+    index instead of joining every token against every token; when that
+    wins is measured in containment_prefix_pairs' docstring."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
     sh.count()   # eager: sizes/dfreq/prefix/index consumers race a lazy cache
@@ -1007,8 +1007,8 @@ def exact_jaccard_count(sh: DataFrame, threshold: float) -> DataFrame:
     exact-jaccard pair count at ``threshold`` — the quadratic truth
     baseline of the MinHash recall audits. ONE implementation serves
     every threshold (q_minhash_recall_audit at 0.8,
-    similarity_api.q_minhash_recall_t05 at 0.5 — round-7 review: two
-    drifting copies would silently measure different 'truths')."""
+    similarity_api.q_minhash_recall_t05 at 0.5 — two drifting copies
+    would silently measure different 'truths')."""
     return (capped_overlap(sh, NGRAM_DF_CAP)
             .filter(_overlap_jaccard() >= F.lit(float(threshold)))
             .agg(F.count("*").alias("n_exact")))
@@ -1070,9 +1070,8 @@ def _text_prefix_join(sharr: DataFrame, threshold: float) -> DataFrame:
     self-join: both join sides consume it, and uncached each side re-runs
     the df-count aggregate + rarity-rank window over the full shingle
     explode (profiled at sf0.1: the two duplicated subtrees were the
-    entry's top stages, 12.5 s + 7.7 s task time — guide §2.4's
-    shared-subtree rule). The fill computes through ``sharr``, so it
-    fills a lazily-cached ``sharr`` in the same job."""
+    entry's top stages, 12.5 s + 7.7 s task time). The fill computes through
+    ``sharr``, so it fills a lazily-cached ``sharr`` in the same job."""
     frac = Fraction(threshold).limit_denominator(1_000_000)
     if frac > Fraction(threshold):
         # Never let the rationalized threshold exceed the float verify
@@ -1164,8 +1163,8 @@ def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join + exact-jaccard verify. Per-shingle sketch work drops from
     64 draw+aggregate updates to 1; measured at the 100x replica under
     full band materialization the per-doc assembly still outweighs the
-    saved draws on that short-doc corpus (4.35 s vs 2.81 s, SCALE.md
-    round 9) and the balance tips to OPH as shingles/doc rises — the
+    saved draws on that short-doc corpus (4.35 s vs 2.81 s) and the
+    balance tips to OPH as shingles/doc rises — the
     long-document regime a web corpus lives in.
     Candidates differ from the k-draw family (a different, equally-valid
     estimator of the same resemblance), so the oracle replays THIS
@@ -1210,7 +1209,7 @@ def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     spot candidate skew before paying for it. Candidate-join cost is
     locally quadratic in bucket size (sum n*(n-1)/2 = the exact number
     of candidate pair-slots the equi-join will emit), so the histogram
-    IS the cost model: the round-9 replica analysis that surfaced OPH's
+    IS the cost model: the replica analysis that surfaced OPH's
     short-doc borrow-correlation (max bucket 858 vs 393, +14% pair
     slots, a 2x entry-level gap) is exactly this query. Buckets are
     log2-sized via length(bin(n))-1 — integer-exact on both engines, no
@@ -1313,7 +1312,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor). The chunk join is the scale path — no all-pairs scan.
     Like every pair-ENUMERATION contract, output is quadratic per
     duplicate cluster (m copies -> m(m-1)/2 pairs; 16x last-10x wall at
-    the 100x replica's ~100-copy clusters, SCALE.md §100x) — for the
+    the 100x replica's ~100-copy clusters) — for the
     dedup deliverable at corpus scale, link to a cluster representative
     instead (the q_dedup_star_survivors pattern applies unchanged to
     simhash chunks)."""
@@ -1504,15 +1503,14 @@ def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (the spend_quartiles_cutoffs contract): NO global ntile —
     cutoffs come from one percentile_approx aggregate over the integer
     score_ppm (map-side sketch merge; accuracy adapts to the doc count so
-    the sketch stays rank-exact, same probe rule as the relational
-    cutoffs entries), broadcast back as a 1-row frame, and stage
-    assignment is a row-local comparison. Value-based bucketing: ties
-    share a stage — the contract that survives 100 TB, where
+    the sketch stays rank-exact, base.rank_exact_accuracy), broadcast back as a
+    1-row frame, and stage assignment is a row-local comparison. Value-based
+    bucketing: ties share a stage — the contract that survives 100 TB, where
     exactly-equal populations would need a total order."""
     docs = load(spark, sf_dir, "documents")
     scaled = _quality_scaled_cols(docs).select("source", "nt", "score_ppm")
     probs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-    acc = F.lit(max(1_000_000, 10 * docs.count()))
+    acc = rank_exact_accuracy(docs)
     cuts = scaled.agg(
         F.percentile_approx("score_ppm", probs, acc).alias("c")
     ).select(F.col("c")[0].alias("c25"), F.col("c")[1].alias("c50"),
@@ -2182,8 +2180,8 @@ def _dup_window_spans(t: DataFrame, k: int) -> DataFrame:
     (q_substring_dedup_rewrite) so the two entries'
     removed_tokens == dup_tokens contract cannot drift.
 
-    Round-13 shape (guide §2.3/§2.4 — the round-12 row-local array
-    doctrine applied to the window-hash frame): the per-doc hash ARRAY is
+    Shape (the row-local array form applied to the window-hash
+    frame): the per-doc hash ARRAY is
     what's cached (|docs| rows instead of |windows| exploded rows; the
     hash at 0-based index i is the window at position i+1, so positions
     are implicit), and the gaps-and-islands merge is row-local array
@@ -2237,7 +2235,7 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gaps-and-islands: positions p, q chain while q - p <= K) and the
     report gives span count, covered tokens and integer-ppm coverage.
 
-    Scale shape (round 13): the window-hash derivation is row-local (a
+    Scale shape: the window-hash derivation is row-local (a
     per-doc hash ARRAY — positions implicit in the index); the corpus-
     repeat decision is a count window over ONE w60 exchange; the island
     merge and the span report are row-local array arithmetic per doc.
@@ -2335,7 +2333,7 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens joined by single spaces (the token-level contract; original
     whitespace is not preserved).
 
-    Scale shape (round 13): the span machinery is
+    Scale shape: the span machinery is
     q_exact_substring_spans' (row-local window-hash arrays, ONE w60
     exchange for the repeat decision, row-local island merge). The
     rewrite itself adds NO token-level dataflow at all: spans per doc
@@ -2349,7 +2347,7 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all read it (3 scans of documents otherwise)
     t = pin(docs.select("doc_id", tokens(F.col("text")).alias("tk")))
     spans = _dup_window_spans(t, k)
-    # Round 13: the surgery is ROW-LOCAL. Spans per doc are disjoint,
+    # The surgery is ROW-LOCAL. Spans per doc are disjoint,
     # sorted, with >= 1 kept token between islands (the gap rule), so the
     # kept tokens are exactly the slices BETWEEN spans: kept ranges
     # [1, s1-1], [e1+1, s2-1], ..., [em+1, n] — materialized with one

@@ -702,7 +702,7 @@ ORACLE_BPE_ENCODE = _bpe_encode_oracle(_BPE_CTES)
 
 # ---------------------------------------------------------------------------
 # Unigram-LM (SentencePiece-style) tokenizer: EM train + apply
-# (VERDICT r11 item 6 — completes the tokenizer-training story next to BPE)
+# (completes the tokenizer-training story next to BPE)
 # ---------------------------------------------------------------------------
 
 # Candidate pieces are within-word char n-grams up to this length.
@@ -1306,7 +1306,7 @@ TFIDF_TOPK = 3
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top terms per document (the keyword-extraction step):
     tf = in-doc term count, idf = ln(N / doc-frequency), top-3 terms per doc
-    by (tfidf desc, term). Round 12 (guide §2.4): the tf rows ARE the
+    by (tfidf desc, term). The tf rows ARE the
     distinct (doc, term) pairs, so the doc frequency is a count(*) window
     over the tf aggregate partitioned by token — the second
     tokenize/explode pass, its distinct, and the tf x df join all
@@ -2298,7 +2298,7 @@ def q_priority_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # greatest(n_chars, 1): a zero-length doc would make the integer
         # division NULL, and Spark sorts NULLs first in ASC while DuckDB
         # defaults NULLS LAST — the guard pins identical selection on
-        # both engines (ADVICE r4)
+        # both engines
         .withColumn("pri", F.expr("u div greatest(n_chars, 1)")))
     sel = pri.orderBy("pri", "doc_id").limit(PRIORITY_SAMPLE_K)
     tot = docs.groupBy("source").agg(

@@ -281,7 +281,7 @@ def _srp_bands(emb: DataFrame, bits: int) -> DataFrame:
     The pure-expression form (transform over a plane-matrix literal +
     aggregate fold) is interpreted per element by Catalyst's higher-order
     functions — measured 222 s of a 290 s run just sketching a 200k-vector
-    corpus (the r1/r2 expression-literal form; fine at 2k vectors, the
+    corpus (the expression-literal form is fine at 2k vectors, the
     bottleneck at 200k). numpy does the same projection in milliseconds
     per Arrow batch. Determinism across engines is kept by accumulating
     the projection DIMS SEQUENTIALLY — one vectorized FMA per dimension,
@@ -952,13 +952,13 @@ SEMDEDUP_CLUSTER_SIZE = 2500   # target mean cluster size: the cluster
                                # (50k clusters for 100M+ items)
 
 
-# Budget gate on the DRIVER-HELD centroid table (VERDICT r7 item 4): the
+# Budget gate on the DRIVER-HELD centroid table: the
 # derived K grows linearly with the corpus, and the single-level path's
 # centroid list is driver-collected then broadcast into every assignment
 # pass. 500k centroids x 64 dims x 8 B ~ 0.25 GB — inside a stock
 # driver/executor budget. Past the gate (> ~1.25e9 docs at the 2500
 # target) q_semantic_dedup now routes through TWO-LEVEL clustering
-# (VERDICT r8 item 4, SemDeDup's own scaling path): a coarse Lloyd with
+# (SemDeDup's own scaling path): a coarse Lloyd with
 # k1 = ceil(sqrt(K)) driver-held centroids, then a fully DISTRIBUTED
 # per-cell fine Lloyd whose centroid table never touches the driver.
 # Only a corpus needing k1 itself past the gate (K > MAX_K^2 ~ 2.5e11
@@ -979,8 +979,8 @@ def _semdedup_k(n: int, cluster_size: int | None = None) -> int:
     ``cluster_size`` (None -> the production SEMDEDUP_CLUSTER_SIZE,
     resolved at call time for monkeypatch compatibility) is the ONE
     copy of the ceil-division rule — the two-level entry and its tests
-    pass SEMDEDUP_TL_CLUSTER_SIZE instead of re-inlining the arithmetic
-    (round-11 review finding)."""
+    pass SEMDEDUP_TL_CLUSTER_SIZE instead of re-inlining the
+    arithmetic."""
     size = SEMDEDUP_CLUSTER_SIZE if cluster_size is None else cluster_size
     return max(KMEANS_K, -(-n // size))
 
@@ -1006,7 +1006,7 @@ def _semdedup_coarse_k(k: int) -> int:
 
 # Integer ceiling-division, same arithmetic as _semdedup_k's
 # -(-n // size) — float CEIL(n / size.0) can diverge from the Python twin
-# on float-representation edges at very large n (ADVICE r7).
+# on float-representation edges at very large n.
 _SEMDEDUP_K_SQL = (f"GREATEST({KMEANS_K}, "
                    f"((SELECT COUNT(*) FROM embeddings)"
                    f" + {SEMDEDUP_CLUSTER_SIZE - 1}) // {SEMDEDUP_CLUSTER_SIZE})")
@@ -1125,7 +1125,7 @@ def _semdedup_pair_kernel(threshold: float):
     the >= gate exactly like the oracle's NULL. Row-blocked so a skewed
     cluster costs O(block x members) memory, never members^2. Measured
     34x over the expression-tree join form at the 10x replica (360.7s ->
-    10.7s, SCALE.md round 7): one Arrow batch per cluster instead of
+    10.7s): one Arrow batch per cluster instead of
     ~25M per-pair fold evaluations, and norms computed once per vector
     instead of twice per pair."""
     def fn(pdf):
@@ -1268,7 +1268,7 @@ def _oracle_semantic_dedup() -> str:
 def _semdedup_two_level_oracle(k1: int | str, cluster_size: int,
                                threshold: float) -> str:
     """DuckDB twin of the TWO-LEVEL path — the oracle discipline extended
-    one level up (VERDICT r8 item 4): the coarse Lloyd reuses
+    one level up: the coarse Lloyd reuses
     _kmeans_cte_parts at K1 (an int literal, or a SQL expression that
     derives K1 from the corpus size — the driver-checked entry passes
     the latter so one static oracle string is correct at every SF), then
@@ -1276,10 +1276,10 @@ def _semdedup_two_level_oracle(k1: int | str, cluster_size: int,
     ceiling count), KMEANS_REFITS assign-then-recenter rounds keyed by
     (ccl, fcl), a final assignment, and the shared CC/survivor tail.
     Exercised by the forced-low-cap unit test
-    (tests/test_semantic_dedup.py) AND — since VERDICT r10 item 4 — by
-    the driver-checked q_semantic_dedup_twolevel catalog entry; the
-    production q_semantic_dedup driver oracle stays single-level because
-    every test-SF corpus derives K <= SEMDEDUP_MAX_K."""
+    (tests/test_semantic_dedup.py) AND by the driver-checked
+    q_semantic_dedup_twolevel catalog entry; the production q_semantic_dedup
+    driver oracle stays single-level because every test-SF corpus derives K <=
+    SEMDEDUP_MAX_K."""
     cos = SQL_COS.format(a="m.embedding", b="c.cent")
     parts = _kmeans_cte_parts(str(k1))
     parts.append("""cc AS (
@@ -1337,7 +1337,7 @@ def _semdedup_two_level_oracle(k1: int | str, cluster_size: int,
 # would ever execute), so this entry pins size=50 to make the corpus
 # derive K in the tens-to-hundreds and FORCES the two-level dispatch,
 # putting the coarse-Lloyd -> distributed-fine-Lloyd -> CC/survivor
-# pipeline itself under the driver's oracle hash (VERDICT r10 item 4).
+# pipeline itself under the driver's oracle hash.
 SEMDEDUP_TL_CLUSTER_SIZE = 50
 
 _SEMDEDUP_TL_K_SQL = (f"GREATEST({KMEANS_K}, "
@@ -1346,7 +1346,7 @@ _SEMDEDUP_TL_K_SQL = (f"GREATEST({KMEANS_K}, "
                       f" // {SEMDEDUP_TL_CLUSTER_SIZE})")
 
 # Ceiling square root of the derived K, in float-error-robust integer
-# form (the ADVICE r7 integer-arithmetic doctrine): f = floor(sqrt(k))
+# form: f = floor(sqrt(k))
 # can be off by one ulp either way, so the smallest s with s*s >= k is
 # picked by explicit integer comparison over {f-1, f, f+1} — the exact
 # twin of _semdedup_coarse_k's math.isqrt ceiling.

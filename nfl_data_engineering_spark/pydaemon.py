@@ -2,8 +2,8 @@
 ``spark.python.daemon.module`` conf in session.py; stock ``pyspark.daemon``
 behavior is preserved — ``manager`` below IS pyspark's).
 
-Two constant-factor fixes for the per-task Python/Arrow fixed cost that
-VERDICT r12 item 1 named the largest cost class in the catalog (measured
+Two constant-factor fixes for the per-task Python/Arrow fixed cost, the
+largest cost class in the catalog (measured
 by timing an identity mapInArrow over a tiny cached frame at 1, 8 and 32
 partitions against the same frame's JVM-only noop write: a warm, reused
 worker still pays ~0.20-0.25 s per task BEFORE the UDF is entered):

@@ -41,7 +41,7 @@ def get_spark(app_name: str = "nfl-data-engineering-spark",
         # max(shuffle_bytes / parallelism, minPartitionSize)), but the
         # default 1 MB floor caps compute-dense small shuffles at
         # bytes/1MB tasks — e.g. the 6 MB pair self-join feeding
-        # triangle_count ran 5 tasks on 32 cores (guide §2.2). 256 KB
+        # triangle_count ran 5 tasks on 32 cores. 256 KB
         # frees those stages to use the cores; at production scale
         # bytes/parallelism >> 1 MB, so the floor never binds and the
         # partition sizing is unchanged.

@@ -21,6 +21,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.records import RECORD_RE
+
 # (category, table_name, base_url, date) -> parsed table
 Fetcher = Callable[[str, str, str, str], pd.DataFrame]
 
@@ -35,7 +37,6 @@ def _default_fetcher(category: str, table_name: str, base_url: str,
         "mirroring team_rankings_scraper.py:152-170)")
 
 
-RECORD_RE = r"^(\d+)-(\d+)(?:-(\d+))?$"
 _YEAR_NAMES = {str(y) for y in range(2000, 2101)}
 
 

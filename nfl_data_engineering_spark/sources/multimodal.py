@@ -1,10 +1,10 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Image/audio/video travel as ``binary`` columns with a typed metadata struct
-(schemas.MULTIMODAL_DOC). Decode / feature-extract / resize / frame-sample
-run as Arrow-batched ``mapInPandas`` pipelines — the Spark-side plumbing
-(schema, batch shape, partitioning) is real and tested; the actual codec
-calls are stubbed behind import guards because the image/audio libraries
+Image/audio/video travel as ``binary`` columns with typed metadata columns
+(see ``synthesize_multimodal``). Decode / feature-extract / resize /
+frame-sample run as Arrow-batched ``mapInPandas`` pipelines — the Spark-side
+plumbing (schema, batch shape, partitioning) is real and tested; the actual
+codec calls are stubbed behind import guards because the image/audio libraries
 are not in this container (container constraint, not a design one).
 
 At 100 TB: payloads dominate row size, so these pipelines repartition by a
@@ -177,8 +177,8 @@ def sample_frames(docs: DataFrame, every_ms: int = 250,
 def synthesize_multimodal(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
     """Deterministic multimodal fixture from the documents table: payload =
-    utf8 bytes, modality round-robins image/audio/video, metadata typed per
-    schemas.MULTIMODAL_DOC."""
+    utf8 bytes, modality round-robins image/audio/video, typed metadata
+    (mime_type, width, height, duration_ms, source)."""
     modal = F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
                          (F.col(id_col) % 3 + 1).cast("int"))
     return docs.select(

@@ -12,9 +12,29 @@ from __future__ import annotations
 import datetime as dt
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import (Column, DataFrame, SparkSession, functions as F,
+                         types as T)
 
-from ..schemas import ODDS_RAW
+# Odds raw (nested, pre-flatten): the 4-level JSON the odds API returns —
+# game -> bookmakers -> markets -> outcomes (get_odds.py:44-59). We keep the
+# nested form as a first-class type and flatten with explode (operators T1).
+ODDS_RAW = T.StructType([
+    T.StructField("id", T.StringType()),
+    T.StructField("commence_time", T.StringType()),
+    T.StructField("home_team", T.StringType()),
+    T.StructField("away_team", T.StringType()),
+    T.StructField("bookmakers", T.ArrayType(T.StructType([
+        T.StructField("key", T.StringType()),
+        T.StructField("markets", T.ArrayType(T.StructType([
+            T.StructField("key", T.StringType()),
+            T.StructField("outcomes", T.ArrayType(T.StructType([
+                T.StructField("name", T.StringType()),
+                T.StructField("price", T.LongType()),
+                T.StructField("point", T.DoubleType()),
+            ]))),
+        ]))),
+    ]))),
+])
 
 EXPECTED_MARKETS = ("h2h", "spreads", "totals")
 
@@ -70,7 +90,7 @@ def wall_clock_ts(collected_at: dt.datetime):
     internal micros via the DRIVER-PROCESS zone, while ``year()/month()``
     partition extraction uses ``spark.sql.session.timeZone`` — when the
     two differ, a near-midnight run can land in the wrong year/month
-    partition (ADVICE r11). A string literal parsed by ``to_timestamp``
+    partition. A string literal parsed by ``to_timestamp``
     is interpreted in the session zone only, so stamp and extraction
     always agree."""
     return F.to_timestamp(

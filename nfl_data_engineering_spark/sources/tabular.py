@@ -24,8 +24,7 @@ from xml.sax.saxutils import escape
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-REGISTRY_SCHEMA = ("category string, table_name string, base_url string, "
-                   "cols_to_keep string, record_cols string")
+from .html_table import REGISTRY_SCHEMA
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = ("{http://schemas.openxmlformats.org/officeDocument/2006/"

@@ -183,7 +183,7 @@ def test_zero_filled_counts_has_gap_buckets(spark):
 def test_connected_components_mixed_key_types(spark):
     """Fast-path schema must come from the SYMMETRIZED (type-coerced)
     frame: int src + bigint dst widens through the explode coercion, and
-    collected values can exceed the src column's type (round-8 review).
+    collected values can exceed the src column's type.
     Both paths must return the same widened schema and labels."""
     from pyspark.sql import functions as F
 
@@ -239,8 +239,8 @@ def test_connected_components_failure_releases_storage(spark, monkeypatch,
 
 
 def test_dedup_keep_latest_rn_column_collision(spark):
-    """A pre-existing '__rn' input column must survive (round-8 review:
-    the scratch row_number column used to overwrite then drop it)."""
+    """A pre-existing '__rn' input column must survive (a scratch
+    row_number column named '__rn' would overwrite then drop it)."""
     df = spark.createDataFrame(
         [("k1", 1, "keep-me"), ("k1", 2, "keep-me-too")],
         "k: string, timestamp: long, __rn: string")
@@ -252,7 +252,7 @@ def test_dedup_keep_latest_rn_column_collision(spark):
 
 def test_connected_components_label_sum_past_int64(spark, monkeypatch):
     """Pins the DECIMAL(38,0) convergence scalar at the magnitude that
-    motivated it (VERDICT r8 item 6): three nodes with ids ~4e18 push the
+    motivated it: three nodes with ids ~4e18 push the
     initial label sum past 2^63 in one round, where an int64 sum wraps
     and legacy-mode arithmetic could declare FALSE convergence. Green in
     both the driver fast path and the distributed min-label loop."""

@@ -145,7 +145,7 @@ def test_handler_dispatch_and_backfill_date(spark, tmp_path):
 
 def test_run_datetime_central_rule(spark, tmp_path):
     """The reference's US/Central run-timestamp rule (src/main.py:27-35),
-    mirrored per VERDICT r10 item 3: a dateless run near midnight UTC
+    mirrored: a dateless run near midnight UTC
     stamps CENTRAL wall time — so it lands in the previous Central
     year/month partition, not the UTC one — while an explicit backfill
     date is taken as-is (localized, never shifted)."""

@@ -1,9 +1,8 @@
 """The physical-plan gate, in CI: every bench-set query must plan without
 an un-allowlisted CartesianProduct / BroadcastNestedLoopJoin (the two
-"you didn't mean this at scale" strategies). tools/audit_plans.py has
-enforced this by hand since round 3; this test makes a cartesian plan
-turn the suite red instead of waiting for the next verdict (VERDICT r5
-item 1 / r4 item 7)."""
+"you didn't mean this at scale" strategies). tools/audit_plans.py
+enforces this by hand; this test makes a cartesian plan turn the suite
+red."""
 
 from __future__ import annotations
 
@@ -12,8 +11,7 @@ import sys
 
 # tools/ is not an installed package: on a dev box with the package
 # pip-installed, conftest's conditional insert never fires and this import
-# would error under bare pytest — insert the repo root unconditionally
-# (ADVICE r7).
+# would error under bare pytest — insert the repo root unconditionally.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.audit_plans import audit  # noqa: E402

@@ -1,5 +1,5 @@
 """Registry-surface invariants: the _PRIORITY rotation re-aims the
-driver's prefix check window each round; these asserts make a rotation
+driver's prefix check window; these asserts make a rotation
 typo (dropped/duplicated/renamed entry) fail fast instead of silently
 shrinking the verified surface."""
 
@@ -33,7 +33,6 @@ def test_priority_has_no_duplicates_or_stale_names():
 
 
 def test_every_entry_has_an_oracle():
-    # round 3 closed the last two oracle=None entries; keep it that way —
     # a no-oracle entry reads as red in the driver's correctness file
     missing = set(queries()) - set(oracle_sql())
     assert not missing, f"entries without oracle_sql: {sorted(missing)}"
@@ -49,8 +48,8 @@ def test_catalog_prefix_follows_priority_order():
     assert names[:len(_PRIORITY)] == _PRIORITY
 
 
-# Pinned bench set: round-over-round comparability requires the same 31
-# queries every round. Adding a query is a deliberate act (update this
+# Pinned bench set: run-to-run comparability requires the same queries
+# in every run. Adding a query is a deliberate act (update this
 # list in the same commit); losing one silently is a bug this catches.
 _BENCH_SET = {
     "asof_join", "best_snapshot", "big_order_customers",
@@ -63,34 +62,29 @@ _BENCH_SET = {
     "region_volume", "rollup_revenue", "segment_dedup",
     "shipping_priority", "streaming_daily_rollup", "tfidf_top_terms",
     "trimmed_mean", "upsert_roundtrip", "vocab_topk", "weekly_rollup",
-    # round-3 additions (iterative clustering + lakeops scale patterns):
-    # deliberate extensions of the pin — the original 31 stay untouched so
+    # iterative clustering + lakeops scale patterns: deliberate
+    # extensions of the pin — the original 31 stay untouched so
     # run-to-run comparisons on the common set remain valid
     "kmeans_embeddings",
     "skew_join_salted", "interval_incident_join", "last_touch_attribution",
     "ks_drift",
-    # round-4 additions: the two heaviest catalog deliverables (flagship
-    # corpus dedup + PQ ANN) pinned so their scaling is tracked
-    # round-over-round (VERDICT r3 item 5)
+    # the two heaviest catalog deliverables (flagship corpus dedup + PQ
+    # ANN) pinned so their scaling is tracked run to run
     "dedup_star_survivors", "ann_pq_topk",
-    # round-4 late additions: the exact prefix-filter similarity join and
-    # the degree-oriented triangle count — two new algorithm families
-    # whose scaling should be tracked from their first round
+    # the exact prefix-filter similarity join and the degree-oriented
+    # triangle count — two algorithm families whose scaling is tracked
     "prefix_filter_join", "triangle_count",
-    # round-4 late addition pinned in round 5 (VERDICT r4 item 1): the
-    # plan-asserted Q8-style star join
+    # the plan-asserted Q8-style star join
     "market_share",
-    # round-5 additions (VERDICT r4 item 4): the two steady-state 100 TB
-    # shapes of the dedup/decontamination families — regressions here are
-    # the costliest to discover late
+    # the two steady-state 100 TB shapes of the dedup/decontamination families
+    # — regressions here are the costliest to discover late
     "incremental_corpus_dedup", "semantic_contamination",
-    # round-7 additions (VERDICT r6 item 9): the round-6 deliverables that
-    # represent steady-state 100 TB shapes — the similarity-join front
+    # two more steady-state 100 TB shapes — the similarity-join front
     # door (all four families in one entry) and the cluster-keyed split
     "similarity_join_api", "leakage_safe_split",
-    # round-9 addition: the OPH sketch kernel (64x cheaper hashing than
-    # the k-draw MinHash pass) — pinned next to dedup_minhash_lsh so the
-    # two sketch families' costs stay comparable round-over-round
+    # the OPH sketch kernel (64x cheaper hashing than the k-draw MinHash
+    # pass) — pinned next to dedup_minhash_lsh so the two sketch
+    # families' costs stay comparable run to run
     "dedup_minhash_oph",
 }
 

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-2 catalog additions (beyond the DuckDB
+"""Semantic tests for catalog entries (beyond the DuckDB
 parity gate): streaming stateful/join entries, segment dedup, temperature
 mixing, winsorized stats, salted top-k, embedding components."""
 
@@ -112,8 +112,8 @@ def test_bpe_greedy_merge_run_parity(spark, tmp_path):
 
 
 def test_approx_percentile_within_rank_error(spark):
-    # the 100 TB percentile path (SCALE.md prescribes approx_percentile for
-    # the trimmed-mean bounds at scale): its result must sit within the
+    # the 100 TB percentile path (approx_percentile for the trimmed-mean
+    # bounds at scale): its result must sit within the
     # sketch's documented rank-error bound of the exact order statistic
     ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
     acc = 1000  # rank error <= n / acc

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-3 catalog additions (beyond the DuckDB
+"""Semantic tests for catalog entries (beyond the DuckDB
 parity gate): k-means clustering, int8 quantization, PMI collocations,
 hash-sampled quantiles, z-order pruning roundtrip."""
 
@@ -97,7 +97,7 @@ def test_pq_topk_shape_and_rank(spark):
 def test_srp_bits_adaptive():
     from nfl_data_engineering_spark.plans.vector import (SRP_MAX_BITS,
                                                          srp_bits)
-    # all test SFs stay at the 12-bit floor (byte-stable vs earlier rounds)
+    # all test SFs stay at the 12-bit floor (byte-stable outputs)
     assert srp_bits(50) == srp_bits(500) == srp_bits(5000) == 12
     assert srp_bits(8192) == 12
     # one extra bit per corpus doubling past 8192

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-4 catalog additions (beyond the DuckDB
+"""Semantic tests for catalog entries (beyond the DuckDB
 parity gate): incremental-ingest dedup and the PQ recall audit."""
 
 from __future__ import annotations

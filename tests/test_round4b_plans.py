@@ -1,4 +1,4 @@
-"""Semantic tests for the late round-4 catalog additions (beyond the DuckDB
+"""Semantic tests for catalog entries (beyond the DuckDB
 parity gate): distributed exact selection, mergeable histogram quantiles,
 the file-stats manifest, interval-overlap join, priority sampling, and the
 multi-batch streaming backfill."""

@@ -39,8 +39,8 @@ def test_semantic_dedup_invariants(spark, sf_dir):
 def test_semdedup_k_derivation_and_cap():
     """K grows with corpus size (ceil(n/2500), floored at the report
     entry's 8). Past the centroid-budget gate the derivation no longer
-    raises — q_semantic_dedup dispatches to the two-level path
-    (VERDICT r8 item 4) — but the COARSE level still fails loudly where
+    raises — q_semantic_dedup dispatches to the two-level path — but
+    the COARSE level still fails loudly where
     even sqrt(K) exceeds the gate (a third level is not built)."""
     import pytest
 
@@ -63,7 +63,7 @@ def test_semdedup_k_derivation_and_cap():
 
 
 def test_semantic_dedup_twolevel_entry_refines(spark, sf_dir):
-    """The driver-checked two-level entry (VERDICT r10 item 4) must
+    """The driver-checked two-level entry must
     actually exercise the fine level: more final clusters than coarse
     cells (else it silently degenerated to coarse-only clustering), the
     survivor table covers the corpus, and the pinned-size K derivation
@@ -81,7 +81,7 @@ def test_semantic_dedup_twolevel_entry_refines(spark, sf_dir):
 
 
 def test_semantic_dedup_two_level_matches_oracle(spark, sf_dir, monkeypatch):
-    """Force the two-level path at test scale (VERDICT r8 item 4): cap
+    """Force the two-level path at test scale: cap
     the gate at 4 and shrink the target cluster size so the 500-vector
     corpus derives K=10 > 4 -> coarse K1=4, ~3 fine clusters per cell.
     The Spark result must hash-match the two-level oracle twin — the

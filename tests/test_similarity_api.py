@@ -30,7 +30,7 @@ def test_dispatch_errors(spark, sf_dir):
     with pytest.raises(ValueError, match="hamming threshold"):
         similarity_join(docs, "doc_id", "text", 60, metric="hamming")
     # exact=True has no meaning outside the jaccard/prefix family —
-    # silently ignoring it would fake a lossless guarantee (ADVICE r6)
+    # silently ignoring it would fake a lossless guarantee
     with pytest.raises(ValueError, match="exact=True"):
         similarity_join(docs, "doc_id", "text", 3, metric="hamming",
                         exact=True)
@@ -39,7 +39,7 @@ def test_dispatch_errors(spark, sf_dir):
 
 
 def test_band_config_derivation():
-    """The threshold->band derivation (VERDICT r6 item 3): the proven
+    """The threshold->band derivation: the proven
     configs at the two measured thresholds, the S-curve floor honored by
     every returned config, precision monotonicity (higher threshold ->
     never more bands), and the r=1 fallback when even 64 bands cannot
@@ -66,7 +66,7 @@ def test_band_config_derivation():
 
 
 def test_standalone_entries_share_band_derivation():
-    """VERDICT r7 item 5: the standalone minhash entries (dedup_minhash_lsh,
+    """The standalone minhash entries (dedup_minhash_lsh,
     incremental_corpus_dedup and everything else built on textops.NUM_BANDS,
     including the SQL oracle CTEs) must route through the SAME
     threshold->band derivation as the front door — a module constant pinned
@@ -181,8 +181,8 @@ def test_auto_sketch_routes_on_corpus_shape(spark, sf_dir):
 
     assert oph_auto_cutover() == OPH_BINS * math.log(OPH_BINS)  # ~266
 
-    # round 12: the router reads the per-doc ARRAY frame (sum(size) /
-    # HLL over docs — same integers as the old exploded aggregate)
+    # the router reads the per-doc ARRAY frame (sum(size) / HLL over
+    # docs — same integers as an exploded aggregate)
     short = spark.createDataFrame(
         [(d, list(range(10))) for d in (1, 2)],
         "doc_id int, sh_arr array<bigint>")
@@ -214,7 +214,7 @@ def test_auto_sketch_routes_on_corpus_shape(spark, sf_dir):
 
 
 def test_staged_equals_monolithic_union(spark, sf_dir):
-    """similarity_join_staged (VERDICT r8 item 5) must produce exactly
+    """similarity_join_staged must produce exactly
     the monolithic q_similarity_join_api union — same four families,
     same tagged rows — while materializing family by family. Its
     cached parts live until the next release_deferred(), which
@@ -362,7 +362,7 @@ def test_staged_single_spec_no_self_cycle(spark, sf_dir):
 
 def test_bench_reps_arg_parsing():
     """--min-of N / --min-of=N parse; missing or non-integer values are
-    clear usage errors, not tracebacks (round-9 review)."""
+    clear usage errors, not tracebacks."""
     import pytest
 
     from nfl_data_engineering_spark.bench import _reps_requested

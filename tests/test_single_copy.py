@@ -7,13 +7,17 @@ _sql_verify_tail). The streaming entries' memory-sink drain and the
 entries' scratch-dir tag live in one helper each (plans/base.py:
 drain_memory, scratch_dir). A hand-written copy could drift and
 silently verify a different truth than the one every other entry
-uses. A cache under plans/ and operators/ is made only by storage.pin,
-which parks its release where the cache is made; the one exception is
-the staged barrier's part, parked once its family's stage has
+uses; the same holds for the rank-exact percentile accuracy rule
+(plans/base.py: rank_exact_accuracy). A cache under plans/ and operators/ is
+made only by storage.pin, which parks its release where the cache is made; the
+one exception is the staged barrier's part, parked once its family's stage has
 released the family's pins. No package code reads the context-global
-persistent-RDD registry: a release diffed off it frees whatever
-appeared, whoever made it, so storage is released by the frame that
-made it (storage.release_frame)."""
+persistent-RDD registry: a release diffed off it frees whatever appeared,
+whoever made it, so storage is released by the frame that made it
+(storage.release_frame). Code, tests and tools state facts, not the history of
+how they were reached: no round, verdict, advice or review citation and no
+pointer into a round section of SCALE.md (git keeps the history;
+plans/registry.py's driver-window rotation is the one exemption)."""
 
 from __future__ import annotations
 
@@ -23,6 +27,7 @@ import re
 PACKAGE = (pathlib.Path(__file__).resolve().parents[1]
            / "nfl_data_engineering_spark")
 PLANS = PACKAGE / "plans"
+REPO = PACKAGE.parent
 
 # Spark kernels: no copy at all under plans/
 COPIES = {
@@ -47,6 +52,7 @@ SCAFFOLD = {
     "memory-sink drain": re.compile(
         r"""writeStream\s*\.format\(\s*["']memory["']"""),
     "scratch-dir tag": re.compile(r"hashlib\.md5\(\s*sf_dir\b"),
+    "percentile accuracy rule": re.compile(r"max\(\s*1_000_000\s*,\s*10\s*\*"),
 }
 
 # a bare cache: allowed under plans/ and operators/ only as ALLOWED_CACHE
@@ -56,6 +62,13 @@ ALLOWED_CACHE = {("similarity_api.py", "part = tagged.cache()")}
 # a registry read, or the registry-diff ids once set on frames: nowhere
 # in the package
 REGISTRY_READ = re.compile(r"getPersistentRDDs|_ckpt_ids")
+
+# a history citation: a round number, a verdict/advice item, a review
+# finding, or a pointer into a round section of SCALE.md. The character
+# classes keep these patterns from matching their own source.
+HISTORY = re.compile(r"\b(?:VERDIC[T]|ADVIC[E])\b|\b[Rr]ounds?[- ]?\d+\b"
+                     r"|\breview findin[g]|SCALE\.md,?\s+[Rr]ound")
+HISTORY_EXEMPT = {PLANS / "registry.py"}
 
 
 def _matches(pat: re.Pattern) -> list[str]:
@@ -90,6 +103,21 @@ def test_no_registry_reads_in_the_package():
                              f"{line.strip()}")
     assert not found, ("release storage by its frame "
                        "(storage.release_frame):\n" + "\n".join(found))
+
+
+def test_code_cites_no_history():
+    found = []
+    for path in sorted([*PACKAGE.rglob("*.py"),
+                        *(REPO / "tests").rglob("*.py"),
+                        *(REPO / "tools").rglob("*.py")]):
+        if path in HISTORY_EXEMPT:
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if HISTORY.search(line):
+                found.append(f"{path.relative_to(REPO)}:{n}: "
+                             f"{line.strip()}")
+    assert not found, ("state the fact, not the round that found it:\n"
+                       + "\n".join(found))
 
 
 def test_no_kernel_copies_under_plans():
@@ -134,6 +162,20 @@ def test_lint_catches_the_copies_it_names():
     registry = ("    it = spark.sparkContext._jsc.getPersistentRDDs()"
                 ".keySet().iterator()")
     diff_ids = "    labels._ckpt_ids = rot.prev_ids"
+    accuracy = "    acc = F.lit(max(1_000_000, 10 * spend.count()))"
+    # split literals: this file must not cite history itself
+    history = ["# (VER" "DICT r7 item 5): 0.8 under the 64-hash budget",
+               "    recall after any NUM_HASHES retune (ADV" "ICE r8).",
+               "    # data (rou" "nd-8 review)",
+               "    # Rou" "nd 13: the surgery is ROW-LOCAL.",
+               "    materialization, rou" "nds 8-9).",
+               "    an IndexError traceback (review fin" "ding).",
+               "    (SCALE.md rou" "nd 9): on that SHORT-doc corpus"]
+    facts = ["    # each round every node takes the min label",
+             "    CAST(round(o_totalprice * 100) AS BIGINT)",
+             "    tests/test_round4b_plans.py via recentProgress",
+             "    Verdict per incoming doc: 'exact_dup'",
+             "    r2 - r1 AS total_delta_cents"]
     assert COPIES["banded candidate join"].search(join)
     assert COPIES["exact-cosine score"].search(score)
     assert COPIES["df-capped shingle self-join"].search(capped)
@@ -142,5 +184,8 @@ def test_lint_catches_the_copies_it_names():
     assert SQL_CTES["exact-jaccard verify"].search(sql_verify)
     assert SCAFFOLD["memory-sink drain"].search(drain)
     assert SCAFFOLD["scratch-dir tag"].search(tag)
+    assert SCAFFOLD["percentile accuracy rule"].search(accuracy)
     assert BARE_CACHE.search(cache) and BARE_CACHE.search(persist)
     assert REGISTRY_READ.search(registry) and REGISTRY_READ.search(diff_ids)
+    assert all(HISTORY.search(line) for line in history)
+    assert not any(HISTORY.search(line) for line in facts)

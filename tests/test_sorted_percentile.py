@@ -1,4 +1,4 @@
-"""The sorted-array exact-percentile kernel (round 13): bit-identical to
+"""The sorted-array exact-percentile kernel: bit-identical to
 Spark's `percentile()` aggregate, including interpolation arithmetic,
 null handling and empty-group semantics."""
 

@@ -143,7 +143,7 @@ def test_keep_latest_engine_gate(spark, tmp_path):
                            ttl_ms=1000, engine="apiws")
     # 'auto' resolves by protobuf availability (tws when importable, else
     # the legacy API) — EITHER resolution must build a valid streaming
-    # plan; installing protobuf must not turn this test red (VERDICT r5).
+    # plan; installing protobuf must not turn this test red.
     df = keep_latest_stream(stream, ["user_id"], "ts", ["value"])
     assert df.isStreaming
     # the explicitly-legacy engine builds regardless of environment

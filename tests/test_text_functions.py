@@ -4,15 +4,33 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nfl_data_engineering_spark.functions.hashing import (MERSENNE_P, h60,
-                                                          h60_py,
-                                                          minhash_bands_fast,
-                                                          simhash)
+from nfl_data_engineering_spark.functions.hashing import (
+    MERSENNE_P, h60, h60_py, lsh_band_keys, minhash_bands_arrays,
+    minhash_signatures, simhash)
 from nfl_data_engineering_spark.functions.similarity import (brute_force_topk,
                                                              cosine)
 from nfl_data_engineering_spark.functions.text import (doc_fingerprint,
                                                        explode_shingles,
-                                                       lang_id)
+                                                       lang_id,
+                                                       shingle_hash_arrays)
+
+
+def _kdraw_bands(spark, docs, num_hashes, bands):
+    """(row-local kernel, reference pair) band rows for ``docs``, a list
+    of (doc_id, [shingle string or None]). The kernel reads the per-doc
+    array of h60 hashes, NULL elements included; the reference pair
+    (minhash_signatures + lsh_band_keys) reads the exploded rows with the
+    NULL shingles filtered out."""
+    df = spark.createDataFrame(docs, "doc_id int, shingles array<string>")
+    docarr = df.select("doc_id", F.transform("shingles", h60).alias("sh_arr"))
+    sh = (df.select("doc_id", F.explode("shingles").alias("shingle"))
+          .filter(F.col("shingle").isNotNull()))
+    got = sorted(map(tuple, minhash_bands_arrays(
+        docarr, "doc_id", "sh_arr", num_hashes, bands).collect()))
+    sig = minhash_signatures(sh, "doc_id", "shingle", num_hashes=num_hashes)
+    want = sorted(map(tuple, lsh_band_keys(
+        sig, "doc_id", num_hashes=num_hashes, bands=bands).collect()))
+    return got, want
 
 
 def test_h60_matches_python_twin(spark):
@@ -47,8 +65,8 @@ def test_minhash_identical_docs_share_all_bands(spark):
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "the quick brown fox jumps over the lazy dog")],
         "doc_id int, text string")
-    sh = explode_shingles(df, "doc_id", "text", 3)
-    bands = minhash_bands_fast(sh, "doc_id", "shingle", 64, 16)
+    arr = shingle_hash_arrays(df, "doc_id", "text", 3)
+    bands = minhash_bands_arrays(arr, "doc_id", "sh_arr", 64, 16)
     keys = (bands.groupBy("band")
             .agg(F.countDistinct("band_key").alias("k")).collect())
     assert all(r["k"] == 1 for r in keys)
@@ -94,8 +112,7 @@ def test_oph_rejects_bins_without_distance_headroom(spark):
     """num_bins < 32 leaves slot values that can reach OPH_DENS_BASE, so
     a doc's own slot minimum could lose to a distance-1 borrow — and the
     oracle replays the same formula, so parity would never catch the
-    silently-wrong bands. The kernel must fail loudly instead (round-9
-    review finding)."""
+    silently-wrong bands. The kernel must fail loudly instead."""
     import pytest
 
     from nfl_data_engineering_spark.functions.hashing import oph_bands_fast
@@ -108,10 +125,10 @@ def test_oph_rejects_bins_without_distance_headroom(spark):
 
 
 def test_oph_null_shingles_ignored_like_kdraw(spark):
-    """ADVICE r9: a NULL shingle hash from an external hashed=True caller
-    must be IGNORED (the k-draw kernel's MIN skips NULLs; simhash filters
-    them), not propagated to a NULL map key that map_from_entries rejects
-    with an opaque runtime error. Bands must equal the null-free twin's."""
+    """A NULL shingle hash from an external hashed=True caller must be
+    IGNORED (the k-draw kernel and simhash filter them), not propagated to a
+    NULL map key that map_from_entries rejects with an opaque runtime error.
+    Bands must equal the null-free twin's."""
     from nfl_data_engineering_spark.functions.hashing import oph_bands_fast
     withnull = spark.createDataFrame(
         [(1, 12345), (1, None), (1, 67890), (2, None)],
@@ -127,36 +144,27 @@ def test_oph_null_shingles_ignored_like_kdraw(spark):
 
 
 def test_kdraw_null_shingles_ignored_like_oph(spark):
-    """ADVICE r10: the k-draw kernel's old "MIN skips NULLs" argument was
-    inexact for an ALL-null-shingle doc — it still emitted band rows
-    (every per-seed MIN NULL -> concat_ws skips them -> md5('') one
-    constant key), silently banding every such doc together in one
-    quadratic candidate bucket that the OPH kernel (filtered since r9)
-    never produces. Both kernels now share one contract: a doc with no
-    non-null shingles yields no rows; per-shingle NULLs never perturb
-    the bands."""
-    from nfl_data_engineering_spark.functions.hashing import (
-        minhash_bands_fast)
-    withnull = spark.createDataFrame(
-        [(1, 12345), (1, None), (1, 67890), (2, None), (3, None)],
-        "doc_id int, sh60 bigint")
-    clean = spark.createDataFrame(
-        [(1, 12345), (1, 67890)], "doc_id int, sh60 bigint")
-    got = sorted(map(tuple, minhash_bands_fast(
-        withnull, "doc_id", "sh60", 64, 16, hashed=True).collect()))
-    want = sorted(map(tuple, minhash_bands_fast(
-        clean, "doc_id", "sh60", 64, 16, hashed=True).collect()))
+    """A doc with no non-null shingles yields no band rows, and per-shingle
+    NULLs never perturb the bands — the OPH kernel's contract. An
+    all-null doc that emitted rows would get md5('') as every band key
+    (concat_ws skips the NULL minima) and band with every other such doc
+    in one quadratic candidate bucket."""
+    got, want = _kdraw_bands(spark, [
+        (1, ["a b c", None, "b c d"]), (2, [None]), (3, [None, None])],
+        64, 16)
     assert got == want        # docs 2+3 (all-null) yield NO rows — they
-    assert {t[0] for t in got} == {1}   # must not band together anymore
+    assert {t[0] for t in got} == {1}   # must not band together
+    clean, _ = _kdraw_bands(spark, [(1, ["a b c", "b c d"])], 64, 16)
+    assert got == clean
 
 
 def test_oph_fold_evaluated_once_in_plan(spark):
     """The densification fold + band assembly must survive optimization
-    as ONE aggregate expression. Round-9 regression: materializing the
-    fold (or the doubling levels) as named projection columns let
-    CollapseProject re-inline it into every lambda-body reference —
-    60-140x re-evaluation per row, invisible to .count() because column
-    pruning drops the band columns (full story in SCALE.md round 9). A
+    as ONE aggregate expression. Materializing the fold (or the doubling
+    levels) as named projection columns lets CollapseProject re-inline
+    it into every lambda-body reference — 60-140x re-evaluation per row,
+    invisible to .count() because column pruning drops the band columns
+    (measurements in functions.hashing.oph_bands_fast). A
     re-inlined plan shows one aggregate( per reference; the shipped
     single-expression form shows exactly one."""
     from nfl_data_engineering_spark.functions.hashing import oph_bands_fast
@@ -183,7 +191,7 @@ def test_simhash_identical_docs_hamming_zero(spark):
 
 def test_simhash_packed_counters_match_unpacked_votes(spark):
     """The packed-counter vote aggregate (two 31-bit set-bit counts per
-    int64 sum — round 12) must reproduce the original per-bit ±1 vote
+    int64 sum) must reproduce the original per-bit ±1 vote
     form exactly: vote_j = 2*cnt_j - n > 0 <=> 2*cnt_j > n."""
     from nfl_data_engineering_spark.functions.hashing import h60
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -275,9 +283,9 @@ def test_cosine_and_topk(spark):
 
 
 def test_simhash_ignores_null_tokens(spark):
-    """NULL tokens must not vote (round-8 review: h60(NULL) is NULL and
-    when().otherwise(-1) counted each null row as -1 on every bit, so
-    docs differing only in null counts sketched differently)."""
+    """NULL tokens must not vote (h60(NULL) is NULL, and
+    when().otherwise(-1) would count each null row as -1 on every bit, so
+    docs differing only in null counts would sketch differently)."""
     from nfl_data_engineering_spark.functions.hashing import simhash
     toked = spark.createDataFrame(
         [("d1", "alpha"), ("d1", "beta"),
@@ -294,26 +302,18 @@ def test_simhash_ignores_null_tokens(spark):
 
 
 def test_minhash_fast_path_matches_reference_path(spark):
-    """minhash_bands_fast claims to be 'semantically identical' to
-    minhash_signatures + lsh_band_keys (the exploded reference form) —
-    prove it (round-8 review: the reference pair had zero callers and
-    nothing held the two forms together)."""
-    from nfl_data_engineering_spark.functions.hashing import (
-        lsh_band_keys, minhash_bands_fast, minhash_signatures)
-    docs = spark.createDataFrame(
-        [("d%d" % i, "tok%d tok%d tok%d tok%d" % (i, i + 1, i + 2, i % 3))
-         for i in range(8)], "doc_id: string, text: string")
-    sh = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS shingle")
-    fast = {(r["doc_id"], r["band"], r["band_key"]) for r in
-            minhash_bands_fast(sh, "doc_id", "shingle", 16, 4).collect()}
-    sig = minhash_signatures(sh, "doc_id", "shingle", num_hashes=16)
-    ref = {(r["doc_id"], r["band"], r["band_key"]) for r in
-           lsh_band_keys(sig, "doc_id", num_hashes=16, bands=4).collect()}
-    assert fast == ref
+    """The row-local kernel every catalog entry runs (minhash_bands_arrays)
+    must be semantically identical to minhash_signatures + lsh_band_keys,
+    the exploded reference form."""
+    got, want = _kdraw_bands(spark, [
+        (i, ["tok%d" % j for j in (i, i + 1, i + 2, i % 3)])
+        for i in range(8)], 16, 4)
+    assert got == want
+    assert {t[0] for t in got} == set(range(8))
 
 
 def test_shingle_hash_arrays_matches_exploded_form(spark):
-    """Round-12 pivot: shingle_hash_arrays must be the exact pre-explode
+    """shingle_hash_arrays must be the exact pre-explode
     form of explode_shingle_hashes — explode(sh_arr) reproduces its rows
     (same distinct hash sets per doc), and empty docs keep a row with an
     empty array where the exploded form drops them."""
@@ -336,21 +336,11 @@ def test_shingle_hash_arrays_matches_exploded_form(spark):
 
 def test_minhash_bands_arrays_matches_exploded_kernel(spark):
     """The row-local k-draw kernel must emit byte-identical band rows to
-    minhash_bands_fast over the exploded rows — including the shared
+    the reference pair over the exploded rows — including the shared
     contracts: NULL elements ignored, all-null/empty docs yield no rows."""
-    from nfl_data_engineering_spark.functions.hashing import (
-        minhash_bands_arrays)
-    docarr = spark.createDataFrame(
-        [(1, [11, 22, 33, 44, 55]), (2, [22, 33, 66]),
-         (3, [None, 77]), (4, []), (5, [None])],
-        "doc_id int, sh_arr array<bigint>")
-    sh = docarr.select(
-        "doc_id", F.explode("sh_arr").alias("sh60")).filter(
-        F.col("sh60").isNotNull())
-    got = sorted(map(tuple, minhash_bands_arrays(
-        docarr, "doc_id", "sh_arr", 16, 4).collect()))
-    want = sorted(map(tuple, minhash_bands_fast(
-        sh, "doc_id", "sh60", 16, 4, hashed=True).collect()))
+    got, want = _kdraw_bands(spark, [
+        (1, ["s11", "s22", "s33", "s44", "s55"]), (2, ["s22", "s33", "s66"]),
+        (3, [None, "s77"]), (4, []), (5, [None])], 16, 4)
     assert got == want
     assert {t[0] for t in got} == {1, 2, 3}   # 4 (empty), 5 (all-null): none
 

@@ -184,8 +184,8 @@ def test_fullrow_dedup_rides_the_layout_exchange(spark):
     share (year, month), and hash(year, month) satisfies the all-columns
     dedup's clustered distribution because the partition columns are a
     subset of the grouping keys — so dropDuplicates after the layout
-    repartition must introduce no second shuffle (round-13 optimization;
-    a Spark behavior this test pins)."""
+    repartition must introduce no second shuffle (a Spark behavior this
+    test pins)."""
     from pyspark.sql import functions as F
 
     from nfl_data_engineering_spark.io import with_partition_cols

@@ -45,14 +45,13 @@ ALLOW_NESTED_LOOP = {"cosine_neardup_pairs", "embedding_topk", "ann_ivf_topk",
                      "minhash_recall_t05",
                      # 1-row exact-vs-estimate cross for the ppm ratio
                      "join_size_estimate",
-                     # round-12 additions, same bounded scaffolds: the
-                     # containment audit crosses two 1-row counts (truth
-                     # vs route) for the ppm ratio; the perplexity filter
-                     # crosses per-doc stats with 1-row corpus totals for
-                     # the integer avg_doc <= avg_corpus gate (the EM loop
-                     # it shares with train/apply plans those totals as
-                     # broadcast hash joins, so only this entry needs the
-                     # allowlist)
+                     # same bounded scaffolds: the containment audit crosses
+                     # two 1-row counts (truth vs route) for the ppm ratio; the
+                     # perplexity filter crosses per-doc stats with 1-row
+                     # corpus totals for the integer avg_doc <= avg_corpus gate
+                     # (the EM loop it shares with train/apply plans those
+                     # totals as broadcast hash joins, so only this entry needs
+                     # the allowlist)
                      "containment_recall_audit", "unigram_perplexity_filter"}
 
 JOIN_RE = re.compile(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"

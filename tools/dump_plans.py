@@ -1,6 +1,5 @@
 """Dump ``explain('formatted')`` output per catalog query to a directory —
-the before/after plan evidence the optimization rounds commit under
-``plans/r<round>/``.
+before/after plan evidence for a plan change (diff the two suffixes).
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
        (default sf_dir /root/testdata/sf0.1; default query set = bench set)

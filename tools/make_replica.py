@@ -1,4 +1,4 @@
-"""Key-shifted Nx replica generator for scale sweeps (SCALE.md §10x).
+"""Key-shifted Nx replica generator for scale sweeps.
 
 Replicates every testdata table N times into an output directory,
 FK-consistently: every synthetic key (and the FKs referencing it) in copy

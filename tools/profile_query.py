@@ -1,8 +1,8 @@
-"""Per-stage empirical profile of one catalog query (guide §1.1): run the
+"""Per-stage empirical profile of one catalog query: run the
 query in isolation with a noop sink, then read the Spark UI REST API for
 per-stage wall time, task time, shuffle read/write bytes and row counts —
-the 'where is the time actually going' readout the optimization rounds
-use to aim changes.
+the 'where is the time actually going' readout that aims an
+optimization.
 
 Usage: python tools/profile_query.py <query> [sf_dir] [--reps N]
        (default sf_dir /root/testdata/sf0.1, reps 2 — first run charges

@@ -493,16 +493,15 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture, route the 'video' modality through sources/multimodal.py:
     sample_frames — an Arrow-batched mapInPandas that fans each payload out
     to one NARROW row per sampled timestamp (metadata-driven grid, payload
-    bytes never re-emitted). The deterministic fallback decoder (md5 of
-    payload + '#' + ts; real pyav decode is import-gated) makes every
-    output cell re-derivable in DuckDB: the oracle rebuilds the same
-    doc x frame-grid cross join and hashes. Proves schema, fan-out
+    bytes never re-emitted). The deterministic frame hash (md5 of
+    payload + '#' + ts) makes every output cell re-derivable in DuckDB:
+    the oracle rebuilds the same doc x frame-grid cross join and hashes. Proves schema, fan-out
     cardinality, and batch shape — the parts of the pipeline Spark owns."""
     from ..sources.multimodal import sample_frames, synthesize_multimodal
     docs = load(spark, sf_dir, "documents")
     mm = (synthesize_multimodal(docs.select("doc_id", "text"))
           .filter(F.col("modality") == "video"))
-    return sample_frames(mm, every_ms=250, codec="fake")
+    return sample_frames(mm, every_ms=250)
 
 
 ORACLE_FRAME_SAMPLE = """
@@ -700,10 +699,8 @@ _RS_W, _RS_H = 64, 48
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize plumbing end to end: the 'image' modality through
-    sources/multimodal.py:resize_images with the deterministic fake codec
-    pinned (codec='fake' — the real Pillow path is selected by codec=
-    'auto'/'real' where the lib exists; pinning keeps the entry oracle-
-    checkable in any environment). Resize is the one multimodal transform
+    sources/multimodal.py:resize_images, whose deterministic byte-plane
+    keeps the entry oracle-checkable. Resize is the one multimodal transform
     that legitimately EMITS payloads (exactly width*height bytes each);
     the checked projection hashes them instead of shipping them — the
     oracle rebuilds each byte-plane by cycling the payload's md5 digest
@@ -713,7 +710,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     mm = (synthesize_multimodal(docs.select("doc_id", "text"))
           .filter(F.col("modality") == "image"))
-    resized = resize_images(mm, _RS_W, _RS_H, codec="fake")
+    resized = resize_images(mm, _RS_W, _RS_H)
     return resized.select(
         "doc_id", "width", "height",
         F.length("payload").alias("payload_bytes"),

@@ -69,34 +69,8 @@ class OddsRestReader(DataSourceReader):
             raise FileNotFoundError(f"no *.json payloads under {self._dir}")
         return [_PayloadPartition(p) for p in paths]
 
-    def _ok(self, col: str, value) -> bool:
-        allowed = self._accept.get(col)
-        return allowed is None or value in allowed
-
     def read(self, partition: _PayloadPartition) -> Iterator[tuple]:
-        for game in _load_payload(partition.path):
-            gid = game.get("id")
-            if not self._ok("game_id", gid):
-                continue
-            base = (gid, game.get("commence_time"),
-                    game.get("home_team"), game.get("away_team"))
-            for bk in game.get("bookmakers") or []:
-                book = bk.get("key")
-                if not self._ok("book", book):
-                    continue
-                for mk in bk.get("markets") or []:
-                    market = mk.get("key")
-                    if not self._ok("market", market):
-                        continue
-                    for oc in mk.get("outcomes") or []:
-                        name = oc.get("name")
-                        if not self._ok("outcome", name):
-                            continue
-                        price = oc.get("price")
-                        point = oc.get("point")
-                        yield (*base, book, market, name,
-                               None if price is None else float(price),
-                               0.0 if point is None else float(point))
+        return _flatten_games(_load_payload(partition.path), self._accept)
 
 
 def _load_payload(path: str) -> list[dict]:
@@ -104,16 +78,37 @@ def _load_payload(path: str) -> list[dict]:
         return json.load(fh)
 
 
-def _flatten_game(game: dict):
-    base = (game.get("id"), game.get("commence_time"),
-            game.get("home_team"), game.get("away_team"))
-    for bk in game.get("bookmakers") or []:
-        for mk in bk.get("markets") or []:
-            for oc in mk.get("outcomes") or []:
-                price, point = oc.get("price"), oc.get("point")
-                yield (*base, bk.get("key"), mk.get("key"), oc.get("name"),
-                       None if price is None else float(price),
-                       0.0 if point is None else float(point))
+def _flatten_games(games, accept: dict[str, set] | None = None
+                   ) -> Iterator[tuple]:
+    """The one odds flattener: game -> bookmakers -> markets -> outcomes,
+    one ODDS_FLAT_SCHEMA row per outcome with the ``point`` null-fill of
+    get_odds.py:61. ``accept`` maps a pushed column to its accepted values
+    (None: accept everything); a rejected game, book or market is skipped
+    before the loop descends into it."""
+    games_ok, books_ok, markets_ok, outcomes_ok = (
+        (accept or {}).get(c) for c in _PUSHABLE)
+    for game in games:
+        gid = game.get("id")
+        if games_ok is not None and gid not in games_ok:
+            continue
+        base = (gid, game.get("commence_time"),
+                game.get("home_team"), game.get("away_team"))
+        for bk in game.get("bookmakers") or []:
+            book = bk.get("key")
+            if books_ok is not None and book not in books_ok:
+                continue
+            for mk in bk.get("markets") or []:
+                market = mk.get("key")
+                if markets_ok is not None and market not in markets_ok:
+                    continue
+                for oc in mk.get("outcomes") or []:
+                    name = oc.get("name")
+                    if outcomes_ok is not None and name not in outcomes_ok:
+                        continue
+                    price, point = oc.get("price"), oc.get("point")
+                    yield (*base, book, market, name,
+                           None if price is None else float(price),
+                           0.0 if point is None else float(point))
 
 
 class OddsRestStreamReader(SimpleDataSourceStreamReader):
@@ -137,18 +132,17 @@ class OddsRestStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"index": 0}
 
+    @staticmethod
+    def _rows(files: list[str]) -> Iterator[tuple]:
+        return _flatten_games(game for p in files for game in _load_payload(p))
+
     def read(self, start: dict):
         files = self._files()
-        rows = [row for p in files[start["index"]:]
-                for game in _load_payload(p)
-                for row in _flatten_game(game)]
+        rows = list(self._rows(files[start["index"]:]))
         return iter(rows), {"index": len(files)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = self._files()[start["index"]:end["index"]]
-        return iter(row for p in files
-                    for game in _load_payload(p)
-                    for row in _flatten_game(game))
+        return self._rows(self._files()[start["index"]:end["index"]])
 
 
 class OddsRestDataSource(DataSource):

@@ -3,14 +3,15 @@
 Image/audio/video travel as ``binary`` columns with typed metadata columns
 (see ``synthesize_multimodal``). Decode / feature-extract / resize /
 frame-sample run as Arrow-batched ``mapInPandas`` pipelines — the Spark-side
-plumbing (schema, batch shape, partitioning) is real and tested; the actual
-codec calls are stubbed behind import guards because the image/audio libraries
-are not in this container (container constraint, not a design one).
+plumbing (schema, batch shape, partitioning) is the tested part. Each
+transform has one deterministic body in place of a media codec: a feature,
+plane or frame hash derived from the payload bytes, so every output cell
+is re-derivable by a SQL oracle and no result depends on which image or
+video libraries happen to be installed.
 
-At 100 TB: payloads dominate row size, so these pipelines repartition by a
-size budget rather than row count, and feature extraction emits ONLY the
-feature columns (never re-emits payload bytes) so the shuffle after
-extraction carries kilobytes per row, not megabytes.
+At 100 TB: payloads dominate row size, so feature extraction and frame
+sampling emit ONLY narrow columns (never re-emit payload bytes) and the
+shuffle after them carries kilobytes per row, not megabytes.
 """
 
 from __future__ import annotations
@@ -27,21 +28,11 @@ FEATURE_SCHEMA = ("doc_id long, modality string, payload_bytes long, "
 RESIZE_SCHEMA = "doc_id long, width int, height int, payload binary"
 
 
-def _have_pillow() -> bool:
-    try:
-        import PIL  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def decode_features(docs: DataFrame, batch_budget_rows: int = 1024) -> DataFrame:
-    """Extract cheap deterministic features per payload.
-
-    Real decode (PIL / torchaudio / pyav) is gated on import; without the
-    libs we emit a deterministic fake feature (mean byte value) so the
-    pipeline shape — Arrow batches in, narrow feature rows out, payload
-    dropped before any shuffle — is exercised end-to-end.
+def decode_features(docs: DataFrame) -> DataFrame:
+    """Extract cheap deterministic features per payload: the md5 of the
+    bytes and their mean byte value (no media decode), so the pipeline
+    shape — Arrow batches in, narrow feature rows out, payload dropped
+    before any shuffle — is exercised end-to-end.
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -64,39 +55,18 @@ def decode_features(docs: DataFrame, batch_budget_rows: int = 1024) -> DataFrame
     return docs.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_images(docs: DataFrame, width: int, height: int,
-                  codec: str = "auto") -> DataFrame:
+def resize_images(docs: DataFrame, width: int, height: int) -> DataFrame:
     """Image resize pipeline: one output payload of exactly width*height
     bytes per input (this transform legitimately EMITS payloads — the one
     exception to the narrow-rows rule, so keep it last before the sink).
 
-    ``codec``: 'real' = Pillow decode/resize/re-encode (raises ImportError
-    when the lib is absent); 'fake' = deterministic byte-plane — the
-    payload's md5 hex digest cycled to width*height bytes. The digest (not
-    the raw bytes) is cycled so the plane is pure ASCII: byte and
-    character indexing coincide, which keeps the plane re-derivable by a
-    SQL oracle on any text (multi-byte or empty) even where the SQL
-    engine's string functions are character-based. 'auto' = real when
-    Pillow imports, else fake; unknown values raise."""
-    if codec not in ("fake", "real", "auto"):
-        raise ValueError(f"unknown codec {codec!r}")
-    use_real = codec == "real" or (codec == "auto" and _have_pillow())
-
-    def run_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        from PIL import Image
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                img = Image.open(_io.BytesIO(bytes(b))).resize((width, height))
-                buf = _io.BytesIO()
-                img.save(buf, format="PNG")
-                out.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "width": width,
-                                "height": height, "payload": out})
-
-    def run_fake(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    The plane is deterministic: the payload's md5 hex digest cycled to
+    width*height bytes. The digest (not the raw bytes) is cycled so the
+    plane is pure ASCII: byte and character indexing coincide, which keeps
+    the plane re-derivable by a SQL oracle on any text (multi-byte or
+    empty) even where the SQL engine's string functions are
+    character-based."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         need = width * height
         for pdf in batches:
             out = []
@@ -107,52 +77,22 @@ def resize_images(docs: DataFrame, width: int, height: int,
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "width": width,
                                 "height": height, "payload": out})
 
-    return docs.mapInPandas(run_real if use_real else run_fake,
-                            schema=RESIZE_SCHEMA)
+    return docs.mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_ts_ms long, frame_hash string"
 
 
-def _have_av() -> bool:
-    try:
-        import av  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def sample_frames(docs: DataFrame, every_ms: int = 250,
-                  codec: str = "fake") -> DataFrame:
+def sample_frames(docs: DataFrame, every_ms: int = 250) -> DataFrame:
     """Video frame sampling: one output row per sampled timestamp, payload
     DROPPED before the rows leave the task (the narrow-rows-after-decode
     rule from the module docstring — at 100 TB the per-frame fan-out must
     not multiply megabyte payloads through a shuffle).
 
     The frame grid is metadata-driven: timestamps 0, every_ms, ... up to
-    (exclusive) duration_ms.
-
-    ``codec`` mirrors resize_images: 'fake' (default) = deterministic
-    per-frame hash — md5(payload || '#' || ts) — so the whole pipeline
-    (Arrow batches in, per-frame fan-out, narrow rows out) is exercised
-    and oracle-checkable in any environment, with or without pyav
-    installed; 'real' = decode via pyav (ImportError when the lib is
-    absent; the decoder body itself is not wired in this container —
-    NotImplementedError); 'auto' = real when pyav imports, else fake.
-    Unknown codec values raise (same contract as weather convert_units —
-    a typo must not silently produce fake hashes labeled as decoded
-    frames). The catalog entry pins codec='fake' so installing the
-    optional dependency can never change or break the checked result."""
-    if codec not in ("fake", "real", "auto"):
-        raise ValueError(f"unknown codec {codec!r}")
-    use_real = codec == "real" or (codec == "auto" and _have_av())
-    if use_real:  # pragma: no cover - codec not in this container
-        if not _have_av():
-            raise ImportError("codec='real' requires the pyav package")
-        raise NotImplementedError(
-            "real frame decoder not wired in this container (pyav): same "
-            "fan-out, frame_hash = md5 of decoded frame bytes)")
-
+    (exclusive) duration_ms. Each frame's hash is deterministic —
+    md5(payload || '#' || ts) — so the whole pipeline (Arrow batches in,
+    per-frame fan-out, narrow rows out) is oracle-checkable."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, tss, hashes = [], [], []

@@ -1,17 +1,16 @@
-"""Small-table config sources/sinks: Excel (S3/S10) and CSV.
+"""Small-table config source/sink: Excel (S3/S10).
 
 The reference reads its 221-row URL registry and writes a stats db as Excel
 (team_rankings_scraper.py:15, :246, :251). These are driver-side small-table
 ops — the registry is broadcast-sized config, not data — so the adapter
 reads on the driver and lifts to a DataFrame.
 
-No external Excel engine ships in this container, so the .xlsx codec here
-is a self-contained minimal implementation of the public OOXML spreadsheet
-format (ECMA-376: a zip holding worksheet XML + an optional shared-strings
-table) on stdlib ``zipfile`` + ``xml.etree``. It covers what a config
-registry/export needs — one sheet, header row, string/number cells, shared
-and inline strings — and prefers openpyxl transparently when one IS
-installed (pandas handles the engine hand-off).
+The .xlsx codec here is a self-contained minimal implementation of the
+public OOXML spreadsheet format (ECMA-376: a zip holding worksheet XML + an
+optional shared-strings table) on stdlib ``zipfile`` + ``xml.etree``, and
+the only one used: cells read back the same whichever Excel engines are
+installed. It covers what a config registry/export needs — one sheet,
+header row, string/number cells, shared and inline strings.
 """
 
 from __future__ import annotations
@@ -31,14 +30,6 @@ _REL_NS = ("{http://schemas.openxmlformats.org/officeDocument/2006/"
            "relationships}")
 
 
-def _excel_engine_available() -> bool:
-    try:
-        import openpyxl  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
 def _col_index(cell_ref: str) -> int:
     """'A1' -> 0, 'AB7' -> 27 (0-based column of an A1-style reference)."""
     letters = re.match(r"[A-Z]+", cell_ref).group(0)
@@ -54,8 +45,6 @@ def read_xlsx_pandas(path: str) -> pd.DataFrame:
     Understands shared strings (t="s"), inline strings (t="inlineStr"),
     literal strings (t="str") and numeric cells — the cell types a config
     workbook produced by pandas/openpyxl/Excel actually contains."""
-    if _excel_engine_available():
-        return pd.read_excel(path)
     with zipfile.ZipFile(path) as zf:
         shared: list[str] = []
         if "xl/sharedStrings.xml" in zf.namelist():
@@ -129,10 +118,6 @@ def write_xlsx_pandas(pdf: pd.DataFrame, path: str) -> None:
     Inline strings (no shared-strings indirection) keep the writer
     single-pass; every mainstream reader (Excel, openpyxl, pandas, DuckDB's
     spatial extension) accepts them."""
-    if _excel_engine_available():
-        pdf.to_excel(path, index=False)
-        return
-
     def cell_xml(ref: str, v: object) -> str:
         if v is None or (isinstance(v, float) and v != v):
             return ""
@@ -212,13 +197,6 @@ def read_registry_excel(spark: SparkSession, path: str,
     The frame is broadcast-sized by construction (hundreds of rows)."""
     pdf = read_xlsx_pandas(path).fillna("").astype(str)
     return spark.createDataFrame(pdf, schema=schema)
-
-
-def read_registry_csv(spark: SparkSession, path: str,
-                      schema: str = REGISTRY_SCHEMA) -> DataFrame:
-    """CSV twin of the registry read (same schema contract)."""
-    return (spark.read.schema(schema).option("header", "true").csv(path)
-            .na.fill(""))
 
 
 EXCEL_EXPORT_MAX_ROWS = 1_000_000  # the .xlsx format's own sheet limit

@@ -69,55 +69,18 @@ def write_partitioned_stream(df: DataFrame, out_dir: str, checkpoint_dir: str,
     return writer.start()
 
 
-ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
-                    "state.RocksDBStateStoreProvider")
-
-
-def _have_protobuf() -> bool:
-    """transformWithState's Python state client speaks protobuf to the
-    JVM state server; the library is an optional pyspark dependency and
-    is not in this container."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
 def keep_latest_stream(stream: DataFrame, key_cols: list[str], ts_col: str,
                        value_cols: list[str],
-                       tiebreak_cols: list[str] | None = None,
-                       ttl_ms: int | None = None,
-                       engine: str = "auto") -> DataFrame:
+                       tiebreak_cols: list[str] | None = None) -> DataFrame:
     """Stateful keep-latest-per-key over a stream — the rankings upsert
     (team_rankings_data_collector.py:34-50) as a continuously-maintained
-    state instead of a read-modify-write batch.
+    state instead of a read-modify-write batch, on
+    ``applyInPandasWithState``.
 
     Per-key state holds the newest (ts, tiebreaks, values) seen; each
     microbatch emits the key's current latest row (update semantics).
     State is one tuple per key — size is O(|keys|), independent of stream
     length. Pair with ``writeStream.outputMode("update")``.
-
-    ``engine`` picks the stateful API:
-
-    * ``'tws'`` — ``transformWithStateInPandas`` (the Spark 4.x successor
-      of applyInPandasWithState): RocksDB-backed ValueState and per-key
-      TTL via ``ttl_ms`` — bounded state WITHOUT assuming a bounded key
-      count, the knob the legacy API lacks. Requires the ``protobuf``
-      Python package (state-server wire protocol). CAUTION: selecting
-      'tws' sets ``spark.sql.streaming.stateStore.providerClass`` to
-      RocksDB on the stream's SESSION (queries read it at start), and
-      the setting stays for every streaming query started afterwards —
-      in particular an unrelated query RESTARTING from an existing
-      HDFS-backed checkpoint would come up under the wrong provider.
-      Sessions mixing state-store providers across queries must manage
-      the conf around each query start themselves; the set below is
-      skipped when a provider is already explicitly configured.
-    * ``'apiws'`` — ``applyInPandasWithState``: same semantics minus TTL,
-      no extra dependency.
-    * ``'auto'`` (default) — 'tws' when protobuf imports, else 'apiws'.
-      In this container protobuf is absent, so 'auto' runs 'apiws'; both
-      code paths compute the identical update rule and share the oracle.
 
     ``tiebreak_cols`` pin a total order among rows sharing a timestamp
     (greatest tiebreak wins). Without one, a ts tie makes "latest"
@@ -126,14 +89,7 @@ def keep_latest_stream(stream: DataFrame, key_cols: list[str], ts_col: str,
     output so downstream selection can re-apply the same order.
     """
     import pandas as pd
-
-    if engine == "auto":
-        engine = "tws" if _have_protobuf() else "apiws"
-    if engine not in ("tws", "apiws"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if ttl_ms is not None and engine != "tws":
-        raise ValueError("ttl_ms requires engine='tws' "
-                         "(applyInPandasWithState has no per-key TTL)")
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     tiebreaks = tiebreak_cols or []
     ord_cols = [ts_col, *tiebreaks]
@@ -147,8 +103,9 @@ def keep_latest_stream(stream: DataFrame, key_cols: list[str], ts_col: str,
     n_ord = 1 + len(tiebreaks)
     out_cols = [*key_cols, ts_col, *tiebreaks, *value_cols]
 
-    def fold_batches(best, pdfs):
-        """The shared update rule: newest (ts, *tiebreaks) wins."""
+    def fn(key: tuple, pdfs, state: GroupState):
+        """Newest (ts, *tiebreaks) wins, across batches and the state."""
+        best = tuple(state.get) if state.exists else None
         for pdf in pdfs:
             if pdf.empty:
                 continue
@@ -159,48 +116,6 @@ def keep_latest_stream(stream: DataFrame, key_cols: list[str], ts_col: str,
                                                    *value_cols))])
             if best is None or cand[:n_ord] > best[:n_ord]:
                 best = cand
-        return best
-
-    if engine == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor, StatefulProcessorHandle)
-
-        class KeepLatest(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._latest = handle.getValueState(
-                    "latest", state_schema, ttlDurationMs=ttl_ms)
-
-            def handleInputRows(self, key, rows, timer_values):
-                best = tuple(self._latest.get()) \
-                    if self._latest.exists() else None
-                best = fold_batches(best, rows)
-                if best is not None:
-                    self._latest.update(best)
-                    yield pd.DataFrame([tuple(key) + best],
-                                       columns=out_cols)
-
-            def close(self) -> None:
-                pass
-
-        # default-or-HDFS provider -> switch to RocksDB (transformWithState
-        # requires it; a session still on the default hasn't chosen); a
-        # session that explicitly configured some OTHER provider keeps its
-        # choice (see the docstring CAUTION on conf persistence)
-        sess = stream.sparkSession
-        key = "spark.sql.streaming.stateStore.providerClass"
-        cur = sess.conf.get(key, "") or ""
-        if cur == "" or cur.endswith("HDFSBackedStateStoreProvider"):
-            sess.conf.set(key, ROCKSDB_PROVIDER)
-        time_mode = "ProcessingTime" if ttl_ms is not None else "None"
-        return (stream.groupBy(*key_cols)
-                .transformWithStateInPandas(KeepLatest(), out_schema,
-                                            "Update", time_mode))
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        best = fold_batches(tuple(state.get) if state.exists else None,
-                            pdfs)
         if best is not None:
             state.update(best)
             yield pd.DataFrame([key + best], columns=out_cols)

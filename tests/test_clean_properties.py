@@ -17,7 +17,8 @@ from pyspark.sql import functions as F, types as T
 
 from nfl_data_engineering_spark.operators.clean import (NULL_SENTINELS,
                                                         clean_string,
-                                                        coerce_types)
+                                                        coerce_types,
+                                                        strip_parenthetical)
 
 # ASCII-strict numeric gate: Spark's string->double parser accepts only
 # ASCII digits (Python's float() would happily parse Unicode digits like
@@ -111,3 +112,15 @@ def test_coerce_types_missing_column_and_passthrough(spark):
         "string", "bigint", "double"]
     row = out.collect()[0]
     assert row["s"] == "x" and row["n"] == 1 and row["absent"] is None
+
+
+def test_strip_parenthetical_drops_record_suffix(spark):
+    # T4: the rankings pages append ' (W-L-T)' to team names
+    df = spark.createDataFrame(
+        [(0, "Lions (9-8)"), (1, "Green Bay (10-6-1)"), (2, "Lions"),
+         (3, "San Francisco"), (4, None)], "i int, v string")
+    got = {r["i"]: r["c"] for r in
+           df.select("i", strip_parenthetical(F.col("v")).alias("c"))
+           .collect()}
+    assert got == {0: "Lions", 1: "Green Bay", 2: "Lions",
+                   3: "San Francisco", 4: None}

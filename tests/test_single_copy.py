@@ -14,10 +14,13 @@ one exception is the staged barrier's part, parked once its family's stage has
 released the family's pins. No package code reads the context-global
 persistent-RDD registry: a release diffed off it frees whatever appeared,
 whoever made it, so storage is released by the frame that made it
-(storage.release_frame). Code, tests and tools state facts, not the history of
-how they were reached: no round, verdict, advice or review citation and no
-pointer into a round section of SCALE.md (git keeps the history;
-plans/registry.py's driver-window rotation is the one exemption)."""
+(storage.release_frame). Each operator has one implementation: no package code
+catches ImportError to pick a second body by which libraries are installed, so
+a result never depends on the environment (parity.py's fallback from the entry
+module to the registry is the one exemption). Code, tests and tools state
+facts, not the history of how they were reached: no round, verdict, advice or
+review citation and no pointer into a round section of SCALE.md (git keeps the
+history; plans/registry.py's driver-window rotation is the one exemption)."""
 
 from __future__ import annotations
 
@@ -63,6 +66,11 @@ ALLOWED_CACHE = {("similarity_api.py", "part = tagged.cache()")}
 # in the package
 REGISTRY_READ = re.compile(r"getPersistentRDDs|_ckpt_ids")
 
+# an import probe that forks an operator: allowed in the package only as
+# ALLOWED_IMPORT_GATE
+IMPORT_GATE = re.compile(r"except\s*\(?\s*(?:ModuleNotFound|Import)Error\b")
+ALLOWED_IMPORT_GATE = {("parity.py", "except ImportError as e:")}
+
 # a history citation: a round number, a verdict/advice item, a review
 # finding, or a pointer into a round section of SCALE.md. The character
 # classes keep these patterns from matching their own source.
@@ -103,6 +111,18 @@ def test_no_registry_reads_in_the_package():
                              f"{line.strip()}")
     assert not found, ("release storage by its frame "
                        "(storage.release_frame):\n" + "\n".join(found))
+
+
+def test_no_import_gated_forks_in_the_package():
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if (IMPORT_GATE.search(line)
+                    and (path.name, line.strip()) not in ALLOWED_IMPORT_GATE):
+                found.append(f"{path.relative_to(PACKAGE)}:{n}: "
+                             f"{line.strip()}")
+    assert not found, ("keep one implementation, not one per installed "
+                       "library:\n" + "\n".join(found))
 
 
 def test_code_cites_no_history():
@@ -163,6 +183,12 @@ def test_lint_catches_the_copies_it_names():
                 ".keySet().iterator()")
     diff_ids = "    labels._ckpt_ids = rot.prev_ids"
     accuracy = "    acc = F.lit(max(1_000_000, 10 * spend.count()))"
+    probe = ("def _have_pillow() -> bool:\n"
+             "    try:\n"
+             "        import PIL  # noqa: F401\n"
+             "        return True\n"
+             "    except ImportError:\n"
+             "        return False")
     # split literals: this file must not cite history itself
     history = ["# (VER" "DICT r7 item 5): 0.8 under the 64-hash budget",
                "    recall after any NUM_HASHES retune (ADV" "ICE r8).",
@@ -187,5 +213,6 @@ def test_lint_catches_the_copies_it_names():
     assert SCAFFOLD["percentile accuracy rule"].search(accuracy)
     assert BARE_CACHE.search(cache) and BARE_CACHE.search(persist)
     assert REGISTRY_READ.search(registry) and REGISTRY_READ.search(diff_ids)
+    assert IMPORT_GATE.search(probe)
     assert all(HISTORY.search(line) for line in history)
     assert not any(HISTORY.search(line) for line in facts)

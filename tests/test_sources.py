@@ -7,7 +7,6 @@ import datetime as dt
 import json
 
 import pandas as pd
-import pytest
 
 from nfl_data_engineering_spark.sources.html_table import scrape_tables_long
 from nfl_data_engineering_spark.sources.multimodal import (decode_features,
@@ -160,23 +159,9 @@ def test_resize_fake_codec_is_byte_exact(spark):
     from nfl_data_engineering_spark.sources.multimodal import resize_images
 
     docs = spark.createDataFrame([(3, "abc")], "doc_id long, text string")
-    rows = resize_images(synthesize_multimodal(docs), 4, 2,
-                         codec="fake").collect()
+    rows = resize_images(synthesize_multimodal(docs), 4, 2).collect()
     assert len(rows) == 1
     # plane = payload's md5 hex digest cycled to width*height bytes
     seed = hashlib.md5(b"abc").hexdigest().encode()
     assert bytes(rows[0]["payload"]) == seed[:8]
     assert (rows[0]["width"], rows[0]["height"]) == (4, 2)
-
-
-def test_resize_real_codec_requires_pillow(spark):
-    from nfl_data_engineering_spark.sources.multimodal import (_have_pillow,
-                                                               resize_images)
-    if _have_pillow():
-        pytest.skip("Pillow present: real path exercised elsewhere")
-    docs = spark.createDataFrame([(3, "abc")], "doc_id long, text string")
-    # codec='real' without the lib must fail loudly at execution, not
-    # silently fall back to the fake plane
-    with pytest.raises(Exception):
-        resize_images(synthesize_multimodal(docs), 4, 2,
-                      codec="real").collect()

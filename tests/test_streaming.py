@@ -124,66 +124,6 @@ def test_keep_latest_tiebreak_at_equal_ts(spark, tmp_path):
         assert hist[-1]["event_id"] == 2, tag
 
 
-def test_keep_latest_engine_gate(spark, tmp_path):
-    """Engine dispatch: 'auto' resolves by protobuf availability; invalid
-    engines and ttl-without-tws fail fast at plan time (not at query
-    start on an executor)."""
-    import pytest
-
-    from nfl_data_engineering_spark.streaming.ingest import _have_protobuf
-    src = str(tmp_path / "src")
-    _write_events_json(src, EVENTS)
-    stream = (read_event_stream(spark, src)
-              .selectExpr("user_id", "ts", "value"))
-    with pytest.raises(ValueError, match="unknown engine"):
-        keep_latest_stream(stream, ["user_id"], "ts", ["value"],
-                           engine="flink")
-    with pytest.raises(ValueError, match="ttl_ms requires"):
-        keep_latest_stream(stream, ["user_id"], "ts", ["value"],
-                           ttl_ms=1000, engine="apiws")
-    # 'auto' resolves by protobuf availability (tws when importable, else
-    # the legacy API) — EITHER resolution must build a valid streaming
-    # plan; installing protobuf must not turn this test red.
-    df = keep_latest_stream(stream, ["user_id"], "ts", ["value"])
-    assert df.isStreaming
-    # the explicitly-legacy engine builds regardless of environment
-    df2 = keep_latest_stream(stream, ["user_id"], "ts", ["value"],
-                             engine="apiws")
-    assert df2.isStreaming
-
-
-def test_keep_latest_tws_end_to_end(spark, tmp_path):
-    """Drive the transformWithStateInPandas engine end-to-end and check it
-    computes the same keep-latest rule as the legacy engine. Skipped (not
-    failed, and never inverted into an absence assertion) when protobuf —
-    the tws state-server wire protocol — is not installed."""
-    import pytest
-
-    from nfl_data_engineering_spark.streaming.ingest import _have_protobuf
-    if not _have_protobuf():
-        pytest.skip("protobuf not installed: transformWithStateInPandas "
-                    "state client unavailable in this container")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    rows = [{"event_id": 1, "ts": "2024-01-10T00:00:00.000Z", "user_id": 7,
-             "event_type": "rank", "value": 10.0},
-            {"event_id": 2, "ts": "2024-01-12T00:00:00.000Z", "user_id": 7,
-             "event_type": "rank", "value": 11.5}]
-    with open(os.path.join(src, "a.json"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    stream = (read_event_stream(spark, src)
-              .selectExpr("user_id", "ts", "value")
-              .withWatermark("ts", "30 days"))
-    latest = keep_latest_stream(stream, ["user_id"], "ts", ["value"],
-                                engine="tws")
-    q = (latest.writeStream.format("memory").queryName("kls_tws")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    hist = spark.sql("SELECT * FROM kls_tws ORDER BY ts").collect()
-    assert hist[-1]["value"] == 11.5
-
-
 def test_windowed_counts_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     _write_events_json(src, EVENTS)

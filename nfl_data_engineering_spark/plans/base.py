@@ -169,9 +169,11 @@ def scoped_cached_plan_aqe(fn):
     those cores (measured: leakage_safe_split 1.85 -> 2.46 s,
     dedup_star_survivors 1.30 -> 2.02 s with the flag on) — so each
     entry opts in only where its cache consumers are fixed-cost bound.
-    The flag must be set while the cache MATERIALIZES (every scoped
-    entry fills its caches eagerly inside the scope); results are
-    partitioning-invariant per the determinism doctrine."""
+    The flag binds when the cache is made: ``storage.pin`` inside the
+    scope plans the cached relation under it, so a cache keeps its
+    right-sizing when it fills lazily, in a job run after the scope has
+    exited. Results are partitioning-invariant per the determinism
+    doctrine."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
     @functools.wraps(fn)

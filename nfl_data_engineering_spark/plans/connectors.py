@@ -221,14 +221,14 @@ def q_odds_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flatten_odds(raw).orderBy("game_id", "book", "market", "outcome")
 
 
-def _odds_flatten_oracle(price_type: str, where: str = "") -> str:
+def _odds_flatten_oracle(where: str = "") -> str:
     """DuckDB twin of the T1 flatten over the same payload literal: typed
     json_transform, then one unnest per nesting level."""
     lit = json.dumps(_ODDS_PAYLOAD).replace("'", "''")
     spec = ('[{"id":"VARCHAR","commence_time":"VARCHAR",'
             '"home_team":"VARCHAR","away_team":"VARCHAR",'
             '"bookmakers":[{"key":"VARCHAR","markets":[{"key":"VARCHAR",'
-            f'"outcomes":[{{"name":"VARCHAR","price":"{price_type}",'
+            '"outcomes":[{"name":"VARCHAR","price":"BIGINT",'
             '"point":"DOUBLE"}]}]}]}]')
     return f"""
 WITH raw AS (SELECT unnest(json_transform('{lit}', '{spec}')) AS g),
@@ -1064,11 +1064,10 @@ CONNECTOR_QUERIES = [
     QueryDef("orc_roundtrip", q_orc_roundtrip, ORACLE_ORC_ROUNDTRIP, "S5-orc"),
     QueryDef("xlsx_roundtrip", q_xlsx_roundtrip, ORACLE_XLSX_ROUNDTRIP,
              "S3,S10"),
-    QueryDef("odds_flatten", q_odds_flatten, _odds_flatten_oracle("BIGINT"),
+    QueryDef("odds_flatten", q_odds_flatten, _odds_flatten_oracle(),
              "S1,T1"),
     QueryDef("odds_python_source", q_odds_python_source,
-             _odds_flatten_oracle(
-                 "DOUBLE", "WHERE market IN ('spreads', 'totals')"),
+             _odds_flatten_oracle("WHERE market IN ('spreads', 'totals')"),
              "S1-datasource", bench=True),
     QueryDef("scraper_longform", q_scraper_longform,
              _scraper_longform_oracle(), "S2,T6,O2"),

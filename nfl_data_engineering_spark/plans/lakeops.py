@@ -907,13 +907,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two orientation joins, the closing semi-join, the edge count) and
     # Spark's ReuseExchange does NOT fire across them (branch-specific
     # column pruning de-canonicalizes the subtrees — verified: 76
-    # exchanges, 0 reused) — so without materialization the expensive
-    # pair self-join re-executes per consumer; and because the consumer
-    # stages launch CONCURRENTLY, a lazy persist alone still races (every
-    # branch computes the subtree before the cache fills). Persist plus
-    # one bounded count() fills the cache BEFORE the fan-out. The edge
-    # list is the SMALL artifact (support-thresholded, O(parts x
-    # affinity), not O(lineitem)) — what you'd materialize on a cluster.
+    # exchanges, 0 reused) — so without a cache the expensive pair
+    # self-join re-executes per consumer. The edge census count() fills
+    # the cache before the fan-out. The edge list is the SMALL artifact
+    # (support-thresholded, O(parts x affinity), not O(lineitem)) —
+    # what you'd materialize on a cluster.
     # coalesce(1) right-sizes the cached graph to its actual row count
     # (~3.6k edges here): every downstream wedge/degree stage would
     # otherwise pay 32-task scheduling overhead per step on near-empty
@@ -938,9 +936,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 0.71 s of pure driver time optimizing it (the largest
     # single cost left in this entry's sf0.1 job timeline).
     # Caching the two dimension-sized frames collapses every consumer to
-    # an InMemoryRelation ref; the fills are one near-trivial job each
-    # over the 1-partition edge cache (very wide reuse makes planning
-    # itself the bottleneck; materialize to truncate the plan).
+    # an InMemoryRelation ref (very wide reuse makes planning itself the
+    # bottleneck; a cache truncates the plan); both fill in the report's
+    # job, reading the 1-partition edge cache.
     deg = pin(edges.select(F.col("u").alias("node"))
               .unionAll(edges.select(F.col("v").alias("node")))
               .groupBy("node").agg(F.count("*").alias("d"))
@@ -956,7 +954,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("ddst")))
-    oriented.count()   # fill before the three-branch fan-out
     w1 = oriented.select("src", F.col("dst").alias("x"),
                          F.col("ddst").alias("dx"))
     w2 = oriented.select("src", F.col("dst").alias("y"),

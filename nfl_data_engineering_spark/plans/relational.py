@@ -3689,7 +3689,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached, every consumer would rescan events and re-shuffle the
     # distinct; pinned, so released when the next entry starts
     hv, hc = pin(hashes("view")), pin(hashes("click"))
-    hv.count(), hc.count()   # eager: consumers race a lazy cache
     est_expr = F.when(
         F.col("got") < KMV_K, F.col("got").cast("bigint")).otherwise(
         F.expr(f"cast((cast({KMV_K - 1} as decimal(38,0)) * "

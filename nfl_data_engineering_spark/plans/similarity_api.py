@@ -245,7 +245,6 @@ def similarity_join(df: DataFrame, id_col: str, col: str, threshold: float,
                 df.select(F.col(id_col).alias("doc_id"),
                           F.col(col).alias("text")),
                 "doc_id", "text", n=3))
-            sharr.count()
         if metric == "containment":
             # ASYMMETRIC family: ordered (id1=sub,
             # id2=super) pairs with |S_sub ∩ S_super| / |S_sub| >=
@@ -383,39 +382,24 @@ def q_similarity_join_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: minhash + prefix dispatches race a lazy cache
     # sketch pinned: this entry's oracle replays k-draw banding, and an
     # oracle must never depend on a data-dependent route (the 'auto'
     # default would route here on corpus shape; its attestation lives in
     # q_sketch_route_report)
     #
-    # Overlap independent jobs: each family
-    # dispatch eagerly fills its own sketch caches (bands / prefix table
-    # / simhash signatures / SRP norms), and running the four dispatches
-    # sequentially serializes those cache-fill jobs even though none of
-    # them depends on another — only on the ALREADY-filled shared
-    # shingle cache. Dispatching from a small thread pool lets the
-    # scheduler back-fill each job's straggler tail with the next
-    # family's tasks (measured at sf0.1: 5.2-5.5 s vs 7.7-9.6 s warm,
-    # identical union). Same result set by construction: the dispatches
-    # share only the immutable cached sharr, and each pin's ledger
-    # append is GIL-atomic. The STAGED entry (q_similarity_join_staged)
-    # keeps its deliberately sequential shape — its contract is bounding
-    # peak storage to max(family), the opposite trade.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_mh = pool.submit(
-            similarity_join, docs, "doc_id", "text", JACCARD_THRESHOLD,
-            shingles=sharr, sketch="kdraw")
-        f_pf = pool.submit(
-            similarity_join, docs, "doc_id", "text", JACCARD_THRESHOLD,
-            exact=True, shingles=sharr)
-        f_hm = pool.submit(
-            similarity_join, docs, "doc_id", "text", SIMHASH_MAX_HAMMING,
-            metric="hamming")
-        f_sp = pool.submit(
-            similarity_join, emb, "vec_id", "embedding", SRP_THRESHOLD)
-        mh, pf, hm, sp = (f.result() for f in (f_mh, f_pf, f_hm, f_sp))
+    # Every family's caches (sharr, bands, prefix table, simhash
+    # signatures, SRP norms) fill in the union's own job, which runs the
+    # four families' stages concurrently. The STAGED entry
+    # (q_similarity_join_staged) runs them one family at a time — its
+    # contract is bounding peak storage to max(family), the opposite
+    # trade.
+    mh = similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD,
+                         shingles=sharr, sketch="kdraw")
+    pf = similarity_join(docs, "doc_id", "text", JACCARD_THRESHOLD,
+                         exact=True, shingles=sharr)
+    hm = similarity_join(docs, "doc_id", "text", SIMHASH_MAX_HAMMING,
+                         metric="hamming")
+    sp = similarity_join(emb, "vec_id", "embedding", SRP_THRESHOLD)
 
     def tag(dfp: DataFrame, family: str) -> DataFrame:
         # hamming scores are exact-int distances; the double cast makes
@@ -521,7 +505,6 @@ def q_sketch_route_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     strong claim is what actually gets attested."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()
     routed = _resolve_auto_sketch(sharr)   # the live router, HLL statistic
     in_band = F.expr(
         f"abs(n_shingles * 1000 - n_docs * {ROUTE_CUTOVER_X1000}) * 1000 "
@@ -608,7 +591,6 @@ def q_auto_route_oph_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         sup.select((F.col("doc_id") + AUTO_ROUTE_OFFSET).alias("doc_id"),
                    "text"))
     sharr = pin(shingle_hash_arrays(corpus, "doc_id", "text", n=3))
-    sharr.count()   # eager: router + banding + verify race a lazy cache
     routed = _resolve_auto_sketch(sharr)
     pairs = similarity_join(corpus, "doc_id", "text", JACCARD_THRESHOLD,
                             shingles=sharr, sketch="auto")
@@ -650,7 +632,6 @@ def q_minhash_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     sit at/above the S-curve floor."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: exact + lsh branches race a lazy cache
     exact = exact_jaccard_count(
         sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
         MINHASH_T05)
@@ -682,7 +663,6 @@ def q_oph_recall_t05(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the same front door a user calls (sketch='oph')."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: exact + oph branches race a lazy cache
     exact = exact_jaccard_count(
         sharr.select("doc_id", F.explode("sh_arr").alias("sh60")),
         MINHASH_T05)

@@ -111,12 +111,10 @@ def _text_banded_join(sharr: DataFrame, threshold: float,
     (one draw per shingle; its slot groupBy needs per-shingle rows, so
     they come from one row-local explode of the arrays).
 
-    The bands are cached because both candidate sides read them, and
-    filled eagerly: bands.count() reads ``sharr``, so it also fills a
-    lazily-cached ``sharr`` in the same job, and the verify then reads
-    warm arrays. Within one job the block manager's loading locks
-    compute each partition once, so a separate sharr.count() would only
-    add a pass-shaped job."""
+    The bands are cached because both candidate sides read them. They
+    fill in the candidate join's own job, and computing them reads
+    ``sharr``, so a pinned ``sharr`` fills in that job too; Spark
+    computes each cached partition once however many branches read it."""
     n_hashes, n_bands = minhash_band_config(threshold)
     if sketch == "oph":
         bands = oph_bands_fast(
@@ -126,7 +124,6 @@ def _text_banded_join(sharr: DataFrame, threshold: float,
         bands = minhash_bands_arrays(sharr, "doc_id", "sh_arr", n_hashes,
                                      n_bands)
     bands = pin(bands)
-    bands.count()   # eager: both candidate sides race a lazy cache
     cand = candidate_pairs(bands, "doc_id", ["band", "band_key"],
                            "id1", "id2")
     return verify_jaccard_arrays(sharr, cand, threshold,
@@ -142,7 +139,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str,
 
     A caller that already holds the pinned shingle-array frame passes it
     as ``sharr``, so the plan is cached and released exactly once;
-    otherwise it is pinned here and filled by the bands' eager count."""
+    otherwise it is pinned here; either way it fills in the bands' job."""
     if sharr is None:
         docs = load(spark, sf_dir, "documents")
         sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
@@ -423,13 +420,10 @@ def _star_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket -> star edges (member -> bucket minimum, O(members) per
     bucket) -> exact-jaccard verification against the representative.
     Shared by the star survivor table and the cross-shard audit; the
-    shingle cache is pinned (storage.pin). It fills LAZILY: all three
-    sharr consumers (bands + both verify sides) materialize inside the
-    ONE connected-components probe job, where BlockManager's
-    per-partition loading locks guarantee each partition computes once —
-    an eager count() is a whole extra pass-shaped job per entry
-    (leakage/star walls 1.83/1.48 s with it, 1.79/1.41 s without, at
-    sf0.1)."""
+    shingle cache is pinned (storage.pin) and fills in its first
+    consumer's job: all three sharr consumers (bands + both verify sides)
+    materialize inside the ONE connected-components probe job, where
+    Spark computes each cached partition once."""
     from pyspark.sql import Window
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
@@ -670,13 +664,10 @@ def q_incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     # cache bands: the incoming and existing sides below each consume it,
     # and without the cache each side re-runs the 64-draw minhash fold
-    # over the full corpus (measured ~0.7s of the entry at sf0.1).
-    # ONE eager fill: bands.count() reads sharr, so it fills BOTH caches
-    # in a single job (a separate sharr.count() measured 1.71 vs 1.52 s
-    # at sf0.1); the verify tail then reads the already-warm sharr.
+    # over the full corpus (measured ~0.7s of the entry at sf0.1). Both
+    # caches fill in the result's own job: computing bands reads sharr.
     bands = pin(minhash_bands_arrays(sharr, "doc_id", "sh_arr", NUM_HASHES,
                                      NUM_BANDS))
-    bands.count()
     cand = candidate_pairs(bands, "doc_id", ["band", "band_key"], "di", "de",
                            probe=is_inc)
     near = (verify_jaccard_arrays(sharr, cand, JACCARD_THRESHOLD,
@@ -818,8 +809,6 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     odds_data_collector.py:40-44 to asymmetric near-superset identity."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
-    sh.count()   # eager: sizes/rare/capped consumers race a lazy cache,
-    #              and the fill must land inside the cached-plan-AQE scope
     return (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
                                    CONTAINMENT_PCT * 10)
             .select("sub_doc_id", "super_doc_id",
@@ -958,7 +947,6 @@ def q_containment_sketch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins is measured in containment_prefix_pairs' docstring."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
-    sh.count()   # eager: sizes/dfreq/prefix/index consumers race a lazy cache
     return (containment_prefix_pairs(sh, CONTAINMENT_PCT * 10)
             .select("sub_doc_id", "super_doc_id",
                     F.expr("i * 1000 div sz_sub")
@@ -981,7 +969,6 @@ def q_containment_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audits' bounded scaffold shape."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(explode_shingle_hashes(docs, "doc_id", "text", n=3))
-    sh.count()
     truth = (containment_directions(capped_overlap(sh, NGRAM_DF_CAP),
                                     CONTAINMENT_PCT * 10)
              .agg(F.count("*").alias("n_truth")))
@@ -1045,7 +1032,6 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample first at 100 TB (recall estimates compose)."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: exact + lsh branches race a lazy cache
     # the df-capped quadratic truth needs per-shingle rows: derive them
     # from the cached arrays with one row-local explode (no re-hash)
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
@@ -1066,12 +1052,12 @@ def _text_prefix_join(sharr: DataFrame, threshold: float) -> DataFrame:
     that carries size(sh_arr) along (no per-doc COUNT aggregation or
     sizes join).
 
-    The prefix table is cached and filled eagerly before the candidate
-    self-join: both join sides consume it, and uncached each side re-runs
-    the df-count aggregate + rarity-rank window over the full shingle
-    explode (profiled at sf0.1: the two duplicated subtrees were the
-    entry's top stages, 12.5 s + 7.7 s task time). The fill computes through
-    ``sharr``, so it fills a lazily-cached ``sharr`` in the same job."""
+    The prefix table is cached because both candidate self-join sides
+    consume it, and uncached each side re-runs the df-count aggregate +
+    rarity-rank window over the full shingle explode (profiled at sf0.1:
+    the two duplicated subtrees were the entry's top stages, 12.5 s +
+    7.7 s task time). It fills in the join's own job, through ``sharr``,
+    so a pinned ``sharr`` fills in that job too."""
     frac = Fraction(threshold).limit_denominator(1_000_000)
     if frac > Fraction(threshold):
         # Never let the rationalized threshold exceed the float verify
@@ -1091,7 +1077,6 @@ def _text_prefix_join(sharr: DataFrame, threshold: float) -> DataFrame:
               .filter(F.col("rn")
                       <= F.expr(f"sz - (({p} * sz + {q - 1}) div {q}) + 1"))
               .select("doc_id", "sh60", "sz"))
-    pre.count()   # eager: both candidate sides race a lazy cache
     cand = candidate_pairs(
         pre, "doc_id", ["sh60"], "id1", "id2", carry=("sz",),
         gate=F.least("sz1", "sz2") * q >= F.greatest("sz1", "sz2") * p)
@@ -1119,8 +1104,6 @@ def q_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped shingle self-join), so the hash match proves the
     prefix-filter algebra lossless, not merely self-consistent."""
     docs = load(spark, sf_dir, "documents")
-    # no eager sharr fill: the prefix table's eager fill computes through
-    # it and fills both caches in one job
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
     verified = _text_prefix_join(sharr, JACCARD_THRESHOLD)
     return verified.select(F.col("id1").alias("d1"), F.col("id2").alias("d2"),
@@ -1195,7 +1178,6 @@ def q_oph_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before switching a corpus job's sketch kernel."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: exact + oph branches race a lazy cache
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
     exact = exact_jaccard_count(sh, JACCARD_THRESHOLD)
     oph = _minhash_pairs(spark, sf_dir, sharr=sharr, sketch="oph").agg(
@@ -1217,7 +1199,6 @@ def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle frame is computed once and shared."""
     docs = load(spark, sf_dir, "documents")
     sharr = pin(shingle_hash_arrays(docs, "doc_id", "text", n=3))
-    sharr.count()   # eager: both family branches race a lazy cache
     sh = sharr.select("doc_id", F.explode("sh_arr").alias("sh60"))
 
     def fam(tag: str, bands: DataFrame) -> DataFrame:
@@ -1273,15 +1254,10 @@ def _text_simhash_join(std: DataFrame, max_hamming: int) -> DataFrame:
     bit_count(xor). The last chunk absorbs the width remainder; any
     partition into t+1 non-empty pieces keeps the pigeonhole guarantee.
 
-    The signatures are cached and filled eagerly: both chunk-join sides
-    read them, and HERE the eager fill is load-bearing by measurement —
-    the lazy-fill variant (the single-fill doctrine that won on the
-    jaccard family) measured 1.44 -> 2.25+ s at sf0.1 and degrading.
-    The difference from the jaccard family: no second derived cache
-    whose fill would compute this one as a by-product."""
+    The signatures are cached because both chunk-join sides read them;
+    they fill in the chunk join's own job."""
     toked = explode_tokens(std, "doc_id", "text")
     sims = pin(simhash(toked, "doc_id", "token", bits=SIMHASH_BITS))
-    sims.count()   # eager: both chunk-join sides race a lazy cache
     chunks = int(max_hamming) + 1
     base = SIMHASH_BITS // chunks
     specs = []
@@ -2198,7 +2174,6 @@ def _dup_window_spans(t: DataFrame, k: int) -> DataFrame:
                              lambda pos: h60(F.concat_ws(
                                  " ", F.slice(F.col("tk"), pos, k))))
                           .alias("wh")))
-    wh_arr.count()   # eager: both explode consumers race a lazy cache
     wins = wh_arr.select("doc_id", F.posexplode("wh").alias("pos0", "w60"))
     dup = (wins.groupBy("w60").agg(F.count("*").alias("cnt"))
            .filter(F.col("cnt") > 1).select("w60"))

@@ -871,7 +871,6 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer-training story next to bpe_merge_train (the reference has
     no tokenizer; parity target is the brief's text-analysis pillar)."""
     words = pin(_unigram_words(load(spark, sf_dir, "documents")))
-    words.count()    # eager: seed + both E-passes race a lazy cache
     cnt, vocab = _unigram_em(spark, words)
     return (cnt.join(vocab, "piece")
             .select("piece", F.col("c").alias("em_count"),
@@ -891,7 +890,6 @@ def q_unigram_lm_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level count catches, the bpe_encode discipline)."""
     docs = load(spark, sf_dir, "documents")
     words = pin(_unigram_words(docs))
-    words.count()
     _, vocab = _unigram_em(spark, words)
     final = {r["piece"]: r["lp"] for r in vocab.collect()}
     np = (_segment_words(words, final)
@@ -929,7 +927,6 @@ def q_unigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pieces."""
     docs = load(spark, sf_dir, "documents")
     words = pin(_unigram_words(docs))
-    words.count()
     _, vocab = _unigram_em(spark, words)
     final = {r["piece"]: r["lp"] for r in vocab.collect()}
     wn = (_segment_words(words, final)
@@ -1780,7 +1777,6 @@ def q_token_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = docs.select("source",
                         F.explode(tokens(F.col("text"))).alias("token"))
     st = pin(terms.groupBy("source", "token").agg(F.count("*").alias("c")))
-    st.count()   # eager: four derived consumers race a lazy cache
     stot = st.groupBy("source").agg(F.sum("c").alias("ns"))
     g = st.groupBy("token").agg(F.sum("c").alias("cg"))
     tot = st.agg(F.sum("c").cast("double").alias("total"))

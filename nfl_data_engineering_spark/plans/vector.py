@@ -1094,7 +1094,6 @@ def _semdedup_two_level(emb: DataFrame, k: int,
         cents = _kmeans_recenter(_kmeans_assign(emb, cents))
     coarse = pin(_kmeans_assign(emb, cents)
                  .select("vec_id", "embedding", F.col("cl").alias("ccl")))
-    coarse.count()   # eager: the fine passes reference it repeatedly
     size = SEMDEDUP_CLUSTER_SIZE if cluster_size is None else cluster_size
     seeded = (coarse
               .withColumn("__cnt",
@@ -1233,7 +1232,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # clustering (coarse driver-held, fine distributed) — the gate
         # comment's escape hatch
         final = pin(_semdedup_two_level(emb, k))
-    final.count()   # eager: pair kernel + survivor join race a lazy cache
     return _semdedup_survivors(final)
 
 
@@ -1383,7 +1381,6 @@ def q_semantic_dedup_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _semdedup_k(emb.count(), SEMDEDUP_TL_CLUSTER_SIZE)
     final = pin(_semdedup_two_level(
         emb, k, cluster_size=SEMDEDUP_TL_CLUSTER_SIZE))
-    final.count()   # eager: pair kernel + survivor join race a lazy cache
     return _semdedup_survivors(final)
 
 

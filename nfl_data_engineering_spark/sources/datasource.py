@@ -13,9 +13,9 @@ Transport is a payload directory (one ``*.json`` file per API response) —
 the offline twin of the HTTP GET; a deployment replaces ``_load_payload``
 with the authenticated GET of get_odds.py:14-39. No network code lives here.
 
-Output contract: the flat 9-column odds schema asserted by the reference's
-tests (test/test_odds_collector.py:170-172), with the ``point`` null-fill
-of get_odds.py:61 applied at read time.
+Output contract: ``rest_json.ODDS_FLAT``, the flat 9-column odds schema
+asserted by the reference's tests (test/test_odds_collector.py:170-172),
+with the ``point`` null-fill of get_odds.py:61 applied at read time.
 """
 
 from __future__ import annotations
@@ -31,9 +31,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 
-ODDS_FLAT_SCHEMA = ("game_id string, game_time string, home_team string, "
-                    "away_team string, book string, market string, "
-                    "outcome string, price double, point double")
+from .rest_json import ODDS_FLAT
 
 _PUSHABLE = ("game_id", "book", "market", "outcome")
 
@@ -81,10 +79,11 @@ def _load_payload(path: str) -> list[dict]:
 def _flatten_games(games, accept: dict[str, set] | None = None
                    ) -> Iterator[tuple]:
     """The one odds flattener: game -> bookmakers -> markets -> outcomes,
-    one ODDS_FLAT_SCHEMA row per outcome with the ``point`` null-fill of
+    one ODDS_FLAT row per outcome with the ``point`` null-fill of
     get_odds.py:61. ``accept`` maps a pushed column to its accepted values
     (None: accept everything); a rejected game, book or market is skipped
-    before the loop descends into it."""
+    before the loop descends into it. A non-integral price raises: Spark
+    would silently truncate it into the long ``price`` field."""
     games_ok, books_ok, markets_ok, outcomes_ok = (
         (accept or {}).get(c) for c in _PUSHABLE)
     for game in games:
@@ -106,8 +105,13 @@ def _flatten_games(games, accept: dict[str, set] | None = None
                     if outcomes_ok is not None and name not in outcomes_ok:
                         continue
                     price, point = oc.get("price"), oc.get("point")
-                    yield (*base, book, market, name,
-                           None if price is None else float(price),
+                    if price is not None:
+                        if price != int(price):
+                            raise ValueError(
+                                f"odds price {price!r} is not a whole "
+                                f"number (game {gid}, book {book})")
+                        price = int(price)
+                    yield (*base, book, market, name, price,
                            0.0 if point is None else float(point))
 
 
@@ -150,8 +154,8 @@ class OddsRestDataSource(DataSource):
     def name(cls) -> str:
         return "odds_rest"
 
-    def schema(self) -> str:
-        return ODDS_FLAT_SCHEMA
+    def schema(self):
+        return ODDS_FLAT
 
     def reader(self, schema) -> OddsRestReader:
         return OddsRestReader(self.options)

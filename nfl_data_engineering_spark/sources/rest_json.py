@@ -36,6 +36,18 @@ ODDS_RAW = T.StructType([
     ]))),
 ])
 
+# Odds flat: the 9-column output contract of test_odds_collector.py:170-172,
+# the one schema of both readers (flatten_odds over ODDS_RAW and the odds_rest
+# data source). American odds are whole numbers, so ``price`` is a long;
+# ``point`` is null-filled to 0.0 (get_odds.py:61), so it is never null.
+ODDS_FLAT = T.StructType([
+    *(T.StructField(c, T.StringType())
+      for c in ("game_id", "game_time", "home_team", "away_team", "book",
+                "market", "outcome")),
+    T.StructField("price", T.LongType()),
+    T.StructField("point", T.DoubleType(), nullable=False),
+])
+
 EXPECTED_MARKETS = ("h2h", "spreads", "totals")
 
 
@@ -51,7 +63,8 @@ def odds_from_json_strings(spark: SparkSession, payloads: list[str]) -> DataFram
 
 def flatten_odds(raw: DataFrame) -> DataFrame:
     """T1: game -> bookmakers -> markets -> outcomes triple explode, parent
-    attributes carried along; `point` null-filled to 0.0 (get_odds.py:61)."""
+    attributes carried along; `point` null-filled to 0.0 (get_odds.py:61).
+    The output schema is ODDS_FLAT."""
     return (raw
             .select(F.col("id").alias("game_id"),
                     F.col("commence_time").alias("game_time"),

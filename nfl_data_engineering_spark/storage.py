@@ -9,7 +9,9 @@ three full-suite runs before this ledger existed).
 
 One rule takes the GC out of the path: storage is released by the frame
 that was made. ``pin(df)`` caches a frame and parks that cached frame
-on the ledger in the same call; ``park_frame`` parks a checkpointed
+on the ledger in the same call. A pinned cache fills in its first
+consumer's job; Spark computes each cached partition once however many
+branches of that job read it. ``park_frame`` parks a checkpointed
 frame (the CC labels, the BPE token table), whose plan reads the
 checkpoint's own RDD. ``release_frame`` frees either one, so no release
 reads the context-global persistent-RDD registry and no release can

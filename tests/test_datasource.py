@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from nfl_data_engineering_spark.sources.datasource import register_odds_source
-from nfl_data_engineering_spark.sources.rest_json import (flatten_odds,
+from nfl_data_engineering_spark.sources.rest_json import (ODDS_FLAT,
+                                                          flatten_odds,
                                                           odds_from_json_strings)
 
 
@@ -39,12 +41,27 @@ def test_odds_rest_format_matches_explode_pipeline(spark, tmp_path):
     raw = odds_from_json_strings(spark, [json.dumps(us), json.dumps(us2)])
     via_explode = flatten_odds(raw)
 
-    assert via_source.columns == via_explode.columns
+    # one flat schema (long price): a lake fed by either holds one type
+    assert via_source.schema == via_explode.schema == ODDS_FLAT
     key = ["game_id", "book", "market", "outcome"]
     assert (sorted(map(tuple, via_source.collect()), key=lambda r: r[:6])
             == sorted(map(tuple, via_explode.collect()), key=lambda r: r[:6]))
     # one partition per payload file
     assert via_source.rdd.getNumPartitions() == 2
+
+
+def test_both_readers_reject_a_decimal_price(spark, tmp_path):
+    """A decimal-odds price (1.91) fails both readers instead of being
+    truncated into the long ``price`` field."""
+    us = _payload("g1", "A", "B")
+    us[0]["bookmakers"][0]["markets"][0]["outcomes"][0]["price"] = 1.91
+    (tmp_path / "us.json").write_text(json.dumps(us))
+    with pytest.raises(Exception, match="price"):
+        odds_from_json_strings(spark, [json.dumps(us)])
+    register_odds_source(spark)
+    with pytest.raises(Exception, match="not a whole number"):
+        spark.read.format("odds_rest").option(
+            "path", str(tmp_path)).load().collect()
 
 
 def test_odds_rest_stream_incremental_exactly_once(spark, tmp_path):

@@ -14,7 +14,10 @@ one exception is the staged barrier's part, parked once its family's stage has
 released the family's pins. No package code reads the context-global
 persistent-RDD registry: a release diffed off it frees whatever appeared,
 whoever made it, so storage is released by the frame that made it
-(storage.release_frame). Each operator has one implementation: no package code
+(storage.release_frame). A pinned cache fills in its first consumer's job: no
+statement under plans/ and operators/ runs a count() only to throw its value
+away (the staged barrier's part.count() is the one exemption). Each operator
+has one implementation: no package code
 catches ImportError to pick a second body by which libraries are installed, so
 a result never depends on the environment (parity.py's fallback from the entry
 module to the registry is the one exemption). Code, tests and tools state
@@ -24,6 +27,7 @@ history; plans/registry.py's driver-window rotation is the one exemption)."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -61,6 +65,31 @@ SCAFFOLD = {
 # a bare cache: allowed under plans/ and operators/ only as ALLOWED_CACHE
 BARE_CACHE = re.compile(r"\.(?:cache\(\)|persist\()")
 ALLOWED_CACHE = {("similarity_api.py", "part = tagged.cache()")}
+
+# a statement that discards a count(): allowed under plans/ and operators/
+# only as ALLOWED_DISCARDED_COUNT
+ALLOWED_DISCARDED_COUNT = {("similarity_api.py", "part.count()")}
+
+
+def discarded_counts(src: str) -> list[tuple[int, str]]:
+    """(line, source) of each expression statement in ``src`` that is a
+    bare ``x.count()`` call or a tuple of them."""
+    def is_count(node: ast.expr) -> bool:
+        return (isinstance(node, ast.Call) and not node.args
+                and not node.keywords
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "count")
+
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if not isinstance(node, ast.Expr):
+            continue
+        calls = (node.value.elts if isinstance(node.value, ast.Tuple)
+                 else [node.value])
+        if calls and all(is_count(c) for c in calls):
+            found.append((node.lineno, ast.unparse(node.value)))
+    return found
+
 
 # a registry read, or the registry-diff ids once set on frames: nowhere
 # in the package
@@ -100,6 +129,18 @@ def test_caches_are_made_by_pin():
                              f"{line.strip()}")
     assert not found, ("cache through storage.pin, which parks the "
                        "release:\n" + "\n".join(found))
+
+
+def test_caches_fill_in_their_first_consumer():
+    found = []
+    for path in sorted([*PLANS.glob("*.py"),
+                        *(PACKAGE / "operators").glob("*.py")]):
+        for n, stmt in discarded_counts(path.read_text()):
+            if (path.name, stmt) not in ALLOWED_DISCARDED_COUNT:
+                found.append(f"{path.parent.name}/{path.name}:{n}: {stmt}")
+    assert not found, ("let the first consumer fill the cache; a count() "
+                       "whose value is thrown away is one more job:\n"
+                       + "\n".join(found))
 
 
 def test_no_registry_reads_in_the_package():
@@ -183,6 +224,13 @@ def test_lint_catches_the_copies_it_names():
                 ".keySet().iterator()")
     diff_ids = "    labels._ckpt_ids = rot.prev_ids"
     accuracy = "    acc = F.lit(max(1_000_000, 10 * spend.count()))"
+    fills = ("def q(spark, sf_dir):\n"
+             "    bands = pin(bands)\n"
+             "    bands.count()   # eager: both candidate sides read it\n"
+             "    hv, hc = pin(hashes('view')), pin(hashes('click'))\n"
+             "    hv.count(), hc.count()\n"
+             "    n_edges = edges.count()\n"
+             "    return srp_bits(vecs.count())")
     probe = ("def _have_pillow() -> bool:\n"
              "    try:\n"
              "        import PIL  # noqa: F401\n"
@@ -214,5 +262,7 @@ def test_lint_catches_the_copies_it_names():
     assert BARE_CACHE.search(cache) and BARE_CACHE.search(persist)
     assert REGISTRY_READ.search(registry) and REGISTRY_READ.search(diff_ids)
     assert IMPORT_GATE.search(probe)
+    assert discarded_counts(fills) == [(3, "bands.count()"),
+                                       (5, "(hv.count(), hc.count())")]
     assert all(HISTORY.search(line) for line in history)
     assert not any(HISTORY.search(line) for line in facts)

@@ -352,7 +352,9 @@ def test_cached_plan_aqe_scope_sets_restores_and_rightsizes(spark):
     coalesce a cache-filling plan (a tiny post-shuffle cache materializes
     in far fewer partitions than spark.sql.shuffle.partitions — the fixed
     per-partition Arrow/task cost the unigram/containment entries pay
-    without it); the conf is restored on exit and on error."""
+    without it); the conf is restored on exit and on error. The flag
+    binds when the cache is made: a cache pinned inside the scope and
+    filled after it exits is still right-sized."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     from nfl_data_engineering_spark.plans.base import scoped_cached_plan_aqe
 
@@ -378,6 +380,20 @@ def test_cached_plan_aqe_scope_sets_restores_and_rightsizes(spark):
     assert spark.conf.get(key) == before
 
     @scoped_cached_plan_aqe
+    def pinned(spark, sf_dir):
+        return pin(tiny)
+
+    release_deferred()
+    c = pinned(spark, None)
+    assert spark.conf.get(key) == before
+    try:
+        c.count()   # the fill runs after the scope has exited
+        assert c.rdd.getNumPartitions() < int(
+            spark.conf.get("spark.sql.shuffle.partitions"))
+    finally:
+        release_deferred()
+
+    @scoped_cached_plan_aqe
     def failing(spark, sf_dir):
         raise RuntimeError("boom")
 
@@ -386,3 +402,30 @@ def test_cached_plan_aqe_scope_sets_restores_and_rightsizes(spark):
     except RuntimeError:
         pass
     assert spark.conf.get(key) == before
+
+
+def _filled_rdds(spark) -> set[int]:
+    """Ids of the RDDs that hold at least one cached partition."""
+    return {int(i.id())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if i.numCachedPartitions() > 0}
+
+
+def test_builders_fill_no_cache(spark, sf_dir):
+    """A builder only pins: its caches fill in the first consumer's job.
+    containment_join (a scoped_cached_plan_aqe entry) and dedup_simhash
+    hold no cached partition when their builder returns, and some once
+    the result is written."""
+    from nfl_data_engineering_spark.plans.registry import queries
+
+    qs = queries()
+    for name in ("containment_join", "dedup_simhash"):
+        release_deferred()
+        before = _filled_rdds(spark)
+        df = qs[name](spark, sf_dir)
+        assert not _filled_rdds(spark) - before, \
+            f"{name}: its builder filled a cache"
+        df.write.format("noop").mode("overwrite").save()
+        assert _filled_rdds(spark) - before, \
+            f"{name}: its result read no pinned cache"
+    release_deferred()
